@@ -8,46 +8,12 @@ object Bench {
     if (sys.env.getOrElse("SPARK_GRAFT_RECLAIM", "1") != "0")
       graft.tools.Reclaim.sweep(): Unit
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the documented driver shape (local[32]) — a driver run
-    // that doesn't set the env var must measure the same parallelism the
-    // committed numbers use, or every parallel query reads 2-4x slow
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // dev iteration aids: restrict to a comma-list of query names, and/or
     // change the number of timed passes (min is reported per query)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    // streaming state-store mode: rocksdb (suite default) | heap | session
-    // — SPARK_GRAFT_STREAM_STATE=heap is the provider-comparison run
-    val streamState = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE", "rocksdb")
-    // Big-sf spill sizing (the 100 TB discipline scaled down): shuffle
-    // partitions must grow with data so a partition fits in memory —
-    // 32 partitions of sf100's shingle frames are ~6.5 GiB DESERIALIZED
-    // each and 32 concurrent cache materializations OOM any heap.
-    // Default stays the driver shape (= cpus).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val ckptLevel = sys.env.get("SPARK_GRAFT_CKPT_LEVEL")
-    // streaming twin of SPARK_GRAFT_SHUFFLE: state partitions must
-    // shard wider with data (see withStreamPartitions)
-    val streamShuffle = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    val builder = SparkSession.builder()
-      .config("graft.streaming.stateProvider", streamState)
-      .master(s"local[$cpus,3]") // G3: retries=2 → 3 task attempts
-      .config("spark.task.maxFailures", "3")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      // 81 distinct query plans thrash the default 100-entry generated-
-      // class cache; recompiles (~100ms+) then land on later queries
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // 162 query executions accumulate thousands of broadcast/RDD refs;
-      // blocking ContextCleaner storms otherwise stall whichever
-      // multi-job query is running when GC triggers them
-      .config("spark.cleaner.referenceTracking.blocking", "false")
-    val spark = streamShuffle
-      .fold(builder)(v => builder.config("graft.streaming.statePartitions", v))
-      .getOrCreate()
-    ckptLevel.foreach(l => spark.conf.set(graft.Checkpoints.LevelKey, l))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.fromEnv("graft-bench"))
     // Steady-state measurement. Phase 1 — prep/warm, untimed per query
     // but reported in aggregate as `warm_sec`: ONE pass over EVERY query
     // pays all one-time costs up front (session + codegen classes + JIT,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * an executor loss mid-loop is unrecoverable (the blocks are gone and
   * there is no lineage to recompute them).
   *
-  * Production: set `graft.cc.checkpointDir` (runtime SQL conf) to a
+  * Production: set `graft.cc.checkpointDir` ([[GraftConf.CheckpointDir]]) to a
   * fault-tolerant path (HDFS/S3) and every truncation becomes a reliable
   * `Dataset.checkpoint()` — blocks are written to that directory, so the
   * O(log d) label-propagation rounds survive executor loss; a lost task
@@ -23,30 +23,6 @@ import org.apache.spark.sql.DataFrame
   * deleting the job's subdirectory afterwards.
   */
 object Checkpoints {
-
-  /** Runtime conf key: when set (non-empty), reliable checkpoints are
-    * written under this directory; when unset, localCheckpoint is used.
-    */
-  val DirKey = "graft.cc.checkpointDir"
-
-  /** Debug-only runtime conf key: when "true", `truncate` is the
-    * identity — NO checkpoint, NO materialization. Exists so
-    * `explain("formatted")` can show the complete plan of operators
-    * whose mid-plan lineage truncation otherwise hides everything
-    * upstream behind a `Scan ExistingRDD` (the plans/r15 dumps). Never
-    * set it for a real run: the CC loops rely on truncation for plan
-    * growth, and big-sf runs rely on it for the spill envelope.
-    */
-  val SkipKey = "graft.checkpoint.skip"
-
-  /** Runtime conf key for the localCheckpoint storage level. Default
-    * MEMORY_AND_DISK (deserialized — fastest re-read). At big scale
-    * factors set MEMORY_AND_DISK_SER: 32 tasks concurrently
-    * materializing multi-GiB DESERIALIZED partitions OOM'd the sf100
-    * probe's 48 g heap (q_ngram_jaccard, round-11 notes); serialized
-    * blocks are a fraction of the object-graph size and spill cheaply.
-    */
-  val LevelKey = "graft.checkpoint.storageLevel"
 
   // setCheckpointDir creates a fresh UUID subdirectory per call, so only
   // (re)set it when the configured path actually changes
@@ -66,19 +42,17 @@ object Checkpoints {
     * both modes (for reliable checkpoints it is a no-op on the on-disk
     * files, which the cleaner owns).
     */
-  def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption(SkipKey).contains("true")) df
-    else df.sparkSession.conf.getOption(DirKey).filter(_.nonEmpty) match {
+  def truncate(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    if (GraftConf.CheckpointSkip(spark)) df
+    else GraftConf.CheckpointDir.get(spark) match {
       case Some(dir) =>
         ensureCheckpointDir(df, dir)
         df.checkpoint() // eager + reliable: blocks on fault-tolerant storage
-      case None =>
-        df.sparkSession.conf.getOption(LevelKey).filter(_.nonEmpty) match {
-          case Some(level) => df.localCheckpoint(eager = true,
-            org.apache.spark.storage.StorageLevel.fromString(level))
-          case None => df.localCheckpoint()
-        }
+      case None => GraftConf.CheckpointLevel.get(spark)
+        .fold(df.localCheckpoint())(df.localCheckpoint(eager = true, _))
     }
+  }
 
   /** Chain-style syntax: `df.truncateLineage()` ≡ `Checkpoints.truncate(df)`. */
   implicit class TruncateOps(private val df: DataFrame) extends AnyVal {

@@ -35,7 +35,7 @@ import graft.streaming.RetryRunner
   * concurrent writer to race). The ingest tick is wrapped in
   * [[RetryRunner.withRetries]] (retries=2, 5-min delay) — the DAG's
   * task-retry semantics at application level, on top of Spark's own
-  * task-attempt retries inside each job.
+  * three task attempts inside each job ([[GraftSession]]).
   *
   * Notifications mirror the reference DAG's task graph, where
   * `insert_data` and `notice` are SEPARATE tasks (a notify retry never
@@ -90,18 +90,19 @@ object DailyApp {
   def main(args: Array[String]): Unit = {
     JvmPrereqs.check()
     val cfg = parse(args.toList)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(sessionConf(sys.env))
     val summary = runTick(spark, cfg)
     println(s"[daily] inserted=${summary.inserted.mkString(",")} " +
       s"alerted=${summary.alerted.mkString(",")} " +
       s"skipped=${summary.skipped.mkString(",")}")
   }
+
+  /** The session `main` requests: four local cores by default, or the
+    * deployment's `SPARK_MASTER`; either way three attempts per task.
+    */
+  private[graft] def sessionConf(env: Map[String, String]): Map[String, String] =
+    GraftSession.conf("graft-daily",
+      env.getOrElse("SPARK_MASTER", GraftSession.localMaster(4)), 4)
 
   private def parse(args: List[String], cfg: Config = Config(
       Paths.get(sys.props("java.io.tmpdir"), "graft_daily"))): Config =

@@ -1,0 +1,73 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one place a SparkSession is built. Every entrypoint shares one
+  * policy and passes only its app name, its cores and shuffle partitions,
+  * and any extras of its own:
+  *
+  *  - `local[cores,3]` plus `spark.task.maxFailures=3`: three attempts
+  *    per task, the reference DAG's `retries: 2` plus the first try
+  *    (`Final_app.py:18-19`);
+  *  - UTC session time zone, no UI;
+  *  - a 2000-entry generated-class cache: the suite's distinct plans
+  *    thrash Spark's 100-entry default, and each recompile (~100 ms)
+  *    lands on whichever query runs next;
+  *  - a non-blocking context cleaner: hundreds of executions leave
+  *    thousands of broadcast and RDD refs, and blocking cleanup storms
+  *    stall whichever multi-job query runs when GC triggers them.
+  */
+object GraftSession {
+
+  /** Attempts per task: one try and two retries. */
+  private val TaskAttempts = 3
+
+  def localMaster(cores: Int): String = s"local[$cores,$TaskAttempts]"
+
+  /** The session a main requests, as Spark conf entries. Pure, so a spec
+    * can read the shape of a main's session without building it.
+    */
+  def conf(app: String, master: String, shufflePartitions: Int): Map[String, String] =
+    Map(
+      "spark.app.name" -> app,
+      "spark.master" -> master,
+      "spark.task.maxFailures" -> TaskAttempts.toString,
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "2000",
+      "spark.cleaner.referenceTracking.blocking" -> "false")
+
+  /** A local session of `cores` threads and as many shuffle partitions. */
+  def local(app: String, cores: Int): Map[String, String] =
+    conf(app, localMaster(cores), cores)
+
+  /** A session sized from the environment, shared by `Bench` and `Verify`:
+    *
+    *  - `SPARK_GRAFT_CPUS` (default 32: `local[32]` is the shape the
+    *    suite's committed timings were measured at);
+    *  - `SPARK_GRAFT_SHUFFLE` (default = cpus): shuffle partitions must
+    *    grow with data so a partition fits in memory at big scale;
+    *  - `SPARK_GRAFT_STREAM_SHUFFLE`, its streaming twin
+    *    ([[GraftConf.StatePartitions]]);
+    *  - `SPARK_GRAFT_CKPT_LEVEL` ([[GraftConf.CheckpointLevel]]), e.g.
+    *    `MEMORY_AND_DISK_SER` when deserialized checkpoints would not fit.
+    */
+  def fromEnv(app: String, env: Map[String, String] = sys.env): Map[String, String] = {
+    def int(name: String): Option[Int] = env.get(name).map(v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive integer, got '$v'")))
+    val cpus = int("SPARK_GRAFT_CPUS").getOrElse(32)
+    conf(app, localMaster(cpus), int("SPARK_GRAFT_SHUFFLE").getOrElse(cpus)) ++
+      int("SPARK_GRAFT_STREAM_SHUFFLE").map(GraftConf.StatePartitions.key -> _.toString) ++
+      env.get("SPARK_GRAFT_CKPT_LEVEL").map(GraftConf.CheckpointLevel.key -> _)
+  }
+
+  def start(conf: Map[String, String], logLevel: String = "WARN",
+      hive: Boolean = false): SparkSession = {
+    val b = SparkSession.builder().config(conf)
+    val spark = (if (hive) b.enableHiveSupport() else b).getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+}

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,31 +9,9 @@ object Verify {
     // optional extra args: restrict the dump to these query names (dev
     // iteration aid; the driver always calls with exactly two args)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // driver shape: local[32]
-    // big-sf sweeps need the same spill-aware sizing knobs Bench honors:
-    // shuffle partitions that grow with data and serialized checkpoint
-    // truncation (a 5M-doc correctness dump is the same physics as the
-    // probe that measured those knobs)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // streaming twin of SPARK_GRAFT_SHUFFLE (same contract as Bench):
-    // state partitions must shard wider with data, and a big-sf
-    // correctness dump of a stateful stream pays the same RocksDB
-    // physics as the probe that measured the knob
-    val streamShuffle = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    val builder0 = SparkSession.builder()
-      // local[cpus, 3]: 3 task attempts = the reference's retries: 2
-      // (one initial + two retries, Final_app.py:18-19) — G3 semantics.
-      .master(s"local[$cpus,3]")
-      .config("spark.task.maxFailures", "3")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = streamShuffle
-      .fold(builder0)(v => builder0.config("graft.streaming.statePartitions", v))
-      .getOrCreate()
-    sys.env.get("SPARK_GRAFT_CKPT_LEVEL")
-      .foreach(l => spark.conf.set(graft.Checkpoints.LevelKey, l))
-    spark.sparkContext.setLogLevel("WARN")
+    // sized like Bench, big-sf knobs included: a 5M-doc correctness
+    // dump is the same physics as the probe that measured those knobs
+    val spark = GraftSession.start(GraftSession.fromEnv("graft-verify"))
     new java.io.File(outDir).mkdirs()
     // Harness policy for the fail-fast exact generators (q_ngram_jaccard
     // q_containment q_jaccard_prefix above graft.dedup.exactGenLimit docs):

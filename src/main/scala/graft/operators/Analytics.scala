@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.GraftConf
 import graft.sources.Tables
 
 /** Relational analytics operators over the star schema (SURVEY.md §2.I:
@@ -1897,10 +1898,8 @@ object Analytics {
         sum(when(col("event_type") === "purchase",
           (dec("value") * 100).cast("long")).otherwise(lit(0L)))
           .as("monetary_c"))
-    val gate = spark.conf.getOption("graft.rfm.windowMaxEventRows")
-      .map(_.toLong).getOrElse(2000000L)
     val eventRows = Tables.events(spark, sfDir).count() // metadata-only
-    if (eventRows <= gate) {
+    if (eventRows <= GraftConf.RfmWindowMaxEventRows(spark)) {
       import org.apache.spark.sql.expressions.Window
       def w(c: org.apache.spark.sql.Column) =
         Window.orderBy(c, col("user_id"))
@@ -2197,8 +2196,7 @@ object Analytics {
     * (user_id) exchange+sort.
     */
   def userPaths(spark: SparkSession, sfDir: String): DataFrame = {
-    val cap = spark.conf.getOption("graft.paths.maxEventsPerUser")
-      .map(_.toInt).getOrElse(10000)
+    val cap = GraftConf.PathsMaxEventsPerUser(spark)
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     Tables.events(spark, sfDir)

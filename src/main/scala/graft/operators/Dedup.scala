@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftConf
 import graft.functions.TextFunctions._
 import graft.Checkpoints.TruncateOps
 import graft.sources.Tables
@@ -996,10 +997,7 @@ object Dedup {
       pairs: DataFrame): DataFrame = {
     val ids = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    val limit =
-      spark.conf.getOption("graft.dedup.broadcastIdLimit")
-        .getOrElse("2000000").toLong
-    if (pairs.count() <= limit)
+    if (pairs.count() <= GraftConf.DedupBroadcastIdLimit(spark))
       docs.join(broadcast(ids), Seq("doc_id"), "left_semi")
     else
       docs.join(ids, Seq("doc_id"), "left_semi")
@@ -1015,8 +1013,7 @@ object Dedup {
     */
   private def gateExactGenerator(spark: SparkSession, sfDir: String,
       name: String, scaleTwin: String): Unit = {
-    val limit = spark.conf.getOption("graft.dedup.exactGenLimit")
-      .getOrElse("1000000").toLong
+    val limit = GraftConf.DedupExactGenLimit(spark)
     val n = Tables.documents(spark, sfDir).count()
     if (n > limit) throw new ScaleGateException(
       s"$name is the exact sub-sf10 generator — its postings self-join " +
@@ -1208,10 +1205,8 @@ object Dedup {
     // anti-join the exact containment (:containment) already uses — one
     // extra linear shuffle plus a collect back to arrays, never a
     // corpus-dependent broadcast.
-    val stopLimit = spark.conf.getOption("graft.dedup.stopBroadcastLimit")
-      .getOrElse("1000000").toLong
     val keptRaw =
-      if (stopDf.count() <= stopLimit) {
+      if (stopDf.count() <= GraftConf.DedupStopBroadcastLimit(spark)) {
         val stopArr = stopDf.agg(collect_list(col("fp")).as("stop_arr"))
         docsArr.crossJoin(broadcast(stopArr))
           .select(col("doc_id"),

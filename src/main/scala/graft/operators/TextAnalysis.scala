@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftConf
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 
@@ -238,16 +239,8 @@ object TextAnalysis {
   private def tfReuseWorthIt(spark: SparkSession, sfDir: String,
       minDefault: Long = 4L << 20): Boolean = {
     val bytes = Tables.fsFingerprint(spark, s"$sfDir/documents.parquet")._2
-    // fail naming the key, not as a bare NumberFormatException at
-    // plan-build time (ADVICE r15)
-    def confBytes(key: String, default: Long): Long =
-      spark.conf.getOption(key).fold(default) { v =>
-        v.toLongOption.getOrElse(throw new IllegalArgumentException(
-          s"$key must be a byte count (long), got '$v'"))
-      }
-    val floor = confBytes("graft.text.tfCheckpointMinBytes", minDefault)
-    val ceil = confBytes("graft.text.tfCheckpointMaxBytes", 256L << 20)
-    bytes >= floor && bytes <= ceil
+    bytes >= GraftConf.TfCheckpointMinBytes.get(spark).getOrElse(minDefault) &&
+      bytes <= GraftConf.TfCheckpointMaxBytes(spark)
   }
 
   def tfidfTop(spark: SparkSession, sfDir: String): DataFrame = {
@@ -856,19 +849,20 @@ object TextAnalysis {
     val docs = Tables.documentsLight(spark, sfDir)
     import graft.Checkpoints.TruncateOps
     val toks = docs.select(col("doc_id"), explode(wsTokens(col("text"))).as("token"))
-    // tf computed ONCE (lineage-truncated), dl and df derived FROM it
-    // (guide §2.3/§2.4 + §5; the q_lm_score/tfidfTop recipe): the
-    // original formulation tokenized the corpus THREE times — once for
-    // tf, once for df's distinct, once for dl's size(wsTokens) — and
-    // per-consumer column pruning keeps the subtrees canonically
-    // different, so ReuseExchange never unified them. dl(doc) = Σ tf
-    // (every token occurrence is counted exactly once in tf), and
-    // df(token) = tf's row count per token. Zero-token documents are
-    // absent from the derived dl, but they were already unreachable in
-    // the output (the tf inner join drops them); only `stats` ever saw
-    // them, so n_docs keeps its own corpus count (a column-pruned scan,
-    // no tokenize) while sum_dl — to which empty docs contribute 0 —
-    // re-aggregates the derived dl.
+    // tf computed ONCE (lineage-truncated while tfReuseWorthIt) and df
+    // derived FROM it (guide §2.3/§2.4 + §5; the q_lm_score/tfidfTop
+    // recipe): the original formulation tokenized the corpus THREE
+    // times — once for tf, once for df's distinct, once for dl's
+    // size(wsTokens) — and per-consumer column pruning keeps the
+    // subtrees canonically different, so ReuseExchange never unified
+    // them. df(token) = tf's row count per token. dl is derived from tf
+    // (dl(doc) = Σ tf) only while tf is materialized; past the ceiling it
+    // keeps the map-only form (see the fallback below). Zero-token
+    // documents are absent from a tf-derived dl, but they were already
+    // unreachable in the output (the tf inner join drops them); only
+    // `stats` ever saw them, so n_docs keeps its own corpus count (a
+    // column-pruned scan, no tokenize) while sum_dl — to which empty
+    // docs contribute 0 — re-aggregates dl.
     val tfRaw = toks.groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
     // floor 0: dropping TWO extra passes pays even at sf0.1 (0.866 →

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftConf
 
 /** Partition-pruned fact layouts — the "at 100 TB these become
   * partitioned scans" promise in [[Tables]] made real: `orders` and
@@ -54,10 +55,6 @@ import org.apache.spark.sql.functions._
   * predicate keeps the semantics exact at the boundaries.
   */
 object PartitionedTables {
-
-  /** Route to the staged layout only at/above this base-table size. */
-  private[graft] val MinBytesKey = "graft.layout.minBytes"
-  private val DefaultMinBytes = 64L << 20
 
   /** Rows per staged parquet file — bounds file size regardless of how
     * many rows a write task holds (~600 MB at TPC-H fact row widths).
@@ -110,9 +107,7 @@ object PartitionedTables {
   private def routed(spark: SparkSession, sfDir: String, table: String,
       name: String, partCol: String, partExpr: Column, splitKey: Column,
       flat: => DataFrame): DataFrame = {
-    val minBytes = spark.conf.getOption(MinBytesKey)
-      .map(_.toLong).getOrElse(DefaultMinBytes)
-    if (baseBytes(spark, sfDir, table) >= minBytes)
+    if (baseBytes(spark, sfDir, table) >= GraftConf.LayoutMinBytes(spark))
       staged(spark, sfDir, name, partCol, splitKey,
         flat.withColumn(partCol, partExpr))
     else flat.withColumn(partCol, partExpr)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftConf
 
 /** Readers for the driver testdata tables (`/root/repo/TESTDATA.md`).
   *
@@ -83,9 +84,7 @@ object Tables {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     val (fp, bytes) = fsFingerprint(spark, path)
-    val minBytes = spark.conf.getOption("graft.spread.minBytes")
-      .orElse(sys.env.get("SPARK_GRAFT_SPREAD_MINBYTES"))
-      .map(_.toLong).getOrElse(defaultMin)
+    val minBytes = GraftConf.SpreadMinBytes.get(spark).getOrElse(defaultMin)
     // keyed on a per-session UUID, not identityHashCode: identity hashes
     // can be reused after a GC'd session, serving a stale decision
     val key = s"${sessionId(spark)}|$path|$fp"

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import graft.GraftConf
 
 /** Streaming ingest-time deduplication over the documents corpus — the
   * online half of the dedup pipeline: as documents arrive in
@@ -166,11 +167,7 @@ object DocsStreaming {
     import org.apache.hadoop.fs.Path
     val name = s"graft_stream_docs_mh_${nameCounter.incrementAndGet()}"
     val srcDir = stagedRangeShardedDocs(spark, sfDir, shards)
-    val compactEvery = spark.conf
-      .getOption("graft.streaming.bandIndexCompactEvery")
-      .map(_.toInt).getOrElse(2)
-    require(compactEvery >= 1,
-      s"graft.streaming.bandIndexCompactEvery must be >= 1, got $compactEvery")
+    val compactEvery = GraftConf.BandIndexCompactEvery(spark)
     // Deterministic run dir, wiped at start: repeated bench/verify passes
     // reuse (not leak) the same path, and a stale half-run can't pollute
     // this one's index or survivors.

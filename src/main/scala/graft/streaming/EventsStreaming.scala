@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.GraftConf
 import graft.sources.Tables
 
 /** Structured-streaming forms of the event operators (SURVEY.md §2.I5 and
@@ -279,85 +280,59 @@ object EventsStreaming {
     * stores are created per shuffle partition at query start, and 32
     * stores for a handful of groups is pure fixed cost (store init +
     * checkpoint IO dominated the streaming queries' bench time). The
-    * conf is restored after the query has fully executed — batch queries
-    * plan at their own execution time, so they never see the override.
+    * confs are restored after the query has fully executed — batch
+    * queries plan at their own execution time, so they never see the
+    * override.
     *
-    * Suite-wide state-store default: RocksDB. Heap
-    * (HDFSBackedStateStoreProvider) keeps every store's full contents as
-    * JVM objects and dies first at scale — per-user state over 10⁸ keys
-    * is exactly the shape that OOMs an executor; RocksDB keeps state
-    * off-heap with changelog checkpointing and is the provider a 100 TB
-    * deployment would run. The graft-level `graft.streaming.stateProvider`
-    * session conf selects the mode: `rocksdb` (the default), `heap`
-    * (comparison runs), or `session` (leave whatever provider the session
-    * pinned — the provider-invariance spec's escape hatch).
+    * Each query names its DESIGNED state-partition count `n` (the sf0.1
+    * shape, where 8 keeps per-partition state files small and the fixed
+    * per-partition provider overhead off the critical path). State must
+    * shard WIDER with data — a 100 M-key dedup in 8 RocksDB instances is
+    * 12.5 M keys per store, all compaction — so big-sf runs override it
+    * with `graft.streaming.statePartitions` (SPARK_GRAFT_STREAM_SHUFFLE).
+    * Unlike batch shuffle partitions this is a STATEFUL choice: the
+    * checkpoint pins it at first run, so the override only applies to
+    * fresh streams — exactly how a production resharding works.
+    *
+    * State store: RocksDB, unless `graft.streaming.stateProvider=heap`
+    * selects the HDFS-backed heap store that specs compare RocksDB
+    * against. Heap keeps every store's full contents as JVM objects and
+    * dies first at scale; RocksDB keeps state off-heap and is the
+    * provider a 100 TB deployment would run. `rocksDbRequired` is set by
+    * transformWithState callers: that operator runs only on RocksDB, so
+    * it ignores the setting.
+    *
+    * RocksDB changelog checkpointing follows
+    * `graft.streaming.rocksdbChangelog` (default on): without it every
+    * micro-batch commit uploads a full RocksDB snapshot per state-store
+    * partition; with it the commit writes only that batch's changelog
+    * and snapshots move to the background maintenance thread. It is
+    * restart-compatible (recovery replays changelogs onto the last
+    * snapshot) and changes no result, only per-commit checkpoint bytes.
     */
   private[streaming] val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   private[streaming] val HeapProvider =
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 
-  private[streaming] def withStreamPartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    // Each query names its DESIGNED state-partition count `n` (the
-    // sf0.1 shape, where 8 keeps per-partition state files small and
-    // the fixed per-partition provider overhead off the critical
-    // path). State must shard WIDER with data — a 100 M-key dedup in 8
-    // RocksDB instances is 12.5 M keys per store, all compaction — so
-    // big-sf runs override it via `graft.streaming.statePartitions`
-    // (Bench: SPARK_GRAFT_STREAM_SHUFFLE), the streaming twin of the
-    // SPARK_GRAFT_SHUFFLE spill-sizing discipline. NOTE unlike batch
-    // shuffle partitions this is a STATEFUL choice: the checkpoint pins
-    // it at first run, so the override only applies to fresh streams —
-    // exactly how a production resharding works (new checkpoint).
-    // validated like stateProvider below: a malformed or non-positive
-    // override must fail naming the key BEFORE any conf is mutated, not
-    // as an opaque NumberFormatException inside the first streaming query
-    val eff = spark.conf.getOption("graft.streaming.statePartitions")
-      .map { v =>
-        v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-          s"graft.streaming.statePartitions must be a positive integer, got '$v'"))
-      }.getOrElse(n)
-    val key = "spark.sql.shuffle.partitions"
-    val pKey = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.get(key)
-    val oldProvider = spark.conf.get(pKey) // effective value (default = heap)
-    // validate BEFORE the first conf.set: an invalid mode must throw
-    // without leaking the shuffle-partition override into the session
-    val desired = spark.conf.getOption("graft.streaming.stateProvider")
-        .getOrElse("rocksdb") match {
-      case "rocksdb" => Some(RocksDbProvider)
-      case "heap"    => Some(HeapProvider)
-      case "session" => None
-      case other => throw new IllegalArgumentException(
-        s"graft.streaming.stateProvider must be rocksdb|heap|session, got '$other'")
-    }
-    // RocksDB changelog checkpointing (default ON, graft-level off
-    // switch for comparison runs): without it every micro-batch commit
-    // uploads a full RocksDB snapshot per state-store partition; with
-    // it the commit writes only that batch's changelog and snapshots
-    // move to the background maintenance thread. This is the documented
-    // production mode for low-latency stateful streaming and is
-    // restart-compatible (recovery replays changelogs onto the last
-    // snapshot) — the result contract is unchanged at any scale, only
-    // per-commit checkpoint bytes shrink.
-    val clKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val changelog = spark.conf.getOption("graft.streaming.rocksdbChangelog")
-        .getOrElse("true") match {
-      case "true" | "1"  => true
-      case "false" | "0" => false
-      case other => throw new IllegalArgumentException(
-        s"graft.streaming.rocksdbChangelog must be true|false, got '$other'")
-    }
-    val oldChangelog = spark.conf.getOption(clKey)
-    spark.conf.set(key, eff.toString)
-    desired.foreach(spark.conf.set(pKey, _))
-    if (changelog) spark.conf.set(clKey, "true")
-    try body finally {
-      spark.conf.set(key, old)
-      if (desired.nonEmpty) spark.conf.set(pKey, oldProvider)
-      if (changelog) oldChangelog.fold(spark.conf.unset(clKey))(
-        spark.conf.set(clKey, _))
+  private[streaming] def withStreamPartitions[A](spark: SparkSession, n: Int,
+      rocksDbRequired: Boolean = false)(body: => A): A = {
+    // every graft conf is parsed before the first set, so a malformed
+    // value throws without leaking an override into the session
+    val selected = GraftConf.StateProvider(spark)
+    val provider =
+      if (rocksDbRequired || selected == "rocksdb") RocksDbProvider else HeapProvider
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" ->
+        GraftConf.StatePartitions.get(spark).getOrElse(n).toString,
+      "spark.sql.streaming.stateStore.providerClass" -> provider,
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        GraftConf.RocksDbChangelog(spark).toString)
+    val old = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

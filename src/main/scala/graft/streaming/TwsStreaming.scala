@@ -16,32 +16,6 @@ import org.apache.spark.sql.types._
   */
 object TwsStreaming {
 
-  /** transformWithState mandates the RocksDB provider; scope it to the
-    * call and restore the session's prior setting after.
-    */
-  private def withRocksDb[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    // changelog checkpointing: same policy + rationale as
-    // EventsStreaming.withStreamPartitions — per-commit changelogs
-    // instead of per-commit full snapshots; result-invariant
-    val clKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val old = spark.conf.getOption(key)
-    val oldCl = spark.conf.getOption(clKey)
-    val changelog = !spark.conf.getOption("graft.streaming.rocksdbChangelog")
-      .contains("false")
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    if (changelog) spark.conf.set(clKey, "true")
-    try body finally {
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-      if (changelog) oldCl.fold(spark.conf.unset(clKey))(spark.conf.set(clKey, _))
-    }
-  }
-
   /** Cumulative per-user running totals carried in ValueState. */
   case class UserTotals(n_events: Long, spend_c: Long)
   /** Per-batch emission: the key plus its updated totals. */
@@ -108,21 +82,19 @@ object TwsStreaming {
     * contract = the batch two-key aggregate.
     */
   def perTypeCounts(spark: SparkSession, sfDir: String): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8) {
+      EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
     import spark.implicits._
-    withRocksDb(spark) {
-      val name = s"graft_stream_twsmap_${EventsStreaming.nextName()}"
-      val typed = EventsStreaming.eventsStream(spark, sfDir)
-        .select(col("user_id"), col("event_type"))
-        .as[(Long, String)]
-      val out = typed.groupByKey(_._1)
-        .transformWithState(new PerTypeCounts,
-          TimeMode.None(), OutputMode.Update())
-      val dumped = EventsStreaming.runToParquet(spark, out.toDF(), name,
-        OutputMode.Update)
-      dumped.groupBy(col("user_id"), col("event_type"))
-        .agg(max(col("n")).as("n"))
-    }
+    val name = s"graft_stream_twsmap_${EventsStreaming.nextName()}"
+    val typed = EventsStreaming.eventsStream(spark, sfDir)
+      .select(col("user_id"), col("event_type"))
+      .as[(Long, String)]
+    val out = typed.groupByKey(_._1)
+      .transformWithState(new PerTypeCounts,
+        TimeMode.None(), OutputMode.Update())
+    val dumped = EventsStreaming.runToParquet(spark, out.toDF(), name,
+      OutputMode.Update)
+    dumped.groupBy(col("user_id"), col("event_type"))
+      .agg(max(col("n")).as("n"))
   }
 
   /** Per-(user, rank) emission from ListState. */
@@ -163,25 +135,23 @@ object TwsStreaming {
     * = the batch rank-≤-k window.
     */
   def firstTouches(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8) {
+      EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
     import spark.implicits._
-    withRocksDb(spark) {
-      val name = s"graft_stream_twslist_${EventsStreaming.nextName()}"
-      val typed = EventsStreaming.eventsStream(spark, sfDir)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_id"))
-        .as[(Long, Long, Long)]
-      val out = typed.groupByKey(_._1)
-        .transformWithState(new FirstTouches(k),
-          TimeMode.None(), OutputMode.Update())
-      EventsStreaming.runToParquet(spark, out.toDF(), name, OutputMode.Update)
-        // final prefix per user: a rank's value only ever moves EARLIER
-        // in (ts, id) order as new batches refine the prefix, so the
-        // latest emission at each rank is its (ts, id)-minimum
-        .groupBy(col("user_id"), col("rank"))
-        .agg(min(struct(col("ts_us"), col("event_id"))).as("m"))
-        .select(col("user_id"), col("rank"), col("m.event_id").as("event_id"))
-    }
+    val name = s"graft_stream_twslist_${EventsStreaming.nextName()}"
+    val typed = EventsStreaming.eventsStream(spark, sfDir)
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+        col("event_id"))
+      .as[(Long, Long, Long)]
+    val out = typed.groupByKey(_._1)
+      .transformWithState(new FirstTouches(k),
+        TimeMode.None(), OutputMode.Update())
+    EventsStreaming.runToParquet(spark, out.toDF(), name, OutputMode.Update)
+      // final prefix per user: a rank's value only ever moves EARLIER
+      // in (ts, id) order as new batches refine the prefix, so the
+      // latest emission at each rank is its (ts, id)-minimum
+      .groupBy(col("user_id"), col("rank"))
+      .agg(min(struct(col("ts_us"), col("event_id"))).as("m"))
+      .select(col("user_id"), col("rank"), col("m.event_id").as("event_id"))
   }
 
   case class SessEv(event_id: Long, user_id: Long, ts_us: Long)
@@ -311,29 +281,27 @@ object TwsStreaming {
     * sees a flush marker.
     */
   def timerSessions(spark: SparkSession, sfDir: String): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8) {
+      EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
     import spark.implicits._
-    withRocksDb(spark) {
-      val name = s"graft_stream_twssess_${EventsStreaming.nextName()}"
-      val srcDir = stagedTimerSrc(spark, sfDir)
-      val src = spark.readStream.schema(EventsStreaming.rawSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        // NO eos filter before the watermark: a pushed-down filter would
-        // drop the sentinels at the scan, below the EventTimeWatermark
-        // node, and the watermark would never advance past the last real
-        // event (observed: trailing timers never fire). The processor
-        // skips them instead.
-        .withWatermark("ts", "1 hour")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"))
-        .as[SessEv]
-      val out = src.groupByKey(_.user_id)
-        .transformWithState(new TimerSessionizer,
-          TimeMode.EventTime(), OutputMode.Append())
-      EventsStreaming.runToParquet(spark, out.toDF(), name)
-    }
+    val name = s"graft_stream_twssess_${EventsStreaming.nextName()}"
+    val srcDir = stagedTimerSrc(spark, sfDir)
+    val src = spark.readStream.schema(EventsStreaming.rawSchema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(srcDir)
+      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      // NO eos filter before the watermark: a pushed-down filter would
+      // drop the sentinels at the scan, below the EventTimeWatermark
+      // node, and the watermark would never advance past the last real
+      // event (observed: trailing timers never fire). The processor
+      // skips them instead.
+      .withWatermark("ts", "1 hour")
+      .select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("ts_us"))
+      .as[SessEv]
+    val out = src.groupByKey(_.user_id)
+      .transformWithState(new TimerSessionizer,
+        TimeMode.EventTime(), OutputMode.Append())
+    EventsStreaming.runToParquet(spark, out.toDF(), name)
   }
 
   /** Streaming per-user lifetime totals via `transformWithState` — the
@@ -345,25 +313,23 @@ object TwsStreaming {
     * key cardinalities a heap HashMap cannot.
     */
   def runningTotals(spark: SparkSession, sfDir: String): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8) {
+      EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
     import spark.implicits._
-    withRocksDb(spark) {
-      val name = s"graft_stream_tws_${EventsStreaming.nextName()}"
-      val typed = EventsStreaming.eventsStream(spark, sfDir)
-        .select(col("user_id"),
-          when(col("event_type") === "purchase",
-            (col("value").cast("decimal(12,2)") * 100).cast("long"))
-            .otherwise(lit(0L)).as("cents"))
-        .as[(Long, Long)]
-      val out = typed.groupByKey(_._1)
-        .transformWithState(new RunningTotals,
-          TimeMode.None(), OutputMode.Update())
-      val dumped = EventsStreaming.runToParquet(spark, out.toDF(), name,
-        OutputMode.Update)
-      dumped.groupBy(col("user_id"))
-        .agg(max(struct(col("n_events"), col("spend_c"))).as("last"))
-        .select(col("user_id"), col("last.n_events").as("n_events"),
-          col("last.spend_c").as("spend_c"))
-    }
+    val name = s"graft_stream_tws_${EventsStreaming.nextName()}"
+    val typed = EventsStreaming.eventsStream(spark, sfDir)
+      .select(col("user_id"),
+        when(col("event_type") === "purchase",
+          (col("value").cast("decimal(12,2)") * 100).cast("long"))
+          .otherwise(lit(0L)).as("cents"))
+      .as[(Long, Long)]
+    val out = typed.groupByKey(_._1)
+      .transformWithState(new RunningTotals,
+        TimeMode.None(), OutputMode.Update())
+    val dumped = EventsStreaming.runToParquet(spark, out.toDF(), name,
+      OutputMode.Update)
+    dumped.groupBy(col("user_id"))
+      .agg(max(struct(col("n_events"), col("spend_c"))).as("last"))
+      .select(col("user_id"), col("last.n_events").as("n_events"),
+        col("last.spend_c").as("spend_c"))
   }
 }

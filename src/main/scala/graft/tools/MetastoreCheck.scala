@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 
 import graft.operators.Dedup
@@ -28,19 +27,13 @@ import graft.operators.Dedup
 object MetastoreCheck {
   def main(args: Array[String]): Unit = {
     val Array(mode, workDir, sfDir) = args.take(3)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName(s"graft-metastore-$mode")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$workDir/warehouse")
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$workDir/metastore_db;create=true")
-      .enableHiveSupport()
-      .getOrCreate()
+    val spark = graft.GraftSession.start(
+      graft.GraftSession.local(s"graft-metastore-$mode", 4) ++ Map(
+        "spark.sql.warehouse.dir" -> s"$workDir/warehouse",
+        "spark.hadoop.javax.jdo.option.ConnectionURL" ->
+          s"jdbc:derby:;databaseName=$workDir/metastore_db;create=true"),
+      hive = true)
     try {
-      spark.sparkContext.setLogLevel("WARN")
       val bound = 450L
       val table = Dedup.bandIndexTable(sfDir, bound)
       // does THIS fresh JVM's catalog already know the table? (in-memory

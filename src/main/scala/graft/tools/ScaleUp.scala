@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-step generator: replicates the sf0.1 testdata
@@ -75,14 +75,8 @@ object ScaleUp {
       java.nio.file.Files.createDirectories(root)
       java.nio.file.Files.writeString(startTag, tag)
     }
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(graft.GraftSession.local("graft-scaleup", 16) +
+      ("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")

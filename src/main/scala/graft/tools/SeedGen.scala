@@ -2,7 +2,7 @@ package graft.tools
 
 import java.util.Random
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Adversarial fixture regeneration (multi-seed fuzz): rebuilds the
@@ -43,14 +43,7 @@ object SeedGen {
       println(s"SEEDGEN reuse $out ($tag)")
       return
     }
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-seedgen")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(graft.GraftSession.local("graft-seedgen", 8))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
 
     // untouched tables: byte-copy from the source sf dir (single files)

@@ -14,9 +14,9 @@ class CheckpointsSpec extends SparkTestBase {
 
   private def withReliableDir[A](body: String => A): A = {
     val dir = Files.createTempDirectory("graft_cc_reliable").toString
-    spark.conf.set(Checkpoints.DirKey, dir)
+    spark.conf.set(GraftConf.CheckpointDir.key, dir)
     try body(dir)
-    finally spark.conf.unset(Checkpoints.DirKey)
+    finally spark.conf.unset(GraftConf.CheckpointDir.key)
   }
 
   test("truncate writes reliable checkpoint files when the dir is configured") {

@@ -36,7 +36,6 @@ class MetastoreSpec extends AnyFunSuite {
       val out = scala.collection.mutable.ArrayBuffer[String]()
       val cmd = Seq(javaBin) ++ addOpens ++ Seq(
         "-Xmx4g", s"-Dderby.system.home=$work",
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-cp", cp, "graft.tools.MetastoreCheck",
         mode, work, "/root/testdata/sf0.001")
       val rc = Process(cmd, new java.io.File(work))

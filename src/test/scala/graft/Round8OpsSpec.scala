@@ -33,7 +33,7 @@ class Round8OpsSpec extends SparkTestBase {
     * layout produces once a table clears `graft.layout.minBytes`.
     */
   private def withStagedRouting[A](body: => A): A = {
-    val key = graft.sources.PartitionedTables.MinBytesKey
+    val key = GraftConf.LayoutMinBytes.key
     val old = spark.conf.getOption(key)
     spark.conf.set(key, "0")
     try body finally {

@@ -1,26 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc dev driver: `sbt "Test/runMain graft.Scratch <op> [sfDir]"`.
   * Times individual operators and prints plans — forked JVM, so it
   * avoids the sbt-console REPL/classloader clash with Spark 4.
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("graft.scratch.master", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.props.getOrElse("graft.scratch.shuffle", "4"))
-      // plan-dump aid: -Dgraft.checkpoint.skip=true disables mid-plan
-      // lineage truncation so `explain` shows the WHOLE operator plan
-      // (see Checkpoints.SkipKey); harmless default otherwise
-      .config(Checkpoints.SkipKey,
-        sys.props.getOrElse(Checkpoints.SkipKey, "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // sized like Bench and Verify (SPARK_GRAFT_CPUS, default 4 here, and
+    // SPARK_GRAFT_SHUFFLE). Plan-dump aid: -Dgraft.checkpoint.skip=true
+    // disables mid-plan lineage truncation so `explain` shows the WHOLE
+    // operator plan (see GraftConf.CheckpointSkip)
+    val skip = GraftConf.CheckpointSkip.key
+    val spark = GraftSession.start(
+      GraftSession.fromEnv("graft-scratch", Map("SPARK_GRAFT_CPUS" -> "4") ++ sys.env) ++
+        sys.props.get(skip).map(skip -> _),
+      logLevel = "ERROR")
     val d = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
 
     def time(n: String)(f: => Long): Unit = {
