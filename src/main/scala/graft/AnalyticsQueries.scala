@@ -113,7 +113,7 @@ object AnalyticsQueries {
     "q_json_roundtrip" -> ((s, d) => Formats.jsonRoundtrip(s, d)),
     "q_compact" -> ((s, d) => Formats.compactRoundtrip(s, d)),
     "q_backfill_partition" -> ((s, d) => Formats.backfillPartition(s, d,
-      s"${sys.props("java.io.tmpdir")}/graft_backfill_${d.replaceAll("[^A-Za-z0-9.]", "_")}")),
+      Staging.runDir("graft_backfill").toString)),
     "q_zorder" -> ((s, d) => Formats.zorderProfile(s, d)),
     "q_codec_roundtrip" -> ((s, d) => Formats.codecRoundtrip(s, d)),
     "q_schema_evolution" -> ((s, d) => Formats.schemaEvolutionRead(s, d)),

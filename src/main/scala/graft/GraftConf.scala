@@ -75,9 +75,6 @@ object GraftConf {
   /** Table bytes from which a few-split scan is spread; per-table default. */
   val SpreadMinBytes = new Key("graft.spread.minBytes", bytes)
 
-  /** Micro-batches between band-index compactions in the streaming dedup. */
-  val BandIndexCompactEvery =
-    new Setting("graft.streaming.bandIndexCompactEvery", positiveInt, 2)
   /** RocksDB changelog checkpointing for every stateful stream. */
   val RocksDbChangelog = new Setting("graft.streaming.rocksdbChangelog", bool, true)
   /** State partitions of every stateful stream; unset = the query's own count. */
@@ -98,6 +95,6 @@ object GraftConf {
   val all: Seq[Key[_]] = Seq(CheckpointDir, CheckpointSkip, CheckpointLevel,
     DedupBroadcastIdLimit, DedupExactGenLimit, DedupStopBroadcastLimit,
     LayoutMinBytes, PathsMaxEventsPerUser, RfmWindowMaxEventRows,
-    SpreadMinBytes, BandIndexCompactEvery, RocksDbChangelog, StatePartitions,
+    SpreadMinBytes, RocksDbChangelog, StatePartitions,
     StateProvider, TfCheckpointMaxBytes, TfCheckpointMinBytes)
 }

@@ -202,8 +202,7 @@ object TwseQueries {
     "q_daily_routes" -> ((s, _) => {
       import s.implicits._
       val cfg = graft.DailyApp.Config(
-        base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-          s"graft_daily_q_${java.util.UUID.randomUUID().toString.take(8)}"),
+        base = Staging.runDir("graft_daily_q"),
         useFixtures = true, sleep = _ => ())
       graft.DailyApp.runTick(s, cfg).routes.toDF("dt", "route")
     })

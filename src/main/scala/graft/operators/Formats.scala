@@ -45,7 +45,7 @@ object Formats {
     val f = dir.resolve("rows.csv")
     if (!java.nio.file.Files.exists(f)) {
       java.nio.file.Files.createDirectories(dir)
-      // stage + atomic move (the _DONE-sentinel staging idiom): a
+      // stage + atomic move (the graft.Staging publish idiom): a
       // concurrent bench/verify process either sees the complete file
       // or none — never a half-written rows.csv
       val tmp = java.nio.file.Files.createTempFile(dir, ".rows", ".tmp")

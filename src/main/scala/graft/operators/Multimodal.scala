@@ -203,28 +203,23 @@ object Multimodal {
     * things that matter at 100 TB are source behaviors: `pathGlobFilter`
     * prunes non-media files at listing time, metadata-only queries
     * (count, size rollups) never read `content`, and each file is its
-    * own split so decode parallelism follows file count. Staging is
-    * idempotent per sfDir (a `_SUCCESS`-gated one-time write of
-    * `limitDocs` files); doc identity travels IN THE FILE NAME, the
-    * only place a blob store keeps it.
+    * own split so decode parallelism follows file count. The `limitDocs`
+    * files are written once per sfDir through [[graft.Staging]]; doc
+    * identity travels IN THE FILE NAME, the only place a blob store
+    * keeps it.
     */
   def mediaFilesDecode(spark: SparkSession, sfDir: String,
       limitDocs: Int = 200, batchSize: Int = 32): DataFrame = {
     import spark.implicits._
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_media_files_${safe}_v1")
-    val done = dir.resolve("_SUCCESS")
-    if (!java.nio.file.Files.exists(done)) {
-      java.nio.file.Files.createDirectories(dir)
+    val dir = graft.Staging.derived(spark, s"media_files$limitDocs", sfDir, Nil) { build =>
+      val d = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(build))
       (0L until limitDocs.toLong).foreach { id =>
-        java.nio.file.Files.write(dir.resolve(f"doc_$id%05d.png"), encodePng(id))
+        java.nio.file.Files.write(d.resolve(f"doc_$id%05d.png"), encodePng(id))
       }
-      java.nio.file.Files.write(done, Array.empty[Byte])
     }
     val decoded = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.png")
-      .load(dir.toString)
+      .load(dir)
       .select(
         regexp_extract(col("path"), "doc_(\\d+)\\.png", 1).cast("long")
           .as("doc_id"),

@@ -513,7 +513,7 @@ object Similarity {
 
   /** TRAIN-ONCE k-means model per (sfDir, k, iters) — centroids and the
     * full assignment relation materialized through the idempotent
-    * `_SUCCESS`-gated store ([[materializedModel]]): codebooks and IVF
+    * published store ([[materializedModel]]): codebooks and IVF
     * lists are ARTIFACTS a production deployment trains on a sample and
     * persists next to the corpus, not query plans to re-derive per
     * lookup. Training is exact-integer deterministic, so the stored
@@ -533,42 +533,17 @@ object Similarity {
     (af, cent)
   }
 
-  /** Idempotent per-(model, data) parquet store, `_SUCCESS`-gated and
-    * finalized by one atomic rename (the PartitionedTables staging
-    * discipline — a concurrent builder losing the race keeps the
-    * winner's model, and no reader ever sees a partial one).
-    *
-    * The store key includes the TRAINING DATA's FS fingerprint (file
-    * count + bytes + max mtime), not just the path: regenerating the
-    * data in place (ScaleUp wipe/resume with a new factor) changes the
-    * fingerprint and forces a retrain — a stale model trained on the
-    * old corpus can never be silently served against new vec_ids. The
-    * build dir is process-unique (pid + nano), so two PROCESSES racing
-    * the same model never co-write one staging dir; whoever renames
-    * first wins and the loser discards its build.
+  /** Idempotent per-(model, data) parquet store through [[graft.Staging]]:
+    * the key covers the TRAINING DATA's FS fingerprint, not just the path,
+    * so regenerating the data in place (ScaleUp wipe/resume with a new
+    * factor) forces a retrain — a stale model trained on the old corpus
+    * can never be silently served against new vec_ids — and the atomic
+    * publish means no reader ever sees a partial model.
     */
   private def materializedModel(spark: SparkSession, name: String,
-      sfDir: String)(build: => DataFrame): DataFrame = synchronized {
-    import org.apache.hadoop.fs.Path
-    val f = new java.io.File(sfDir)
-    val (fp, _) = Tables.fsFingerprint(spark, s"$sfDir/embeddings.parquet")
-    val tag = f.getName.replaceAll("[^A-Za-z0-9.]", "_") + "_" +
-      Integer.toHexString((f.getAbsolutePath + "|" + fp).hashCode)
-    val dir = new Path(
-      s"${sys.props("java.io.tmpdir")}/graft_model_${name}_$tag")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(dir, "_SUCCESS"))) {
-      val buildDir = new Path(dir.toString +
-        s".build-${ProcessHandle.current.pid}-${System.nanoTime}")
-      build.write.mode("overwrite").parquet(buildDir.toString)
-      if (!fs.rename(buildDir, dir)) {
-        if (!fs.exists(dir)) throw new java.io.IOException(
-          s"failed to finalize model $buildDir -> $dir")
-        fs.delete(buildDir, true) // lost the race; keep the winner's model
-      }
-    }
-    spark.read.parquet(dir.toString)
-  }
+      sfDir: String)(build: => DataFrame): DataFrame =
+    spark.read.parquet(graft.Staging.derived(spark, s"model_$name", sfDir,
+      Seq(s"$sfDir/embeddings.parquet"))(build.write.mode("overwrite").parquet(_)))
 
   /** IVF with a LEARNED coarse key — the conclusion the round-9 ANN
     * recall-cost curve measured (PLANS.md): label-IVF prunes at ~1.3×

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.GraftConf
+import graft.{GraftConf, Staging}
 
 /** Partition-pruned fact layouts — the "at 100 TB these become
   * partitioned scans" promise in [[Tables]] made real: `orders` and
@@ -30,16 +30,14 @@ import graft.GraftConf
   * than it saves at the small end. Tests pin the staged plan shape by
   * setting the conf to 0.
   *
-  * Staging is idempotent per sf (one layout rewrite, amortized across
-  * every subsequent query — the bucketed-table discipline) and atomic
-  * (Spark writes into a `.build` dir, finalized by a filesystem rename,
-  * so a concurrent bench/verify process sees the complete layout or
-  * none). All staging I/O goes through the Hadoop `FileSystem` API —
-  * the layout dir may live on HDFS/S3A on a real cluster, and
-  * `java.nio` only ever sees the local disk. The partition value is a
-  * ZERO-PADDED string (`yyyy-MM` / `yyyy-MM-dd`), so lexicographic
-  * comparisons equal chronological ones and range predicates prune
-  * directly.
+  * Staging is idempotent per base table (one layout rewrite, amortized
+  * across every subsequent query — the bucketed-table discipline) and
+  * atomic: [[graft.Staging]] keys the layout on the data dir and the
+  * table's FS fingerprint and publishes it by one rename, so a concurrent
+  * bench/verify process sees the complete layout or none. The partition
+  * value is a ZERO-PADDED string (`yyyy-MM` / `yyyy-MM-dd`), so
+  * lexicographic comparisons equal chronological ones and range
+  * predicates prune directly.
   *
   * The staging write is SKEW-SAFE: rows are range-partitioned on
   * (partition column, intra-partition key), so one hot month splits
@@ -61,9 +59,6 @@ object PartitionedTables {
     */
   private val MaxRecordsPerFile = 4L * 1000 * 1000
 
-  private def sfTag(sfDir: String): String =
-    new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-
   private def baseBytes(spark: SparkSession, sfDir: String,
       table: String): Long = {
     val p = new Path(s"$sfDir/$table.parquet")
@@ -71,44 +66,28 @@ object PartitionedTables {
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
-  /** Stage `df` partitioned by `partCol` under an idempotent per-sf
-    * dir; returns the read-back DataFrame (partition column appears as
-    * a string column). `splitKey` spreads a single partition value
-    * across write tasks (range partitioning on the pair).
+  /** Stage `df` partitioned by `partCol` through [[graft.Staging]], keyed
+    * on the base table; returns the read-back DataFrame (partition column
+    * appears as a string column). `splitKey` spreads a single partition
+    * value across write tasks (range partitioning on the pair).
     */
-  private def staged(spark: SparkSession, sfDir: String, name: String,
-      partCol: String, splitKey: Column, df: => DataFrame): DataFrame =
-    synchronized {
-      val dir = new Path(
-        s"${sys.props("java.io.tmpdir")}/graft_pt_${name}_${sfTag(sfDir)}")
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(dir)) {
-        val build = new Path(dir.toString + ".build")
-        // a crashed earlier attempt may have left a partial build
-        fs.delete(build, true)
-        df.repartitionByRange(
-            spark.sessionState.conf.numShufflePartitions,
-            col(partCol), splitKey)
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", MaxRecordsPerFile)
-          .partitionBy(partCol)
-          .parquet(build.toString)
-        // atomic finalize; a concurrent process finalizing first makes
-        // the rename report failure with dst present — keep theirs
-        if (!fs.rename(build, dir)) {
-          if (!fs.exists(dir)) throw new java.io.IOException(
-            s"failed to finalize staged layout $build -> $dir")
-          fs.delete(build, true)
-        }
-      }
-      spark.read.parquet(dir.toString)
-    }
+  private def staged(spark: SparkSession, sfDir: String, table: String,
+      name: String, partCol: String, splitKey: Column, df: => DataFrame): DataFrame =
+    spark.read.parquet(Staging.derived(spark, s"pt_$name", sfDir,
+        Seq(s"$sfDir/$table.parquet")) { build =>
+      df.repartitionByRange(spark.sessionState.conf.numShufflePartitions,
+          col(partCol), splitKey)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", MaxRecordsPerFile)
+        .partitionBy(partCol)
+        .parquet(build)
+    })
 
   private def routed(spark: SparkSession, sfDir: String, table: String,
       name: String, partCol: String, partExpr: Column, splitKey: Column,
       flat: => DataFrame): DataFrame = {
     if (baseBytes(spark, sfDir, table) >= GraftConf.LayoutMinBytes(spark))
-      staged(spark, sfDir, name, partCol, splitKey,
+      staged(spark, sfDir, table, name, partCol, splitKey,
         flat.withColumn(partCol, partExpr))
     else flat.withColumn(partCol, partExpr)
   }

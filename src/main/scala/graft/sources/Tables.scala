@@ -66,7 +66,7 @@ object Tables {
       _ => java.util.UUID.randomUUID().toString)
 
   /** Cheap FS-metadata fingerprint: file count, total bytes, max mtime.
-    * Shared with model-store keying (Similarity.materializedModel) so
+    * Shared with the artifact key rule ([[graft.Staging]]) so
     * regenerated-in-place data invalidates every derived artifact, not
     * just the spread decision.
     */

@@ -3,9 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.Staging
 import graft.sources.Tables
 
 /** Streaming CDC consumer — the online form of `Formats.cdcApply`: an
@@ -40,35 +40,22 @@ object CdcStreaming {
   /** Stage the cdcApply change log as two mtime-ordered files: the v=1
     * insert snapshot, then the v=2 update/delete batch.
     */
-  private def stagedLogDir(spark: SparkSession, sfDir: String): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_stream_cdclog_${safe}_v1")
-    val f1 = dir.resolve("batch1.parquet")
-    if (!java.nio.file.Files.exists(dir.resolve("batch2.parquet"))) {
-      java.nio.file.Files.createDirectories(dir)
+  private def stagedLogDir(spark: SparkSession, sfDir: String): String =
+    Staging.landingFiles(spark, "cdclog", sfDir, Seq(s"$sfDir/orders.parquet")) {
       val base = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_orderstatus"),
           (col("o_totalprice").cast("decimal(18,2)") * 100)
             .cast("long").as("p_cents"))
-      EventsStreaming.stageSingleFile(
-        base.select(col("o_orderkey"), col("o_orderstatus"), col("p_cents"),
-          lit(1).as("v"), lit("I").as("op")), dir, f1)
-      val f2 = dir.resolve("batch2.parquet")
-      EventsStreaming.stageSingleFile(
-        base.filter(col("o_orderkey") % 10 === 0)
+      Seq("batch1.parquet" -> base.select(col("o_orderkey"), col("o_orderstatus"),
+          col("p_cents"), lit(1).as("v"), lit("I").as("op")),
+        "batch2.parquet" -> base.filter(col("o_orderkey") % 10 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"), col("p_cents"),
             lit(2).as("v"), lit("D").as("op"))
           .union(base.filter(col("o_orderkey") % 10 === 1)
             .select(col("o_orderkey"), col("o_orderstatus"),
               (col("p_cents") * 2).as("p_cents"),
-              lit(2).as("v"), lit("U").as("op"))), dir, f2)
-      java.nio.file.Files.setLastModifiedTime(f2,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(f1).toMillis + 60000))
+              lit(2).as("v"), lit("U").as("op"))))
     }
-    dir.toString
-  }
 
   private def latestGen(tableDir: java.nio.file.Path): Option[java.nio.file.Path] =
     if (!java.nio.file.Files.exists(tableDir)) None
@@ -85,29 +72,22 @@ object CdcStreaming {
     */
   def apply(spark: SparkSession, sfDir: String): DataFrame =
       EventsStreaming.withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_cdc_${EventsStreaming.nextName()}"
-    val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_cdc_${java.util.UUID.randomUUID().toString.take(8)}_$name")
-    val tableDir = base.resolve("table")
+    val run = Staging.runDir("graft_stream_cdc")
+    val tableDir = run.resolve("table")
     val byKey = Window.partitionBy(col("o_orderkey"))
       .orderBy(col("v").desc, col("op").desc)
-    val q = spark.readStream.schema(logSchema)
+    val log = spark.readStream.schema(logSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stagedLogDir(spark, sfDir))
-      .writeStream
-      .option("checkpointLocation", base.resolve("checkpoint").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = latestGen(tableDir)
-          .map(p => batch.sparkSession.read.parquet(p.toString))
-        val merged = prev.map(_.union(batch)).getOrElse(batch)
-          .withColumn("rn", row_number().over(byKey))
-          .filter(col("rn") === 1).drop("rn")
-        merged.write.mode("overwrite")
-          .parquet(tableDir.resolve(s"gen=$batchId").toString)
-      }
-      .start()
-    q.awaitTermination()
+    EventsStreaming.runAvailableNow(run, log) { (batch, batchId) =>
+      val prev = latestGen(tableDir)
+        .map(p => batch.sparkSession.read.parquet(p.toString))
+      val merged = prev.map(_.union(batch)).getOrElse(batch)
+        .withColumn("rn", row_number().over(byKey))
+        .filter(col("rn") === 1).drop("rn")
+      merged.write.mode("overwrite")
+        .parquet(tableDir.resolve(s"gen=$batchId").toString)
+    }
     val live = latestGen(tableDir) match {
       case Some(p) => spark.read.parquet(p.toString)
       case None => spark.createDataFrame(

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
-import graft.GraftConf
+import graft.Staging
 
 /** Streaming ingest-time deduplication over the documents corpus — the
   * online half of the dedup pipeline: as documents arrive in
@@ -20,8 +18,6 @@ import graft.GraftConf
   */
 object DocsStreaming {
 
-  private val nameCounter = new AtomicInteger()
-
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("text", StringType),
@@ -29,33 +25,27 @@ object DocsStreaming {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  // All staging I/O below goes through the Hadoop FileSystem API (the
-  // GraftCommitSink/PartitionedTables discipline): on a real cluster
-  // the stream source dir lives on HDFS/S3A. Staging goes THROUGH the
-  // Spark reader, never a raw file copy: a production-shape fixture is
-  // a DIRECTORY of part files, and Spark's file-stream source does not
-  // recurse into subdirectories — a raw copy of the dir under the
-  // source path produced a source the stream listed as EMPTY (caught by
-  // the sf100 oracle gate: 0 rows vs 1.56 M; smaller fixtures are
-  // single files, so no scale below the restaged one could see it).
-  // `_v2` layout tag: pre-fix stagings under the old name are ignored,
-  // the ScaleUp `v2` restage precedent.
-  private def stagedDir(spark: SparkSession, sfDir: String): String = {
-    import org.apache.hadoop.fs.Path
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = new Path(
-      sys.props("java.io.tmpdir"), s"graft_stream_docs_${safe}_v2")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(dir, "_SUCCESS")))
-      spark.read.schema(docSchema).parquet(s"$sfDir/documents.parquet")
-        .write.mode("overwrite").parquet(dir.toString)
-    dir.toString
-  }
+  private def docs(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.schema(docSchema).parquet(s"$sfDir/documents.parquet")
+
+  /** A documents landing of `kind`. Staging goes THROUGH the Spark reader,
+    * never a raw file copy: a production-shape fixture is a DIRECTORY of
+    * part files, and Spark's file-stream source does not recurse into
+    * subdirectories — a raw copy of the dir under the source path produced
+    * a source the stream listed as EMPTY (caught by the sf100 oracle gate:
+    * 0 rows vs 1.56 M; smaller fixtures are single files, so no scale
+    * below the restaged one could see it).
+    */
+  private def docsLanding(spark: SparkSession, sfDir: String, kind: String)(
+      write: String => Unit): String =
+    Staging.landing(spark, kind, sfDir, Seq(s"$sfDir/documents.parquet"))(write)
+
+  private def stagedDir(spark: SparkSession, sfDir: String): String =
+    docsLanding(spark, sfDir, "docs")(docs(spark, sfDir).write.mode("overwrite").parquet(_))
 
   /** Distinct content hashes of the streamed corpus. */
   def dedupHashes(spark: SparkSession, sfDir: String): DataFrame =
       EventsStreaming.withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_docs_dedup_${nameCounter.incrementAndGet()}"
     val deduped = spark.readStream.schema(docSchema)
       .parquet(stagedDir(spark, sfDir))
       .select(md5(col("text")).as("content_hash"))
@@ -63,7 +53,7 @@ object DocsStreaming {
     // foreachBatch parquet append + readback: the distinct-hash rows
     // stream executor-side to files instead of accumulating in driver
     // memory (see EventsStreaming.runToParquet)
-    EventsStreaming.runToParquet(spark, deduped, name)
+    EventsStreaming.runToParquet(spark, deduped, "graft_stream_docs_dedup")
   }
 
   /** Per-bucket space-saving sketch state: cumulative token count plus
@@ -73,18 +63,9 @@ object DocsStreaming {
   case class SketchRow(bucket: Int, n_seen: Long, token: String)
 
   private def stagedShardedDocs(spark: SparkSession, sfDir: String,
-      shards: Int): String = {
-    import org.apache.hadoop.fs.Path
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = new Path(
-      sys.props("java.io.tmpdir"), s"graft_stream_docs_sh${shards}_$safe")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(dir, "_SUCCESS")))
-      spark.read.schema(docSchema).parquet(s"$sfDir/documents.parquet")
-        .repartition(shards, col("doc_id"))
-        .write.mode("overwrite").parquet(dir.toString)
-    dir.toString
-  }
+      shards: Int): String =
+    docsLanding(spark, sfDir, s"docs_sh$shards")(docs(spark, sfDir)
+      .repartition(shards, col("doc_id")).write.mode("overwrite").parquet(_))
 
   /** Stage documents as `shards` CONTIGUOUS doc_id-range files with
     * ascending mod times, so `maxFilesPerTrigger=1` replays ingest in
@@ -92,39 +73,20 @@ object DocsStreaming {
     * first-wins dedup below equal its global batch oracle.
     */
   private def stagedRangeShardedDocs(spark: SparkSession, sfDir: String,
-      shards: Int): String = {
-    import org.apache.hadoop.fs.Path
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val hdir = new Path(
-      sys.props("java.io.tmpdir"), s"graft_stream_docs_rng${shards}_$safe")
-    val fs = hdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(hdir, "_DONE"))) {
-      fs.mkdirs(hdir)
-      val docs = spark.read.schema(docSchema).parquet(s"$sfDir/documents.parquet")
-      val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
-      (0 until shards).foreach { i =>
+      shards: Int): String =
+    Staging.landingFiles(spark, s"docs_rng$shards", sfDir,
+        Seq(s"$sfDir/documents.parquet")) {
+      val all = docs(spark, sfDir)
+      val maxId = all.agg(max(col("doc_id"))).head().getLong(0)
+      (0 until shards).map { i =>
         val lo = maxId * i / shards
         val hi = if (i == shards - 1) Long.MaxValue else maxId * (i + 1) / shards
-        val p = docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
-        val tmpb = new Path(hdir, s"_build_$i")
-        p.coalesce(1).write.mode("overwrite").parquet(tmpb.toString)
-        val part = fs.listStatus(tmpb)
-          .map(_.getPath).filter(_.getName.endsWith(".parquet")) match {
-          case Array(one) => one
-          case parts => throw new IllegalStateException(
-            s"expected exactly one .parquet part in $tmpb, found ${parts.length}")
-        }
-        val f = new Path(hdir, f"shard_$i%02d.parquet")
-        fs.rename(part, f)
-        fs.delete(tmpb, true)
-        // arrival order = doc_id order: ascending mtimes drive the
-        // maxFilesPerTrigger=1 replay sequence
-        fs.setTimes(f, 1600000000000L + i * 60000L, -1)
+        f"shard_$i%02d.parquet" -> all.filter(col("doc_id") >= lo && col("doc_id") < hi)
       }
-      fs.create(new Path(hdir, "_DONE")).close()
     }
-    hdir.toString
-  }
+
+  /** Micro-batches between band-index compactions in [[streamDedupMinhash]]. */
+  private val BandIndexCompactEvery = 2
 
   /** Streaming ingest-time NEAR-dup removal — the online form of the
     * minhash LSH pipeline, and the shape a production corpus ingest
@@ -148,33 +110,26 @@ object DocsStreaming {
     * The index is GENERATIONALLY COMPACTED: without it, batch N probes
     * N per-batch subdirs and probe cost grows linearly with stream age
     * — a month-old ingest would list thousands of directories per
-    * trigger. Every K batches (`graft.streaming.bandIndexCompactEvery`,
-    * default 2) the compacting batch folds the previous generation plus
-    * the closed per-batch subdirs into one `gen<N>` dir before probing,
-    * so every probe reads at most one generation + K−1 subdirs no
-    * matter how many batches have run. Crash-safety is `_SUCCESS`-gated
-    * (the q_stream_cdc_apply pattern): a half-written generation lacks
-    * the marker and is invisible, the retry rebuilds it from the still-
-    * present inputs; folded subdirs are deleted only AFTER the marker
-    * exists, and a retry that finds a closed generation skips the fold
-    * entirely. All index I/O goes through the Hadoop `FileSystem` API —
-    * on a real cluster this index lives on HDFS/S3A, not a local disk.
+    * trigger. Every K = [[BandIndexCompactEvery]] batches the compacting
+    * batch folds the previous generation plus the closed per-batch subdirs
+    * into one `gen<N>` dir before probing, so every probe reads at most
+    * one generation + K−1 subdirs no matter how many batches have run.
+    * Crash-safety is `_SUCCESS`-gated (the q_stream_cdc_apply pattern): a
+    * half-written generation lacks the marker and is invisible, the retry
+    * rebuilds it from the still-present inputs; folded subdirs are
+    * deleted only AFTER the marker exists, and a retry that finds a
+    * closed generation skips the fold entirely. All index I/O goes
+    * through the Hadoop `FileSystem` API — on a real cluster this index
+    * lives on HDFS/S3A, not a local disk.
     */
   def streamDedupMinhash(spark: SparkSession, sfDir: String,
       shards: Int = 3): DataFrame =
       EventsStreaming.withStreamPartitions(spark, 8) {
     import org.apache.spark.sql.expressions.Window
     import org.apache.hadoop.fs.Path
-    val name = s"graft_stream_docs_mh_${nameCounter.incrementAndGet()}"
-    val srcDir = stagedRangeShardedDocs(spark, sfDir, shards)
-    val compactEvery = GraftConf.BandIndexCompactEvery(spark)
-    // Deterministic run dir, wiped at start: repeated bench/verify passes
-    // reuse (not leak) the same path, and a stale half-run can't pollute
-    // this one's index or survivors.
-    val base = new Path(
-      s"${sys.props("java.io.tmpdir")}/graft_stream_mh_$name")
+    val run = Staging.runDir("graft_stream_docs_mh")
+    val base = new Path(run.toString)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(base, true)
     val indexDir = new Path(base, "index")
     val outDir = new Path(base, "survivors")
     // Per-batch subdirs written with OVERWRITE make each foreachBatch
@@ -193,71 +148,67 @@ object DocsStreaming {
         .filter(g => g <= cap && closed(genPath(g))).sorted.lastOption
     def readAll(dir: Path): DataFrame =
       spark.read.option("recursiveFileLookup", "true").parquet(dir.toString)
-    val q = spark.readStream.schema(docSchema)
+    val src = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", new Path(base, "checkpoint").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // 1. compaction turn: fold history-so-far into gen<batchId>
-        // BEFORE probing. Deterministic given the closed prior batches,
-        // so the OVERWRITE write is retry-idempotent; skipped outright
-        // when a closed gen<batchId> already exists (post-deletion retry).
-        if (batchId > 0 && batchId % compactEvery == 0
-            && !closed(genPath(batchId))) {
-          val g = latestGen(batchId - 1)
-          val from = g.getOrElse(0L)
-          val inputs = (g.map(genPath(_).toString).toSeq ++
-            (from until batchId).map(batchSub(indexDir, _).toString))
-            .filter(p => fs.exists(new Path(p)))
-          if (inputs.nonEmpty) {
-            spark.read.parquet(inputs: _*)
-              .write.mode("overwrite").parquet(genPath(batchId).toString)
-            // folded subdirs (and the superseded generation) go away
-            // only now that gen<batchId> carries its _SUCCESS marker
-            (from until batchId).foreach(i =>
-              fs.delete(batchSub(indexDir, i), true))
-            g.foreach(old => fs.delete(genPath(old), true))
-          }
+      .parquet(stagedRangeShardedDocs(spark, sfDir, shards))
+    EventsStreaming.runAvailableNow(run, src) { (batch, batchId) =>
+      // 1. compaction turn: fold history-so-far into gen<batchId>
+      // BEFORE probing. Deterministic given the closed prior batches,
+      // so the OVERWRITE write is retry-idempotent; skipped outright
+      // when a closed gen<batchId> already exists (post-deletion retry).
+      if (batchId > 0 && batchId % BandIndexCompactEvery == 0
+          && !closed(genPath(batchId))) {
+        val g = latestGen(batchId - 1)
+        val from = g.getOrElse(0L)
+        val inputs = (g.map(genPath(_).toString).toSeq ++
+          (from until batchId).map(batchSub(indexDir, _).toString))
+          .filter(p => fs.exists(new Path(p)))
+        if (inputs.nonEmpty) {
+          spark.read.parquet(inputs: _*)
+            .write.mode("overwrite").parquet(genPath(batchId).toString)
+          // folded subdirs (and the superseded generation) go away
+          // only now that gen<batchId> carries its _SUCCESS marker
+          (from until batchId).foreach(i =>
+            fs.delete(batchSub(indexDir, i), true))
+          g.foreach(old => fs.delete(genPath(old), true))
         }
-        val bands = batch.select(col("doc_id"),
-            posexplode(graft.functions.HashExpressions
-              .minhash_band_keys(col("text")))
-              .as(Seq("band_id", "band_key")))
-          .cache() // probed, window-scanned, AND appended below
-        try {
-          // Probe only PRIOR batches' bands — one generation + the
-          // subdirs after it. A retry of batch N must not see N's own
-          // half-written bands, or its survivors change.
-          val g = latestGen(batchId)
-          val priorIdx = (g.map(genPath(_).toString).toSeq ++
-            (g.getOrElse(0L) until batchId)
-              .map(batchSub(indexDir, _).toString))
-            .filter(p => fs.exists(new Path(p)))
-          val idxHit =
-            if (priorIdx.nonEmpty)
-              bands.join(spark.read.parquet(priorIdx: _*),
-                  Seq("band_id", "band_key"), "left_semi")
-                .select(col("doc_id"))
-            else bands.select(col("doc_id")).limit(0)
-          val batchHit = bands
-            .withColumn("mn", min(col("doc_id")).over(
-              Window.partitionBy(col("band_id"), col("band_key"))))
-            .filter(col("doc_id") > col("mn"))
-            .select(col("doc_id"))
-          val dropped = idxHit.union(batchHit).distinct()
-          batch.join(dropped, Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), col("source"), col("lang"))
-            .write.mode("overwrite").parquet(batchSub(outDir, batchId).toString)
-          // ALL bands enter the index (survivor or not): the first-wins
-          // rule compares against everything previously INGESTED
-          bands.write.mode("overwrite")
-            .parquet(batchSub(indexDir, batchId).toString)
-        } finally bands.unpersist()
       }
-      .start()
-    q.awaitTermination()
+      batch.persist() // read for its bands AND its survivors: one source scan
+      val bands = batch.select(col("doc_id"),
+          posexplode(graft.functions.HashExpressions
+            .minhash_band_keys(col("text")))
+            .as(Seq("band_id", "band_key")))
+        .cache() // probed, window-scanned, AND appended below
+      try {
+        // Probe only PRIOR batches' bands — one generation + the
+        // subdirs after it. A retry of batch N must not see N's own
+        // half-written bands, or its survivors change.
+        val g = latestGen(batchId)
+        val priorIdx = (g.map(genPath(_).toString).toSeq ++
+          (g.getOrElse(0L) until batchId)
+            .map(batchSub(indexDir, _).toString))
+          .filter(p => fs.exists(new Path(p)))
+        val idxHit =
+          if (priorIdx.nonEmpty)
+            bands.join(spark.read.parquet(priorIdx: _*),
+                Seq("band_id", "band_key"), "left_semi")
+              .select(col("doc_id"))
+          else bands.select(col("doc_id")).limit(0)
+        val batchHit = bands
+          .withColumn("mn", min(col("doc_id")).over(
+            Window.partitionBy(col("band_id"), col("band_key"))))
+          .filter(col("doc_id") > col("mn"))
+          .select(col("doc_id"))
+        val dropped = idxHit.union(batchHit).distinct()
+        batch.join(dropped, Seq("doc_id"), "left_anti")
+          .select(col("doc_id"), col("source"), col("lang"))
+          .write.mode("overwrite").parquet(batchSub(outDir, batchId).toString)
+        // ALL bands enter the index (survivor or not): the first-wins
+        // rule compares against everything previously INGESTED
+        bands.write.mode("overwrite")
+          .parquet(batchSub(indexDir, batchId).toString)
+      } finally { bands.unpersist(); batch.unpersist(); () }
+    }
     readAll(outDir)
   }
 
@@ -287,7 +238,6 @@ object DocsStreaming {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import graft.functions.TextFunctions.wsTokens
-    val name = s"graft_stream_docs_hh_${nameCounter.incrementAndGet()}"
     val srcDir = stagedShardedDocs(spark, sfDir, shards = 4)
 
     val toks = spark.readStream.schema(docSchema)
@@ -320,7 +270,7 @@ object DocsStreaming {
 
     val sketches = toks.groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
-    val dumped = EventsStreaming.runToParquet(spark, sketches.toDF(), name)
+    val dumped = EventsStreaming.runToParquet(spark, sketches.toDF(), "graft_stream_docs_hh")
 
     // final sketch state = each bucket's last emission; then the exact
     // candidate recount over the batch corpus (the sketch is the

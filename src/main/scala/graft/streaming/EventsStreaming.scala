@@ -1,13 +1,16 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.GraftConf
+import graft.{GraftConf, Staging}
 import graft.sources.Tables
 
 /** Structured-streaming forms of the event operators (SURVEY.md §2.I5 and
@@ -22,73 +25,65 @@ import graft.sources.Tables
   */
 object EventsStreaming {
 
-  private val nameCounter = new AtomicInteger()
-
-  private[streaming] def nextName(): Int = nameCounter.incrementAndGet()
-
-  /** Write `df` as ONE parquet data file at exactly `target` (the file
-    * stream source wants stable, individually-named landing files whose
-    * mod-times order the micro-batches).
+  /** One finished AvailableNow run: its dir (under [[Staging.runDir]]) and
+    * its StreamingQueryProgress trail — the observability hook: input rows,
+    * state-store size, memory and EVICTION counts per trigger, so
+    * "watermark-bounded state" is measured, not argued (StreamingStateSpec
+    * asserts on these).
     */
-  private[streaming] def stageSingleFile(df: DataFrame,
-      dir: java.nio.file.Path, target: java.nio.file.Path): Unit = {
-    val tmp = dir.resolve(s"_build_${target.getFileName}")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = graft.FsUtil.singleParquetPart(tmp)
-    java.nio.file.Files.move(part, target,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  final case class Trail(dir: Path, progress: Array[StreamingQueryProgress])
+
+  private val trailLog = new java.util.concurrent.ConcurrentLinkedQueue[Trail]()
+
+  /** Every finished run's trail, oldest first. */
+  private[graft] def trails: Seq[Trail] = trailLog.asScala.toSeq
+
+  /** The latest trail of a run whose name starts with `prefix` (run names
+    * carry a per-JVM run number after the stream name).
+    */
+  private[graft] def lastTrail(prefix: String): Option[Trail] =
+    trails.reverseIterator.find(t => Staging.runName(t.dir).startsWith(prefix))
+
+  private[graft] def lastProgressFor(prefix: String): Array[StreamingQueryProgress] =
+    lastTrail(prefix).map(_.progress).getOrElse(Array.empty)
+
+  /** The one streaming terminal: run `result` to completion under
+    * `Trigger.AvailableNow`, checkpointed in `run`'s `checkpoint` subdir
+    * and delivered micro-batch by micro-batch to `body` through
+    * `foreachBatch`, then record the run's progress trail. `run` comes
+    * from [[Staging.runDir]], so no earlier run's checkpoint replays into
+    * this one; callers keep their sinks and side tables in the same dir.
+    */
+  private[graft] def runAvailableNow(run: Path, result: DataFrame,
+      mode: OutputMode = OutputMode.Append)(body: (DataFrame, Long) => Unit): Unit = {
+    val q = result.writeStream
+      .option("checkpointLocation", run.resolve("checkpoint").toString)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(body)
+      .start()
+    q.awaitTermination()
+    trailLog.add(Trail(run, q.recentProgress))
   }
-  // unique per JVM so a stale checkpoint/sink from an earlier process
-  // (possibly older code) can never replay into this run's output
-  private val jvmTag = java.util.UUID.randomUUID().toString.take(8)
 
-  /** Per-run StreamingQueryProgress trail, keyed by stream name — the
-    * observability hook: state-store size, memory, and EVICTION counts
-    * per trigger, so "watermark-bounded state" is measured, not argued
-    * (StreamingStateSpec asserts on these).
-    */
-  private val progressLog =
-    new scala.collection.concurrent.TrieMap[String, Array[org.apache.spark.sql.streaming.StreamingQueryProgress]]()
-
-  /** Latest recorded progress trail for a stream-name prefix (names
-    * carry a per-JVM counter suffix; highest counter wins).
-    */
-  private[graft] def lastProgressFor(prefix: String): Array[org.apache.spark.sql.streaming.StreamingQueryProgress] =
-    progressLog.toSeq.filter(_._1.startsWith(prefix))
-      .sortBy { case (k, _) => k.stripPrefix(prefix).toIntOption.getOrElse(-1) }
-      .lastOption.map(_._2).getOrElse(Array.empty)
-
-  /** Distributed streaming terminal: run the query through a
-    * `foreachBatch` parquet sink and hand back the readback. Unlike a
+  /** Distributed streaming terminal with a parquet sink: run the query
+    * through [[runAvailableNow]] and hand back the readback. Unlike a
     * `format("memory")` sink — which materializes every emitted row in
     * driver memory, the moral equivalent of `.collect()` for a
     * row-per-match stream — each micro-batch is written executor-side
     * straight to files, so the terminal scales with the cluster, not the
     * driver heap. Append-mode streams append per trigger (each row is
     * emitted exactly once); complete-mode aggregates overwrite per
-    * trigger (the final trigger holds the full result). This is the same
-    * terminal shape `TwseStreaming.flagshipStream` uses for the flagship
-    * pipeline (reference `Final_app.py:109`'s append-only INSERT).
+    * trigger (the final trigger holds the full result).
     */
   private[streaming] def runToParquet(spark: SparkSession, result: DataFrame,
       name: String, mode: OutputMode = OutputMode.Append): DataFrame = {
-    val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_sink_${jvmTag}_$name")
-    val sink = base.resolve("out").toString
-    val checkpoint = base.resolve("checkpoint").toString
+    val run = Staging.runDir(name)
+    val out = run.resolve("out").toString
     val saveMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
-    val q = result.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(saveMode).parquet(sink)
-      }
-      .start()
-    q.awaitTermination()
-    progressLog.put(name, q.recentProgress)
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(sink)))
-      spark.read.schema(result.schema).parquet(sink)
+    runAvailableNow(run, result, mode)((batch, _) => batch.write.mode(saveMode).parquet(out))
+    if (Files.exists(Paths.get(out)))
+      spark.read.schema(result.schema).parquet(out)
     else // zero triggers fired (empty source): typed empty result
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], result.schema)
@@ -105,89 +100,66 @@ object EventsStreaming {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Stage the single-file testdata table into a per-sf temp dir (the
-    * file stream source wants a *directory*; in production: the
-    * daily-append landing dir). With `withEos`, additionally stage a
-    * second file holding one far-future sentinel event per user — it
-    * arrives as its own micro-batch (maxFilesPerTrigger=1) and closes
-    * every still-open session, the finite-stream stand-in for an
-    * event-time-timeout flush.
+  /** An events landing of `kind` for `sfDir`: the testdata events as
+    * `events.parquet` (the file stream source wants a *directory*; in
+    * production: the daily-append landing dir), then `extra(events)`, each
+    * file its own micro-batch under `maxFilesPerTrigger=1`, in list order.
+    * The events file is re-staged through the encoding-adaptive reader
+    * (NOT a raw file copy), so it always carries the Long-nanos `ts`
+    * convention `rawSchema` pins, whatever the fixture's encoding.
     */
-  private def stagedDir(spark: SparkSession, sfDir: String, withEos: Boolean): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val suffix = if (withEos) "_eos_v4" else "_v2"
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_stream_src_$safe$suffix")
-    val target = dir.resolve("events.parquet")
-    if (!java.nio.file.Files.exists(target)) {
-      java.nio.file.Files.createDirectories(dir)
-      // Re-stage through the encoding-adaptive reader (NOT a raw file
-      // copy): the landing file always carries the Long-nanos `ts`
-      // convention rawSchema pins, whatever the fixture's encoding.
-      stageSingleFile(Tables.eventsRawNanos(spark, sfDir), dir, target)
-      if (withEos) {
-        val ev = spark.read.schema(rawSchema).parquet(target.toString)
-        val maxTsNs = ev.agg(max(col("ts"))).head.getLong(0)
-        // First sentinel batch: one flush marker per user, two days past
-        // the last event — beyond the session gap (closes every open
-        // session) and beyond any ≤1-day watermark lag past the final
-        // window boundary. Second sentinel batch: a single marker two
-        // days further out, because append-mode windows emit against the
-        // watermark of the PREVIOUS batch — the extra data batch is what
-        // finalizes the windows the first sentinel advanced past
-        // (AvailableNow runs no watermark-only empty batch).
-        def writeSentinel(df: DataFrame, fileName: String, mtimeOffsetMs: Long): Unit = {
-          val tmp = dir.resolve(s"_build_$fileName")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = graft.FsUtil.singleParquetPart(tmp)
-          val f = dir.resolve(fileName)
-          java.nio.file.Files.move(part, f)
-          // the source orders batches by mod time: events strictly first
-          java.nio.file.Files.setLastModifiedTime(f,
-            java.nio.file.attribute.FileTime.fromMillis(
-              java.nio.file.Files.getLastModifiedTime(target).toMillis + mtimeOffsetMs))
-        }
-        val day = 86400L * 1000000000L
-        writeSentinel(ev.select(col("user_id")).distinct()
-          .select(lit(-1L).as("event_id"), lit(maxTsNs + 2 * day).as("ts"),
-            col("user_id"), lit("eos").as("event_type"),
-            lit(0.0).as("value"), lit(null).cast("string").as("props")),
-          "zz_eos1.parquet", 60000)
-        writeSentinel(ev.limit(1)
-          .select(lit(-2L).as("event_id"), lit(maxTsNs + 4 * day).as("ts"),
-            col("user_id"), lit("eos").as("event_type"),
-            lit(0.0).as("value"), lit(null).cast("string").as("props")),
-          "zz_eos2.parquet", 120000)
-      }
+  private[graft] def eventsLanding(spark: SparkSession, sfDir: String, kind: String)(
+      extra: DataFrame => Seq[(String, DataFrame)]): String =
+    Staging.landingFiles(spark, kind, sfDir, Seq(s"$sfDir/events.parquet")) {
+      val ev = Tables.eventsRawNanos(spark, sfDir)
+      ("events.parquet" -> ev) +: extra(ev)
     }
-    dir.toString
+
+  private val dayNs = 86400L * 1000000000L
+
+  /** Far-future flush markers (`event_type = eos`, id `eventId`), one per
+    * row of `users`, `days` past the last event of `ev`.
+    */
+  private[streaming] def eosSentinels(ev: DataFrame, users: DataFrame,
+      days: Long, eventId: Long): DataFrame = {
+    val maxTsNs = ev.agg(max(col("ts"))).head().getLong(0)
+    users.select(lit(eventId).as("event_id"), lit(maxTsNs + days * dayNs).as("ts"),
+      col("user_id"), lit("eos").as("event_type"), lit(0.0).as("value"),
+      lit(null).cast("string").as("props"))
   }
+
+  /** The events landing; with `withEos`, followed by two sentinel batches.
+    * The first holds one flush marker per user, two days past the last
+    * event — beyond the session gap (closes every open session) and beyond
+    * any ≤1-day watermark lag past the final window boundary; it is the
+    * finite-stream stand-in for an event-time-timeout flush. The second
+    * is a single marker two days further out, because append-mode windows
+    * emit against the watermark of the PREVIOUS batch — the extra data
+    * batch is what finalizes the windows the first sentinel advanced past
+    * (AvailableNow runs no watermark-only empty batch).
+    */
+  private def stagedDir(spark: SparkSession, sfDir: String, withEos: Boolean): String =
+    if (!withEos) eventsLanding(spark, sfDir, "src")(_ => Nil)
+    else eventsLanding(spark, sfDir, "src_eos") { ev =>
+      Seq("zz_eos1.parquet" -> eosSentinels(ev, ev.select(col("user_id")).distinct(), 2, -1),
+        "zz_eos2.parquet" -> eosSentinels(ev, ev.limit(1), 4, -2))
+    }
 
   private[streaming] def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
-    streamSource(spark, sfDir)
-
-  private def streamSource(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = stagedDir(spark, sfDir, withEos = false)
     spark.readStream.schema(rawSchema)
-      .parquet(dir)
+      .parquet(stagedDir(spark, sfDir, withEos = false))
       .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-  }
 
   /** Stage events split into `shards` files so `maxFilesPerTrigger=1`
     * yields that many micro-batches — the multi-ingest shape the rollup
     * maintenance loop exists for. Hash-sharded on event_id so content is
-    * deterministic; gated on _SUCCESS so a crashed half-write rebuilds.
+    * deterministic.
     */
-  private def stagedShardedDir(spark: SparkSession, sfDir: String, shards: Int): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_stream_src_sharded${shards}_${safe}_v2")
-    if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS")))
-      Tables.eventsRawNanos(spark, sfDir)
-        .repartition(shards, col("event_id"))
-        .write.mode("overwrite").parquet(dir.toString)
-    dir.toString
-  }
+  private def stagedShardedDir(spark: SparkSession, sfDir: String, shards: Int): String =
+    Staging.landing(spark, s"src_sharded$shards", sfDir, Seq(s"$sfDir/events.parquet")) {
+      dir => Tables.eventsRawNanos(spark, sfDir).repartition(shards, col("event_id"))
+        .write.mode("overwrite").parquet(dir)
+    }
 
   /** Materialized incremental rollup — the maintained daily-partials
     * table that `Analytics.mergePartialAggs`'s algebra exists for, as
@@ -206,23 +178,14 @@ object EventsStreaming {
     */
   def dailyRollupMaintained(spark: SparkSession, sfDir: String): DataFrame =
     withStreamPartitions(spark, 8) {
-      val name = s"graft_stream_rollup_${nameCounter.incrementAndGet()}"
-      val srcDir = stagedShardedDir(spark, sfDir, shards = 3)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_rollup_${jvmTag}_$name")
-      val tableDir = base.resolve("table").toString
-      val q = spark.readStream.schema(rawSchema)
+      val run = Staging.runDir("graft_stream_rollup")
+      val tableDir = run.resolve("table").toString
+      val src = spark.readStream.schema(rawSchema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
+        .parquet(stagedShardedDir(spark, sfDir, shards = 3))
         .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        .writeStream
-        .option("checkpointLocation", base.resolve("checkpoint").toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          upsertDailyPartials(batch, tableDir, batchId)
-        }
-        .start()
-      q.awaitTermination()
+      runAvailableNow(run, src)((batch, batchId) =>
+        upsertDailyPartials(batch, tableDir, batchId))
       // the final rollup is a plain read of the MAINTAINED table
       spark.read.parquet(tableDir)
         .select(col("day").cast("string").as("day"), col("event_type"),
@@ -251,6 +214,7 @@ object EventsStreaming {
       .agg(sum((col("value").cast("decimal(18,2)") * 100).cast("long"))
         .as("p_cents"),
         count(lit(1)).as("p_n"))
+      .localCheckpoint() // probed for its days AND merged: one batch scan
     val hasPartitions = Option(root.listFiles())
       .exists(_.exists(_.getName.startsWith("day=")))
     val merged =
@@ -342,14 +306,13 @@ object EventsStreaming {
     * production: append mode + watermark (see `dailyCountsAppend`).
     */
   def dailyCounts(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_daily_${nameCounter.incrementAndGet()}"
-    val agg = streamSource(spark, sfDir)
+    val agg = eventsStream(spark, sfDir)
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"), col("total_value"))
-    runToParquet(spark, agg, name, OutputMode.Complete)
+    runToParquet(spark, agg, "graft_stream_daily", OutputMode.Complete)
   }
 
   /** Streaming distinct-cardinality via the HLL sketch, self-audited —
@@ -363,13 +326,13 @@ object EventsStreaming {
     * engine sketch state, kept out of the oracle like the batch audit.
     */
   def dailyApproxDistinct(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_approx_distinct_${nameCounter.incrementAndGet()}"
-    val agg = streamSource(spark, sfDir)
+    val agg = eventsStream(spark, sfDir)
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(approx_count_distinct(col("user_id"), 0.05).as("n_approx"))
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n_approx"))
-    val streamed = runToParquet(spark, agg, name, OutputMode.Complete)
+    val streamed = runToParquet(spark, agg, "graft_stream_approx_distinct",
+      OutputMode.Complete)
     val exact = graft.sources.Tables.events(spark, sfDir)
       .groupBy(date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"),
         col("event_type"))
@@ -395,7 +358,6 @@ object EventsStreaming {
     */
   def streamingQuantileSketch(spark: SparkSession, sfDir: String): DataFrame =
     withStreamPartitions(spark, 8) {
-      val name = s"graft_stream_quantile_${nameCounter.incrementAndGet()}"
       val srcDir = stagedShardedDir(spark, sfDir, shards = 3)
       val cents = (col("value").cast("decimal(12,2)") * 100).cast("long")
       val agg = spark.readStream.schema(rawSchema)
@@ -406,7 +368,7 @@ object EventsStreaming {
         .agg(graft.functions.QuantileSketch.quantile_sketch(col("c")).as("est"))
         .select(col("event_type"), col("est")(0).as("e25"),
           col("est")(1).as("e50"), col("est")(2).as("e75"))
-      val streamed = runToParquet(spark, agg, name, OutputMode.Complete)
+      val streamed = runToParquet(spark, agg, "graft_stream_quantile", OutputMode.Complete)
       val ev = Tables.events(spark, sfDir)
         .select(col("event_type"), cents.as("c"))
       graft.operators.Analytics.quantileRankAudit(ev, streamed)
@@ -423,7 +385,6 @@ object EventsStreaming {
     * still advance it).
     */
   def dailyCountsAppend(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_daily_append_${nameCounter.incrementAndGet()}"
     val dir = stagedDir(spark, sfDir, withEos = true)
     val agg = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1)
@@ -443,7 +404,7 @@ object EventsStreaming {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"), col("total_value"))
-    runToParquet(spark, agg, name)
+    runToParquet(spark, agg, "graft_stream_daily_append")
   }
 
   /** Stream-stream interval join: purchases matched to the views they
@@ -455,9 +416,8 @@ object EventsStreaming {
     * constraint the join would buffer both streams forever.
     */
   def viewPurchaseJoin(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_vpjoin_${nameCounter.incrementAndGet()}"
     def side(t: String, idAs: String, tsAs: String): DataFrame =
-      streamSource(spark, sfDir)
+      eventsStream(spark, sfDir)
         .filter(col("event_type") === t)
         .select(col("user_id").as(s"${t}_user"), col("event_id").as(idAs),
           col("ts").as(tsAs))
@@ -471,7 +431,7 @@ object EventsStreaming {
       .select(col("view_user").as("user_id"), col("view_id"), col("purchase_id"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts")))
           .as("gap_us"))
-    runToParquet(spark, joined, name)
+    runToParquet(spark, joined, "graft_stream_vpjoin")
   }
 
   /** Streaming dead-letter fan-out — the DLQ pattern: ONE pass over
@@ -486,12 +446,9 @@ object EventsStreaming {
     * silently dropping them.
     */
   def quarantineStream(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_dlq_${nameCounter.incrementAndGet()}"
-    val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_sink_${jvmTag}_$name")
-    val okDir = base.resolve("ok").toString
-    val dlqDir = base.resolve("dlq").toString
-    val checkpoint = base.resolve("checkpoint").toString
+    val run = Staging.runDir("graft_stream_dlq")
+    val okDir = run.resolve("ok").toString
+    val dlqDir = run.resolve("dlq").toString
     val propsSchema = StructType(Seq(StructField("k", IntegerType)))
     val parsed = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1)
@@ -500,20 +457,15 @@ object EventsStreaming {
         when(col("event_id") % 7 === 0, substring(col("props"), 1, 4))
           .otherwise(col("props")).as("raw"))
       .withColumn("k", from_json(col("raw"), propsSchema).getField("k"))
-    val q = parsed.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          batch.filter(col("k").isNotNull)
-            .write.mode("append").parquet(okDir)
-          batch.filter(col("k").isNull)
-            .write.mode("append").parquet(dlqDir)
-        } finally { batch.unpersist(); () }
-      }
-      .start()
-    q.awaitTermination()
+    runAvailableNow(run, parsed) { (batch, _) =>
+      batch.persist()
+      try {
+        batch.filter(col("k").isNotNull)
+          .write.mode("append").parquet(okDir)
+        batch.filter(col("k").isNull)
+          .write.mode("append").parquet(dlqDir)
+      } finally { batch.unpersist(); () }
+    }
     val ok = spark.read.parquet(okDir)
       .select(lit("ok").as("disposition"), col("k"))
     val dlq = spark.read.parquet(dlqDir)
@@ -533,7 +485,6 @@ object EventsStreaming {
     * close the final open sessions.
     */
   def sessionWindowStream(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_swnative_${nameCounter.incrementAndGet()}"
     val dir = stagedDir(spark, sfDir, withEos = true)
     val agg = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1)
@@ -547,7 +498,7 @@ object EventsStreaming {
       .select(col("user_id"),
         date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
         col("n_events"), col("session_value"))
-    runToParquet(spark, agg, name)
+    runToParquet(spark, agg, "graft_stream_swnative")
   }
 
   /** Bounded-state streaming dedup — `dropDuplicatesWithinWatermark`:
@@ -562,30 +513,17 @@ object EventsStreaming {
     * oracle is the original duplicate-free table.
     */
   def dedupWithinWatermark(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_dedup_wm_${nameCounter.incrementAndGet()}"
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_stream_dupsrc_${safe}_v2")
-    val target = dir.resolve("events.parquet")
-    if (!java.nio.file.Files.exists(target)) {
-      java.nio.file.Files.createDirectories(dir)
-      stageSingleFile(Tables.eventsRawNanos(spark, sfDir), dir, target)
-      val dups = spark.read.schema(rawSchema).parquet(target.toString)
-        .filter(col("event_id") % 10 === 0)
-      val f = dir.resolve("zz_dups.parquet")
-      stageSingleFile(dups, dir, f)
-      java.nio.file.Files.setLastModifiedTime(f,
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(target).toMillis + 60000))
+    val dir = eventsLanding(spark, sfDir, "dupsrc") { ev =>
+      Seq("zz_dups.parquet" -> ev.filter(col("event_id") % 10 === 0))
     }
     val deduped = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1)
-      .parquet(dir.toString)
+      .parquet(dir)
       .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("event_type"))
-    runToParquet(spark, deduped, name)
+    runToParquet(spark, deduped, "graft_stream_dedup_wm")
   }
 
   /** Stage events + duplicate re-sends + EOS sentinel batches: the
@@ -593,37 +531,13 @@ object EventsStreaming {
     * the dedup stage drops real cross-batch re-sends, sentinels drive
     * the watermark past the last window so append mode finalizes.
     */
-  private def stagedDupEosDir(spark: SparkSession, sfDir: String): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_stream_dupeos_${safe}_v1")
-    val target = dir.resolve("events.parquet")
-    if (!java.nio.file.Files.exists(target)) {
-      java.nio.file.Files.createDirectories(dir)
-      stageSingleFile(Tables.eventsRawNanos(spark, sfDir), dir, target)
-      val ev = spark.read.schema(rawSchema).parquet(target.toString)
-      val maxTsNs = ev.agg(max(col("ts"))).head.getLong(0)
-      val day = 86400L * 1000000000L
-      def mtime(f: java.nio.file.Path, off: Long): Unit =
-        java.nio.file.Files.setLastModifiedTime(f,
-          java.nio.file.attribute.FileTime.fromMillis(
-            java.nio.file.Files.getLastModifiedTime(target).toMillis + off))
-      val dups = dir.resolve("zz_dups.parquet")
-      stageSingleFile(ev.filter(col("event_id") % 10 === 0), dir, dups)
-      mtime(dups, 60000)
-      Seq((2L, "zz_eos1.parquet", 120000L), (4L, "zz_eos2.parquet", 180000L))
-        .foreach { case (days, fileName, off) =>
-          val f = dir.resolve(fileName)
-          stageSingleFile(ev.select(col("user_id")).distinct()
-            .select(lit(-days).as("event_id"),
-              lit(maxTsNs + days * day).as("ts"), col("user_id"),
-              lit("eos").as("event_type"), lit(0.0).as("value"),
-              lit(null).cast("string").as("props")), dir, f)
-          mtime(f, off)
-        }
+  private def stagedDupEosDir(spark: SparkSession, sfDir: String): String =
+    eventsLanding(spark, sfDir, "dupeos") { ev =>
+      val users = ev.select(col("user_id")).distinct()
+      Seq("zz_dups.parquet" -> ev.filter(col("event_id") % 10 === 0),
+        "zz_eos1.parquet" -> eosSentinels(ev, users, 2, -2),
+        "zz_eos2.parquet" -> eosSentinels(ev, users, 4, -4))
     }
-    dir.toString
-  }
 
   /** CHAINED STATEFUL OPERATORS in one streaming query — watermarked
     * dedup state feeding append-mode window state: re-sent events die in
@@ -638,7 +552,6 @@ object EventsStreaming {
     * aggregate over the duplicate-free table.
     */
   def dedupThenWindow(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_dedup_agg_${nameCounter.incrementAndGet()}"
     val dir = stagedDupEosDir(spark, sfDir)
     val agg = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1)
@@ -653,7 +566,7 @@ object EventsStreaming {
       .agg(count(lit(1)).as("n"))
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"))
-    runToParquet(spark, agg, name)
+    runToParquet(spark, agg, "graft_stream_dedup_agg")
   }
 
   /** LEFT OUTER stream-stream interval join — the semantically hard
@@ -669,7 +582,6 @@ object EventsStreaming {
     * dailyCountsAppend).
     */
   def viewPurchaseLeftJoin(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_vpleft_${nameCounter.incrementAndGet()}"
     val dir = stagedDir(spark, sfDir, withEos = true)
     def side(t: String, idAs: String, tsAs: String): DataFrame =
       spark.readStream.schema(rawSchema)
@@ -691,7 +603,7 @@ object EventsStreaming {
       .select(col("view_user").as("user_id"), col("view_id"), col("purchase_id"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts")))
           .as("gap_us"))
-    runToParquet(spark, joined, name)
+    runToParquet(spark, joined, "graft_stream_vpleft")
   }
 
   /** FULL OUTER stream-stream interval join — both unmatched directions
@@ -705,7 +617,6 @@ object EventsStreaming {
     * history. Same EOS-sentinel flush discipline as the left join.
     */
   def viewPurchaseFullJoin(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_vpfull_${nameCounter.incrementAndGet()}"
     val dir = stagedDir(spark, sfDir, withEos = true)
     def side(t: String, idAs: String, tsAs: String): DataFrame =
       spark.readStream.schema(rawSchema)
@@ -729,7 +640,7 @@ object EventsStreaming {
         col("view_id"), col("purchase_id"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts")))
           .as("gap_us"))
-    runToParquet(spark, joined, name)
+    runToParquet(spark, joined, "graft_stream_vpfull")
   }
 
   /** Stream-static join: the event stream enriched with a BATCH-computed
@@ -741,16 +652,15 @@ object EventsStreaming {
     * restarting the query or via a slowly-refreshed broadcast).
     */
   def cohortEnrichedCounts(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val name = s"graft_stream_cohort_${nameCounter.incrementAndGet()}"
     val cohorts = graft.sources.Tables.events(spark, sfDir)
       .groupBy(col("user_id"))
       .agg(date_format(min(col("ts")), "yyyy-MM-dd").as("cohort"))
-    val agg = streamSource(spark, sfDir)
+    val agg = eventsStream(spark, sfDir)
       .join(broadcast(cohorts), "user_id") // stream-static equi join
       .groupBy(col("cohort"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-    runToParquet(spark, agg, name, OutputMode.Complete)
+    runToParquet(spark, agg, "graft_stream_cohort", OutputMode.Complete)
   }
 
   // ---- stateful sessionization (flatMapGroupsWithState) ----
@@ -791,7 +701,6 @@ object EventsStreaming {
     */
   def sessionizeDir(spark: SparkSession, srcDir: String): DataFrame = withStreamPartitions(spark, 8) {
     import spark.implicits._
-    val name = s"graft_stream_sessions_${nameCounter.incrementAndGet()}"
 
     val events: Dataset[Ev] = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1)
@@ -828,6 +737,6 @@ object EventsStreaming {
 
     val sessions = events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
-    runToParquet(spark, sessions.toDF(), name)
+    runToParquet(spark, sessions.toDF(), "graft_stream_sessions")
   }
 }

@@ -1,15 +1,11 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.Trigger
-import graft.model.{Schemas, TwseFixtures}
-import graft.operators.TwsePipeline
+import graft.Staging
+import graft.model.Schemas
 
 /** Exactly-once JDBC streaming terminal — the production form of the
   * reference's append-only Postgres INSERT (`Final_app.py:106-128`) as a
@@ -30,12 +26,7 @@ import graft.operators.TwsePipeline
   */
 object JdbcStreamSink {
 
-  private val runCounter = new AtomicInteger()
-  private val jvmTag = java.util.UUID.randomUUID().toString.take(8)
-
   private val driver = "org.apache.derby.jdbc.EmbeddedDriver"
-  private def url(db: String) =
-    s"jdbc:derby:${sys.props("java.io.tmpdir")}/graft_derby_$db;create=true"
 
   /** Driver-side statement against the sink database (DDL, batch-replay
     * delete). Row data never flows through here — appends run
@@ -96,50 +87,18 @@ object JdbcStreamSink {
     del +: inserts
   }
 
-  /** The flagship pipeline streamed through a pluggable per-batch
-    * deliverer: file-source micro-batches → parse/validate/pivot →
-    * `deliver(batch, batchId)`. Shared by the Derby JDBC terminal below
-    * and PostgresRealSpec's live-Postgres psql deliverer.
-    */
-  private[graft] def flagshipStreamInto(spark: SparkSession,
-      deliver: (DataFrame, Long) => Unit): Unit = {
-    val run = runCounter.incrementAndGet()
-    val base = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_twse_jdbc_${jvmTag}_$run")
-    val landing = base.resolve("landing")
-    Files.createDirectories(landing)
-    TwseFixtures.all.zipWithIndex.foreach { case (payload, i) =>
-      Files.write(landing.resolve(s"day_$i.json"),
-        payload.getBytes(StandardCharsets.UTF_8))
-    }
-
-    val parsedStream = spark.readStream
-      .schema(Schemas.twsePayload)
-      .json(landing.toString)
-    val validRows = TwsePipeline.pivotWide(
-      TwsePipeline.validatedFrom(parsedStream).filter(col("arity_ok")))
-
-    val q = validRows.writeStream
-      .option("checkpointLocation", base.resolve("checkpoint").toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(deliver)
-      .start()
-    q.awaitTermination()
-  }
-
   /** The flagship pipeline streamed into the exactly-once JDBC terminal:
     * file-source micro-batches → parse/validate/pivot → delete-then-
     * append into the `investment_data`-shaped table → readback (without
     * the bookkeeping column).
     */
   def flagshipStreamJdbc(spark: SparkSession): DataFrame = {
-    val run = runCounter.incrementAndGet()
-    val db = s"stream_${jvmTag}_$run" // fresh DB per run: no stale replays
-    val jdbcUrl = url(db)
+    // fresh DB per run: no stale replays
+    val jdbcUrl = s"jdbc:derby:${Staging.runDir("graft_stream_derby")};create=true"
     val table = "investment_stream"
     val ddl = Schemas.investmentCols.map(c => s"$c VARCHAR(32)").mkString(", ")
 
-    flagshipStreamInto(spark, (batch: DataFrame, batchId: Long) =>
+    TwseStreaming.flagshipStreamInto(spark, (batch: DataFrame, batchId: Long) =>
       exactlyOnceAppend(batch, batchId, jdbcUrl, table, ddl))
 
     spark.read.format("jdbc")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** State-store introspection via Spark's `statestore` data source — the
   * observability half of stateful streaming: the store is not a black
@@ -28,35 +28,25 @@ object StateInspect {
     */
   def aggStateReadback(spark: SparkSession, sfDir: String): DataFrame =
       EventsStreaming.withStreamPartitions(spark, 8) {
-    // fresh checkpoint per call: a stale checkpoint from an earlier JVM
+    // fresh run dir per call: a stale checkpoint from an earlier run
     // would make AvailableNow consider the source fully processed and
-    // leave this run reading another process's state
-    val name = s"graft_state_inspect_${java.util.UUID.randomUUID().toString.take(8)}"
-    val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), name)
-    val checkpoint = base.resolve("checkpoint").toString
-
+    // leave this run reading another run's state
+    val run = graft.Staging.runDir("graft_state_inspect")
     val agg = EventsStreaming.eventsStream(spark, sfDir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("event_type") === "purchase",
           (col("value").cast("decimal(12,2)") * 100).cast("long"))
           .otherwise(lit(0L))).as("spend_c"))
-    val q = agg.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Update)
-      .trigger(Trigger.AvailableNow())
-      // the sink is a full-scan no-op: every partition must be processed
-      // or the state store never commits (commit validation enforces it)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.write.mode("overwrite").format("noop").save()
-      }
-      .start()
-    q.awaitTermination()
+    // the sink is a full-scan no-op: every partition must be processed
+    // or the state store never commits (commit validation enforces it)
+    EventsStreaming.runAvailableNow(run, agg, OutputMode.Update)((b, _) =>
+      b.write.mode("overwrite").format("noop").save())
 
     // the checkpoint's state store, read as a table
     // value holds the raw aggregation buffer — fields are named for the
     // buffer functions (count, sum), not the query's output aliases
-    spark.read.format("statestore").load(checkpoint)
+    spark.read.format("statestore").load(run.resolve("checkpoint").toString)
       .select(col("key.event_type").as("event_type"),
         col("value.count").as("n_events"),
         col("value.sum").as("spend_c"))

@@ -84,14 +84,13 @@ object TwsStreaming {
   def perTypeCounts(spark: SparkSession, sfDir: String): DataFrame =
       EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
     import spark.implicits._
-    val name = s"graft_stream_twsmap_${EventsStreaming.nextName()}"
     val typed = EventsStreaming.eventsStream(spark, sfDir)
       .select(col("user_id"), col("event_type"))
       .as[(Long, String)]
     val out = typed.groupByKey(_._1)
       .transformWithState(new PerTypeCounts,
         TimeMode.None(), OutputMode.Update())
-    val dumped = EventsStreaming.runToParquet(spark, out.toDF(), name,
+    val dumped = EventsStreaming.runToParquet(spark, out.toDF(), "graft_stream_twsmap",
       OutputMode.Update)
     dumped.groupBy(col("user_id"), col("event_type"))
       .agg(max(col("n")).as("n"))
@@ -137,7 +136,6 @@ object TwsStreaming {
   def firstTouches(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame =
       EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
     import spark.implicits._
-    val name = s"graft_stream_twslist_${EventsStreaming.nextName()}"
     val typed = EventsStreaming.eventsStream(spark, sfDir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"))
@@ -145,7 +143,7 @@ object TwsStreaming {
     val out = typed.groupByKey(_._1)
       .transformWithState(new FirstTouches(k),
         TimeMode.None(), OutputMode.Update())
-    EventsStreaming.runToParquet(spark, out.toDF(), name, OutputMode.Update)
+    EventsStreaming.runToParquet(spark, out.toDF(), "graft_stream_twslist", OutputMode.Update)
       // final prefix per user: a rank's value only ever moves EARLIER
       // in (ts, id) order as new batches refine the prefix, so the
       // latest emission at each rank is its (ts, id)-minimum
@@ -238,40 +236,12 @@ object TwsStreaming {
     * production stream this is moot — data keeps arriving everywhere;
     * it is the finite-stream shutdown that needs the nudge.)
     */
-  private def stagedTimerSrc(spark: SparkSession, sfDir: String): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_stream_src_timer_${safe}_v2")
-    val target = dir.resolve("events.parquet")
-    if (!java.nio.file.Files.exists(target)) {
-      java.nio.file.Files.createDirectories(dir)
-      // encoding-adaptive re-stage (not a file copy): landing file keeps
-      // the Long-nanos ts convention whatever the fixture encodes
-      EventsStreaming.stageSingleFile(
-        graft.sources.Tables.eventsRawNanos(spark, sfDir), dir, target)
-      val ev = spark.read.schema(EventsStreaming.rawSchema)
-        .parquet(target.toString)
-      val maxTsNs = ev.agg(max(col("ts"))).head.getLong(0)
-      val day = 86400L * 1000000000L
-      Seq((2L, "zz_eos1.parquet", 60000L), (4L, "zz_eos2.parquet", 120000L))
-        .foreach { case (days, fileName, mtimeOff) =>
-          val tmp = dir.resolve(s"_build_$fileName")
-          ev.select(col("user_id")).distinct()
-            .select(lit(-days).as("event_id"),
-              lit(maxTsNs + days * day).as("ts"), col("user_id"),
-              lit("eos").as("event_type"), lit(0.0).as("value"),
-              lit(null).cast("string").as("props"))
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = graft.FsUtil.singleParquetPart(tmp)
-          val f = dir.resolve(fileName)
-          java.nio.file.Files.move(part, f)
-          java.nio.file.Files.setLastModifiedTime(f,
-            java.nio.file.attribute.FileTime.fromMillis(
-              java.nio.file.Files.getLastModifiedTime(target).toMillis + mtimeOff))
-        }
+  private def stagedTimerSrc(spark: SparkSession, sfDir: String): String =
+    EventsStreaming.eventsLanding(spark, sfDir, "src_timer") { ev =>
+      val users = ev.select(col("user_id")).distinct()
+      Seq("zz_eos1.parquet" -> EventsStreaming.eosSentinels(ev, users, 2, -2),
+        "zz_eos2.parquet" -> EventsStreaming.eosSentinels(ev, users, 4, -4))
     }
-    dir.toString
-  }
 
   /** Streaming 30-minute-gap sessionization with engine-managed session
     * close (event-time timers + watermark), contract-equal to the batch
@@ -283,7 +253,6 @@ object TwsStreaming {
   def timerSessions(spark: SparkSession, sfDir: String): DataFrame =
       EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
     import spark.implicits._
-    val name = s"graft_stream_twssess_${EventsStreaming.nextName()}"
     val srcDir = stagedTimerSrc(spark, sfDir)
     val src = spark.readStream.schema(EventsStreaming.rawSchema)
       .option("maxFilesPerTrigger", 1)
@@ -301,7 +270,7 @@ object TwsStreaming {
     val out = src.groupByKey(_.user_id)
       .transformWithState(new TimerSessionizer,
         TimeMode.EventTime(), OutputMode.Append())
-    EventsStreaming.runToParquet(spark, out.toDF(), name)
+    EventsStreaming.runToParquet(spark, out.toDF(), "graft_stream_twssess")
   }
 
   /** Streaming per-user lifetime totals via `transformWithState` — the
@@ -315,7 +284,6 @@ object TwsStreaming {
   def runningTotals(spark: SparkSession, sfDir: String): DataFrame =
       EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
     import spark.implicits._
-    val name = s"graft_stream_tws_${EventsStreaming.nextName()}"
     val typed = EventsStreaming.eventsStream(spark, sfDir)
       .select(col("user_id"),
         when(col("event_type") === "purchase",
@@ -325,7 +293,7 @@ object TwsStreaming {
     val out = typed.groupByKey(_._1)
       .transformWithState(new RunningTotals,
         TimeMode.None(), OutputMode.Update())
-    val dumped = EventsStreaming.runToParquet(spark, out.toDF(), name,
+    val dumped = EventsStreaming.runToParquet(spark, out.toDF(), "graft_stream_tws",
       OutputMode.Update)
     dumped.groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("spend_c"))).as("last"))

@@ -1,12 +1,11 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
+import graft.Staging
 import graft.model.{Schemas, TwseFixtures}
 import graft.operators.TwsePipeline
 
@@ -23,45 +22,38 @@ import graft.operators.TwsePipeline
   */
 object TwseStreaming {
 
-  private val runCounter = new AtomicInteger()
-  // unique per JVM: a fresh landing/checkpoint/sink triple per run, so a
-  // stale checkpoint from an earlier process (possibly older code) can't
-  // replay into this run's sink
-  private val jvmTag = java.util.UUID.randomUUID().toString.take(8)
+  /** The flagship pipeline streamed through a pluggable per-batch
+    * deliverer: the three golden fixtures land in a fresh run dir, then
+    * file-source micro-batches → parse/validate/pivot →
+    * `deliver(batch, batchId)`. Shared by the parquet terminal below, the
+    * Derby JDBC terminal (`JdbcStreamSink`) and PostgresRealSpec's
+    * live-Postgres psql deliverer.
+    */
+  private[graft] def flagshipStreamInto(spark: SparkSession,
+      deliver: (DataFrame, Long) => Unit): Unit = {
+    val run = Staging.runDir("graft_stream_flagship")
+    val landing = run.resolve("landing")
+    Files.createDirectories(landing)
+    TwseFixtures.all.zipWithIndex.foreach { case (payload, i) =>
+      Files.write(landing.resolve(s"day_$i.json"),
+        payload.getBytes(StandardCharsets.UTF_8))
+    }
+    val parsedStream = spark.readStream
+      .schema(Schemas.twsePayload)
+      .json(landing.toString)
+    val validRows = TwsePipeline.pivotWide(
+      TwsePipeline.validatedFrom(parsedStream).filter(col("arity_ok")))
+    EventsStreaming.runAvailableNow(run, validRows)(deliver)
+  }
 
   /** Run the stream over the three golden fixtures and return the
     * appended `investment_data` readback — which must equal the batch
     * flagship output (the golden row).
     */
   def flagshipStream(spark: SparkSession): DataFrame = {
-    val run = runCounter.incrementAndGet()
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_twse_stream_${jvmTag}_$run")
-    val landing = base.resolve("landing")
-    val sink = base.resolve("investment_data").toString
-    val checkpoint = base.resolve("checkpoint").toString
-    Files.createDirectories(landing)
-    TwseFixtures.all.zipWithIndex.foreach { case (payload, i) =>
-      Files.write(landing.resolve(s"day_$i.json"),
-        payload.getBytes(StandardCharsets.UTF_8))
-    }
-
-    val parsedStream = spark.readStream
-      .schema(Schemas.twsePayload)
-      .json(landing.toString)
-
-    val validRows = TwsePipeline.pivotWide(
-      TwsePipeline.validatedFrom(parsedStream).filter(col("arity_ok")))
-
-    val q = validRows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the reference's PostgresOperator append (E1), per micro-batch
-        batch.write.mode("append").parquet(sink)
-      }
-      .start()
-    q.awaitTermination()
-
+    val sink = Staging.runDir("graft_stream_flagship_sink").toString
+    // the reference's PostgresOperator append (E1), per micro-batch
+    flagshipStreamInto(spark, (batch, _) => batch.write.mode("append").parquet(sink))
     spark.read.parquet(sink) // A3 readback — the verification path
   }
 }

@@ -6,11 +6,12 @@ import java.io.File
   *
   * Crashed or killed Spark JVMs leave shuffle/spill debris behind
   * (`blockmgr-*`, `spark-*` scratch dirs) plus graft's own ephemeral
-  * staging (stream landing dirs, reliable-CC checkpoints, per-run
-  * daily-app bases). A big probe then fails on `No space left` hours in
-  * — the round-10 sf100 probe grew a 40 GB blockmgr into an 89 %-full
-  * disk. Sweeping STALE debris first makes the heavy run's budget
-  * deterministic.
+  * staging: the dirs whose prefixes `graft.Staging.sweptPrefixes`
+  * lists — stream landings, per-run dirs (checkpoints, sinks, side
+  * tables, DailyApp query bases) and spec scratch. A big probe then
+  * fails on `No space left` hours in — the round-10 sf100 probe grew a
+  * 40 GB blockmgr into an 89 %-full disk. Sweeping STALE debris first
+  * makes the heavy run's budget deterministic.
   *
   * Safety: staleness alone is NOT liveness for Spark scratch — shuffle
   * blocks under `blockmgr-*` are written once and read hours later with
@@ -26,15 +27,13 @@ import java.io.File
   *     modified within `ageHours` — with a floor of [[minSparkScratchAgeHours]]
   *     for Spark scratch, well above the longest observed run.
   *
-  * Scaled data dirs (`graft-sf*`), models, and bucketed/backfill tables
-  * are NOT swept: they are inputs keyed by fingerprint, not debris.
+  * Scaled data dirs (`graft-sf*`), models, partitioned layouts, media
+  * files and bucketed/backfill tables are NOT swept: they are inputs
+  * keyed by fingerprint, not debris.
   */
 object Reclaim {
 
   private val sparkScratchPrefixes = Seq("blockmgr-", "spark-")
-  private val graftStagingPrefixes = Seq(
-    "graft_twse_stream_", "graft_stream_", "graft_daily_q_",
-    "graft_daily_spec_", "graft_cc_reliable")
 
   /** Longest observed heavy run is ~3 h (sf100 probe slices); Spark
     * scratch younger than this is never touched even when mtime-stale.
@@ -100,7 +99,7 @@ object Reclaim {
     var reclaimed = 0L
     all.foreach { dir =>
       val isScratch = sparkScratchPrefixes.exists(dir.getName.startsWith)
-      val isStaging = graftStagingPrefixes.exists(dir.getName.startsWith)
+      val isStaging = graft.Staging.sweptPrefixes.exists(dir.getName.startsWith)
       val cutoff =
         if (isScratch)
           cutoffFor(math.max(ageHours, minSparkScratchAgeHours))

@@ -22,7 +22,6 @@ class GraftConfSpec extends SparkTestBase {
     (PathsMaxEventsPerUser, Some(10000), Some("0")),
     (RfmWindowMaxEventRows, Some(2000000L), Some("2,000,000")),
     (SpreadMinBytes, None, Some("-1")),
-    (BandIndexCompactEvery, Some(2), Some("0")),
     (RocksDbChangelog, Some(true), Some("on")),
     (StatePartitions, None, Some("-3")),
     (StateProvider, Some("rocksdb"), Some("session")),

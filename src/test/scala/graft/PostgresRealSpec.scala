@@ -137,7 +137,7 @@ class PostgresRealSpec extends SparkTestBase with BeforeAndAfterAll {
     // into the live server (the reference's Final_app.py:106-128 target
     // engine) instead of the Derby JDBC writer
     var delivered = Map.empty[Long, Seq[Seq[String]]]
-    JdbcStreamSink.flagshipStreamInto(spark, (batch, id) => {
+    graft.streaming.TwseStreaming.flagshipStreamInto(spark, (batch, id) => {
       val rows = batch.collect().toSeq.map(_.toSeq.map(String.valueOf))
       delivered += id -> rows
       val stmts = JdbcStreamSink.renderBatchStatements(

@@ -34,9 +34,8 @@ class Round9OpsSpec extends SparkTestBase {
     // structural bound: after 6 batches the index holds exactly ONE
     // closed generation and at most K per-batch subdirs newer than it —
     // the folded b0..b3 and the superseded gen2 are gone
-    val mhDirs = new java.io.File(sys.props("java.io.tmpdir")).listFiles()
-      .filter(_.getName.startsWith("graft_stream_mh_graft_stream_docs_mh_"))
-    val latest = mhDirs.maxBy(_.lastModified)
+    val latest = graft.streaming.EventsStreaming
+      .lastTrail("graft_stream_docs_mh_").get.dir.toFile
     val idx = new java.io.File(latest, "index").listFiles().map(_.getName)
     val gens = idx.filter(_.startsWith("gen"))
     val bs = idx.filter(_.startsWith("b")).map(_.drop(1).toLong)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
@@ -12,8 +12,6 @@ import scala.jdk.CollectionConverters._
   */
 class TwsStateStoreSpec extends SparkTestBase {
 
-  private val sinkDir = "graft_stream_sink_.*_graft_stream_tws_\\d+".r
-
   private def withConf[A](key: String, value: String)(body: => A): A = {
     spark.conf.set(key, value)
     try body finally spark.conf.unset(key)
@@ -21,11 +19,8 @@ class TwsStateStoreSpec extends SparkTestBase {
 
   /** Run q_stream_tws; return its rows and the changelog files of its state checkpoint. */
   private def runTws(): (Seq[String], Seq[Path]) = {
-    val tmp = Paths.get(sys.props("java.io.tmpdir"))
-    def runs() = FsUtil.listDir(tmp).filter(p => sinkDir.matches(p.getFileName.toString)).toSet
-    val before = runs()
     val rows = canon(SparkEntry.queries("q_stream_tws")(spark, sf()))
-    val Seq(run) = (runs() -- before).toSeq
+    val run = graft.streaming.EventsStreaming.lastTrail("graft_stream_tws_").get.dir
     val walk = Files.walk(run.resolve("checkpoint"))
     try (rows, walk.iterator.asScala.filter(_.toString.endsWith(".changelog")).toList)
     finally walk.close()
