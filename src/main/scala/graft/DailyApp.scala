@@ -27,12 +27,23 @@ import graft.streaming.RetryRunner
   * Structured Streaming file source under `Trigger.AvailableNow()` with
   * a persistent checkpoint — the scheduler tick processes exactly the
   * files that have landed since the last tick (re-running a day is a
-  * no-op, the checkpoint remembers). `foreachBatch` is at-least-once —
-  * a crash between the append and the checkpoint commit replays the
-  * batch — so the append itself is made idempotent: rows whose `dt` is
-  * already present in the table are anti-joined away before writing
-  * (one row per day; ticks are scheduler-serialized, so there is no
-  * concurrent writer to race). The ingest tick is wrapped in
+  * no-op, the checkpoint remembers).
+  *
+  * Each batch is one pass: [[TwsePipeline.routedFrom]] routes every
+  * landed day in ONE collected job (closed → do_nothing, 12-vector →
+  * insert_data, drift → alert), and only the `insert_data` rows ever
+  * reach the positional pivot. `foreachBatch` is at-least-once — a
+  * crash between the append and the checkpoint commit replays the
+  * batch — so the append itself is made idempotent by a dt guard: only
+  * when the batch holds `insert_data` days, the table's `dt` column is
+  * read with its declared schema and filtered to those days (pushed to
+  * the parquet scan — no shuffle, no schema-inference job), and only
+  * the days it does not hold are appended. A batch with no fresh day
+  * writes no file at all, so the table holds one file per appended day
+  * (ticks are scheduler-serialized, so there is no concurrent writer to
+  * race). A closed-day tick runs one Spark job; an open day on an
+  * existing table runs three (route, guard, append), plus one for the
+  * notify delivery. The ingest tick is wrapped in
   * [[RetryRunner.withRetries]] (retries=2, 5-min delay) — the DAG's
   * task-retry semantics at application level, on top of Spark's own
   * three task attempts inside each job ([[GraftSession]]).
@@ -153,8 +164,8 @@ object DailyApp {
     * the parse→B1→B2 splits into the three terminal sinks, then deliver
     * queued notifications as a separate retried step. Returns the
     * per-day routing summary. The append is idempotent under batch
-    * replay (anti-join on dates already in the table), so the tick-level
-    * retry can never duplicate `investment_data` rows.
+    * replay (days the table already holds are skipped), so the
+    * tick-level retry can never duplicate `investment_data` rows.
     */
   def runTick(spark: SparkSession, cfg: Config): TickSummary = {
     val summary = RetryRunner.withRetries(
@@ -172,39 +183,38 @@ object DailyApp {
         .option("checkpointLocation", cfg.checkpoint.toString)
         .trigger(Trigger.AvailableNow()) // the daily scheduler tick
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          // B1 — market_information / scrapy_condition: closed days
-          // terminate at do_nothing (Final_app.py:29-39)
-          skipped ++= batch.filter(col("stat") =!= "OK")
-            .select(col("date")).collect().map(_.getString(0))
-          // B2 — length_condition over the cleaned 12-vector
-          val validated = TwsePipeline.validatedFrom(batch)
-          val wide = TwsePipeline.pivotWide(
-            validated.filter(col("arity_ok"))).cache()
+          // B1 + B2 — one job routes every landed day to do_nothing,
+          // insert_data or alert (Final_app.py:29-39,71-76)
+          val routed = TwsePipeline.routedFrom(batch).collect().toSeq
+            .map(r => (r.getString(0), r.getSeq[String](1), r.getString(2)))
+          def datesTo(route: String) = routed.collect { case (d, _, `route`) => d }
+          val okDates = datesTo("insert_data")
+          val badDates = datesTo("alert")
+          skipped ++= datesTo("do_nothing")
+          inserted ++= okDates
+          alerted ++= badDates
           // E1 — insert_data: foreachBatch is at-least-once, so drop
           // dates the table already holds before appending — a replayed
           // batch re-appends nothing (the PostgresOperator INSERT with
           // an ON CONFLICT DO NOTHING key; parquet here, JDBC in prod).
-          // EXACTLY-ONCE ENVELOPE: the dt-granular anti-join assumes a
+          // EXACTLY-ONCE ENVELOPE: the dt-granular guard assumes a
           // day's append is ATOMIC — true here by construction (one row
           // per dt ⇒ one task, one file, committed or absent). A sink
           // where one day spans several files/tasks (partitioned
           // parquet, JDBC without the ON CONFLICT key) can crash with a
-          // day PARTIALLY committed, and replay would anti-join the
-          // whole dt away instead of repairing it — such a sink needs
-          // row-granular dedup or stage-then-rename, not this guard.
-          val fresh =
-            if (Files.exists(cfg.table))
-              wide.join(spark.read.parquet(cfg.table.toString)
-                .select(col("dt")).distinct(), Seq("dt"), "left_anti")
-            else wide
-          fresh.write.mode("append").parquet(cfg.table.toString)
-          val okDates = wide.select(col("dt")).collect().map(_.getString(0))
-          wide.unpersist()
-          inserted ++= okDates
-          // E3 — alert on format drift
-          val badDates = validated.filter(!col("arity_ok"))
-            .select(col("date")).collect().map(_.getString(0))
-          alerted ++= badDates
+          // day PARTIALLY committed, and replay would skip the whole dt
+          // instead of repairing it — such a sink needs row-granular
+          // dedup or stage-then-rename, not this guard.
+          val held =
+            if (okDates.isEmpty || !Files.exists(cfg.table)) Set.empty[String]
+            else spark.read.schema(Schemas.investmentData)
+              .parquet(cfg.table.toString).select(col("dt"))
+              .filter(col("dt").isin(okDates: _*))
+              .collect().map(_.getString(0)).toSet
+          val fresh = routed.collect { case (d, v, "insert_data") if !held(d) => (d, v) }
+          if (fresh.nonEmpty)
+            TwsePipeline.pivotWide(spark.createDataFrame(fresh).toDF("date", "vec"))
+              .write.mode("append").parquet(cfg.table.toString)
           // E2/E3 — QUEUE the Telegram messages durably; the POSTs run
           // after the streaming commit as their own task (see Scaladoc)
           cfg.notifyUrl.foreach { _ =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{Schemas, TwseFixtures}
 
@@ -53,27 +53,36 @@ object TwsePipeline {
     * `Final_app.py:29`). The market-closed branch simply produces no rows
     * — the Spark analogue of the reference's early pipeline termination.
     */
-  def open(spark: SparkSession): DataFrame =
-    parsed(spark).filter(col("stat") === "OK")
+  def open(spark: SparkSession): DataFrame = parsed(spark).filter(marketOpen)
+
+  private val marketOpen: Column = col("stat") === "OK"
 
   /** B3 + C1 + C2 + D1 — the clean transform (`Final_app.py:48-51`,
     * ipynb cell-5): drop the 合計 grand-total row (slice `[:-1]`), drop
     * the unit-label column (inner loop from index 1), flatten row-major,
     * strip thousands separators. All higher-order array functions —
-    * per-row, no shuffle. Source-agnostic: the same transform runs over
-    * the batch fixture source and the streaming file source.
+    * per-row, no shuffle. An empty table or row slices to empty instead
+    * of a negative length, so a ragged payload routes to alert rather
+    * than failing the batch.
+    */
+  private val vec: Column =
+    transform(
+      flatten(transform(
+        slice(col("data"), lit(1), greatest(size(col("data")) - 1, lit(0))), // B3: drop last row
+        row => slice(row, lit(2), greatest(size(row) - 1, lit(0)))           // C1: drop label col
+      )),                                                  // C2: row-major flatten
+      v => regexp_replace(v, ",", "")                      // D1: strip commas
+    )
+
+  /** B2 — the arity predicate over the cleaned vector (`len(data) == 12`). */
+  private val arityOk: Column = size(col("vec")) === 12
+
+  /** The cleaned 12-vector of every market-open payload. Source-agnostic:
+    * the same transform runs over the batch fixture source and the
+    * streaming file source.
     */
   def cleanedFrom(parsedDf: DataFrame): DataFrame =
-    parsedDf.filter(col("stat") === "OK").withColumn(
-      "vec",
-      transform(
-        flatten(transform(
-          slice(col("data"), lit(1), size(col("data")) - 1),  // B3: drop last row
-          row => slice(row, lit(2), size(row) - 1)            // C1: drop label col
-        )),                                              // C2: row-major flatten
-        v => regexp_replace(v, ",", "")                  // D1: strip commas
-      )
-    )
+    parsedDf.filter(marketOpen).withColumn("vec", vec)
 
   def cleaned(spark: SparkSession): DataFrame = cleanedFrom(parsed(spark))
 
@@ -82,7 +91,7 @@ object TwsePipeline {
     * G2 splits on it.
     */
   def validatedFrom(parsedDf: DataFrame): DataFrame =
-    cleanedFrom(parsedDf).withColumn("arity_ok", size(col("vec")) === 12)
+    cleanedFrom(parsedDf).withColumn("arity_ok", arityOk)
 
   def validated(spark: SparkSession): DataFrame =
     validatedFrom(parsed(spark))
@@ -164,20 +173,36 @@ object TwsePipeline {
     * payload → downstream task name. Value-level `when/otherwise` view of
     * the branch; task-level semantics are the `open`/closed filter-split.
     */
-  def branchMarket(spark: SparkSession): DataFrame =
-    parsed(spark).select(
+  def branchMarket(spark: SparkSession): DataFrame = branchMarketFrom(parsed(spark))
+
+  def branchMarketFrom(parsedDf: DataFrame): DataFrame =
+    parsedDf.select(
       col("date"),
-      when(col("stat") === "OK", lit("scrapy"))
-        .otherwise(lit("do_nothing")).as("branch")
+      when(marketOpen, lit("scrapy")).otherwise(lit("do_nothing")).as("branch")
     )
 
   /** G2 — arity routing (`length_condition`, `Final_app.py:71-76`). */
-  def branchArity(spark: SparkSession): DataFrame =
-    validated(spark).select(
+  def branchArity(spark: SparkSession): DataFrame = branchArityFrom(parsed(spark))
+
+  def branchArityFrom(parsedDf: DataFrame): DataFrame =
+    validatedFrom(parsedDf).select(
       col("date"),
       when(col("arity_ok"), lit("insert_data"))
         .otherwise(lit("alert")).as("branch")
     )
+
+  /** G1 + G2 in one projection: every payload's terminal task —
+    * `do_nothing` (market closed), `insert_data` (a 12-vector) or
+    * `alert` (format drift) — beside its date and cleaned `vec`, by the
+    * same predicates as [[branchMarket]] and [[branchArity]]. One pass
+    * routes a whole batch; only `insert_data` rows may reach
+    * [[pivotWide]], whose `element_at` throws on a short vector under
+    * ANSI.
+    */
+  def routedFrom(parsedDf: DataFrame): DataFrame =
+    parsedDf.withColumn("vec", vec).select(col("date"), col("vec"),
+      when(marketOpen, when(arityOk, lit("insert_data")).otherwise(lit("alert")))
+        .otherwise(lit("do_nothing")).as("route"))
 
   /** E2 — success-notification sink (`notice_bot`, `Final_app.py:137-142`):
     * one message row per successfully-inserted day. Modeled as a message

@@ -85,18 +85,93 @@ class DailyAppSpec extends SparkTestBase {
     assert(spark.read.parquet(cfg.table.toString).count() === 1)
   }
 
-  test("batch replay does not duplicate the append: dt anti-join dedupes") {
+  /** The `.parquet` files of the `investment_data` table. */
+  private def tableFiles(cfg: DailyApp.Config): Seq[String] =
+    FsUtil.listDir(cfg.table).map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+
+  /** Land one payload by hand, as a fetch for `date` would. */
+  private def land(cfg: DailyApp.Config, date: String, body: String): Unit = {
+    Files.createDirectories(cfg.landing)
+    Files.write(cfg.landing.resolve(s"day_$date.json"),
+      body.getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** The golden open payload, re-dated. */
+  private def openDay(date: String): String =
+    TwseFixtures.ok.replace("\"date\":\"20220819\"", "\"date\":\"" + date + "\"")
+
+  /** A tick with no fetch: it streams whatever was landed by hand. */
+  private def landedOnly(cfg: DailyApp.Config) = cfg.copy(useFixtures = false)
+
+  test("batch replay does not duplicate the append: the dt guard dedupes") {
     // foreachBatch is at-least-once — simulate the replay a crash between
     // append and checkpoint-commit causes by wiping the checkpoint so the
     // next tick re-processes every landed file against a populated table.
     val cfg = freshCfg(None)
     DailyApp.runTick(spark, cfg)
+    val filesBefore = tableFiles(cfg)
     org.apache.commons.io.FileUtils.deleteDirectory(cfg.checkpoint.toFile)
     val replay = DailyApp.runTick(spark, cfg)
     // the replayed batch still ROUTES the day (summary reports it) ...
     assert(replay.inserted === Seq("20220819"))
     // ... but appends nothing: exactly one golden row survives the replay
     assert(spark.read.parquet(cfg.table.toString).count() === 1)
+    // ... and writes no file, not even an empty one
+    assert(tableFiles(cfg) === filesBefore)
+  }
+
+  test("a partial replay appends only the day the table does not hold") {
+    // the guard is per dt, not per batch: a replayed batch holding one
+    // already-appended open day and one new open day appends the new one
+    val cfg = landedOnly(freshCfg(None))
+    land(cfg, "20220819", TwseFixtures.ok)
+    DailyApp.runTick(spark, cfg)
+    org.apache.commons.io.FileUtils.deleteDirectory(cfg.checkpoint.toFile)
+    land(cfg, "20220822", openDay("20220822"))
+    val replay = DailyApp.runTick(spark, cfg)
+    assert(replay.inserted.sorted === Seq("20220819", "20220822"))
+    val dts = spark.read.parquet(cfg.table.toString).select(col("dt"))
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(dts === Seq("20220819", "20220822"))
+    assert(tableFiles(cfg).size === 2)
+  }
+
+  test("closed and drift days write no file: one parquet file per appended day") {
+    val cfg = freshCfg(None)
+    DailyApp.runTick(spark, cfg)
+    // the golden window appends one day; its closed and drift days add nothing
+    assert(tableFiles(cfg).size === 1)
+    // a tick that lands only a closed day never creates the table
+    val closedOnly = landedOnly(freshCfg(None))
+    land(closedOnly, "20220820", TwseFixtures.closed)
+    assert(DailyApp.runTick(spark, closedOnly).skipped === Seq("20220820"))
+    assert(!Files.exists(closedOnly.table))
+  }
+
+  test("job-count pin: a closed tick runs 1 job, an open tick on a table 3") {
+    // the batch body routes in one job; the guard and the append add one
+    // each, and only when there is an open day to append
+    def jobsOf(body: => Unit): Int = {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+      }
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      sc.addSparkListener(listener)
+      try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
+      finally sc.removeSparkListener(listener)
+      jobs.get
+    }
+    val cfg = landedOnly(freshCfg(None))
+    land(cfg, "20220820", TwseFixtures.closed)
+    assert(jobsOf(DailyApp.runTick(spark, cfg)) === 1)
+    land(cfg, "20220819", TwseFixtures.ok)
+    DailyApp.runTick(spark, cfg) // creates the table
+    land(cfg, "20220822", openDay("20220822"))
+    assert(jobsOf(DailyApp.runTick(spark, cfg)) === 3)
   }
 
   test("notify failure cannot replay the append; its own retry delivers") {

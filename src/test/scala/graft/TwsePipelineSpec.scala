@@ -34,6 +34,47 @@ class TwsePipelineSpec extends SparkTestBase {
     assert(alerts.map(_.getString(0)).toSeq === Seq("20100106"))
   }
 
+  test("routedFrom routes like branchMarket/branchArity, ANSI-safe on edge payloads") {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    def table(rows: Seq[String]*): String =
+      rows.map(_.map(v => "\"" + v + "\"").mkString("[", ",", "]")).mkString("[", ",", "]")
+    def payload(date: String, stat: String, data: String): String =
+      s"""{"stat":$stat,"date":"$date","data":$data}"""
+    val row = Seq("x", "1,000", "2", "3")
+    val total = Seq("合計", "9", "9", "9")
+    val edges = Seq(
+      payload("20300101", "null", table(row, total)),
+      payload("20300102", "\"OK\"", "null"),
+      payload("20300103", "\"OK\"", table(row, row, row, Seq("x", "1", "2"), total)), // 11
+      payload("20300104", "\"OK\"", table(row, row, row, row, Seq("x", "1"), total)), // 13
+      payload("20300105", "\"OK\"", // ragged widths, empty and label-only rows
+        table(Seq(), Seq("x"), row, Seq("x", "1", "2", "3", "4", "5", "6", "7"), total)),
+      payload("20300106", "\"OK\"", "[]"),
+      payload("20300107", "\"closed\"", "[]"))
+    val parsed = TwsePipeline.parsed(spark).unionByName(edges.toDF("body")
+      .select(from_json(col("body"), Schemas.twsePayload).as("p")).select(col("p.*")))
+    def pairs(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val routed = TwsePipeline.routedFrom(parsed)
+    val routes = pairs(routed.select(col("date"), col("route")))
+    val arity = pairs(TwsePipeline.branchArityFrom(parsed))
+    val want = pairs(TwsePipeline.branchMarketFrom(parsed)).map {
+      case (d, "do_nothing") => d -> "do_nothing"
+      case (d, _) => d -> arity(d)
+    }
+    assert(routes.size === 3 + edges.size)
+    assert(routes === want)
+    assert(routes === Map(
+      "20220819" -> "insert_data", "20220820" -> "do_nothing", "20100106" -> "alert",
+      "20300101" -> "do_nothing", "20300102" -> "alert", "20300103" -> "alert",
+      "20300104" -> "alert", "20300105" -> "alert", "20300106" -> "alert",
+      "20300107" -> "do_nothing"))
+    // the insert_data rows pivot to exactly the flagship row
+    val wide = TwsePipeline.pivotWide(routed.filter(col("route") === "insert_data"))
+    assert(canon(wide) === canon(TwsePipeline.flagship(spark)))
+  }
+
   test("validation split is a partition of the open payloads") {
     val all = TwsePipeline.validated(spark).count()
     val v = TwsePipeline.valid(spark).count()
