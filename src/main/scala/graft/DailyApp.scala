@@ -4,12 +4,11 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.functions.col
 
 import graft.model.{Schemas, TwseFixtures}
 import graft.operators.{NotifySink, TwsePipeline}
-import graft.streaming.RetryRunner
+import graft.streaming.{EventsStreaming, RetryRunner}
 
 /** The deployable daily-orchestration entrypoint — the reference's
   * production shape (`/root/reference/dags/Final_app.py:14-20,144-149`:
@@ -24,10 +23,12 @@ import graft.streaming.RetryRunner
   *     → alert (format drift)
   *
   * Execution model: the landed payload files are consumed by a
-  * Structured Streaming file source under `Trigger.AvailableNow()` with
-  * a persistent checkpoint — the scheduler tick processes exactly the
-  * files that have landed since the last tick (re-running a day is a
-  * no-op, the checkpoint remembers).
+  * Structured Streaming file source run to completion by the one stream
+  * terminal, [[EventsStreaming.runAvailableNow]], with `base` as its run
+  * dir — so the persistent checkpoint is `base/checkpoint` and every
+  * tick leaves a progress trail. The scheduler tick processes exactly
+  * the files that have landed since the last tick (re-running a day is
+  * a no-op, the checkpoint remembers).
   *
   * Each batch is one pass: [[TwsePipeline.routedFrom]] routes every
   * landed day in ONE collected job (closed → do_nothing, 12-vector →
@@ -35,15 +36,18 @@ import graft.streaming.RetryRunner
   * reach the positional pivot. `foreachBatch` is at-least-once — a
   * crash between the append and the checkpoint commit replays the
   * batch — so the append itself is made idempotent by a dt guard: only
-  * when the batch holds `insert_data` days, the table's `dt` column is
-  * read with its declared schema and filtered to those days (pushed to
-  * the parquet scan — no shuffle, no schema-inference job), and only
-  * the days it does not hold are appended. A batch with no fresh day
-  * writes no file at all, so the table holds one file per appended day
+  * when the batch holds `insert_data` days, the [[AppendTarget]] is
+  * asked which of those days it `held` already, and only the others are
+  * appended. The default target is the parquet table at `table`, whose
+  * `held` reads the `dt` column with its declared schema and an `isin`
+  * filter pushed to the scan (no shuffle, no schema-inference job); the
+  * JDBC target ([[graft.sources.JdbcStore.InvestmentTarget]]) is the
+  * reference DDL's Postgres/Derby table. A batch with no fresh day
+  * writes nothing, so the parquet table holds one file per appended day
   * (ticks are scheduler-serialized, so there is no concurrent writer to
   * race). A closed-day tick runs one Spark job; an open day on an
-  * existing table runs three (route, guard, append), plus one for the
-  * notify delivery. The ingest tick is wrapped in
+  * existing parquet table runs three (route, guard, append), plus one
+  * for the notify delivery. The ingest tick is wrapped in
   * [[RetryRunner.withRetries]] (retries=2, 5-min delay) — the DAG's
   * task-retry semantics at application level, on top of Spark's own
   * three task attempts inside each job ([[GraftSession]]).
@@ -59,9 +63,10 @@ import graft.streaming.RetryRunner
   * semantics as an Airflow task retry of `notice`.
   *
   * At scale this driver is unchanged: the landing dir becomes the
-  * object-store prefix the fetcher fleet writes to, the file source
-  * lists new objects per tick, and the append target becomes a
-  * partitioned table or JDBC sink — all knobs, not code.
+  * object-store prefix the fetcher fleet writes to and the file source
+  * lists new objects per tick. The append target is code, not a knob:
+  * `runTick(spark, cfg, target)` takes any [[AppendTarget]], such as
+  * the JDBC one.
   *
   * Usage (see README §Daily pipeline):
   * {{{
@@ -96,6 +101,26 @@ object DailyApp {
     def table: Path = base.resolve("investment_data")
     def checkpoint: Path = base.resolve("checkpoint")
     def notifyPending: Path = base.resolve("notify_pending")
+  }
+
+  /** The `investment_data` table a tick appends to. The tick's dt guard
+    * asks it which open days it already holds, then appends the rest.
+    */
+  trait AppendTarget {
+    /** Those of `dates` the table holds a row for. */
+    def held(dates: Seq[String]): Set[String]
+    /** Append `rows`, the 13 `investment_data` columns. */
+    def append(rows: DataFrame): Unit
+  }
+
+  /** The parquet table at `dir`; a missing dir is an empty table. */
+  final case class ParquetTarget(spark: SparkSession, dir: Path) extends AppendTarget {
+    def held(dates: Seq[String]): Set[String] =
+      if (!Files.exists(dir)) Set.empty
+      else spark.read.schema(Schemas.investmentData).parquet(dir.toString)
+        .select(col("dt")).filter(col("dt").isin(dates: _*))
+        .collect().map(_.getString(0)).toSet
+    def append(rows: DataFrame): Unit = rows.write.mode("append").parquet(dir.toString)
   }
 
   def main(args: Array[String]): Unit = {
@@ -164,10 +189,13 @@ object DailyApp {
     * the parse→B1→B2 splits into the three terminal sinks, then deliver
     * queued notifications as a separate retried step. Returns the
     * per-day routing summary. The append is idempotent under batch
-    * replay (days the table already holds are skipped), so the
+    * replay (days `target` already holds are skipped), so the
     * tick-level retry can never duplicate `investment_data` rows.
     */
-  def runTick(spark: SparkSession, cfg: Config): TickSummary = {
+  def runTick(spark: SparkSession, cfg: Config): TickSummary =
+    runTick(spark, cfg, ParquetTarget(spark, cfg.table))
+
+  def runTick(spark: SparkSession, cfg: Config, target: AppendTarget): TickSummary = {
     val summary = RetryRunner.withRetries(
         cfg.retries, cfg.retryDelayMs, cfg.sleep) { _ =>
       fetchAndLand(cfg)
@@ -179,53 +207,43 @@ object DailyApp {
         .schema(Schemas.twsePayload)
         .json(cfg.landing.toString)
 
-      val q = parsedStream.writeStream
-        .option("checkpointLocation", cfg.checkpoint.toString)
-        .trigger(Trigger.AvailableNow()) // the daily scheduler tick
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // B1 + B2 — one job routes every landed day to do_nothing,
-          // insert_data or alert (Final_app.py:29-39,71-76)
-          val routed = TwsePipeline.routedFrom(batch).collect().toSeq
-            .map(r => (r.getString(0), r.getSeq[String](1), r.getString(2)))
-          def datesTo(route: String) = routed.collect { case (d, _, `route`) => d }
-          val okDates = datesTo("insert_data")
-          val badDates = datesTo("alert")
-          skipped ++= datesTo("do_nothing")
-          inserted ++= okDates
-          alerted ++= badDates
-          // E1 — insert_data: foreachBatch is at-least-once, so drop
-          // dates the table already holds before appending — a replayed
-          // batch re-appends nothing (the PostgresOperator INSERT with
-          // an ON CONFLICT DO NOTHING key; parquet here, JDBC in prod).
-          // EXACTLY-ONCE ENVELOPE: the dt-granular guard assumes a
-          // day's append is ATOMIC — true here by construction (one row
-          // per dt ⇒ one task, one file, committed or absent). A sink
-          // where one day spans several files/tasks (partitioned
-          // parquet, JDBC without the ON CONFLICT key) can crash with a
-          // day PARTIALLY committed, and replay would skip the whole dt
-          // instead of repairing it — such a sink needs row-granular
-          // dedup or stage-then-rename, not this guard.
-          val held =
-            if (okDates.isEmpty || !Files.exists(cfg.table)) Set.empty[String]
-            else spark.read.schema(Schemas.investmentData)
-              .parquet(cfg.table.toString).select(col("dt"))
-              .filter(col("dt").isin(okDates: _*))
-              .collect().map(_.getString(0)).toSet
-          val fresh = routed.collect { case (d, v, "insert_data") if !held(d) => (d, v) }
-          if (fresh.nonEmpty)
-            TwsePipeline.pivotWide(spark.createDataFrame(fresh).toDF("date", "vec"))
-              .write.mode("append").parquet(cfg.table.toString)
-          // E2/E3 — QUEUE the Telegram messages durably; the POSTs run
-          // after the streaming commit as their own task (see Scaladoc)
-          cfg.notifyUrl.foreach { _ =>
-            okDates.foreach(d => queueNotification(cfg, d, "success",
-              d + TwseFixtures.successMsgSuffix))
-            badDates.foreach(d => queueNotification(cfg, d, "alert",
-              TwseFixtures.alertMsg))
-          }
+      // the daily scheduler tick; its checkpoint is `cfg.checkpoint`
+      EventsStreaming.runAvailableNow(cfg.base, parsedStream) { (batch, _) =>
+        // B1 + B2 — one job routes every landed day to do_nothing,
+        // insert_data or alert (Final_app.py:29-39,71-76)
+        val routed = TwsePipeline.routedFrom(batch).collect().toSeq
+          .map(r => (r.getString(0), r.getSeq[String](1), r.getString(2)))
+        def datesTo(route: String) = routed.collect { case (d, _, `route`) => d }
+        val okDates = datesTo("insert_data")
+        val badDates = datesTo("alert")
+        skipped ++= datesTo("do_nothing")
+        inserted ++= okDates
+        alerted ++= badDates
+        // E1 — insert_data: foreachBatch is at-least-once, so drop
+        // dates the table already holds before appending — a replayed
+        // batch re-appends nothing (the PostgresOperator INSERT with
+        // an ON CONFLICT DO NOTHING key).
+        // EXACTLY-ONCE ENVELOPE: the dt-granular guard assumes a
+        // day's append is ATOMIC — true for both targets (one row per
+        // dt ⇒ one parquet file, or one JDBC row, committed or absent).
+        // A target where one day spans several files/tasks (partitioned
+        // parquet) can crash with a day PARTIALLY committed, and replay
+        // would skip the whole dt instead of repairing it — such a
+        // target needs row-granular dedup or stage-then-rename, not
+        // this guard.
+        val held = if (okDates.isEmpty) Set.empty[String] else target.held(okDates)
+        val fresh = routed.collect { case (d, v, "insert_data") if !held(d) => (d, v) }
+        if (fresh.nonEmpty)
+          target.append(TwsePipeline.pivotWide(spark.createDataFrame(fresh).toDF("date", "vec")))
+        // E2/E3 — QUEUE the Telegram messages durably; the POSTs run
+        // after the streaming commit as their own task (see Scaladoc)
+        cfg.notifyUrl.foreach { _ =>
+          okDates.foreach(d => queueNotification(cfg, d, "success",
+            d + TwseFixtures.successMsgSuffix))
+          badDates.foreach(d => queueNotification(cfg, d, "alert",
+            TwseFixtures.alertMsg))
         }
-        .start()
-      q.awaitTermination()
+      }
       TickSummary(inserted.toList, alerted.toList, skipped.toList)
     }
     // E2/E3 — notice/alert as their OWN retried task, after the ingest

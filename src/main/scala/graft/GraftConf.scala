@@ -10,8 +10,8 @@ import org.apache.spark.storage.StorageLevel
   * when a query is planned, so a session may change them between calls.
   *
   * A [[Key]] has no fixed default: the caller supplies the value that
-  * applies when it is unset (a per-table floor, a per-query partition
-  * count). A [[Setting]] has one default for every caller.
+  * applies when it is unset (a per-query partition count, or
+  * `localCheckpoint` in place of a directory). A [[Setting]] has one default for every caller.
   */
 object GraftConf {
 
@@ -72,8 +72,6 @@ object GraftConf {
   val PathsMaxEventsPerUser = new Setting("graft.paths.maxEventsPerUser", positiveInt, 10000)
   /** Event rows up to which RFM scoring runs as single-task ntile windows. */
   val RfmWindowMaxEventRows = new Setting("graft.rfm.windowMaxEventRows", long, 2000000L)
-  /** Table bytes from which a few-split scan is spread; per-table default. */
-  val SpreadMinBytes = new Key("graft.spread.minBytes", bytes)
 
   /** RocksDB changelog checkpointing for every stateful stream. */
   val RocksDbChangelog = new Setting("graft.streaming.rocksdbChangelog", bool, true)
@@ -88,13 +86,10 @@ object GraftConf {
 
   /** Corpus bytes above which tf is not materialized for reuse. */
   val TfCheckpointMaxBytes = new Setting("graft.text.tfCheckpointMaxBytes", bytes, 256L << 20)
-  /** Corpus bytes from which tf is materialized for reuse; per-query default. */
-  val TfCheckpointMinBytes = new Key("graft.text.tfCheckpointMinBytes", bytes)
 
   /** Every key; `GraftConfSpec` checks each one. */
   val all: Seq[Key[_]] = Seq(CheckpointDir, CheckpointSkip, CheckpointLevel,
     DedupBroadcastIdLimit, DedupExactGenLimit, DedupStopBroadcastLimit,
     LayoutMinBytes, PathsMaxEventsPerUser, RfmWindowMaxEventRows,
-    SpreadMinBytes, RocksDbChangelog, StatePartitions,
-    StateProvider, TfCheckpointMaxBytes, TfCheckpointMinBytes)
+    RocksDbChangelog, StatePartitions, StateProvider, TfCheckpointMaxBytes)
 }

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.model.Schemas
 import graft.operators.Multimodal
-import graft.streaming.{EventsStreaming, TwseStreaming}
+import graft.sources.JdbcStore
+import graft.streaming.EventsStreaming
 
 /** Registrations for the multimodal-column operators and the structured-
   * streaming forms. Media oracles work on hex strings (DuckDB 1.0 has no
@@ -24,9 +26,20 @@ object MediaStreamQueries {
     "q_stream_quantile" -> ((s, d) => EventsStreaming.streamingQuantileSketch(s, d)),
     "q_stream_events_append" -> ((s, d) => EventsStreaming.dailyCountsAppend(s, d)),
     "q_stream_daily_rollup" -> ((s, d) => EventsStreaming.dailyRollupMaintained(s, d)),
-    "q_stream_flagship" -> ((s, _) => TwseStreaming.flagshipStream(s)),
-    "q_stream_flagship_jdbc" -> ((s, _) =>
-      graft.streaming.JdbcStreamSink.flagshipStreamJdbc(s)),
+    // the flagship stream is a DailyApp tick over the golden window;
+    // its table holds the golden row
+    "q_stream_flagship" -> ((s, _) => {
+      val cfg = TwseQueries.goldenTick("graft_stream_flagship")
+      DailyApp.runTick(s, cfg)
+      s.read.schema(Schemas.investmentData).parquet(cfg.table.toString)
+    }),
+    // the same tick into the reference DDL's table over JDBC (Derby)
+    "q_stream_flagship_jdbc" -> ((s, _) => {
+      val cfg = TwseQueries.goldenTick("graft_stream_flagship_jdbc")
+      val url = s"jdbc:derby:${cfg.base.resolve("derby")};create=true"
+      DailyApp.runTick(s, cfg, new JdbcStore.InvestmentTarget(s, url))
+      JdbcStore.investmentData(s, url)
+    }),
     "q_stream_heavy_hitters" -> ((s, d) =>
       graft.streaming.DocsStreaming.heavyHittersStream(s, d)),
     "q_stream_tws" -> ((s, d) =>
@@ -211,10 +224,9 @@ object MediaStreamQueries {
         |FROM events JOIN dim USING (user_id)
         |GROUP BY cohort, event_type""".stripMargin,
 
-    // The streaming flagship append must produce exactly the batch
-    // flagship's golden row.
+    // A DailyApp tick over the golden window appends exactly the batch
+    // flagship's golden row, into parquet and into JDBC alike.
     "q_stream_flagship" -> TwseQueries.oracleSql("q_flagship"),
-    // exactly-once JDBC terminal: same golden row as the parquet terminal
     "q_stream_flagship_jdbc" -> TwseQueries.oracleSql("q_flagship"),
 
     // ListState first-k prefix per user equals the batch rank window

@@ -135,15 +135,15 @@ object TwseQueries {
 
     // E1 + A3 — append-sink then full-scan readback round-trip.
     "q_sink_roundtrip" -> ((s, _) =>
-      TwsePipeline.sinkRoundtrip(s, s"${sys.props("java.io.tmpdir")}/graft_sink_roundtrip")),
+      TwsePipeline.sinkRoundtrip(s, Staging.runDir("graft_sink_roundtrip").toString)),
 
     // E1 at scale — dt-partitioned layout + partition-pruned readback.
     "q_sink_partitioned" -> ((s, _) =>
-      TwsePipeline.sinkPartitioned(s, s"${sys.props("java.io.tmpdir")}/graft_sink_part")),
+      TwsePipeline.sinkPartitioned(s, Staging.runDir("graft_sink_part").toString)),
 
     // A-series breadth — CSV interchange round-trip of the contract row.
     "q_csv_roundtrip" -> ((s, _) =>
-      TwsePipeline.csvRoundtrip(s, s"${sys.props("java.io.tmpdir")}/graft_sink_csv")),
+      TwsePipeline.csvRoundtrip(s, Staging.runDir("graft_sink_csv").toString)),
 
     // B2 at the reader: PERMISSIVE CSV with per-row corrupt-record
     // quarantine of ragged/untypeable lines.
@@ -176,14 +176,7 @@ object TwseQueries {
 
     // F2 — the rendered INSERT statement (reference renders it via Jinja;
     // we derive it from the same lineage — mechanism superseded).
-    "q_sql_templating" -> ((s, _) => {
-      val quoted = Schemas.investmentCols.map(c => concat(lit("'"), col(c), lit("'")))
-      TwsePipeline.flagship(s).select(
-        concat(
-          lit(s"INSERT INTO investment_data(${Schemas.investmentCols.mkString(", ")}) VALUES ("),
-          concat_ws(", ", quoted: _*),
-          lit(")")).as("rendered_sql"))
-    }),
+    "q_sql_templating" -> ((s, _) => TwsePipeline.insertSql(TwsePipeline.flagship(s))),
 
     // G1 — market-open routing.
     "q_branch_market" -> ((s, _) => TwsePipeline.branchMarket(s)
@@ -197,16 +190,18 @@ object TwseQueries {
     // scheduler tick over the golden 3-day window, emitting each day's
     // TERMINAL route (the DAG's leaf actually taken, where
     // q_branch_market/q_branch_arity check each split in isolation).
-    // Fresh base dir per run: the tick is checkpoint-idempotent, so a
-    // reused dir would correctly yield an empty second tick.
     "q_daily_routes" -> ((s, _) => {
       import s.implicits._
-      val cfg = graft.DailyApp.Config(
-        base = Staging.runDir("graft_daily_q"),
-        useFixtures = true, sleep = _ => ())
-      graft.DailyApp.runTick(s, cfg).routes.toDF("dt", "route")
+      DailyApp.runTick(s, goldenTick("graft_daily_q")).routes.toDF("dt", "route")
     })
   )
+
+  /** A `DailyApp` tick over the golden 3-day window in a fresh run dir
+    * named `name`: the tick is checkpoint-idempotent, so a reused dir
+    * would correctly yield an empty second tick.
+    */
+  private[graft] def goldenTick(name: String): DailyApp.Config =
+    DailyApp.Config(base = Staging.runDir(name), useFixtures = true, sleep = _ => ())
 
   private val goldenRowSql: String = {
     val vals = ("'20220819'" +: golden12.map(v => s"'$v'")).mkString(", ")

@@ -72,9 +72,6 @@ object TwseFixtures {
   val drift: String =
     """{"stat":"OK","title":"99年01月06日 三大法人買賣金額統計表","fields":["單位名稱","買進金額","賣出金額"],"date":"20100106","data":[["自營商","4,521,333,000","4,380,932,000"],["投信","2,980,163,000","2,313,892,000"],["外資及陸資","21,652,624,000","15,622,596,000"],["合計","29,154,120,000","22,317,420,000"]],"params":{"response":"json","dayDate":"20100106"},"notes":[]}"""
 
-  /** All three golden scenarios, in a deterministic order. */
-  val all: Seq[String] = Seq(ok, closed, drift)
-
   /** Success-message template (reference `Final_app.py:140`). */
   val successMsgSuffix = " 資料以正確爬取"
 

@@ -354,7 +354,6 @@ object Dedup {
       persisted = next
       labels = next.select(col("n"), col("lbl"))
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG")) System.err.println(s"[cc] round=$rounds changed=$changed t=${System.nanoTime()/1000000}")
     }
     edges.unpersist()
     if (changed > 0) {

@@ -237,10 +237,9 @@ object TextAnalysis {
     *    corpus size (the SPARK_GRAFT_CKPT_LEVEL sibling knob).
     */
   private def tfReuseWorthIt(spark: SparkSession, sfDir: String,
-      minDefault: Long = 4L << 20): Boolean = {
+      minBytes: Long = 4L << 20): Boolean = {
     val bytes = Tables.fsFingerprint(spark, s"$sfDir/documents.parquet")._2
-    bytes >= GraftConf.TfCheckpointMinBytes.get(spark).getOrElse(minDefault) &&
-      bytes <= GraftConf.TfCheckpointMaxBytes(spark)
+    bytes >= minBytes && bytes <= GraftConf.TfCheckpointMaxBytes(spark)
   }
 
   def tfidfTop(spark: SparkSession, sfDir: String): DataFrame = {
@@ -583,7 +582,7 @@ object TextAnalysis {
         fp60(concat(col("bg.prev"), lit(" "), col("bg.cur"))).as("fp_bi"),
         fp60(col("bg.prev")).as("fp_prev"))
       .repartition(col("fp_bi"))
-    val docBi = if (tfReuseWorthIt(spark, sfDir, minDefault = 0L))
+    val docBi = if (tfReuseWorthIt(spark, sfDir, minBytes = 0L))
       docBiRaw.truncateLineage() else docBiRaw
     val bi = docBi.groupBy(col("fp_bi"), col("fp_prev"))
       .agg(count(lit(1)).as("c_bi"))
@@ -867,7 +866,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf"))
     // floor 0: dropping TWO extra passes pays even at sf0.1 (0.866 →
     // 0.825 s isolated); the ceiling still applies (see tfReuseWorthIt)
-    val tfWorthIt = tfReuseWorthIt(spark, sfDir, minDefault = 0L)
+    val tfWorthIt = tfReuseWorthIt(spark, sfDir, minBytes = 0L)
     val tf = if (tfWorthIt) tfRaw.truncateLineage() else tfRaw
     // dl = Σ tf is only a win while tf is MATERIALIZED (one in-memory
     // re-aggregation). Past the tfCheckpointMaxBytes ceiling tf is raw

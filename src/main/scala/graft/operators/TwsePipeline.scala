@@ -150,15 +150,27 @@ object TwsePipeline {
   /** E1 at scale — the production layout: `dt`-partitioned parquet, so a
     * per-day read prunes to one partition (the reference reads back the
     * whole table, `insert_data.py:57`; at 100 TB only partition pruning
-    * makes that viable). Type inference for partition columns is disabled
-    * so `dt` stays the contract's TEXT.
+    * makes that viable). The readback's declared schema keeps `dt` the
+    * contract's TEXT instead of an inferred integer partition column.
     */
   def sinkPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     flagship(spark).write.mode("overwrite").partitionBy("dt").parquet(dir)
-    spark.read.parquet(dir)
+    spark.read.schema(Schemas.investmentData).parquet(dir)
       .filter(col("dt") === "20220819") // prunes to the single partition
       .select(Schemas.investmentCols.map(col): _*)
+  }
+
+  /** F2 — each `investment_data` row of `wide` as the INSERT statement
+    * the reference renders with Jinja (`Final_app.py:106-128`), in the
+    * column `rendered_sql`. Values are quoted, not escaped: the
+    * contract's values are digits and a date.
+    */
+  def insertSql(wide: DataFrame): DataFrame = {
+    val quoted = Schemas.investmentCols.map(c => concat(lit("'"), col(c), lit("'")))
+    wide.select(concat(
+      lit(s"INSERT INTO investment_data(${Schemas.investmentCols.mkString(", ")}) VALUES ("),
+      concat_ws(", ", quoted: _*),
+      lit(")")).as("rendered_sql"))
   }
 
   /** CSV source/sink round-trip — same contract row through a second

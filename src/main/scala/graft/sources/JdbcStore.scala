@@ -1,7 +1,10 @@
 package graft.sources
 
+import java.sql.DriverManager
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.DailyApp
 import graft.model.Schemas
 
 /** A real JDBC storage path — the reference's actual store is Postgres
@@ -51,15 +54,49 @@ object JdbcStore {
   def roundtrip(spark: SparkSession): DataFrame = {
     val ddl = Schemas.investmentCols.map(c => s"$c VARCHAR(32)").mkString(", ")
     graft.operators.TwsePipeline.flagship(spark).write
-      .format("jdbc").mode(SaveMode.Overwrite)
-      .option("url", url("twse")).option("driver", driver)
-      .option("dbtable", "investment_data")
+      .format("jdbc").mode(SaveMode.Overwrite).options(investmentTable(url("twse")))
       .option("createTableColumnTypes", ddl)
       .save()
-    spark.read.format("jdbc")
-      .option("url", url("twse")).option("driver", driver)
-      .option("dbtable", "investment_data")
-      .load()
+    investmentData(spark, url("twse"))
+  }
+
+  /** Options naming `investment_data` in the Derby database at `jdbcUrl`. */
+  private def investmentTable(jdbcUrl: String): Map[String, String] =
+    Map("url" -> jdbcUrl, "driver" -> driver, "dbtable" -> "investment_data")
+
+  /** The `investment_data` table of the Derby database at `jdbcUrl`. */
+  def investmentData(spark: SparkSession, jdbcUrl: String): DataFrame =
+    spark.read.format("jdbc").options(investmentTable(jdbcUrl)).load()
+
+  /** The reference table over JDBC as a daily tick's append target:
+    * `investment_data` is created on first use with the reference DDL —
+    * 13 text columns led by `dt`, all NOT NULL, and no other column
+    * (VARCHAR on Derby, which has no TEXT; the names quoted so they stay
+    * lower case, as Postgres folds them). `held` is a `dt IN (...)` read
+    * the JDBC source pushes to the database, `append` Spark's JDBC
+    * writer. One row per day, so a day's append is one row committed or
+    * absent, which is what the tick's dt guard needs.
+    */
+  final class InvestmentTarget(spark: SparkSession, jdbcUrl: String)
+      extends DailyApp.AppendTarget {
+    locally {
+      Class.forName(driver)
+      val conn = DriverManager.getConnection(jdbcUrl)
+      try {
+        val rs = conn.getMetaData.getTables(null, null, "INVESTMENT_DATA", null)
+        if (!(try rs.next() finally rs.close())) {
+          val st = conn.createStatement()
+          try st.executeUpdate("CREATE TABLE investment_data (" + Schemas.investmentCols
+            .map(c => s""""$c" VARCHAR(32) NOT NULL""").mkString(", ") + ")")
+          finally st.close()
+        }
+      } finally conn.close()
+    }
+    def held(dates: Seq[String]): Set[String] =
+      investmentData(spark, jdbcUrl).select(col("dt")).filter(col("dt").isin(dates: _*))
+        .collect().map(_.getString(0)).toSet
+    def append(rows: DataFrame): Unit =
+      rows.write.format("jdbc").mode(SaveMode.Append).options(investmentTable(jdbcUrl)).save()
   }
 
   /** The JDBC scale path: persist the daily event aggregate, then read

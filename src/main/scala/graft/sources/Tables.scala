@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.GraftConf
 
 /** Readers for the driver testdata tables (`/root/repo/TESTDATA.md`).
   *
@@ -40,8 +39,8 @@ object Tables {
     *    where the fingerprint (file count + bytes + max mtime) also
     *    invalidates the entry if the data is regenerated in place.
     *  - tiny tables paid a corpus exchange for stages that finish in
-    *    milliseconds serially — a bytes floor (`graft.spread.minBytes`,
-    *    default 1 MiB) keeps them exchange-free: at sf0.1 (0.6-0.8 MB
+    *    milliseconds serially — a per-table bytes floor (256 KiB to
+    *    4 MiB, see the callers) keeps them exchange-free: at sf0.1 (0.6-0.8 MB
     *    tables) the exchange cost every light consumer ~0.3-0.6 s for
     *    sub-second stages (measured r11: the taxed seven ran 11.98 s
     *    spread-on vs 7.37 s spread-off, 3-pass isolated) while the
@@ -80,11 +79,10 @@ object Tables {
   }
 
   private def spread(df: DataFrame, path: String,
-      defaultMin: Long): DataFrame = {
+      minBytes: Long): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     val (fp, bytes) = fsFingerprint(spark, path)
-    val minBytes = GraftConf.SpreadMinBytes.get(spark).getOrElse(defaultMin)
     // keyed on a per-session UUID, not identityHashCode: identity hashes
     // can be reused after a GC'd session, serving a stale decision
     val key = s"${sessionId(spark)}|$path|$fp"

@@ -53,6 +53,8 @@ object EventsStreaming {
     * `foreachBatch`, then record the run's progress trail. `run` comes
     * from [[Staging.runDir]], so no earlier run's checkpoint replays into
     * this one; callers keep their sinks and side tables in the same dir.
+    * The one exception is a `DailyApp` tick, whose run dir is its
+    * persistent base: there the resumed checkpoint is the point.
     */
   private[graft] def runAvailableNow(run: Path, result: DataFrame,
       mode: OutputMode = OutputMode.Append)(body: (DataFrame, Long) => Unit): Unit = {
@@ -197,8 +199,8 @@ object EventsStreaming {
     * partitioned table, rewriting ONLY the touched day partitions. A
     * per-batch applied marker makes checkpoint REPLAY idempotent — a
     * re-delivered batch must not double-merge (the foreachBatch
-    * exactly-once pattern, same idea as JdbcStreamSink's batchId
-    * ledger). Table existence is detected from partition directories,
+    * exactly-once pattern; a merge is not an append, so `DailyApp`'s
+    * dt guard does not fit it). Table existence is detected from partition directories,
     * NOT a _SUCCESS marker: the dynamic-partition-overwrite commit
     * protocol doesn't write one at the table root.
     */

@@ -124,6 +124,16 @@ class AnalyticsSpec extends SparkTestBase {
     assert(plan.contains("PartitionFilters: [isnotnull(dt"), plan)
   }
 
+  test("q_sink_partitioned leaves the session conf alone, so " +
+      "q_backfill_partition's day partition still reads as DATE") {
+    val inference = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    val before = spark.conf.getOption(inference)
+    assert(canon(SparkEntry.queries("q_sink_partitioned")(spark, d)).size === 1)
+    assert(spark.conf.getOption(inference) === before)
+    val backfill = SparkEntry.queries("q_backfill_partition")(spark, d)
+    assert(backfill.schema("day").dataType === org.apache.spark.sql.types.DateType)
+  }
+
   test("events nanosecond timestamps convert exactly (integer microseconds)") {
     val ts = Tables.events(spark, d)
       .agg(min(unix_micros(col("ts")))).collect().head.getLong(0)

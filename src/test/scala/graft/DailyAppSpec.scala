@@ -5,9 +5,11 @@ import java.net.URLDecoder
 import java.nio.file.{Files, Paths}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.scalatest.Assertions._
 
-import graft.model.TwseFixtures
+import graft.model.{Schemas, TwseFixtures}
 
 /** End-to-end drive of the deployable daily driver ([[DailyApp]]) over
   * the reference's 3-day golden window — open (2022-08-19), closed
@@ -18,6 +20,7 @@ import graft.model.TwseFixtures
   * retry policy (retries=2, 5-min delay) on a fetch that fails twice.
   */
 class DailyAppSpec extends SparkTestBase {
+  import DailyAppSpec._
 
   private def withServer[A](
       body: (String, java.util.List[(String, String)]) => A): A = {
@@ -40,13 +43,6 @@ class DailyAppSpec extends SparkTestBase {
     try body(s"http://127.0.0.1:${server.getAddress.getPort}/bot/sendMessage", posts)
     finally server.stop(0)
   }
-
-  private def freshCfg(notifyUrl: Option[String]) = DailyApp.Config(
-    base = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_daily_spec_${java.util.UUID.randomUUID().toString.take(8)}"),
-    notifyUrl = notifyUrl,
-    useFixtures = true,
-    sleep = _ => ()) // no wall-clock waits in specs
 
   test("one tick over the golden window hits all three terminal sinks") {
     withServer { (url, posts) =>
@@ -89,20 +85,6 @@ class DailyAppSpec extends SparkTestBase {
   private def tableFiles(cfg: DailyApp.Config): Seq[String] =
     FsUtil.listDir(cfg.table).map(_.getFileName.toString)
       .filter(_.endsWith(".parquet")).toSeq
-
-  /** Land one payload by hand, as a fetch for `date` would. */
-  private def land(cfg: DailyApp.Config, date: String, body: String): Unit = {
-    Files.createDirectories(cfg.landing)
-    Files.write(cfg.landing.resolve(s"day_$date.json"),
-      body.getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** The golden open payload, re-dated. */
-  private def openDay(date: String): String =
-    TwseFixtures.ok.replace("\"date\":\"20220819\"", "\"date\":\"" + date + "\"")
-
-  /** A tick with no fetch: it streams whatever was landed by hand. */
-  private def landedOnly(cfg: DailyApp.Config) = cfg.copy(useFixtures = false)
 
   test("batch replay does not duplicate the append: the dt guard dedupes") {
     // foreachBatch is at-least-once — simulate the replay a crash between
@@ -239,6 +221,45 @@ class DailyAppSpec extends SparkTestBase {
     assert(attempts === 3 && e.getMessage === "still down")
   }
 
+  test("an HTTP 500 on the fetch is retried; three in a row fail the tick") {
+    // the tick's own retry, not a hand-made loop: the first GET of the
+    // open day fails, the retried tick lands and appends it exactly once;
+    // then a day whose three GETs all fail fails the tick and changes
+    // nothing
+    val failures = new java.util.concurrent.atomic.AtomicInteger(1)
+    val gets = new java.util.concurrent.atomic.AtomicInteger
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/fund/BFI82U", (ex: HttpExchange) => {
+      gets.incrementAndGet()
+      val date = ex.getRequestURI.getQuery.split("dayDate=", 2)(1)
+      if (failures.getAndDecrement() > 0) ex.sendResponseHeaders(500, -1)
+      else {
+        val body = openDay(date).getBytes(StandardCharsets.UTF_8)
+        ex.sendResponseHeaders(200, body.length)
+        ex.getResponseBody.write(body)
+      }
+      ex.close()
+    })
+    server.start()
+    try {
+      val cfg = freshCfg(None).copy(useFixtures = false, dates = Seq("20220819"),
+        fetchUrl = Some(s"http://127.0.0.1:${server.getAddress.getPort}/fund/BFI82U"))
+      assert(DailyApp.runTick(spark, cfg).inserted === Seq("20220819"))
+      assert(gets.get === 2)
+      val golden = canon(graft.operators.TwsePipeline.flagship(spark))
+      assert(canon(spark.read.parquet(cfg.table.toString)) === golden)
+      val files = tableFiles(cfg)
+
+      failures.set(3)
+      gets.set(0)
+      intercept[java.io.IOException](DailyApp.runTick(spark, cfg.copy(dates = Seq("20220822"))))
+      assert(gets.get === 3) // 1 attempt + retries: 2
+      assert(canon(spark.read.parquet(cfg.table.toString)) === golden)
+      assert(tableFiles(cfg) === files)
+      assert(!Files.exists(cfg.landing.resolve("day_20220822.json")))
+    } finally server.stop(0)
+  }
+
   test("fetchAndLand is idempotent and atomic: re-land skips, no tmp residue") {
     val cfg = freshCfg(None)
     val first = DailyApp.fetchAndLand(cfg)
@@ -248,4 +269,62 @@ class DailyAppSpec extends SparkTestBase {
     val listed = Files.list(cfg.landing).toArray.map(_.toString)
     assert(listed.length === 3 && listed.forall(!_.contains(".tmp")))
   }
+}
+
+object DailyAppSpec {
+
+  /** A fresh base under the tmpdir, the golden window as its fetch. */
+  def freshCfg(notifyUrl: Option[String]): DailyApp.Config = DailyApp.Config(
+    base = Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_daily_spec_${java.util.UUID.randomUUID().toString.take(8)}"),
+    notifyUrl = notifyUrl,
+    useFixtures = true,
+    sleep = _ => ()) // no wall-clock waits in specs
+
+  /** Land one payload by hand, as a fetch for `date` would. */
+  def land(cfg: DailyApp.Config, date: String, body: String): Unit = {
+    Files.createDirectories(cfg.landing)
+    Files.write(cfg.landing.resolve(s"day_$date.json"),
+      body.getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** The golden open payload, re-dated. */
+  def openDay(date: String): String =
+    TwseFixtures.ok.replace("\"date\":\"20220819\"", "\"date\":\"" + date + "\"")
+
+  /** A tick with no fetch: it streams whatever was landed by hand. */
+  def landedOnly(cfg: DailyApp.Config): DailyApp.Config = cfg.copy(useFixtures = false)
+
+  /** The dt guard's replay cases against one append target: a tick over
+    * the golden window appends the golden row; a full replay, after the
+    * checkpoint is wiped, appends nothing; a partial replay, holding
+    * that day and a new open day, appends only the new day. `rows` reads
+    * the target's table as `|`-joined lines in `investment_data` column
+    * order. Returns the final rows, sorted.
+    */
+  def replayCases(spark: SparkSession, target: DailyApp.Config => DailyApp.AppendTarget,
+      rows: DailyApp.Config => Seq[String]): Seq[String] = {
+    val cfg = freshCfg(None)
+    val into = target(cfg)
+    def tick(): DailyApp.TickSummary = DailyApp.runTick(spark, cfg, into)
+    def wipeCheckpoint(): Unit =
+      org.apache.commons.io.FileUtils.deleteDirectory(cfg.checkpoint.toFile)
+    val golden = canonRows(graft.operators.TwsePipeline.flagship(spark))
+    assert(tick().inserted === Seq("20220819"))
+    assert(rows(cfg).sorted === golden)
+    wipeCheckpoint()
+    assert(tick().inserted === Seq("20220819")) // routed again ...
+    assert(rows(cfg).sorted === golden, "a full replay must append nothing")
+    wipeCheckpoint()
+    land(cfg, "20220822", openDay("20220822"))
+    assert(tick().inserted.sorted === Seq("20220819", "20220822"))
+    val both = (golden ++ golden.map(_.replaceFirst("^20220819", "20220822"))).sorted
+    assert(rows(cfg).sorted === both, "a partial replay appends only the new day")
+    both
+  }
+
+  /** `df`'s rows in `investment_data` column order as `|`-joined lines. */
+  def canonRows(df: DataFrame): Seq[String] =
+    df.select(Schemas.investmentCols.map(col): _*).collect()
+      .map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
 }

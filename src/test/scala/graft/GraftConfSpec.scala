@@ -21,12 +21,10 @@ class GraftConfSpec extends SparkTestBase {
     (LayoutMinBytes, Some(64L << 20), Some("64m")),
     (PathsMaxEventsPerUser, Some(10000), Some("0")),
     (RfmWindowMaxEventRows, Some(2000000L), Some("2,000,000")),
-    (SpreadMinBytes, None, Some("-1")),
     (RocksDbChangelog, Some(true), Some("on")),
     (StatePartitions, None, Some("-3")),
     (StateProvider, Some("rocksdb"), Some("session")),
-    (TfCheckpointMaxBytes, Some(256L << 20), Some("256MB")),
-    (TfCheckpointMinBytes, None, Some("4.5")))
+    (TfCheckpointMaxBytes, Some(256L << 20), Some("256MB")))
 
   private def withConf[A](key: String, value: String)(body: => A): A = {
     spark.conf.set(key, value)

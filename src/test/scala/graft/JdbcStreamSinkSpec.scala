@@ -1,49 +1,35 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.streaming.{JdbcStreamSink, TwseStreaming}
+import graft.sources.JdbcStore
 
-/** E1 streaming-into-JDBC with exactly-once semantics: the
-  * delete-then-append-by-batch_id sink must absorb replayed and partial
-  * deliveries without loss or duplication.
+/** E1 streaming into JDBC: a `DailyApp` tick appends into the reference
+  * DDL's table on Derby through the same dt guard as the parquet table,
+  * so replayed and partial deliveries land without loss or duplication,
+  * and the JDBC table ends equal to the parquet one.
   */
 class JdbcStreamSinkSpec extends SparkTestBase {
+  import DailyAppSpec.{canonRows, replayCases}
 
-  private val url =
-    s"jdbc:derby:${sys.props("java.io.tmpdir")}/graft_derby_sinkspec_${java.util.UUID.randomUUID().toString.take(8)};create=true"
+  private def url(cfg: DailyApp.Config) =
+    s"jdbc:derby:${cfg.base.resolve("derby")};create=true"
+
+  private def derbyReplays(): Seq[String] = replayCases(spark,
+    cfg => new JdbcStore.InvestmentTarget(spark, url(cfg)),
+    cfg => canonRows(JdbcStore.investmentData(spark, url(cfg))))
 
   test("replayed micro-batches land exactly once; new batches append") {
-    import spark.implicits._
-    val ddl = "k VARCHAR(8), v VARCHAR(8)"
-    def readback = spark.read.format("jdbc")
-      .option("url", url).option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      .option("dbtable", "t").load()
-
-    val b0 = Seq(("a", "1"), ("b", "2")).toDF("k", "v")
-    JdbcStreamSink.exactlyOnceAppend(b0, 0L, url, "t", ddl)
-    assert(readback.count() === 2)
-
-    // checkpoint replay: the SAME batch id delivered again — no dupes
-    JdbcStreamSink.exactlyOnceAppend(b0, 0L, url, "t", ddl)
-    assert(readback.count() === 2)
-
-    // partial-delivery recovery: a crashed attempt left a subset behind;
-    // the re-delivery must replace it with the full batch
-    JdbcStreamSink.exactlyOnceAppend(Seq(("c", "3")).toDF("k", "v"), 1L, url, "t", ddl)
-    JdbcStreamSink.exactlyOnceAppend(
-      Seq(("c", "3"), ("d", "4")).toDF("k", "v"), 1L, url, "t", ddl)
-    assert(readback.filter(col("batch_id") === 1L).count() === 2)
-
-    // a genuinely new batch appends
-    JdbcStreamSink.exactlyOnceAppend(Seq(("e", "5")).toDF("k", "v"), 2L, url, "t", ddl)
-    assert(readback.count() === 5)
-    assert(readback.select(countDistinct(col("k"))).head.getLong(0) === 5)
+    assert(derbyReplays().map(_.take(8)) === Seq("20220819", "20220822"))
   }
 
   test("the flagship stream through the JDBC terminal equals the parquet-terminal result") {
-    val viaJdbc = JdbcStreamSink.flagshipStreamJdbc(spark)
-    val viaParquet = TwseStreaming.flagshipStream(spark)
-    assert(canon(viaJdbc) === canon(viaParquet))
-    assert(viaJdbc.count() === 1) // the golden flagship row, exactly once
+    val viaParquet = replayCases(spark,
+      cfg => DailyApp.ParquetTarget(spark, cfg.table),
+      cfg => canonRows(spark.read.parquet(cfg.table.toString)))
+    assert(derbyReplays() === viaParquet)
+    // and the two query keys: the golden row, exactly once, either way
+    val jdbc = SparkEntry.queries("q_stream_flagship_jdbc")(spark, sf())
+    assert(jdbc.columns.toSeq === model.Schemas.investmentCols)
+    assert(canon(jdbc) === canon(SparkEntry.queries("q_stream_flagship")(spark, sf())))
+    assert(jdbc.count() === 1)
   }
 }

@@ -17,8 +17,10 @@ import graft.model.Schemas
   * text and its RENDERED INSERT statement (the q_sql_templating output —
   * byte-for-byte what the reference's Jinja templating produces) parse,
   * execute, and round-trip on the actual target engine, not just on
-  * stand-ins. Postgres refuses to run as root, so every server-side
-  * command runs as `nobody` over a world-writable state dir.
+  * stand-ins, and a real `DailyApp` tick appends into the reference DDL
+  * through a psql-backed append target. Postgres refuses to run as root,
+  * so every server-side command runs as `nobody` over a world-writable
+  * state dir.
   */
 class PostgresRealSpec extends SparkTestBase with BeforeAndAfterAll {
 
@@ -121,64 +123,40 @@ class PostgresRealSpec extends SparkTestBase with BeforeAndAfterAll {
       s"readback must equal the flagship golden row: $got vs $expected")
   }
 
-  test("streaming delete-then-append protocol is exactly-once on a real " +
-      "Postgres (full replay, partial delivery, crash-anywhere)") {
-    assume(available, "postgres binaries or nobody user missing")
-    import graft.streaming.JdbcStreamSink
-    val table = "investment_stream"
-    psql(s"DROP TABLE IF EXISTS $table")
-    val (cc, co) = psql(s"CREATE TABLE $table (" +
-      Schemas.investmentCols.map(c => s"$c TEXT NOT NULL").mkString(", ") +
-      ", batch_id BIGINT NOT NULL)")
-    assert(cc == 0, s"create failed:\n$co")
-
-    // the SAME flagship stream q_stream_flagship_jdbc runs, but every
-    // micro-batch delivers through the rendered-SQL protocol over psql
-    // into the live server (the reference's Final_app.py:106-128 target
-    // engine) instead of the Derby JDBC writer
-    var delivered = Map.empty[Long, Seq[Seq[String]]]
-    graft.streaming.TwseStreaming.flagshipStreamInto(spark, (batch, id) => {
-      val rows = batch.collect().toSeq.map(_.toSeq.map(String.valueOf))
-      delivered += id -> rows
-      val stmts = JdbcStreamSink.renderBatchStatements(
-        rows, Schemas.investmentCols, id, table)
-      val (rc, out) = psql(stmts.mkString(";\n") + ";")
-      assert(rc == 0, s"batch $id delivery rejected by real Postgres:\n$out")
-    })
-    assert(delivered.nonEmpty && delivered.valuesIterator.flatten.nonEmpty)
-
-    def snapshot(): Seq[String] = {
-      val (rc, out) = psql(s"SELECT ${Schemas.investmentCols.mkString(", ")}, " +
-        s"batch_id FROM $table")
+  /** The reference table on the live server as a tick's append target,
+    * through psql: `held` is a `dt IN (...)` SELECT, `append` runs the
+    * engine-rendered INSERT of each row (the q_sql_templating rendering).
+    */
+  private object LiveTable extends DailyApp.AppendTarget {
+    def held(dates: Seq[String]): Set[String] = {
+      val (rc, out) = psql("SELECT dt FROM investment_data WHERE dt IN (" +
+        dates.map(d => s"'$d'").mkString(", ") + ")")
       assert(rc == 0, out)
-      out.trim.linesIterator.toSeq.sorted
+      out.linesIterator.map(_.trim).filter(_.nonEmpty).toSet
     }
-    val once = snapshot()
-
-    // at-least-once redelivery: replay EVERY batch in full — the
-    // delete-then-append key makes each a no-op
-    delivered.foreach { case (id, rows) =>
-      val stmts = JdbcStreamSink.renderBatchStatements(
-        rows, Schemas.investmentCols, id, table)
-      assert(psql(stmts.mkString(";\n") + ";")._1 == 0)
+    def append(rows: org.apache.spark.sql.DataFrame): Unit = {
+      val inserts = graft.operators.TwsePipeline.insertSql(rows).collect().map(_.getString(0))
+      val (rc, out) = psql(inserts.mkString("", ";\n", ";"))
+      assert(rc == 0, s"INSERT rejected by real Postgres:\n$out")
     }
-    assert(snapshot() == once, "full replay must leave the table unchanged")
+  }
 
-    // crash mid-delivery: the delete plus only the FIRST insert land,
-    // then the checkpoint redelivers the whole batch — must converge
-    val (id0, rows0) = delivered.head
-    val stmts0 = JdbcStreamSink.renderBatchStatements(
-      rows0, Schemas.investmentCols, id0, table)
-    assert(psql(stmts0.take(2).mkString(";\n") + ";")._1 == 0)
-    assert(psql(stmts0.mkString(";\n") + ";")._1 == 0)
-    assert(snapshot() == once,
-      "partial-then-full redelivery must converge to exactly-once")
-
-    // and the table IS the flagship result (modulo the bookkeeping col)
-    val got = once.map(_.split("\\|").dropRight(1).mkString("|")).sorted
-    val want = graft.operators.TwsePipeline.flagship(spark)
-      .collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("|")).sorted
-    assert(got == want,
-      s"live-Postgres readback must equal the flagship rows: $got vs $want")
+  test("a DailyApp tick appends exactly once into the reference DDL on a " +
+      "real Postgres (full and partial replay)") {
+    assume(available, "postgres binaries or nobody user missing")
+    psql("DROP TABLE IF EXISTS investment_data")
+    val (cc, co) = psql(ddl) // the reference DDL as-is: no bookkeeping column
+    assert(cc == 0, s"create failed:\n$co")
+    def rows(): Seq[String] = {
+      val (rc, out) = psql(s"SELECT ${Schemas.investmentCols.mkString(", ")} FROM investment_data")
+      assert(rc == 0, out)
+      out.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+    }
+    // the same replay cases the parquet and Derby targets pass
+    val live = DailyAppSpec.replayCases(spark, _ => LiveTable, _ => rows())
+    val viaParquet = DailyAppSpec.replayCases(spark,
+      cfg => DailyApp.ParquetTarget(spark, cfg.table),
+      cfg => DailyAppSpec.canonRows(spark.read.parquet(cfg.table.toString)))
+    assert(live === viaParquet)
   }
 }

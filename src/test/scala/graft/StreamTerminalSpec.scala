@@ -1,26 +1,22 @@
 package graft
 
-import org.apache.spark.sql.functions.col
-
 import graft.model.Schemas
 import graft.streaming.EventsStreaming
 
 /** Every stream that once hand-rolled its own `Trigger.AvailableNow`
-  * terminal now runs through `EventsStreaming.runAvailableNow`: one run
-  * dir, one checkpoint, and a progress trail whose input rows account for
-  * every row of the landing the stream read.
+  * terminal, and every `DailyApp` tick, runs through
+  * `EventsStreaming.runAvailableNow`: one run dir, one checkpoint, and a
+  * progress trail whose input rows account for every row of the landing
+  * the stream read. The three keys that run a tick over the golden
+  * window read each of its three landed payloads, the market-closed day
+  * included: the tick routes a closed day, it does not filter it out.
   */
 class StreamTerminalSpec extends SparkTestBase {
 
   private def parquetRows(landing: String): Long = spark.read.parquet(landing).count()
 
-  /** The flagship's JSON scan applies the pipeline's pushed `stat = 'OK'`
-    * predicate while parsing, so its input rows are the OK payloads: two
-    * of the three golden fixtures (the third is the market-closed day).
-    */
-  private def okPayloads(landing: String): Long =
-    spark.read.schema(Schemas.twsePayload).json(landing)
-      .filter(col("stat") === "OK").count()
+  private def payloads(landing: String): Long =
+    spark.read.schema(Schemas.twsePayload).json(landing).count()
 
   /** (query key, the rows its landing yields to the stream's file source) */
   private val table: Seq[(String, String => Long)] = Seq(
@@ -28,8 +24,9 @@ class StreamTerminalSpec extends SparkTestBase {
     "q_stream_quarantine" -> parquetRows,
     "q_stream_cdc_apply" -> parquetRows,
     "q_stream_dedup_minhash" -> parquetRows,
-    "q_stream_flagship" -> okPayloads,
-    "q_stream_flagship_jdbc" -> okPayloads,
+    "q_stream_flagship" -> payloads,
+    "q_stream_flagship_jdbc" -> payloads,
+    "q_daily_routes" -> payloads,
     "q_state_inspect" -> parquetRows)
 
   table.foreach { case (key, landingRows) =>
