@@ -1,13 +1,32 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  private val DefaultSfDir = "/root/testdata/sf0.1"
+
+  /** Where a run's complete per-query map goes: `SPARK_GRAFT_BENCH_OUT`
+    * if set, else `bench_full.json` for the default run (every query,
+    * the default sf dir, the default session shape), else
+    * `bench_probe.json`. bench_full.json is the sha-chained full-suite
+    * artifact BASELINE.md cites, so a filtered, other-sf or other-core
+    * probe must not overwrite it (a round-13 sf100 probe clobbered the
+    * 294-query map and broke the BENCH_r13 queries_sha256 pointer, and an
+    * 8-core run clobbered the 32-core map).
+    */
+  def outFile(env: Map[String, String]): String =
+    env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
+      val default = !env.contains("SPARK_GRAFT_BENCH_ONLY") &&
+        env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir) == DefaultSfDir &&
+        GraftSession.fromEnv("", env) == GraftSession.fromEnv("", Map.empty)
+      if (default) "bench_full.json" else "bench_probe.json"
+    })
+
   def main(args: Array[String]): Unit = {
     JvmPrereqs.check() // fail fast, not 2h in at the first Kryo spill
     // heavy runs budget /tmp deterministically: sweep stale crashed-run
     // debris first (opt out with SPARK_GRAFT_RECLAIM=0)
     if (sys.env.getOrElse("SPARK_GRAFT_RECLAIM", "1") != "0")
       graft.tools.Reclaim.sweep(): Unit
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
     // dev iteration aids: restrict to a comma-list of query names, and/or
     // change the number of timed passes (min is reported per query)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -68,14 +87,7 @@ object Bench {
     println(line)
     // The driver's log tail truncates long lines (53/117 timings lost in
     // round 4) — persist the complete per-query map alongside it.
-    // bench_full.json is the sha-chained full-suite artifact BASELINE.md
-    // cites: a filtered probe (BENCH_ONLY) or a non-default sfDir must
-    // NOT overwrite it (a round-13 sf100 probe clobbered the 294-query
-    // map and broke the BENCH_r13 queries_sha256 pointer) — those runs
-    // land in bench_probe.json unless SPARK_GRAFT_BENCH_OUT names a file.
-    val isFullDefault = only.isEmpty && sfDir == "/root/testdata/sf0.1"
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (isFullDefault) "bench_full.json" else "bench_probe.json")
+    val outFile = Bench.outFile(sys.env)
     val fileBytes = (line + "\n").getBytes("UTF-8")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outFile), fileBytes)

@@ -73,9 +73,9 @@ object GraftConf {
   /** Event rows up to which RFM scoring runs as single-task ntile windows. */
   val RfmWindowMaxEventRows = new Setting("graft.rfm.windowMaxEventRows", long, 2000000L)
 
-  /** RocksDB changelog checkpointing for every stateful stream. */
-  val RocksDbChangelog = new Setting("graft.streaming.rocksdbChangelog", bool, true)
-  /** State partitions of every stateful stream; unset = the query's own count. */
+  /** State partitions of every stateful stream; unset = derived from the
+    * stream's input bytes (`EventsStreaming.runAvailableNow`).
+    */
   val StatePartitions = new Key("graft.streaming.statePartitions", positiveInt)
   /** State-store provider of stateful streams: `rocksdb`, or `heap`, which
     * specs keep as the reference the RocksDB results are compared against.
@@ -91,5 +91,5 @@ object GraftConf {
   val all: Seq[Key[_]] = Seq(CheckpointDir, CheckpointSkip, CheckpointLevel,
     DedupBroadcastIdLimit, DedupExactGenLimit, DedupStopBroadcastLimit,
     LayoutMinBytes, PathsMaxEventsPerUser, RfmWindowMaxEventRows,
-    RocksDbChangelog, StatePartitions, StateProvider, TfCheckpointMaxBytes)
+    StatePartitions, StateProvider, TfCheckpointMaxBytes)
 }

@@ -47,9 +47,9 @@ object GraftSession {
     *  - `SPARK_GRAFT_CPUS` (default 32: `local[32]` is the shape the
     *    suite's committed timings were measured at);
     *  - `SPARK_GRAFT_SHUFFLE` (default = cpus): shuffle partitions must
-    *    grow with data so a partition fits in memory at big scale;
-    *  - `SPARK_GRAFT_STREAM_SHUFFLE`, its streaming twin
-    *    ([[GraftConf.StatePartitions]]);
+    *    grow with data so a partition fits in memory at big scale; it
+    *    also caps the state partitions a stream derives from its input
+    *    bytes (`EventsStreaming.runAvailableNow`);
     *  - `SPARK_GRAFT_CKPT_LEVEL` ([[GraftConf.CheckpointLevel]]), e.g.
     *    `MEMORY_AND_DISK_SER` when deserialized checkpoints would not fit.
     */
@@ -59,7 +59,6 @@ object GraftSession {
         s"$name must be a positive integer, got '$v'")))
     val cpus = int("SPARK_GRAFT_CPUS").getOrElse(32)
     conf(app, localMaster(cpus), int("SPARK_GRAFT_SHUFFLE").getOrElse(cpus)) ++
-      int("SPARK_GRAFT_STREAM_SHUFFLE").map(GraftConf.StatePartitions.key -> _.toString) ++
       env.get("SPARK_GRAFT_CKPT_LEVEL").map(GraftConf.CheckpointLevel.key -> _)
   }
 

@@ -70,8 +70,7 @@ object CdcStreaming {
   /** Run the CDC stream to completion and return the live-row rollup
     * (same contract as the batch `q_cdc_apply`).
     */
-  def apply(spark: SparkSession, sfDir: String): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8) {
+  def apply(spark: SparkSession, sfDir: String): DataFrame = {
     val run = Staging.runDir("graft_stream_cdc")
     val tableDir = run.resolve("table")
     val byKey = Window.partitionBy(col("o_orderkey"))

@@ -44,8 +44,7 @@ object DocsStreaming {
     docsLanding(spark, sfDir, "docs")(docs(spark, sfDir).write.mode("overwrite").parquet(_))
 
   /** Distinct content hashes of the streamed corpus. */
-  def dedupHashes(spark: SparkSession, sfDir: String): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8) {
+  def dedupHashes(spark: SparkSession, sfDir: String): DataFrame = {
     val deduped = spark.readStream.schema(docSchema)
       .parquet(stagedDir(spark, sfDir))
       .select(md5(col("text")).as("content_hash"))
@@ -123,8 +122,7 @@ object DocsStreaming {
     * lives on HDFS/S3A, not a local disk.
     */
   def streamDedupMinhash(spark: SparkSession, sfDir: String,
-      shards: Int = 3): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8) {
+      shards: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.hadoop.fs.Path
     val run = Staging.runDir("graft_stream_docs_mh")
@@ -233,8 +231,7 @@ object DocsStreaming {
     * the heap note at production k.
     */
   def heavyHittersStream(spark: SparkSession, sfDir: String,
-      buckets: Int = 16, capacity: Int = 512): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8) {
+      buckets: Int = 16, capacity: Int = 512): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import graft.functions.TextFunctions.wsTokens

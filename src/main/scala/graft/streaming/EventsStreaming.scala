@@ -5,7 +5,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, TransformWithState}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types._
@@ -55,18 +58,90 @@ object EventsStreaming {
     * this one; callers keep their sinks and side tables in the same dir.
     * The one exception is a `DailyApp` tick, whose run dir is its
     * persistent base: there the resumed checkpoint is the point.
+    *
+    * The stream's scope is set here, from what the terminal observes, on
+    * `result`'s session from before `start()` until the query has
+    * terminated, then restored; every graft conf is parsed before the
+    * first set, so a malformed value throws without leaking an override.
+    *
+    *  - State partitions: [[statePartitions]] of the bytes under the
+    *    stream's file sources. A state store is created per shuffle
+    *    partition at query start, and 32 stores for a handful of groups
+    *    is pure fixed cost (store init and checkpoint IO dominated the
+    *    stream keys' time), but state must shard wider with data: a
+    *    100 M-key dedup in 8 RocksDB instances is 12.5 M keys per store,
+    *    all compaction. So the count grows with the input, capped by the
+    *    session's `spark.sql.shuffle.partitions` (`SPARK_GRAFT_SHUFFLE`
+    *    raises both for big-sf runs). `graft.streaming.statePartitions`
+    *    forces it, for specs and for resharding. Unlike batch shuffle
+    *    partitions this is a stateful choice: the checkpoint pins the
+    *    count at first run, and a restart keeps it whatever the input
+    *    has grown to, so a new count only reaches a fresh stream, as a
+    *    production resharding does.
+    *  - Provider: RocksDB, which keeps state off-heap and is the store a
+    *    100 TB deployment runs; `transformWithState` runs only on it.
+    *    Otherwise `graft.streaming.stateProvider=heap` selects the
+    *    HDFS-backed heap store, which keeps every store's contents as JVM
+    *    objects and dies first at scale; specs keep it as the reference.
+    *  - RocksDB changelog checkpointing, always on: a micro-batch commit
+    *    writes only that batch's changelog, and snapshots move to the
+    *    background maintenance thread, where without it every commit
+    *    uploads a full snapshot per state partition. Recovery replays the
+    *    changelogs onto the last snapshot; no result changes.
     */
   private[graft] def runAvailableNow(run: Path, result: DataFrame,
       mode: OutputMode = OutputMode.Append)(body: (DataFrame, Long) => Unit): Unit = {
-    val q = result.writeStream
-      .option("checkpointLocation", run.resolve("checkpoint").toString)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(body)
-      .start()
-    q.awaitTermination()
-    trailLog.add(Trail(run, q.recentProgress))
+    val spark = result.sparkSession
+    val plan = result.queryExecution.logical
+    val partitions = GraftConf.StatePartitions.get(spark).getOrElse(statePartitions(
+      sourceBytes(spark, plan), spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt))
+    val provider = GraftConf.StateProvider(spark) match {
+      case "heap" if plan.find(_.isInstanceOf[TransformWithState]).isEmpty => HeapProvider
+      case _ => RocksDbProvider
+    }
+    val scoped = Seq(
+      SQLConf.SHUFFLE_PARTITIONS.key -> partitions.toString,
+      SQLConf.STATE_STORE_PROVIDER_CLASS.key -> provider,
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    val old = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = result.writeStream
+        .option("checkpointLocation", run.resolve("checkpoint").toString)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch(body)
+        .start()
+      q.awaitTermination()
+      trailLog.add(Trail(run, q.recentProgress))
+    } finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
+
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val HeapProvider =
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+
+  /** Input bytes per state partition. At 1 MiB the sf0.1 stream keys run
+    * on 2 partitions, about a third faster than on 8, and sf0.01 on 1.
+    */
+  private val BytesPerStatePartition = 1L << 20
+
+  /** State partitions for `bytes` of stream input: one per started
+    * [[BytesPerStatePartition]], at least 1 and at most `cap`.
+    */
+  private[graft] def statePartitions(bytes: Long, cap: Int): Int = {
+    val n = bytes / BytesPerStatePartition + (if (bytes % BytesPerStatePartition > 0) 1 else 0)
+    math.max(1L, math.min(n, cap.toLong)).toInt
+  }
+
+  /** Bytes under the file-source paths of a stream's plan. */
+  private def sourceBytes(spark: SparkSession, plan: LogicalPlan): Long =
+    plan.collect { case r: StreamingRelation => r.dataSource.options.get("path") }
+      .flatten.distinct.map(Tables.fsFingerprint(spark, _)._2).sum
 
   /** Distributed streaming terminal with a parquet sink: run the query
     * through [[runAvailableNow]] and hand back the readback. Unlike a
@@ -94,7 +169,7 @@ object EventsStreaming {
   /** Raw events schema as stored (ns timestamps as long — see
     * Tables.events).
     */
-  private[streaming] val rawSchema = StructType(Seq(
+  private val rawSchema = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", LongType),
     StructField("user_id", LongType),
@@ -147,10 +222,18 @@ object EventsStreaming {
         "zz_eos2.parquet" -> eosSentinels(ev, ev.limit(1), 4, -2))
     }
 
-  private[streaming] def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
+  /** The events landing at `dir` as a stream: each file its own
+    * micro-batch (`maxFilesPerTrigger=1`, in list order), `ts` a TIMESTAMP.
+    */
+  private[streaming] def landingStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(rawSchema)
-      .parquet(stagedDir(spark, sfDir, withEos = false))
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dir)
       .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+
+  /** The plain events landing as a stream: one file, so one micro-batch. */
+  private[streaming] def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
+    landingStream(spark, stagedDir(spark, sfDir, withEos = false))
 
   /** Stage events split into `shards` files so `maxFilesPerTrigger=1`
     * yields that many micro-batches — the multi-ingest shape the rollup
@@ -178,22 +261,18 @@ object EventsStreaming {
     * production forms of anomalyZscore / retention read instead of raw
     * events.
     */
-  def dailyRollupMaintained(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark, 8) {
-      val run = Staging.runDir("graft_stream_rollup")
-      val tableDir = run.resolve("table").toString
-      val src = spark.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stagedShardedDir(spark, sfDir, shards = 3))
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      runAvailableNow(run, src)((batch, batchId) =>
-        upsertDailyPartials(batch, tableDir, batchId))
-      // the final rollup is a plain read of the MAINTAINED table
-      spark.read.parquet(tableDir)
-        .select(col("day").cast("string").as("day"), col("event_type"),
-          col("p_n").as("n"),
-          (col("p_cents").cast("double") / 100.0).as("total_value"))
-    }
+  def dailyRollupMaintained(spark: SparkSession, sfDir: String): DataFrame = {
+    val run = Staging.runDir("graft_stream_rollup")
+    val tableDir = run.resolve("table").toString
+    val src = landingStream(spark, stagedShardedDir(spark, sfDir, shards = 3))
+    runAvailableNow(run, src)((batch, batchId) =>
+      upsertDailyPartials(batch, tableDir, batchId))
+    // the final rollup is a plain read of the MAINTAINED table
+    spark.read.parquet(tableDir)
+      .select(col("day").cast("string").as("day"), col("event_type"),
+        col("p_n").as("n"),
+        (col("p_cents").cast("double") / 100.0).as("total_value"))
+  }
 
   /** One maintenance upsert: merge a batch's daily partials into the
     * partitioned table, rewriting ONLY the touched day partitions. A
@@ -242,72 +321,12 @@ object EventsStreaming {
     appliedMarker.createNewFile()
   }
 
-  /** Run `body` with a bounded shuffle-partition count: streaming state
-    * stores are created per shuffle partition at query start, and 32
-    * stores for a handful of groups is pure fixed cost (store init +
-    * checkpoint IO dominated the streaming queries' bench time). The
-    * confs are restored after the query has fully executed — batch
-    * queries plan at their own execution time, so they never see the
-    * override.
-    *
-    * Each query names its DESIGNED state-partition count `n` (the sf0.1
-    * shape, where 8 keeps per-partition state files small and the fixed
-    * per-partition provider overhead off the critical path). State must
-    * shard WIDER with data — a 100 M-key dedup in 8 RocksDB instances is
-    * 12.5 M keys per store, all compaction — so big-sf runs override it
-    * with `graft.streaming.statePartitions` (SPARK_GRAFT_STREAM_SHUFFLE).
-    * Unlike batch shuffle partitions this is a STATEFUL choice: the
-    * checkpoint pins it at first run, so the override only applies to
-    * fresh streams — exactly how a production resharding works.
-    *
-    * State store: RocksDB, unless `graft.streaming.stateProvider=heap`
-    * selects the HDFS-backed heap store that specs compare RocksDB
-    * against. Heap keeps every store's full contents as JVM objects and
-    * dies first at scale; RocksDB keeps state off-heap and is the
-    * provider a 100 TB deployment would run. `rocksDbRequired` is set by
-    * transformWithState callers: that operator runs only on RocksDB, so
-    * it ignores the setting.
-    *
-    * RocksDB changelog checkpointing follows
-    * `graft.streaming.rocksdbChangelog` (default on): without it every
-    * micro-batch commit uploads a full RocksDB snapshot per state-store
-    * partition; with it the commit writes only that batch's changelog
-    * and snapshots move to the background maintenance thread. It is
-    * restart-compatible (recovery replays changelogs onto the last
-    * snapshot) and changes no result, only per-commit checkpoint bytes.
-    */
-  private[streaming] val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private[streaming] val HeapProvider =
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-
-  private[streaming] def withStreamPartitions[A](spark: SparkSession, n: Int,
-      rocksDbRequired: Boolean = false)(body: => A): A = {
-    // every graft conf is parsed before the first set, so a malformed
-    // value throws without leaking an override into the session
-    val selected = GraftConf.StateProvider(spark)
-    val provider =
-      if (rocksDbRequired || selected == "rocksdb") RocksDbProvider else HeapProvider
-    val scoped = Seq(
-      "spark.sql.shuffle.partitions" ->
-        GraftConf.StatePartitions.get(spark).getOrElse(n).toString,
-      "spark.sql.streaming.stateStore.providerClass" -> provider,
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        GraftConf.RocksDbChangelog(spark).toString)
-    val old = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Streaming daily window aggregation — identical result contract to
     * the batch `Analytics.eventsDaily`; complete-mode foreachBatch
     * parquet terminal (full result overwritten per trigger). In
     * production: append mode + watermark (see `dailyCountsAppend`).
     */
-  def dailyCounts(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
+  def dailyCounts(spark: SparkSession, sfDir: String): DataFrame = {
     val agg = eventsStream(spark, sfDir)
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -327,7 +346,7 @@ object EventsStreaming {
     * exact count and the tolerance verdict — the estimate itself is
     * engine sketch state, kept out of the oracle like the batch audit.
     */
-  def dailyApproxDistinct(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
+  def dailyApproxDistinct(spark: SparkSession, sfDir: String): DataFrame = {
     val agg = eventsStream(spark, sfDir)
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(approx_count_distinct(col("user_id"), 0.05).as("n_approx"))
@@ -358,23 +377,19 @@ object EventsStreaming {
     * answer. At scale this is how you keep live percentile dashboards
     * without re-scanning history per refresh.
     */
-  def streamingQuantileSketch(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark, 8) {
-      val srcDir = stagedShardedDir(spark, sfDir, shards = 3)
-      val cents = (col("value").cast("decimal(12,2)") * 100).cast("long")
-      val agg = spark.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-        .select(col("event_type"), cents.as("c"))
-        .groupBy(col("event_type"))
-        .agg(graft.functions.QuantileSketch.quantile_sketch(col("c")).as("est"))
-        .select(col("event_type"), col("est")(0).as("e25"),
-          col("est")(1).as("e50"), col("est")(2).as("e75"))
-      val streamed = runToParquet(spark, agg, "graft_stream_quantile", OutputMode.Complete)
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_type"), cents.as("c"))
-      graft.operators.Analytics.quantileRankAudit(ev, streamed)
-    }
+  def streamingQuantileSketch(spark: SparkSession, sfDir: String): DataFrame = {
+    val cents = (col("value").cast("decimal(12,2)") * 100).cast("long")
+    val agg = landingStream(spark, stagedShardedDir(spark, sfDir, shards = 3))
+      .select(col("event_type"), cents.as("c"))
+      .groupBy(col("event_type"))
+      .agg(graft.functions.QuantileSketch.quantile_sketch(col("c")).as("est"))
+      .select(col("event_type"), col("est")(0).as("e25"),
+        col("est")(1).as("e50"), col("est")(2).as("e75"))
+    val streamed = runToParquet(spark, agg, "graft_stream_quantile", OutputMode.Complete)
+    val ev = Tables.events(spark, sfDir)
+      .select(col("event_type"), cents.as("c"))
+    graft.operators.Analytics.quantileRankAudit(ev, streamed)
+  }
 
   /** The production-shaped form of the daily window: APPEND mode with a
     * one-hour watermark — each window row is emitted exactly once, when
@@ -386,12 +401,8 @@ object EventsStreaming {
     * aggregation (the filter sits after watermark assignment, so they
     * still advance it).
     */
-  def dailyCountsAppend(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val dir = stagedDir(spark, sfDir, withEos = true)
-    val agg = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+  def dailyCountsAppend(spark: SparkSession, sfDir: String): DataFrame = {
+    val agg = landingStream(spark, stagedDir(spark, sfDir, withEos = true))
       .withWatermark("ts", "1 hour")
       // The disjunct referencing ts is vacuous (ts is never null) but
       // load-bearing: predicates that mention the event-time column are
@@ -417,7 +428,7 @@ object EventsStreaming {
     * in SQL. The scale story is the state bound: without the time
     * constraint the join would buffer both streams forever.
     */
-  def viewPurchaseJoin(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
+  def viewPurchaseJoin(spark: SparkSession, sfDir: String): DataFrame = {
     def side(t: String, idAs: String, tsAs: String): DataFrame =
       eventsStream(spark, sfDir)
         .filter(col("event_type") === t)
@@ -447,14 +458,12 @@ object EventsStreaming {
     * pipeline keeps poison records from stalling ingest while never
     * silently dropping them.
     */
-  def quarantineStream(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
+  def quarantineStream(spark: SparkSession, sfDir: String): DataFrame = {
     val run = Staging.runDir("graft_stream_dlq")
     val okDir = run.resolve("ok").toString
     val dlqDir = run.resolve("dlq").toString
     val propsSchema = StructType(Seq(StructField("k", IntegerType)))
-    val parsed = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stagedDir(spark, sfDir, withEos = false))
+    val parsed = eventsStream(spark, sfDir)
       .select(col("event_id"),
         when(col("event_id") % 7 === 0, substring(col("props"), 1, 4))
           .otherwise(col("props")).as("raw"))
@@ -486,12 +495,8 @@ object EventsStreaming {
     * sentinels (filtered past the watermark collector, as everywhere)
     * close the final open sessions.
     */
-  def sessionWindowStream(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val dir = stagedDir(spark, sfDir, withEos = true)
-    val agg = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+  def sessionWindowStream(spark: SparkSession, sfDir: String): DataFrame = {
+    val agg = landingStream(spark, stagedDir(spark, sfDir, withEos = true))
       .withWatermark("ts", "1 hour")
       .filter(col("event_type") =!= "eos" || col("ts").isNull)
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
@@ -514,14 +519,11 @@ object EventsStreaming {
     * the operator provably drops real cross-batch duplicates; the
     * oracle is the original duplicate-free table.
     */
-  def dedupWithinWatermark(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
+  def dedupWithinWatermark(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = eventsLanding(spark, sfDir, "dupsrc") { ev =>
       Seq("zz_dups.parquet" -> ev.filter(col("event_id") % 10 === 0))
     }
-    val deduped = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    val deduped = landingStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("event_type"))
@@ -553,12 +555,8 @@ object EventsStreaming {
     * intermediate landing table. Oracle: the batch distinct→window
     * aggregate over the duplicate-free table.
     */
-  def dedupThenWindow(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val dir = stagedDupEosDir(spark, sfDir)
-    val agg = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+  def dedupThenWindow(spark: SparkSession, sfDir: String): DataFrame = {
+    val agg = landingStream(spark, stagedDupEosDir(spark, sfDir))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       // vacuous ts disjunct: keep the sentinel filter ABOVE the
@@ -583,30 +581,8 @@ object EventsStreaming {
     * post-watermark filter with the vacuous event-time disjunct (see
     * dailyCountsAppend).
     */
-  def viewPurchaseLeftJoin(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
-    val dir = stagedDir(spark, sfDir, withEos = true)
-    def side(t: String, idAs: String, tsAs: String): DataFrame =
-      spark.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dir)
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        .select(col("user_id").as(s"${t}_user"), col("event_id").as(idAs),
-          col("ts").as(tsAs), col("event_type"))
-        .withWatermark(tsAs, "1 hour")
-        .filter(col("event_type") === t || col(tsAs).isNull)
-        .drop("event_type")
-    val views = side("view", "view_id", "view_ts")
-    val purchases = side("purchase", "purchase_id", "purchase_ts")
-    val joined = views.join(purchases,
-        col("view_user") === col("purchase_user")
-          && col("purchase_ts") >= col("view_ts")
-          && col("purchase_ts") <= col("view_ts") + expr("interval 1 hour"),
-        "leftOuter")
-      .select(col("view_user").as("user_id"), col("view_id"), col("purchase_id"),
-        (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts")))
-          .as("gap_us"))
-    runToParquet(spark, joined, "graft_stream_vpleft")
-  }
+  def viewPurchaseLeftJoin(spark: SparkSession, sfDir: String): DataFrame =
+    viewPurchaseOuterJoin(spark, sfDir, "leftOuter", "graft_stream_vpleft")
 
   /** FULL OUTER stream-stream interval join — both unmatched directions
     * at once: matched pairs emit like the inner join; a view with no
@@ -618,13 +594,18 @@ object EventsStreaming {
     * at 100 TB/day the store holds a two-hour band per side, never
     * history. Same EOS-sentinel flush discipline as the left join.
     */
-  def viewPurchaseFullJoin(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
+  def viewPurchaseFullJoin(spark: SparkSession, sfDir: String): DataFrame =
+    viewPurchaseOuterJoin(spark, sfDir, "fullOuter", "graft_stream_vpfull")
+
+  /** The `how` outer interval join of views and purchases over the EOS
+    * landing, run as `name`. `user_id` is the view's user, or the
+    * purchase's where no view matched (full join only).
+    */
+  private def viewPurchaseOuterJoin(spark: SparkSession, sfDir: String,
+      how: String, name: String): DataFrame = {
     val dir = stagedDir(spark, sfDir, withEos = true)
     def side(t: String, idAs: String, tsAs: String): DataFrame =
-      spark.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dir)
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      landingStream(spark, dir)
         .select(col("user_id").as(s"${t}_user"), col("event_id").as(idAs),
           col("ts").as(tsAs), col("event_type"))
         .withWatermark(tsAs, "1 hour")
@@ -636,13 +617,13 @@ object EventsStreaming {
         col("view_user") === col("purchase_user")
           && col("purchase_ts") >= col("view_ts")
           && col("purchase_ts") <= col("view_ts") + expr("interval 1 hour"),
-        "fullOuter")
+        how)
       .select(
         coalesce(col("view_user"), col("purchase_user")).as("user_id"),
         col("view_id"), col("purchase_id"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts")))
           .as("gap_us"))
-    runToParquet(spark, joined, "graft_stream_vpfull")
+    runToParquet(spark, joined, name)
   }
 
   /** Stream-static join: the event stream enriched with a BATCH-computed
@@ -653,7 +634,7 @@ object EventsStreaming {
     * joining a stream against reference data at scale (dims refresh by
     * restarting the query or via a slowly-refreshed broadcast).
     */
-  def cohortEnrichedCounts(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark, 8) {
+  def cohortEnrichedCounts(spark: SparkSession, sfDir: String): DataFrame = {
     val cohorts = graft.sources.Tables.events(spark, sfDir)
       .groupBy(col("user_id"))
       .agg(date_format(min(col("ts")), "yyyy-MM-dd").as("cohort"))
@@ -701,13 +682,10 @@ object EventsStreaming {
   /** The streaming plan over an already-staged source directory; each
     * file arrives as its own micro-batch (maxFilesPerTrigger=1).
     */
-  def sessionizeDir(spark: SparkSession, srcDir: String): DataFrame = withStreamPartitions(spark, 8) {
+  def sessionizeDir(spark: SparkSession, srcDir: String): DataFrame = {
     import spark.implicits._
 
-    val events: Dataset[Ev] = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    val events: Dataset[Ev] = landingStream(spark, srcDir)
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("ts_us"), col("value"))
       .as[Ev]

@@ -26,8 +26,7 @@ object StateInspect {
     * Scale: the state source reads one store shard per state partition
     * in parallel — same parallelism as the query that wrote it.
     */
-  def aggStateReadback(spark: SparkSession, sfDir: String): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8) {
+  def aggStateReadback(spark: SparkSession, sfDir: String): DataFrame = {
     // fresh run dir per call: a stale checkpoint from an earlier run
     // would make AvailableNow consider the source fully processed and
     // leave this run reading another run's state

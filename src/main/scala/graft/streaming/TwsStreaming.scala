@@ -81,8 +81,7 @@ object TwsStreaming {
     * MapState — same last-snapshot-wins readback as `runningTotals`,
     * contract = the batch two-key aggregate.
     */
-  def perTypeCounts(spark: SparkSession, sfDir: String): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
+  def perTypeCounts(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val typed = EventsStreaming.eventsStream(spark, sfDir)
       .select(col("user_id"), col("event_type"))
@@ -133,8 +132,7 @@ object TwsStreaming {
     * ListState; readback keeps the final (latest-batch) prefix, contract
     * = the batch rank-≤-k window.
     */
-  def firstTouches(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
+  def firstTouches(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
     import spark.implicits._
     val typed = EventsStreaming.eventsStream(spark, sfDir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
@@ -250,14 +248,9 @@ object TwsStreaming {
     * unlike the flatMapGroupsWithState form nothing user-written ever
     * sees a flush marker.
     */
-  def timerSessions(spark: SparkSession, sfDir: String): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
+  def timerSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val srcDir = stagedTimerSrc(spark, sfDir)
-    val src = spark.readStream.schema(EventsStreaming.rawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    val src = EventsStreaming.landingStream(spark, stagedTimerSrc(spark, sfDir))
       // NO eos filter before the watermark: a pushed-down filter would
       // drop the sentinels at the scan, below the EventTimeWatermark
       // node, and the watermark would never advance past the last real
@@ -281,8 +274,7 @@ object TwsStreaming {
     * operator mandates — per-user state lives off-heap and scales to
     * key cardinalities a heap HashMap cannot.
     */
-  def runningTotals(spark: SparkSession, sfDir: String): DataFrame =
-      EventsStreaming.withStreamPartitions(spark, 8, rocksDbRequired = true) {
+  def runningTotals(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val typed = EventsStreaming.eventsStream(spark, sfDir)
       .select(col("user_id"),

@@ -21,7 +21,6 @@ class GraftConfSpec extends SparkTestBase {
     (LayoutMinBytes, Some(64L << 20), Some("64m")),
     (PathsMaxEventsPerUser, Some(10000), Some("0")),
     (RfmWindowMaxEventRows, Some(2000000L), Some("2,000,000")),
-    (RocksDbChangelog, Some(true), Some("on")),
     (StatePartitions, None, Some("-3")),
     (StateProvider, Some("rocksdb"), Some("session")),
     (TfCheckpointMaxBytes, Some(256L << 20), Some("256MB")))
@@ -55,9 +54,8 @@ class GraftConfSpec extends SparkTestBase {
   }
 
   test("booleans read 1 and 0 as true and false") {
-    for (b <- Seq(CheckpointSkip, RocksDbChangelog);
-         (v, want) <- Seq("1" -> true, "0" -> false, "true" -> true, "false" -> false))
-      withConf(b.key, v)(assert(b(spark) === want, s"${b.key}=$v"))
+    for ((v, want) <- Seq("1" -> true, "0" -> false, "true" -> true, "false" -> false))
+      withConf(CheckpointSkip.key, v)(assert(CheckpointSkip(spark) === want, s"${CheckpointSkip.key}=$v"))
     // and the caller honors it: checkpoint.skip=1 makes truncation the identity
     val df = spark.range(3).toDF("n")
     withConf(CheckpointSkip.key, "1")(assert(Checkpoints.truncate(df) eq df))

@@ -31,16 +31,29 @@ class GraftSessionSpec extends SparkTestBase {
     assert(dflt("spark.master") === "local[32,3]")
     assert(dflt("spark.sql.shuffle.partitions") === "32")
     val env = GraftSession.fromEnv("t", Map("SPARK_GRAFT_CPUS" -> "8",
-      "SPARK_GRAFT_STREAM_SHUFFLE" -> "16", "SPARK_GRAFT_CKPT_LEVEL" -> "MEMORY_AND_DISK_SER"))
+      "SPARK_GRAFT_CKPT_LEVEL" -> "MEMORY_AND_DISK_SER"))
     assert(env("spark.master") === "local[8,3]")
     assert(env("spark.sql.shuffle.partitions") === "8")
-    assert(env(GraftConf.StatePartitions.key) === "16")
     assert(env(GraftConf.CheckpointLevel.key) === "MEMORY_AND_DISK_SER")
     assert(GraftSession.fromEnv("t", Map("SPARK_GRAFT_SHUFFLE" -> "64"))(
       "spark.sql.shuffle.partitions") === "64")
     val e = intercept[IllegalArgumentException](
       GraftSession.fromEnv("t", Map("SPARK_GRAFT_CPUS" -> "many")))
     assert(e.getMessage.contains("SPARK_GRAFT_CPUS"))
+  }
+
+  test("Bench writes bench_full.json only for the default run") {
+    assert(Bench.outFile(Map.empty) === "bench_full.json")
+    assert(Bench.outFile(Map("SPARK_GRAFT_CPUS" -> "32",
+      "SPARK_GRAFT_SF_DIR" -> sf("sf0.1"))) === "bench_full.json")
+    Seq("SPARK_GRAFT_CPUS" -> "8", "SPARK_GRAFT_SHUFFLE" -> "64",
+        "SPARK_GRAFT_CKPT_LEVEL" -> "MEMORY_AND_DISK_SER",
+        "SPARK_GRAFT_SF_DIR" -> sf("sf0.01"),
+        "SPARK_GRAFT_BENCH_ONLY" -> "q1_agg").foreach { kv =>
+      assert(Bench.outFile(Map(kv)) === "bench_probe.json", kv)
+    }
+    assert(Bench.outFile(Map("SPARK_GRAFT_CPUS" -> "8",
+      "SPARK_GRAFT_BENCH_OUT" -> "x.json")) === "x.json")
   }
 }
 

@@ -6,9 +6,8 @@ import scala.jdk.CollectionConverters._
 
 /** The state-store confs of transformWithState queries: the operator
   * always runs on RocksDB, whatever `graft.streaming.stateProvider` says,
-  * and `graft.streaming.rocksdbChangelog` is its one changelog switch —
-  * off means the state checkpoint holds snapshots and no `*.changelog`
-  * file.
+  * and always with changelog checkpointing, so its state checkpoint holds
+  * `*.changelog` files.
   */
 class TwsStateStoreSpec extends SparkTestBase {
 
@@ -26,11 +25,8 @@ class TwsStateStoreSpec extends SparkTestBase {
     finally walk.close()
   }
 
-  test("rocksdbChangelog=0 keeps changelog checkpointing off for transformWithState") {
-    assert(runTws()._2.nonEmpty, "default (on) wrote no changelog files")
-    val key = "graft.streaming.rocksdbChangelog"
-    val off = withConf(key, "0")(runTws()._2)
-    assert(off.isEmpty, s"changelog files written with $key=0: ${off.take(3).mkString(", ")}")
+  test("transformWithState checkpoints its state as RocksDB changelog files") {
+    assert(runTws()._2.nonEmpty, "no changelog files in the state checkpoint")
   }
 
   test("transformWithState runs on RocksDB under stateProvider=heap") {
