@@ -15,7 +15,12 @@ import org.apache.spark.sql.SparkSession
   *    lands on whichever query runs next;
   *  - a non-blocking context cleaner: hundreds of executions leave
   *    thousands of broadcast and RDD refs, and blocking cleanup storms
-  *    stall whichever multi-job query runs when GC triggers them.
+  *    stall whichever multi-job query runs when GC triggers them;
+  *  - parquet INT64 TIMESTAMP(NANOS) columns read as Long
+  *    (`nanosAsLong`): the events fixture has shipped `ts` both as ns,
+  *    which Spark's reader otherwise rejects, and as µs
+  *    (`Tables.eventsRawNanos` normalizes either). The entry touches no
+  *    other column type.
   */
 object GraftSession {
 
@@ -36,7 +41,8 @@ object GraftSession {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
       "spark.sql.codegen.cache.maxEntries" -> "2000",
-      "spark.cleaner.referenceTracking.blocking" -> "false")
+      "spark.cleaner.referenceTracking.blocking" -> "false",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** A local session of `cores` threads and as many shuffle partitions. */
   def local(app: String, cores: Int): Map[String, String] =

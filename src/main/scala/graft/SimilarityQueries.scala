@@ -496,7 +496,7 @@ object SimilarityQueries {
 
     // Candidate pairs carry the per-vector successor cap (rank within
     // bucket by the finer-signature subkey then vec_id, pair with the
-    // next ≤32) — mirrors Similarity.cappedBlockPairs, the
+    // next ≤32) — mirrors Dedup.cappedBlockPairs, the
     // mega-dup-family output guard with its similarity-locality order.
     // The cap join is the engine's EXPLODED-SLOT-KEY equi-join (sl:
     // each row emits rn+1..rn+32 target ranks), not a rank-range

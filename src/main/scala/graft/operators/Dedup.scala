@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftConf
 import graft.functions.TextFunctions._
@@ -36,6 +36,89 @@ object Dedup {
     */
   final class ScaleGateException(msg: String)
       extends IllegalStateException(msg)
+
+  /** Expected block occupancy: the one design number of the blocking
+    * rule shared by the near-dup pair generators here and in
+    * [[Similarity]]. [[blockWidth]] holds N / 2^width near it, and the
+    * successor cap of [[cappedBlockPairs]] defaults to it, so an ordinary
+    * block emits all of its pairs and only a mega block is trimmed.
+    */
+  private[graft] val Occupancy = 32
+
+  /** Corpus-adaptive block width in bits: max(floor, len(bin(N /
+    * [[Occupancy]]))), one more bit per corpus doubling, so expected block
+    * occupancy stays near [[Occupancy]] and intra-block pairs grow
+    * linearly with N. A fixed width saturates: blocks go quadratic (the
+    * round-6 sf1 run measured 50× simhash and 27× LSH time on 10× the
+    * data). The width is integer-only (binary-string length, never a
+    * float log2 whose last ulp can flip at a power of two), so the DuckDB
+    * oracles reproduce it verbatim.
+    */
+  private[graft] def blockWidth(floor: Int, n: Long): Int =
+    math.max(floor, java.lang.Long.toBinaryString(n / Occupancy).length)
+
+  /** Successor-capped pairs inside blocks: the guard that keeps pair
+    * output linear when a block is one mega dup-family. [[blockWidth]]
+    * holds EXPECTED occupancy near [[Occupancy]], but replicated corpora
+    * concentrate: a ~1000-replica family lands in ONE block whatever its
+    * width, and all-pairs inside it is C(1000,2) (the round-11 sf100
+    * probe sat 105 min in exactly that).
+    *
+    *  - Rank-successors: each block is ranked by `orderCols`, and every
+    *    row pairs only with its ≤ `maxSucc` rank-successors. That is
+    *    ≤ N·maxSucc pairs in total, all pairs of any block of
+    *    ≤ maxSucc + 1 rows, and a mega block stays CONNECTED through
+    *    the rank-adjacent chain, which is what components consume.
+    *  - Locality order: the order should be a similarity-locality key,
+    *    not the bare id, where a block can hold several interleaved
+    *    dup-families. Sorted by a finer signature first, each family
+    *    sits together, and a row's rank-successors are its
+    *    near-identical neighbours: the pairs a downstream score
+    *    threshold keeps, so a thresholded mega block stays connected
+    *    where bare id order would pair across families. The pair still
+    *    comes out in canonical orientation, smaller id first, each
+    *    side's `carried` columns swapped along with its id, whatever
+    *    the order.
+    *  - Slot keys: one row_number window over the block (one shuffle and
+    *    sort of N rows), then each row EXPLODES its successor slots and
+    *    equi-joins on (block, slot = rn). The rank range becomes the join
+    *    key, so the join materializes exactly the capped pairs, never
+    *    block² rows with a post-filter. Slots past the block's end are
+    *    filtered BEFORE the exchange: most blocks are far smaller than
+    *    the cap, and otherwise every row would ship `maxSucc` slots into
+    *    the join shuffle however small its block.
+    *
+    * Returns the block columns, `id_a` < `id_b`, and `<c>_a`/`<c>_b` for
+    * each carried column `c`. Callers keep their own names, distinct and
+    * scoring.
+    */
+  private[graft] def cappedBlockPairs(df: DataFrame, blockCols: Seq[String],
+      idCol: String, orderCols: Seq[String], carried: Seq[String],
+      maxSucc: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val block = blockCols.map(col)
+    val cols = idCol +: carried
+    val ranked = df
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(block: _*).orderBy(orderCols.map(col): _*)))
+      // block size, same exchange (no extra sort: unordered frame)
+      .withColumn("g", count(lit(1)).over(Window.partitionBy(block: _*)))
+      .select(block ++ (cols :+ "rn" :+ "g").map(col): _*)
+      .truncateLineage() // one ranking pass feeds both join sides
+    def side(s: String) = cols.map(c => col(c).as(s"${c}_$s"))
+    val left = ranked
+      .withColumn("slot", explode(sequence(col("rn") + 1, col("rn") + maxSucc)))
+      .filter(col("slot") <= col("g"))
+      .select(block ++ side("l") :+ col("slot"): _*)
+    val right = ranked.select(block ++ side("r") :+ col("rn").as("slot"): _*)
+    val swap = col(s"${idCol}_l") > col(s"${idCol}_r")
+    def pick(c: String, first: String, second: String) =
+      when(swap, col(s"${c}_$second")).otherwise(col(s"${c}_$first"))
+    left.join(right, blockCols :+ "slot")
+      .select(block ++ Seq(pick(idCol, "l", "r").as("id_a"),
+        pick(idCol, "r", "l").as("id_b")) ++ carried.flatMap(c => Seq(
+        pick(c, "l", "r").as(s"${c}_a"), pick(c, "r", "l").as(s"${c}_b"))): _*)
+  }
 
   /** I1 — exact dedup groups: canonical (minimum) doc_id per md5(text). */
   def exact(spark: SparkSession, sfDir: String): DataFrame =
@@ -84,44 +167,17 @@ object Dedup {
       .distinct()
   }
 
-  /** [[minhashPairs]] with the per-document SUCCESSOR CAP — the text
-    * twin of the embedding family's mega-dup-family guard
-    * ([[Similarity.cappedBlockPairs]]): rank each band bucket by doc_id
-    * and pair every document only with its ≤ `maxSucc` rank-successors,
-    * via exploded slot keys so the join materializes exactly the capped
-    * pairs (never bucket² rows with a post-filter). A pair survives if
-    * it is within the cap in ANY shared band. Ordinary ≲32-occupancy
-    * buckets emit all pairs unchanged; a replicated mega-family's
-    * emission drops from C(g,2) to g·maxSucc while staying CONNECTED
-    * through the rank-adjacent chain (what components consume). The
-    * uncapped [[minhashPairs]] remains the exact generator the graph
-    * family builds on through sf10.
+  /** [[minhashPairs]] with the successor cap of [[cappedBlockPairs]]
+    * over each (band_id, band_key) bucket, ranked by doc_id. Recall
+    * contract: a pair survives iff it is within the cap in ANY shared
+    * band. The uncapped [[minhashPairs]] remains the exact generator the
+    * graph family builds on through sf10.
     */
   def minhashPairsCapped(spark: SparkSession, sfDir: String,
-      maxSucc: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ranked = minhashBands(spark, sfDir)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("band_id"), col("band_key"))
-          .orderBy(col("doc_id"))))
-      // bucket size, same exchange (no extra sort: unordered frame)
-      .withColumn("g", count(lit(1)).over(
-        Window.partitionBy(col("band_id"), col("band_key"))))
-      .truncateLineage()
-    val left = ranked
-      .withColumn("slot",
-        explode(sequence(col("rn") + 1, col("rn") + maxSucc)))
-      // drop dangling slots (rank past the bucket end) BEFORE the
-      // exchange — otherwise every posting ships maxSucc rows into the
-      // join shuffle no matter how small its bucket is
-      .filter(col("slot") <= col("g"))
-      .select(col("band_id"), col("band_key"),
-        col("doc_id").as("doc_a"), col("slot"))
-    val right = ranked.select(col("band_id"), col("band_key"),
-      col("doc_id").as("doc_b"), col("rn").as("slot"))
-    left.join(right, Seq("band_id", "band_key", "slot"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-  }
+      maxSucc: Int = Occupancy): DataFrame =
+    cappedBlockPairs(minhashBands(spark, sfDir), Seq("band_id", "band_key"),
+        "doc_id", Seq("doc_id"), Nil, maxSucc)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")).distinct()
 
   /** I2c — simhash: 64-bit signature string + 16-bit prefix bucket.
     * Near-dups differ in O(1) bits; bucketing the prefix (or rotations,
@@ -133,84 +189,59 @@ object Dedup {
         graft.functions.HashExpressions.simhash64(col("text")).as("simhash"))
       .withColumn("bucket16", substring(col("simhash"), 1, 16))
 
-  /** Simhash candidate pairs: same-prefix blocking + exact Hamming
-    * distance on the 64-bit signatures. The prefix WIDTH is
-    * corpus-adaptive — one more bit per corpus doubling, holding
-    * expected block occupancy ≈32 so intra-block pairs grow linearly
-    * with N (a fixed 8-bit prefix saturates: the round-6 sf1 run
-    * measured 50× on 10× the docs as blocks went quadratic). The
-    * integer-only width formula (binary-string length of N/32, floor 8)
-    * is reproduced verbatim by the DuckDB oracle. Near-dups differ in
-    * O(1) bits, so they still collide on the prefix with high
-    * probability; at extreme scale the standard complement is blocking
-    * on several rotations of the signature so any ≤k-bit difference
-    * collides in at least one block — the rotation count is a recall
-    * knob orthogonal to the width scaling here. The Hamming computation
-    * runs only on block collisions, never all-pairs.
+  /** Simhash blocks: `bucket` is the first [[blockWidth]] (floor 8) bits
+    * of the 64-bit signature. Near-dups differ in O(1) bits, so they
+    * still collide on the prefix with high probability; at extreme scale
+    * the standard complement is blocking on several rotations of the
+    * signature so any ≤k-bit difference collides in at least one block,
+    * a recall knob orthogonal to the width.
+    */
+  private def simhashBlocks(spark: SparkSession, sfDir: String): DataFrame = {
+    val width = blockWidth(8, Tables.documents(spark, sfDir).count())
+    simhash(spark, sfDir)
+      .select(col("doc_id"), col("simhash"),
+        substring(col("simhash"), 1, width).as("bucket"))
+  }
+
+  /** Hamming distance of two 64-char binary signatures via 8 chunk-wise
+    * popcounts (parse 8 binary chars → int, xor, bit_count): a 24-node
+    * codegen-friendly expression. The per-character form (64 chained
+    * substring compares) is a 128-deep tree that falls out of
+    * whole-stage codegen and ran ~10× slower.
+    */
+  private def hamming(a: Column, b: Column): Column = {
+    def chunk(s: Column, c: Int) = conv(substring(s, c * 8 + 1, 8), 2, 10).cast("long")
+    (0 until 8).map(c => bit_count(chunk(a, c).bitwiseXOR(chunk(b, c))))
+      .reduce(_ + _).cast("int")
+  }
+
+  /** Simhash candidate pairs: all pairs of each [[simhashBlocks]] block,
+    * with the exact Hamming distance on the 64-bit signatures. The
+    * Hamming computation runs only on block collisions, never all-pairs.
     */
   def simhashPairs(spark: SparkSession, sfDir: String, maxHamming: Int = 8): DataFrame = {
-    val nDocs = Tables.documents(spark, sfDir).count()
-    val prefixBits =
-      math.max(8, java.lang.Long.toBinaryString(nDocs / 32).length)
-    val s = simhash(spark, sfDir)
-      .select(col("doc_id"), col("simhash"),
-        substring(col("simhash"), 1, prefixBits).as("bucket8"))
-      .truncateLineage()
-    // Hamming via 8 chunk-wise popcounts (parse 8 binary chars → int,
-    // xor, bit_count) — a 24-node codegen-friendly expression; the
-    // per-character form (64 chained substring compares) is a 128-deep
-    // tree that falls out of whole-stage codegen and ran ~10× slower.
-    val ham = (0 until 8).map { c =>
-      bit_count(
-        conv(substring(col("a.simhash"), c * 8 + 1, 8), 2, 10).cast("long")
-          .bitwiseXOR(
-            conv(substring(col("b.simhash"), c * 8 + 1, 8), 2, 10).cast("long")))
-    }.reduce(_ + _)
+    val s = simhashBlocks(spark, sfDir).truncateLineage()
     s.as("a").join(s.as("b"),
-        col("a.bucket8") === col("b.bucket8")
+        col("a.bucket") === col("b.bucket")
           && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        ham.cast("int").as("hamming"))
+        hamming(col("a.simhash"), col("b.simhash")).as("hamming"))
       .withColumn("near_dup", col("hamming") <= maxHamming)
   }
 
-  /** [[simhashPairs]] with the per-document successor cap over the
-    * adaptive prefix blocks — same guard, same contract: exact Hamming
-    * on every emitted pair, emission bounded at N·maxSucc, mega blocks
-    * trimmed to their rank-adjacent band (near-identical replicas are
-    * rank-neighbors' neighbors, so dup detection keeps its signal).
+  /** [[simhashPairs]] with the successor cap of [[cappedBlockPairs]],
+    * ranked by doc_id. Recall contract: exact Hamming on every emitted
+    * pair; a mega block keeps only its rank-adjacent band (near-identical
+    * replicas are rank-neighbours' neighbours, so dup detection keeps its
+    * signal).
     */
   def simhashPairsCapped(spark: SparkSession, sfDir: String,
-      maxHamming: Int = 8, maxSucc: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nDocs = Tables.documents(spark, sfDir).count()
-    val prefixBits =
-      math.max(8, java.lang.Long.toBinaryString(nDocs / 32).length)
-    val ranked = simhash(spark, sfDir)
-      .select(col("doc_id"), col("simhash"),
-        substring(col("simhash"), 1, prefixBits).as("bucket"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("bucket")).orderBy(col("doc_id"))))
-      .withColumn("g", count(lit(1)).over(Window.partitionBy(col("bucket"))))
-      .truncateLineage()
-    val left = ranked
-      .withColumn("slot",
-        explode(sequence(col("rn") + 1, col("rn") + maxSucc)))
-      .filter(col("slot") <= col("g")) // no dangling slots in the shuffle
-      .select(col("bucket"), col("doc_id").as("doc_a"),
-        col("simhash").as("sim_a"), col("slot"))
-    val right = ranked.select(col("bucket"), col("doc_id").as("doc_b"),
-      col("simhash").as("sim_b"), col("rn").as("slot"))
-    val ham = (0 until 8).map { c =>
-      bit_count(
-        conv(substring(col("sim_a"), c * 8 + 1, 8), 2, 10).cast("long")
-          .bitwiseXOR(
-            conv(substring(col("sim_b"), c * 8 + 1, 8), 2, 10).cast("long")))
-    }.reduce(_ + _)
-    left.join(right, Seq("bucket", "slot"))
-      .select(col("doc_a"), col("doc_b"), ham.cast("int").as("hamming"))
+      maxHamming: Int = 8, maxSucc: Int = Occupancy): DataFrame =
+    cappedBlockPairs(simhashBlocks(spark, sfDir), Seq("bucket"), "doc_id",
+        Seq("doc_id"), Seq("simhash"), maxSucc)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+        hamming(col("simhash_a"), col("simhash_b")).as("hamming"))
       .withColumn("near_dup", col("hamming") <= maxHamming)
-  }
 
   /** The verification stage of LSH dedup: candidate pairs from the
     * minhash buckets get exact checks — Levenshtein edit distance and
@@ -931,18 +962,13 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"))
   }
 
-  /** [[jaccardPrefix]] with the per-posting SUCCESSOR CAP — the 100 TB
-    * form of the prefix-filter join, completing the capped/banded
-    * treatment of the postings generators (the sf100 ledger measured
-    * the uncapped form at 29.6× for 10× data — the Σdf² candidate
-    * blowup concentrated in replicated prefix tokens). Each
-    * (source, shingle) prefix-posting list is ranked by doc_id and
-    * every document pairs only with its ≤ `maxSucc` rank-successors,
-    * via exploded slot keys so the join materializes exactly the capped
-    * pairs (the [[minhashPairsCapped]] recipe — never bucket² rows with
-    * a post-filter). Candidate volume is bounded by
-    * |prefix postings|·maxSucc — linear in documents at fixed shingle
-    * density.
+  /** [[jaccardPrefix]] with the successor cap of [[cappedBlockPairs]]
+    * over each (source, shingle) prefix-posting list, ranked by doc_id:
+    * the 100 TB form of the prefix-filter join (the sf100 ledger measured
+    * the uncapped form at 29.6× for 10× data — the Σdf² candidate blowup
+    * concentrated in replicated prefix tokens). Candidate volume is
+    * bounded by |prefix postings|·maxSucc — linear in documents at fixed
+    * shingle density.
     *
     * Recall contract (restated by the oracle, which mirrors the capped
     * generator rather than the brute-force join): a qualifying pair is
@@ -956,29 +982,11 @@ object Dedup {
     * trimmed tail of mega-list recall.
     */
   def jaccardPrefixCapped(spark: SparkSession, sfDir: String,
-      maxSucc: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      maxSucc: Int = Occupancy): DataFrame = {
     val (docsArr, prefix) = prefixIndex(spark, sfDir)
-    val ranked = prefix
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("source"), col("fp"))
-          .orderBy(col("doc_id"))))
-      .withColumn("g", count(lit(1)).over(
-        Window.partitionBy(col("source"), col("fp"))))
-      .truncateLineage() // one ranking pass feeds both join sides
-    val left = ranked
-      .withColumn("slot",
-        explode(sequence(col("rn") + 1, col("rn") + maxSucc)))
-      // posting lists are df-ascending-rare: almost every list is far
-      // shorter than the cap, so dropping dangling slots here shrinks
-      // the join shuffle by ~maxSucc×
-      .filter(col("slot") <= col("g"))
-      .select(col("source"), col("fp"),
-        col("doc_id").as("doc_a"), col("slot"))
-    val right = ranked.select(col("source"), col("fp"),
-      col("doc_id").as("doc_b"), col("rn").as("slot"))
-    val cand = left.join(right, Seq("source", "fp", "slot"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    val cand = cappedBlockPairs(prefix, Seq("source", "fp"), "doc_id",
+        Seq("doc_id"), Nil, maxSucc)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")).distinct()
     scorePrefixCandidates(cand, docsArr)
   }
 

@@ -611,23 +611,14 @@ object Formats {
       .filter(col("day") =!= badDay || col("event_type") =!= "purchase")
       .write.mode("overwrite").partitionBy("day").parquet(dir)
 
-  /** Phase 2: the repair — rewrite ONLY the bad day's partition. */
+  /** Phase 2: the repair — rewrite ONLY the bad day's partition (a
+    * per-write dynamic overwrite; the session's mode is left alone).
+    */
   private[graft] def backfillRepair(spark: SparkSession, sfDir: String,
-      dir: String, badDay: String): Unit = {
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      eventsByDay(spark, sfDir).filter(col("day") === badDay)
-        .write.mode("overwrite").partitionBy("day").parquet(dir)
-    } finally {
-      prior match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
+      dir: String, badDay: String): Unit =
+    eventsByDay(spark, sfDir).filter(col("day") === badDay)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").parquet(dir)
 
   def backfillPartition(spark: SparkSession, sfDir: String, dir: String): DataFrame = {
     val badDay = backfillBadDay(spark, sfDir)

@@ -200,117 +200,54 @@ object Similarity {
         round(col("raw_score"), 6).as("score"))
   }
 
-  /** Corpus-adaptive hyperplane count: one more plane every time the
-    * corpus doubles, holding expected bucket occupancy ≈32 so candidate
-    * pairs grow LINEARLY with N. A FIXED plane count is the classic LSH
-    * scale trap — bucket occupancy grows with N and intra-bucket pairs
-    * with N² (the round-6 sf1 run measured exactly that: 27× on 10× the
-    * vectors). Integer-only derivation (binary-string length, never
-    * float log2 whose last ulp can flip at powers of two) so the DuckDB
-    * oracle computes the identical count: P = max(4, len(bin(N/32))).
+  /** Corpus-adaptive hyperplane count: [[Dedup.blockWidth]] with a floor
+    * of 4 planes, so bucket occupancy stays near [[Dedup.Occupancy]] and
+    * candidate pairs grow linearly with N. The DuckDB oracle computes the
+    * identical count: P = max(4, len(bin(N/32))).
     */
-  private[graft] def adaptivePlanes(n: Long): Int =
-    math.max(4, java.lang.Long.toBinaryString(n / 32).length)
+  private[graft] def adaptivePlanes(n: Long): Int = Dedup.blockWidth(4, n)
 
-  /** Per-vector successor cap over LSH blocks — the guard that keeps
-    * PAIR OUTPUT linear when a block is one mega dup-family.
-    * [[adaptivePlanes]] holds EXPECTED occupancy ≈32, but replicated
-    * corpora concentrate: a ~1000-replica family lands in ONE bucket
-    * regardless of plane count, and all-pairs inside it is C(1000,2) —
-    * the round-11 sf100 probe sat 105 min in exactly that. The cap:
-    * rank each block by `orderCols` and pair every vector only with its
-    * `maxSucc` rank-successors — ≤ N·maxSucc pairs total, all-pairs
-    * preserved for blocks of ≤ maxSucc+1 members (the designed
-    * occupancy).
-    *
-    * The rank order is a SIMILARITY-LOCALITY key, not bare vec_id: the
-    * callers order by 8 finer hyperplane sign bits (`subkey` — the
-    * block key's own signature extended) before the vec_id tie-break,
-    * so a mega block holding several interleaved dup-families is sorted
-    * family-by-family and each vector's rank-successors are its
-    * near-identical neighbors — the pairs the downstream score
-    * threshold KEEPS. (Bare vec_id order made cross-family successor
-    * pairs possible, which the threshold would drop; the emitted graph
-    * is connected through the rank-adjacent chain PRE-threshold by
-    * construction, and the locality order is what keeps it connected
-    * post-threshold in the replicated-corpus case.)
-    *
-    * Plan shape: one row_number window over the block key (one shuffle
-    * + sort of N rows — linear), then each vector EXPLODES its maxSucc
-    * successor SLOTS and equi-joins (block, slot = rn). The range
-    * predicate becomes the join key itself, so the join materializes
-    * exactly the capped pairs — never g² rows with a post-filter.
+  /** Successor-capped pairs of LSH blocks under [[adaptivePlanes]]
+    * hyperplanes, each side with its embedding. `bucket` (the signs under
+    * the first `planes` hyperplanes) blocks; the locality order of
+    * [[Dedup.cappedBlockPairs]] is `subkey` (the signs under 8 more, so
+    * its last 8 bits are what vary inside a block), then vec_id.
+    * Near-identical replicas agree on the extra bits with the same
+    * probability they agree on the block bits, so families sort
+    * adjacently.
     */
-  private def cappedBlockPairs(b: DataFrame, blockCols: Seq[String],
-      maxSucc: Int, orderCols: Seq[String] = Seq("vec_id")): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ranked = b
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(blockCols.map(col): _*)
-          .orderBy(orderCols.map(col): _*)))
-      .withColumn("g", count(lit(1)).over(
-        Window.partitionBy(blockCols.map(col): _*)))
-      .truncateLineage() // one ranking pass feeds both join sides
-    val left = ranked
-      .withColumn("slot", explode(sequence(col("rn") + 1, col("rn") + maxSucc)))
-      .filter(col("slot") <= col("g")) // no dangling slots in the shuffle
-      .select(blockCols.map(col) ++ Seq(col("vec_id").as("vec_a"),
-        col("embedding").as("emb_a"), col("slot")): _*)
-    val right = ranked.select(blockCols.map(col) ++ Seq(
-      col("vec_id").as("vec_b"), col("embedding").as("emb_b"),
-      col("rn").as("slot")): _*)
-    // canonical orientation (vec_a < vec_b): under the locality order a
-    // rank-successor may carry a SMALLER vec_id, and consumers key
-    // unordered pairs by the sorted id pair
-    val swap = col("vec_a") > col("vec_b")
-    left.join(right, blockCols :+ "slot").drop("slot")
-      .select(blockCols.map(col) ++ Seq(
-        when(swap, col("vec_b")).otherwise(col("vec_a")).as("va"),
-        when(swap, col("vec_a")).otherwise(col("vec_b")).as("vb"),
-        when(swap, col("emb_b")).otherwise(col("emb_a")).as("ea"),
-        when(swap, col("emb_a")).otherwise(col("emb_b")).as("eb")): _*)
-      .withColumnRenamed("va", "vec_a").withColumnRenamed("vb", "vec_b")
-      .withColumnRenamed("ea", "emb_a").withColumnRenamed("eb", "emb_b")
-  }
-
-  /** Coarse block key + the finer locality key [[cappedBlockPairs]]
-    * orders by: signs under `planes` + 8 hyperplanes, split so `bucket`
-    * (first `planes` bits) blocks and `subkey` (the full string — its
-    * last 8 bits are what vary inside a block) orders. Near-identical
-    * replicas agree on the extra bits with the same probability they
-    * agree on the block bits, so families sort adjacently.
-    */
-  private def bucketsWithSubkey(emb: DataFrame, planes: Int): DataFrame =
-    lshBucketsFrom(emb, planes + 8)
+  private def cappedEmbeddingPairs(spark: SparkSession, sfDir: String,
+      blockCols: Seq[String], maxSucc: Int): DataFrame = {
+    val planes = adaptivePlanes(Tables.embeddings(spark, sfDir).count())
+    val blocks = lshBucketsFrom(Tables.embeddings(spark, sfDir), planes + 8)
       .withColumnRenamed("bucket", "subkey")
       .withColumn("bucket", substring(col("subkey"), 1, planes))
+    Dedup.cappedBlockPairs(blocks, blockCols, "vec_id",
+        Seq("subkey", "vec_id"), Seq("embedding"), maxSucc)
+      .withColumnRenamed("id_a", "vec_a").withColumnRenamed("id_b", "vec_b")
+  }
 
   /** Embedding near-dup via LSH blocking — the scale path: candidate
     * pairs come from sign-bucket collisions under [[adaptivePlanes]]
-    * hyperplanes (bucket count tracks corpus size, occupancy stays ≈32,
-    * candidate volume stays linear in N), then exact cosine on
-    * candidates only. Pair emission is bounded by the per-vector
-    * successor cap ([[cappedBlockPairs]], default 32 = the designed
+    * hyperplanes (bucket count tracks corpus size, so candidate volume
+    * stays linear in N), then exact cosine on candidates only. Recall
+    * contract: every pair within the successor cap of its bucket's
+    * locality order, with its score; the default cap is the designed
     * occupancy, so ordinary buckets still emit all pairs and only mega
-    * dup-families are trimmed to their linear successor band);
-    * [[pairBudget]] accounts for exactly what the cap dropped. Output
-    * keeps every capped pair with its score; a dedup pipeline
-    * thresholds downstream. More planes trade recall for cost exactly
-    * like any LSH family; the minhash band construction is the
+    * dup-families are trimmed to their linear successor band.
+    * [[pairBudget]] accounts for exactly what the cap dropped. A dedup
+    * pipeline thresholds downstream. More planes trade recall for cost
+    * exactly like any LSH family; the minhash band construction is the
     * recall-tunable alternative when that knob matters.
     */
   def nearDupLsh(spark: SparkSession, sfDir: String,
-      maxSucc: Int = 32): DataFrame = {
-    val planes = adaptivePlanes(Tables.embeddings(spark, sfDir).count())
-    cappedBlockPairs(
-        bucketsWithSubkey(Tables.embeddings(spark, sfDir), planes),
-        Seq("bucket"), maxSucc, Seq("subkey", "vec_id"))
+      maxSucc: Int = Dedup.Occupancy): DataFrame =
+    cappedEmbeddingPairs(spark, sfDir, Seq("bucket"), maxSucc)
       .select(col("bucket"), col("vec_a"), col("vec_b"),
         // pair SCORING (vs retrieval ranking) uses the quantized-integer
         // cosine: exact long accumulation, engine-portable bit-for-bit
         round(graft.functions.VectorExpressions.quantized_cosine(
-          col("emb_a"), col("emb_b")), 6).as("score"))
-  }
+          col("embedding_a"), col("embedding_b")), 6).as("score"))
 
   /** Dropped-pair accounting for the successor cap: per-corpus totals of
     * bucket count, mega buckets (those the cap trims), full all-pairs
@@ -321,7 +258,7 @@ object Similarity {
     * bucket aggregate, never a pair materialization.
     */
   def pairBudget(spark: SparkSession, sfDir: String,
-      maxSucc: Int = 32): DataFrame = {
+      maxSucc: Int = Dedup.Occupancy): DataFrame = {
     val planes = adaptivePlanes(Tables.embeddings(spark, sfDir).count())
     val m = maxSucc.toLong
     val tri = m * (m + 1) / 2 // Σ 1..m, the capped tail's triangle
@@ -365,29 +302,23 @@ object Similarity {
     * per block, while the bucket key divides every block by ~2^planes at
     * any scale. Candidates that are true near-dups share a bucket with
     * high probability (sign-LSH), so the per-label winner is preserved
-    * where it matters; codegen'd cosine + one window rank on top.
+    * where it matters; codegen'd cosine + one struct-max aggregate on top.
     */
-  def nearestPairPerLabel(spark: SparkSession, sfDir: String,
-      maxSucc: Int = 32): DataFrame = {
+  def nearestPairPerLabel(spark: SparkSession, sfDir: String): DataFrame = {
     // Adaptive plane count (not the fixed 4-plane default): with fixed
     // planes, bucket occupancy grows with N and intra-bucket pairs with
     // N²/2^planes — the round-10 ratio audit measured 28.8× at 10× data.
-    // adaptivePlanes holds EXPECTED occupancy ≈32; replicated mega-
-    // families still concentrate in one (label, bucket) block, so the
-    // successor cap bounds scored pairs at N·maxSucc (the sf100 killer).
     // Contract: the argmax ranges over the capped candidate set — the
     // subkey locality order sorts a mega dup-family's near-identical
     // members adjacently, so the rank-successor candidates are exactly
     // where the per-label winner lives.
-    val planes = adaptivePlanes(Tables.embeddings(spark, sfDir).count())
-    val pairs = cappedBlockPairs(
-        bucketsWithSubkey(Tables.embeddings(spark, sfDir), planes),
-        Seq("label", "bucket"), maxSucc, Seq("subkey", "vec_id"))
+    val pairs = cappedEmbeddingPairs(spark, sfDir, Seq("label", "bucket"),
+        Dedup.Occupancy)
       .select(col("label"), col("vec_a"), col("vec_b"),
         // quantized-integer cosine: the per-label ARGMAX must not hinge
         // on a last-ulp double wobble between engines
         graft.functions.VectorExpressions.quantized_cosine(
-          col("emb_a"), col("emb_b")).as("raw_score"))
+          col("embedding_a"), col("embedding_b")).as("raw_score"))
     // Per-label ARGMAX as a MAX over an ordering struct, NOT a
     // row_number window: the window shape shuffles every candidate pair
     // into |labels| partitions and SORTS each one whole (a handful of

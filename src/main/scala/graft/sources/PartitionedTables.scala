@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftConf, Staging}
@@ -59,13 +57,6 @@ object PartitionedTables {
     */
   private val MaxRecordsPerFile = 4L * 1000 * 1000
 
-  private def baseBytes(spark: SparkSession, sfDir: String,
-      table: String): Long = {
-    val p = new Path(s"$sfDir/$table.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-  }
-
   /** Stage `df` partitioned by `partCol` through [[graft.Staging]], keyed
     * on the base table; returns the read-back DataFrame (partition column
     * appears as a string column). `splitKey` spreads a single partition
@@ -86,7 +77,9 @@ object PartitionedTables {
   private def routed(spark: SparkSession, sfDir: String, table: String,
       name: String, partCol: String, partExpr: Column, splitKey: Column,
       flat: => DataFrame): DataFrame = {
-    if (baseBytes(spark, sfDir, table) >= GraftConf.LayoutMinBytes(spark))
+    // no missing-table case: each caller's flat form reads the same table
+    if (Tables.fsFingerprint(spark, s"$sfDir/$table.parquet")._2 >=
+        GraftConf.LayoutMinBytes(spark))
       staged(spark, sfDir, table, name, partCol, splitKey,
         flat.withColumn(partCol, partExpr))
     else flat.withColumn(partCol, partExpr)

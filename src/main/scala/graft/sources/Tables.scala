@@ -135,7 +135,8 @@ object Tables {
     * The driver's fixture has shipped two physical encodings across
     * rounds: INT64(TIMESTAMP(NANOS)) — which Spark's vectorized reader
     * rejects outright (PARQUET_TYPE_ILLEGAL) unless read as Long via
-    * `nanosAsLong` — and plain timestamp[us], which Spark reads as
+    * `nanosAsLong`, part of every [[graft.GraftSession]]'s policy — and
+    * plain timestamp[us], which Spark reads as
     * TIMESTAMP_NTZ. Both normalize here by inspecting the footer schema,
     * so every downstream consumer is encoding-agnostic. All arithmetic
     * stays in Long (a double division would lose precision above 2^53);
@@ -143,7 +144,6 @@ object Tables {
     * the same file to the microsecond.
     */
   def eventsRawNanos(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, sfDir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => raw

@@ -103,7 +103,10 @@ object EventsStreaming {
       SQLConf.SHUFFLE_PARTITIONS.key -> partitions.toString,
       SQLConf.STATE_STORE_PROVIDER_CLASS.key -> provider,
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    val old = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
+    // the explicitly set values only: `getOption` falls back to a key's
+    // default, and restoring that would leave the default set explicitly
+    val set = spark.conf.getAll
+    val old = scoped.map { case (k, _) => k -> set.get(k) }
     scoped.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val q = result.writeStream

@@ -75,8 +75,7 @@ object ScaleUp {
       java.nio.file.Files.createDirectories(root)
       java.nio.file.Files.writeString(startTag, tag)
     }
-    val spark = graft.GraftSession.start(graft.GraftSession.local("graft-scaleup", 16) +
-      ("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
+    val spark = graft.GraftSession.start(graft.GraftSession.local("graft-scaleup", 16))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")

@@ -126,13 +126,26 @@ class AnalyticsSpec extends SparkTestBase {
 
   test("q_sink_partitioned leaves the session conf alone, so " +
       "q_backfill_partition's day partition still reads as DATE") {
-    val inference = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val before = spark.conf.getOption(inference)
+    val before = spark.conf.getAll
     assert(canon(SparkEntry.queries("q_sink_partitioned")(spark, d)).size === 1)
-    assert(spark.conf.getOption(inference) === before)
+    assert(spark.conf.getAll === before)
     val backfill = SparkEntry.queries("q_backfill_partition")(spark, d)
     assert(backfill.schema("day").dataType === org.apache.spark.sql.types.DateType)
   }
+
+  // No operator leaves a conf behind: those that scope one (the CC
+  // loop's shuffle partitions, a stream's state scope) restore it, and
+  // the rest write none. q_sink_partitioned's row is the test above.
+  for ((name, run) <- Seq[(String, () => Any)](
+      "Tables.events" -> (() => Tables.events(spark, d).count()),
+      "q_backfill_partition" -> (() => canon(SparkEntry.queries("q_backfill_partition")(spark, d))),
+      "q_dedup_components" -> (() => canon(SparkEntry.queries("q_dedup_components")(spark, d))),
+      "q_stream_sessionize" -> (() => canon(SparkEntry.queries("q_stream_sessionize")(spark, d)))))
+    test(s"$name leaves the session conf alone") {
+      val before = spark.conf.getAll
+      run()
+      assert(spark.conf.getAll === before)
+    }
 
   test("events nanosecond timestamps convert exactly (integer microseconds)") {
     val ts = Tables.events(spark, d)

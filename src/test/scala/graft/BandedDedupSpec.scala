@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
@@ -7,7 +8,8 @@ import graft.operators.{Dedup, Similarity}
 /** Round-12 scale guards: the band-first postings scorers
   * (candidates from minhash bands, exact arithmetic on candidates only)
   * and the per-vector successor cap that bounds pair emission from
-  * mega dup-family LSH buckets.
+  * mega dup-family LSH buckets, checked on each of its four callers
+  * against the exact generator it caps.
   */
 class BandedDedupSpec extends SparkTestBase {
 
@@ -64,6 +66,9 @@ class BandedDedupSpec extends SparkTestBase {
       .groupBy(col("bucket"), col("v"))
       .agg(count(lit(1)).as("d")).agg(max(col("d"))).head().getLong(0)
     assert(maxDeg <= 4)
+    // the locality order may rank a larger vec_id first; the pair still
+    // comes out smaller id first
+    assert(two.filter(col("vec_a") >= col("vec_b")).count() === 0)
     // capped edges are a subset of the uncapped all-pairs relation
     assert(two.select("bucket", "vec_a", "vec_b")
       .except(all.select("bucket", "vec_a", "vec_b")).count() === 0)
@@ -74,6 +79,25 @@ class BandedDedupSpec extends SparkTestBase {
       .groupBy(col("bucket")).agg(count(lit(1)).as("g"))
       .agg(sum(expr("g * (g - 1) div 2"))).head().getLong(0)
     assert(all.count() === g)
+
+    // every capped generator against its exact twin: at cap 2 a subset,
+    // at a cap of at least the largest block (a block holds each id
+    // once, so the corpus size bounds it) the same rows
+    val docs = graft.sources.Tables.documents(spark, sf()).count().toInt
+    val generators: Seq[(String, Int => DataFrame, DataFrame, Int)] = Seq(
+      ("minhashPairs", Dedup.minhashPairsCapped(spark, sf(), _),
+        Dedup.minhashPairs(spark, sf()), docs),
+      ("simhashPairs", m => Dedup.simhashPairsCapped(spark, sf(), maxSucc = m),
+        Dedup.simhashPairs(spark, sf()), docs),
+      ("jaccardPrefix", Dedup.jaccardPrefixCapped(spark, sf(), _),
+        Dedup.jaccardPrefix(spark, sf()), docs),
+      ("nearDupLsh", Similarity.nearDupLsh(spark, sf(), _), all, uncapped))
+    for ((name, capped, exact, big) <- generators) {
+      val expected = canon(exact)
+      assert(expected.nonEmpty, s"$name: fixture must exercise the pair path")
+      assert(canon(capped(2)).toSet.subsetOf(expected.toSet), name)
+      assert(canon(capped(big)) === expected, name)
+    }
   }
 
   test("winnowPairs df>=2 keep-filter is result-identical to the unfiltered definition") {

@@ -26,6 +26,13 @@ class GraftSessionSpec extends SparkTestBase {
     assert(d("spark.task.maxFailures") === "3")
   }
 
+  test("every session reads parquet nanosecond timestamps as Long") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(GraftSession.local("t", 1)(key) === "true")
+    assert(GraftSession.fromEnv("t", Map.empty)(key) === "true")
+    assert(spark.conf.get(key) === "true")
+  }
+
   test("fromEnv reads the sizing variables") {
     val dflt = GraftSession.fromEnv("t", Map.empty)
     assert(dflt("spark.master") === "local[32,3]")

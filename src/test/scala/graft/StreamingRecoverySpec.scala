@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -10,7 +12,9 @@ import org.apache.spark.sql.streaming.Trigger
   * restart resumes from the checkpoint's offset log and the file sink's
   * own metadata log makes output files atomic — the production recovery
   * story (the reference's `retries: 2` maps to task re-attempts inside a
-  * run; the checkpoint covers whole-run restarts).
+  * run; the checkpoint covers whole-run restarts). The outer-join restart
+  * runs through the engine's stream terminal, so its state is recovered
+  * from the RocksDB changelog checkpoints every engine stream writes.
   */
 class StreamingRecoverySpec extends SparkTestBase {
 
@@ -59,7 +63,6 @@ class StreamingRecoverySpec extends SparkTestBase {
     val root = Files.createTempDirectory("graft_recovery_join")
     val srcDir = root.resolve("src").toString
     val sinkDir = root.resolve("sink").toString
-    val chkDir = root.resolve("chk").toString
     new java.io.File(srcDir).mkdirs()
 
     var fileNo = 0
@@ -92,11 +95,11 @@ class StreamingRecoverySpec extends SparkTestBase {
             && col("purchase_ts") <= col("view_ts") + expr("interval 30 minutes"),
           "leftOuter")
         .select(col("view_user").as("user"), col("view_id"), col("purchase_id"))
-      val q = joined.writeStream.format("parquet")
-        .option("path", sinkDir).option("checkpointLocation", chkDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      // the engine's stream terminal: the join state runs in the scope
+      // every engine stream gets (RocksDB, changelog checkpointing), with
+      // the checkpoint in `root/checkpoint` across the restarts
+      graft.streaming.EventsStreaming.runAvailableNow(root, joined)((batch, _) =>
+        batch.write.mode("append").parquet(sinkDir))
     }
 
     // run 1: two views, no purchases — nothing can emit yet
@@ -125,5 +128,9 @@ class StreamingRecoverySpec extends SparkTestBase {
     val nullRow = out.filter(_.isNullAt(2))
     assert(nullRow.length === 1 && nullRow.head.getLong(1) === 200L,
       "watermark-expired view must null-emit exactly once after restart")
+    val walk = Files.walk(root.resolve("checkpoint"))
+    try assert(walk.iterator.asScala.exists(_.toString.endsWith(".changelog")),
+      "the restarted join state must be RocksDB changelog checkpoints")
+    finally walk.close()
   }
 }
