@@ -1215,7 +1215,7 @@ object AnalyticsQueries {
     // string_agg ORDER BY (ts, event_id) mirrors the engine's
     // array_sort on the same key — event_id is globally unique so both
     // orders are total. The rank prune + truncated flag mirror the
-    // engine's heavy-hitter cap (graft.paths.maxEventsPerUser = 10000).
+    // engine's heavy-hitter cap (`userPaths`' maxEvents, default 10000).
     "q_user_paths" ->
       """WITH r AS (SELECT user_id, event_type, ts, event_id,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,

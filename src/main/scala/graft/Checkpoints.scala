@@ -44,8 +44,7 @@ object Checkpoints {
     */
   def truncate(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    if (GraftConf.CheckpointSkip(spark)) df
-    else GraftConf.CheckpointDir.get(spark) match {
+    GraftConf.CheckpointDir.get(spark) match {
       case Some(dir) =>
         ensureCheckpointDir(df, dir)
         df.checkpoint() // eager + reliable: blocks on fault-tolerant storage

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.model.{Schemas, TwseFixtures}
 import graft.operators.{NotifySink, TwsePipeline}
+import graft.sources.TwseFixtureSource
 import graft.streaming.{EventsStreaming, RetryRunner}
 
 /** The deployable daily-orchestration entrypoint — the reference's
@@ -157,21 +158,17 @@ object DailyApp {
     * idempotently (a date already landed is skipped — re-running a day
     * never duplicates, matching the reference's daily task instance).
     * The write is tmp+atomic-move so the streaming file source can
-    * never list a half-written payload. Fixture mode lands the three
-    * golden scenarios keyed by their own dates.
+    * never list a half-written payload. Fixture mode lands
+    * `TwseFixtureSource.days`, the three golden scenarios keyed by their
+    * own dates.
     */
   private[graft] def fetchAndLand(cfg: Config): Seq[String] = {
     Files.createDirectories(cfg.landing)
     val toLand: Seq[(String, () => String)] =
-      if (cfg.useFixtures)
-        Seq("20220819" -> (() => TwseFixtures.ok),
-          "20220820" -> (() => TwseFixtures.closed),
-          "20100106" -> (() => TwseFixtures.drift))
+      if (cfg.useFixtures) TwseFixtureSource.days.map { case (d, body) => d -> (() => body) }
       else cfg.dates.map { d =>
-        val url = cfg.fetchUrl.getOrElse(sys.error(
-          "--fetch-url required unless --fixtures")) +
-          s"?response=json&dayDate=$d" // Final_app.py:26
-        d -> (() => graft.sources.TwseFixtureSource.fetch(url))
+        val base = cfg.fetchUrl.getOrElse(sys.error("--fetch-url required unless --fixtures"))
+        d -> (() => TwseFixtureSource.fetch(TwseFixtureSource.dayUrl(base, d)))
       }
     toLand.flatMap { case (d, body) =>
       val dest = cfg.landing.resolve(s"day_$d.json")

@@ -31,24 +31,12 @@ object GraftConf {
     def apply(spark: SparkSession): T = get(spark).getOrElse(default)
   }
 
-  private val bool = Kind[Boolean]("true|false|1|0", {
-    case "true" | "1" => Some(true)
-    case "false" | "0" => Some(false)
-    case _ => None
-  })
   private val long = Kind[Long]("a long", _.toLongOption)
   private val bytes = Kind[Long]("a byte count (non-negative long)", _.toLongOption.filter(_ >= 0))
   private val positiveInt = Kind[Int]("a positive integer", _.toIntOption.filter(_ > 0))
 
   /** Reliable-checkpoint directory; unset = `localCheckpoint` ([[Checkpoints]]). */
   val CheckpointDir = new Key("graft.cc.checkpointDir", Kind[String]("a path", Some(_)))
-  /** Debug only: [[Checkpoints.truncate]] becomes the identity, so
-    * `explain("formatted")` shows the whole plan of operators whose
-    * mid-plan truncation otherwise hides everything upstream behind a
-    * `Scan ExistingRDD`. Never set it for a real run: the CC loops rely
-    * on truncation for plan growth, and big-sf runs for the spill envelope.
-    */
-  val CheckpointSkip = new Setting("graft.checkpoint.skip", bool, false)
   /** `localCheckpoint` storage level; unset = MEMORY_AND_DISK (deserialized,
     * fastest re-read). At big scale factors use MEMORY_AND_DISK_SER: 32
     * tasks concurrently materializing multi-GiB deserialized partitions
@@ -68,10 +56,6 @@ object GraftConf {
 
   /** Base-table bytes from which date-banded queries read the partitioned layout. */
   val LayoutMinBytes = new Setting("graft.layout.minBytes", bytes, 64L << 20)
-  /** Events kept per user before a journey is collected and flagged truncated. */
-  val PathsMaxEventsPerUser = new Setting("graft.paths.maxEventsPerUser", positiveInt, 10000)
-  /** Event rows up to which RFM scoring runs as single-task ntile windows. */
-  val RfmWindowMaxEventRows = new Setting("graft.rfm.windowMaxEventRows", long, 2000000L)
 
   /** State partitions of every stateful stream; unset = derived from the
     * stream's input bytes (`EventsStreaming.runAvailableNow`).
@@ -88,8 +72,7 @@ object GraftConf {
   val TfCheckpointMaxBytes = new Setting("graft.text.tfCheckpointMaxBytes", bytes, 256L << 20)
 
   /** Every key; `GraftConfSpec` checks each one. */
-  val all: Seq[Key[_]] = Seq(CheckpointDir, CheckpointSkip, CheckpointLevel,
+  val all: Seq[Key[_]] = Seq(CheckpointDir, CheckpointLevel,
     DedupBroadcastIdLimit, DedupExactGenLimit, DedupStopBroadcastLimit,
-    LayoutMinBytes, PathsMaxEventsPerUser, RfmWindowMaxEventRows,
-    StatePartitions, StateProvider, TfCheckpointMaxBytes)
+    LayoutMinBytes, StatePartitions, StateProvider, TfCheckpointMaxBytes)
 }

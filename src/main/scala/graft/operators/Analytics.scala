@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.GraftConf
 import graft.sources.Tables
 
 /** Relational analytics operators over the star schema (SURVEY.md §2.I:
@@ -1664,24 +1663,33 @@ object Analytics {
     * two key joins on user_id — at scale the joins reuse one hash
     * partitioning on the key. All-integer microsecond comparisons.
     */
-  def funnel(spark: SparkSession, sfDir: String): DataFrame = {
+  def funnel(spark: SparkSession, sfDir: String): DataFrame =
+    funnelChain(spark, sfDir, within = None, suffix = "")
+
+  /** The funnel's one stage-chained min-aggregate: each stage is the
+    * user's first event of its type strictly after the previous stage's
+    * time and, with `within`, at most that many microseconds after it.
+    * `suffix` labels the bounded stages.
+    */
+  private def funnelChain(spark: SparkSession, sfDir: String,
+      within: Option[Long], suffix: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-    def first(df: DataFrame, t: String) =
-      df.filter(col("event_type") === t)
+    val v = ev.filter(col("event_type") === "view")
+      .groupBy(col("user_id")).agg(min(col("us")).as("view_us"))
+    def next(prev: DataFrame, prevUs: String, t: String): DataFrame = {
+      val after = col("event_type") === t && col("us") > col(prevUs)
+      ev.join(prev, "user_id")
+        .filter(within.fold(after)(b => after && col("us") <= col(prevUs) + b))
         .groupBy(col("user_id")).agg(min(col("us")).as(s"${t}_us"))
-    val v = first(ev, "view")
-    val c = ev.join(v, "user_id")
-      .filter(col("event_type") === "click" && col("us") > col("view_us"))
-      .groupBy(col("user_id")).agg(min(col("us")).as("click_us"))
-    val p = ev.join(c, "user_id")
-      .filter(col("event_type") === "purchase" && col("us") > col("click_us"))
-      .groupBy(col("user_id")).agg(min(col("us")).as("purchase_us"))
-    v.agg(count(lit(1)).as("n_users")).select(lit("1_view").as("stage"), col("n_users"))
-      .unionByName(c.agg(count(lit(1)).as("n_users"))
-        .select(lit("2_click").as("stage"), col("n_users")))
-      .unionByName(p.agg(count(lit(1)).as("n_users"))
-        .select(lit("3_purchase").as("stage"), col("n_users")))
+    }
+    val c = next(v, "view_us", "click")
+    val p = next(c, "click_us", "purchase")
+    def stage(df: DataFrame, label: Column) =
+      df.agg(count(lit(1)).as("n_users")).select(label.as("stage"), col("n_users"))
+    stage(v, lit("1_view"))
+      .unionByName(stage(c, lit(s"2_click$suffix")))
+      .unionByName(stage(p, lit(s"3_purchase$suffix")))
   }
 
   /** Explicitly salted join — the skew pattern for when a hot key would
@@ -1709,29 +1717,11 @@ object Analytics {
   /** Time-bounded funnel — the industry funnel definition: each stage
     * must follow the previous one WITHIN the conversion window (1 h
     * here); a purchase a week after the click is organic, not funnel
-    * conversion. Same stage-chained min-aggregate shape as [[funnel]],
-    * with the upper time bound added to each stage filter.
+    * conversion. The same [[funnelChain]] as [[funnel]], with the upper
+    * time bound added to each stage filter.
     */
-  def funnelTimeBound(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourUs = 3600L * 1000000L
-    val ev = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-    val v = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("us")).as("view_us"))
-    val c = ev.join(v, "user_id")
-      .filter(col("event_type") === "click"
-        && col("us") > col("view_us") && col("us") <= col("view_us") + hourUs)
-      .groupBy(col("user_id")).agg(min(col("us")).as("click_us"))
-    val p = ev.join(c, "user_id")
-      .filter(col("event_type") === "purchase"
-        && col("us") > col("click_us") && col("us") <= col("click_us") + hourUs)
-      .groupBy(col("user_id")).agg(min(col("us")).as("purchase_us"))
-    v.agg(count(lit(1)).as("n_users")).select(lit("1_view").as("stage"), col("n_users"))
-      .unionByName(c.agg(count(lit(1)).as("n_users"))
-        .select(lit("2_click_1h").as("stage"), col("n_users")))
-      .unionByName(p.agg(count(lit(1)).as("n_users"))
-        .select(lit("3_purchase_1h").as("stage"), col("n_users")))
-  }
+  def funnelTimeBound(spark: SparkSession, sfDir: String): DataFrame =
+    funnelChain(spark, sfDir, within = Some(3600L * 1000000L), suffix = "_1h")
 
   /** Share-of-total (ratio-to-report): each nation's revenue as a share
     * of the whole — the grand total rides the plan as a broadcast 1-row
@@ -1756,27 +1746,42 @@ object Analytics {
           .as("share"))
   }
 
-  /** Sessionization: 30-minute-gap sessions per user — gaps-and-islands
-    * with lag + running sum over one (user_id, ts) exchange. Gap compare
-    * is in integer microseconds so engines agree exactly. The streaming
-    * analogue is `session_window` / flatMapGroupsWithState.
+  /** The session gap of every sessionizer, batch and streaming: a
+    * user's next event more than this many microseconds after the
+    * previous one opens a new session.
     */
-  def eventsSessionized(spark: SparkSession, sfDir: String): DataFrame = {
+  private[graft] val SessionGapUs: Long = 30L * 60 * 1000000
+  /** [[SessionGapUs]] as a `session_window` gap duration. */
+  private[graft] val SessionGap: String = s"${SessionGapUs / 1000000} seconds"
+
+  /** `events` with an int `session_id`, numbering each user's sessions
+    * from 1 in (ts, event_id) order: the user's first event and every
+    * event more than [[SessionGapUs]] after its predecessor opens one —
+    * gaps-and-islands with lag + running sum over one (user_id, ts)
+    * exchange, the gap compared in integer microseconds.
+    */
+  private def withSessionId(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val gapUs = 30L * 60 * 1000000
-    Tables.events(spark, sfDir)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
+    val us = unix_micros(col("ts"))
+    events
+      .withColumn("prev_us", lag(us, 1).over(byUser))
       .withColumn("new_session",
-        (col("prev_us").isNull ||
-          (unix_micros(col("ts")) - col("prev_us") > gapUs)).cast("int"))
+        (col("prev_us").isNull || (us - col("prev_us") > SessionGapUs)).cast("int"))
       .withColumn("session_id",
         sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0))
           .cast("int"))
+  }
+
+  /** Sessionization: 30-minute-gap sessions per user ([[withSessionId]]).
+    * The streaming analogue is `session_window` /
+    * flatMapGroupsWithState.
+    */
+  def eventsSessionized(spark: SparkSession, sfDir: String): DataFrame =
+    withSessionId(Tables.events(spark, sfDir))
       .groupBy(col("user_id"), col("session_id"))
       .agg(count(lit(1)).as("n_events"),
         date_format(min(col("ts")), "yyyy-MM-dd HH:mm:ss").as("session_start"),
         sum(dec("value")).cast("double").as("session_value"))
-  }
 
   /** Range join (point-in-interval / interval-overlap), by interval
     * decomposition: how many 30-min-gap sessions are ACTIVE in each hour
@@ -1791,17 +1796,9 @@ object Analytics {
     */
   def activeSessionsPerHour(spark: SparkSession, sfDir: String): DataFrame = {
     val hourUs = 3600L * 1000000
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val gapUs = 30L * 60 * 1000000
-    val sessions = Tables.events(spark, sfDir)
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("prev_us", lag(col("us"), 1).over(byUser))
-      .withColumn("new_session",
-        (col("prev_us").isNull || col("us") - col("prev_us") > gapUs).cast("int"))
-      .withColumn("session_id",
-        sum(col("new_session")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
+    val sessions = withSessionId(Tables.events(spark, sfDir))
       .groupBy(col("user_id"), col("session_id"))
-      .agg(min(col("us")).as("start_us"), max(col("us")).as("end_us"))
+      .agg(min(unix_micros(col("ts"))).as("start_us"), max(unix_micros(col("ts"))).as("end_us"))
     val covered = sessions.select(
       explode(sequence(expr(s"start_us div $hourUs"), expr(s"end_us div $hourUs")))
         .as("hour_idx"))
@@ -1883,14 +1880,15 @@ object Analytics {
     *
     * SIZE-GATED (the PartitionedTables routing-gate discipline): the
     * three rank passes cost ~9 jobs of fixed overhead, a 4× regression
-    * at sf0.1 where users number 1.5k. Below
-    * `graft.rfm.windowMaxEventRows` (default 2 M — a single-task sort
-    * still clears in ~1 s) the plan IS the oracle's three ntile
+    * at sf0.1 where users number 1.5k. Up to `windowMaxEventRows`
+    * event rows (default 2 M — a single-task sort still clears in
+    * ~1 s) the plan IS the oracle's three ntile
     * windows; above it the distributed rank passes take over. The gate
     * probe is the events row count — a parquet metadata-only count that
     * upper-bounds user cardinality without a pre-aggregation job.
     */
-  def rfmSegments(spark: SparkSession, sfDir: String): DataFrame = {
+  def rfmSegments(spark: SparkSession, sfDir: String,
+      windowMaxEventRows: Long = 2000000L): DataFrame = {
     val perUser = Tables.events(spark, sfDir)
       .groupBy(col("user_id"))
       .agg(max(unix_micros(col("ts"))).as("last_us"),
@@ -1899,7 +1897,7 @@ object Analytics {
           (dec("value") * 100).cast("long")).otherwise(lit(0L)))
           .as("monetary_c"))
     val eventRows = Tables.events(spark, sfDir).count() // metadata-only
-    if (eventRows <= GraftConf.RfmWindowMaxEventRows(spark)) {
+    if (eventRows <= windowMaxEventRows) {
       import org.apache.spark.sql.expressions.Window
       def w(c: org.apache.spark.sql.Column) =
         Window.orderBy(c, col("user_id"))
@@ -1993,33 +1991,47 @@ object Analytics {
           .as("within_tol"))
   }
 
-  /** First-touch attribution — each purchase credited to the EARLIEST
-    * view in its 24 h lookback (the as-of join is the last-touch dual:
-    * latest view before the event). The per-purchase rank filter plans
-    * as a partial WindowGroupLimit exactly like the kNN join, so the
-    * interval join's row-per-candidate output is pruned to one row per
-    * purchase per input partition before the exchange.
+  /** The attribution family's one touch join: each purchase of
+    * `purchases` paired with every view of `views` by the same user in its
+    * 24 h lookback (`view_ts <= purchase_ts`, at most 24 h earlier).
+    * Both inputs are event frames; `carry` adds purchase-side columns.
     */
-  def firstTouchAttribution(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables.events(spark, sfDir)
-    val views = ev.filter(col("event_type") === "view")
+  private def touches(views: DataFrame, purchases: DataFrame,
+      carry: Column*): DataFrame = {
+    val v = views.filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"),
         col("ts").as("view_ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-    val w = Window.partitionBy(col("purchase_id"))
-      .orderBy(col("view_ts"), col("view_id"))
-    purchases.join(views,
-        col("user_id") === col("p_user")
-          && col("view_ts") <= col("purchase_ts")
-          && col("view_ts") >= col("purchase_ts") - expr("interval 24 hours"))
-      .withColumn("rn", row_number().over(w))
+    val p = purchases.filter(col("event_type") === "purchase")
+      .select(Seq(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
+        col("ts").as("purchase_ts")) ++ carry: _*)
+    p.join(v,
+      col("user_id") === col("p_user")
+        && col("view_ts") <= col("purchase_ts")
+        && col("view_ts") >= col("purchase_ts") - expr("interval 24 hours"))
+  }
+
+  /** Each purchase's earliest [[touches]] touch (by view_ts, view_id).
+    * The per-purchase rank filter plans as a partial WindowGroupLimit
+    * exactly like the kNN join, so the interval join's
+    * row-per-candidate output is pruned to one row per purchase per
+    * input partition before the exchange.
+    */
+  private def firstTouch(views: DataFrame, purchases: DataFrame): DataFrame =
+    touches(views, purchases)
+      .withColumn("rn", row_number().over(Window.partitionBy(col("purchase_id"))
+        .orderBy(col("view_ts"), col("view_id"))))
       .filter(col("rn") === 1)
       .select(col("purchase_id"), col("view_id").as("first_view_id"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts")))
           .as("touch_to_buy_us"))
+
+  /** First-touch attribution — each purchase credited to the EARLIEST
+    * view in its 24 h lookback (the as-of join is the last-touch dual:
+    * latest view before the event).
+    */
+  def firstTouchAttribution(spark: SparkSession, sfDir: String): DataFrame = {
+    val ev = Tables.events(spark, sfDir)
+    firstTouch(ev, ev)
   }
 
   /** Date-banded first-touch attribution — the production lookback
@@ -2035,104 +2047,30 @@ object Analytics {
     */
   def firstTouchAttributionBand(spark: SparkSession, sfDir: String,
       fromDay: String = "2024-01-08", toDay: String = "2024-01-15"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ev = graft.sources.PartitionedTables.eventsByDay(spark, sfDir)
     val lookbackFrom = java.time.LocalDate.parse(fromDay).minusDays(1).toString
-    val views = ev.filter(col("event_type") === "view")
-      .filter(col("e_day") >= lookbackFrom && col("e_day") < toDay)
-      .select(col("user_id"), col("event_id").as("view_id"),
-        col("ts").as("view_ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .filter(col("e_day") >= fromDay && col("e_day") < toDay)
-      .filter(col("ts") >= lit(fromDay).cast("timestamp")
-        && col("ts") < lit(toDay).cast("timestamp"))
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-    val w = Window.partitionBy(col("purchase_id"))
-      .orderBy(col("view_ts"), col("view_id"))
-    purchases.join(views,
-        col("user_id") === col("p_user")
-          && col("view_ts") <= col("purchase_ts")
-          && col("view_ts") >= col("purchase_ts") - expr("interval 24 hours"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("purchase_id"), col("view_id").as("first_view_id"),
-        (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts")))
-          .as("touch_to_buy_us"))
+    firstTouch(
+      ev.filter(col("e_day") >= lookbackFrom && col("e_day") < toDay),
+      ev.filter(col("e_day") >= fromDay && col("e_day") < toDay)
+        .filter(col("ts") >= lit(fromDay).cast("timestamp")
+          && col("ts") < lit(toDay).cast("timestamp")))
   }
 
-  /** Linear multi-touch attribution — the fractional dual of
-    * [[firstTouchAttribution]]: each purchase's credit splits EQUALLY
-    * across every view in its 24 h lookback. Shares are integer basis
-    * points (10000 div n per touch) with the floor-division remainder
-    * assigned to the earliest touch, so per-purchase credit sums to
-    * exactly 10000 bp and every credited cent is integer-exact —
-    * distributed summation order cannot move a thing. Same interval
-    * join + one per-purchase window as the first-touch form; the
-    * per-day rollup then shuffles only (day, credit) longs.
+  /** Basis-point credit of the purchases of `ev` over their [[touches]],
+    * rolled up per view day. Each touch earns `tw * 10000 div Σtw` bp of
+    * its purchase for weight `tw`, and the floor remainder goes to the
+    * earliest touch, so each purchase sums to exactly 10000 bp and every
+    * credited cent is integer-exact — distributed summation order cannot
+    * move a thing. All three windows (Σtw, Σbp, time rank) share one
+    * purchase_id exchange+sort; the rollup then shuffles only (day,
+    * credit) longs.
     */
-  def linearAttribution(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables.events(spark, sfDir)
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("user_id"), col("event_id").as("view_id"),
-        col("ts").as("view_ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"),
-        (dec("value") * 100).cast("long").as("value_c"))
+  private def creditByViewDay(ev: DataFrame, tw: Column): DataFrame = {
     val w = Window.partitionBy(col("purchase_id"))
-    val byTime = w.orderBy(col("view_ts"), col("view_id"))
-    purchases.join(views,
-        col("user_id") === col("p_user")
-          && col("view_ts") <= col("purchase_ts")
-          && col("view_ts") >= col("purchase_ts") - expr("interval 24 hours"))
-      .withColumn("n_touch", count(lit(1)).over(w))
-      .withColumn("rn", row_number().over(byTime))
-      .withColumn("bp",
-        expr("10000 div n_touch")
-          + when(col("rn") === 1,
-              lit(10000) - col("n_touch") * expr("10000 div n_touch"))
-            .otherwise(lit(0)))
-      .groupBy(to_date(col("view_ts")).as("view_day"))
-      .agg(count(lit(1)).as("n_touches"),
-        sum(col("bp")).as("sum_bp"),
-        sum(expr("value_c * bp div 10000")).as("credit_c"))
-  }
-
-  /** Time-decay multi-touch attribution — completes the attribution
-    * family (first-touch / linear / decay): recent touches earn more
-    * credit. The decay weight is HYPERBOLIC in whole hours of age —
-    * `1e6 div (1 + age_h)` — pure integer floor-division, because an
-    * exponential `pow(2, -age/halflife)` double would make credit
-    * splits hostage to last-ulp `pow` differences across engines.
-    * Shares are then integer basis points `w·10⁴ div Σw` with the
-    * floor remainder assigned to the earliest touch: each purchase
-    * still sums to exactly 10000 bp, every credited cent is exact.
-    * All three windows (Σw, Σbp, time rank) share one purchase_id
-    * exchange+sort.
-    */
-  def decayAttribution(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables.events(spark, sfDir)
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("user_id"), col("event_id").as("view_id"),
-        col("ts").as("view_ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"),
-        (dec("value") * 100).cast("long").as("value_c"))
-    val w = Window.partitionBy(col("purchase_id"))
-    val byTime = w.orderBy(col("view_ts"), col("view_id"))
-    purchases.join(views,
-        col("user_id") === col("p_user")
-          && col("view_ts") <= col("purchase_ts")
-          && col("view_ts") >= col("purchase_ts") - expr("interval 24 hours"))
-      .withColumn("age_h",
-        expr("(unix_micros(purchase_ts) - unix_micros(view_ts)) div 3600000000"))
-      .withColumn("tw", expr("1000000 div (1 + age_h)"))
+    touches(ev, ev, (dec("value") * 100).cast("long").as("value_c"))
+      .withColumn("tw", tw)
       .withColumn("w_sum", sum(col("tw")).over(w))
-      .withColumn("rn", row_number().over(byTime))
+      .withColumn("rn", row_number().over(w.orderBy(col("view_ts"), col("view_id"))))
       .withColumn("bp0", expr("tw * 10000 div w_sum"))
       .withColumn("bp_sum", sum(col("bp0")).over(w))
       .withColumn("bp", col("bp0")
@@ -2142,6 +2080,25 @@ object Analytics {
         sum(col("bp")).as("sum_bp"),
         sum(expr("value_c * bp div 10000")).as("credit_c"))
   }
+
+  /** Linear multi-touch attribution — the fractional dual of
+    * [[firstTouchAttribution]]: each purchase's credit splits EQUALLY
+    * across every view in its 24 h lookback ([[creditByViewDay]] with
+    * weight 1: `10000 div n` bp per touch).
+    */
+  def linearAttribution(spark: SparkSession, sfDir: String): DataFrame =
+    creditByViewDay(Tables.events(spark, sfDir), lit(1L))
+
+  /** Time-decay multi-touch attribution — completes the attribution
+    * family (first-touch / linear / decay): recent touches earn more
+    * credit. The decay weight is HYPERBOLIC in whole hours of age —
+    * `1e6 div (1 + age_h)` — pure integer floor-division, because an
+    * exponential `pow(2, -age/halflife)` double would make credit
+    * splits hostage to last-ulp `pow` differences across engines.
+    */
+  def decayAttribution(spark: SparkSession, sfDir: String): DataFrame =
+    creditByViewDay(Tables.events(spark, sfDir), expr(
+      "1000000 div (1 + (unix_micros(purchase_ts) - unix_micros(view_ts)) div 3600000000)"))
 
   /** I6/q9 — product-line profit by nation and year (TPC-H Q9 shape,
     * adapted: the schema has no partsupp, so supply cost is modeled as
@@ -2177,42 +2134,46 @@ object Analytics {
         .cast("long").as("profit_e4"))
   }
 
+  /** Per-group aggregate: the group's event types in (ts, event_id)
+    * order, joined by `>`. `collect_list` gives no ordering guarantee,
+    * so the struct list is `array_sort`ed AFTER collection —
+    * deterministic on any executor layout.
+    */
+  private def journeyPath: Column =
+    array_join(
+      transform(
+        array_sort(collect_list(struct(
+          unix_micros(col("ts")).as("t"),
+          col("event_id").as("e"),
+          col("event_type").as("et")))),
+        x => x.getField("et")), ">")
+
   /** User-journey path analysis — each user's ordered event-type
     * sequence collapsed to a path string, counted per distinct journey
-    * (the funnel-free view of how users actually move). `collect_list`
-    * gives no ordering guarantee, so the struct list is `array_sort`ed
-    * on (ts, event_id) AFTER collection — deterministic on any executor
-    * layout.
+    * (the funnel-free view of how users actually move), via
+    * [[journeyPath]].
     *
     * Per-user state is that user's own event list, which at 100 TB is
     * unbounded in the worst case: one bot user with millions of events
     * turns the collect into a single straggler/OOM task. The cap
-    * `graft.paths.maxEventsPerUser` (default 10000) bounds it: a
-    * window-rank prune keeps each user's FIRST cap events (by ts,
-    * event_id) before the collect, and truncation is surfaced as a
-    * `truncated` output column rather than silently hidden — capped
+    * `maxEvents` bounds it: a window-rank prune keeps each user's FIRST
+    * cap events (by ts, event_id) before the collect, and truncation is
+    * surfaced as a `truncated` output column rather than silently hidden — capped
     * journeys group separately so downstream consumers can exclude or
     * re-process them. The rank and the per-user count share one
     * (user_id) exchange+sort.
     */
-  def userPaths(spark: SparkSession, sfDir: String): DataFrame = {
-    val cap = GraftConf.PathsMaxEventsPerUser(spark)
+  def userPaths(spark: SparkSession, sfDir: String, maxEvents: Int = 10000): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     Tables.events(spark, sfDir)
       .withColumn("rn", row_number().over(byUser))
       .withColumn("n_ev", count(lit(1)).over(byUser
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .filter(col("rn") <= cap)
+      .filter(col("rn") <= maxEvents)
       .groupBy(col("user_id"))
-      .agg(array_join(
-        transform(
-          array_sort(collect_list(struct(
-            unix_micros(col("ts")).as("t"),
-            col("event_id").as("e"),
-            col("event_type").as("et")))),
-          x => x.getField("et")), ">").as("path"),
-        (max(col("n_ev")) > cap).as("truncated"))
+      .agg(journeyPath.as("path"),
+        (max(col("n_ev")) > maxEvents).as("truncated"))
       // The per-journey count groups on md5(path), NOT the raw path: a
       // capped journey is a ~100 KB string, and a raw-keyed exchange
       // would shuffle-sort and byte-compare those as group keys. The
@@ -2252,13 +2213,7 @@ object Analytics {
       .withColumn("rn", row_number().over(byUser))
       .filter(col("rn") <= prefix)
       .groupBy(col("user_id"))
-      .agg(array_join(
-        transform(
-          array_sort(collect_list(struct(
-            unix_micros(col("ts")).as("t"),
-            col("event_id").as("e"),
-            col("event_type").as("et")))),
-          x => x.getField("et")), ">").as("path"),
+      .agg(journeyPath.as("path"),
         count(lit(1)).as("n_ev"))
     paths
       .withColumn("pattern",

@@ -420,12 +420,23 @@ object Dedup {
     * corpus is scanned once and never shuffled on text.
     */
   def decontaminate(spark: SparkSession, sfDir: String,
-      benchBound: Long = 5L): DataFrame = {
+      benchBound: Long = 5L): DataFrame =
+    benchOverlap(spark, sfDir, benchBound)(_ => None)
+
+  /** Per corpus document (doc_id ≥ `benchBound`): how many of its distinct
+    * 3-gram shingles the benchmark (doc_id < `benchBound`) also holds, and
+    * whether any. `prefilter` may derive from the benchmark's distinct
+    * shingles a cheap predicate on the corpus shingles, applied before
+    * the exact semi-join against the broadcast benchmark set.
+    */
+  private def benchOverlap(spark: SparkSession, sfDir: String, benchBound: Long)(
+      prefilter: DataFrame => Option[Column]): DataFrame = {
     val sh = Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(array_distinct(shingles3(col("text")))).as("shingle"))
     val bench = sh.filter(col("doc_id") < benchBound)
       .select(col("shingle")).distinct()
-    val overlap = sh.filter(col("doc_id") >= benchBound)
+    val corpus = sh.filter(col("doc_id") >= benchBound)
+    val overlap = prefilter(bench).fold(corpus)(corpus.filter)
       .join(broadcast(bench), Seq("shingle"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
     Tables.documents(spark, sfDir)
@@ -556,27 +567,14 @@ object Dedup {
   def decontaminateBloom(spark: SparkSession, sfDir: String,
       benchBound: Long = 5L): DataFrame = {
     import graft.functions.SketchFunctions._
-    val sh = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), explode(array_distinct(shingles3(col("text")))).as("shingle"))
-    val bench = sh.filter(col("doc_id") < benchBound)
-      .select(col("shingle")).distinct()
     // benchmarks are tiny next to the corpus: the collect moves one
-    // ~128 KB sketch to the driver, never the shingle rows
-    val bloom = buildBloom(bench, col("shingle"), expectedItems = 100000L, numBits = 1L << 20)
-    val candidates = sh.filter(col("doc_id") >= benchBound)
-      .filter(bloom_might_contain(bloom, col("shingle")))
-    // exact verify on the (now tiny) bloom survivors removes the false
-    // positives — the end result is exactly decontaminate()'s
-    val overlap = candidates
-      .join(broadcast(bench), Seq("shingle"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
-    Tables.documents(spark, sfDir)
-      .filter(col("doc_id") >= benchBound)
-      .select(col("doc_id"))
-      .join(overlap, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-        (coalesce(col("n_overlap"), lit(0L)) > 0).as("contaminated"))
+    // ~128 KB sketch to the driver, never the shingle rows; the exact
+    // semi-join then verifies the (now tiny) bloom survivors, removing
+    // the false positives
+    benchOverlap(spark, sfDir, benchBound) { bench =>
+      val bloom = buildBloom(bench, col("shingle"), expectedItems = 100000L, numBits = 1L << 20)
+      Some(bloom_might_contain(bloom, col("shingle")))
+    }
   }
 
   /** Degenerate-text detection by n-gram repetition: the most-repeated

@@ -419,7 +419,7 @@ object Formats {
     */
   def sessionWindowNative(spark: SparkSession, sfDir: String): DataFrame =
     Tables.events(spark, sfDir)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
+      .groupBy(col("user_id"), session_window(col("ts"), Analytics.SessionGap).as("w"))
       .agg(count(lit(1)).as("n_events"),
         sum(dec("value")).cast("double").as("session_value"))
       .select(col("user_id"),
@@ -437,7 +437,7 @@ object Formats {
     * static form.
     */
   def sessionWindowDynamic(spark: SparkSession, sfDir: String): DataFrame = {
-    val gap = when(col("event_type") === "view", lit("30 minutes"))
+    val gap = when(col("event_type") === "view", lit(Analytics.SessionGap))
       .otherwise(lit("15 minutes"))
     Tables.events(spark, sfDir)
       .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))

@@ -22,9 +22,9 @@ import graft.model.TwseFixtures
   *     its date (the zero-egress test form);
   *   - `.option("baseUrl", "http://host/path")` [+ optional
   *     `.option("dates", "20220819,...")`]: each partition reader
-  *     performs the REAL `GET baseUrl?response=json&dayDate=<dt>&type=day`
-  *     on its executor — the reference's `market_information()` request
-  *     shape — so fetch parallelism is exactly the partition count.
+  *     performs the REAL `GET` of [[TwseFixtureSource.dayUrl]] on its
+  *     executor — the reference's `market_information()` request shape —
+  *     so fetch parallelism is exactly the partition count.
   *     Everything else (schema, per-day partitioning, downstream plan)
   *     is identical between the modes; a spec drives the HTTP mode
   *     against a loopback server.
@@ -53,9 +53,12 @@ object TwseFixtureSource {
 
   private[sources] val fixtureByDay: Map[String, String] = days.toMap
 
-  /** Executor-side GET with bounded timeouts — runs inside the partition
-    * reader, one request per (day) partition.
+  /** The reference's per-date request (`Final_app.py:26`), the one URL
+    * both the partition readers and [[graft.DailyApp]] fetch.
     */
+  def dayUrl(baseUrl: String, date: String): String =
+    s"$baseUrl?response=json&dayDate=$date"
+
   /** Driver-side payload fetch for the daily entrypoint
     * ([[graft.DailyApp]]) — the reference's per-date GET
     * (`Final_app.py:26-28`).
@@ -171,11 +174,9 @@ private class TwseReaderFactory(cols: Array[String], countPushed: Boolean)
       override def get(): InternalRow = {
         // pushed COUNT(*): the partition's local count, no row built
         if (countPushed) return InternalRow(1L)
-        // the payload is fetched ONLY when the pruned schema asks for it —
-        // the reference's request: BFI82U?response=json&dayDate=<dt>&type=day
+        // the payload is fetched ONLY when the pruned schema asks for it
         def body: String = p.baseUrl match {
-          case Some(u) => TwseFixtureSource.httpGet(
-            s"$u?response=json&dayDate=${p.dt}&type=day")
+          case Some(u) => TwseFixtureSource.httpGet(TwseFixtureSource.dayUrl(u, p.dt))
           case None => TwseFixtureSource.fixtureByDay.getOrElse(p.dt,
             throw new IllegalArgumentException(s"no fixture for date ${p.dt}"))
         }

@@ -14,6 +14,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.{GraftConf, Staging}
+import graft.operators.Analytics
 import graft.sources.Tables
 
 /** Structured-streaming forms of the event operators (SURVEY.md §2.I5 and
@@ -264,8 +265,14 @@ object EventsStreaming {
     * production forms of anomalyZscore / retention read instead of raw
     * events.
     */
-  def dailyRollupMaintained(spark: SparkSession, sfDir: String): DataFrame = {
-    val run = Staging.runDir("graft_stream_rollup")
+  def dailyRollupMaintained(spark: SparkSession, sfDir: String): DataFrame =
+    dailyRollupIn(spark, sfDir, Staging.runDir("graft_stream_rollup"))
+
+  /** [[dailyRollupMaintained]] with its checkpoint and table under `run`:
+    * a restart on the same dir resumes the stream where it stopped.
+    */
+  private[graft] def dailyRollupIn(spark: SparkSession, sfDir: String,
+      run: Path): DataFrame = {
     val tableDir = run.resolve("table").toString
     val src = landingStream(spark, stagedShardedDir(spark, sfDir, shards = 3))
     runAvailableNow(run, src)((batch, batchId) =>
@@ -278,19 +285,19 @@ object EventsStreaming {
   }
 
   /** One maintenance upsert: merge a batch's daily partials into the
-    * partitioned table, rewriting ONLY the touched day partitions. A
-    * per-batch applied marker makes checkpoint REPLAY idempotent — a
-    * re-delivered batch must not double-merge (the foreachBatch
-    * exactly-once pattern; a merge is not an append, so `DailyApp`'s
-    * dt guard does not fit it). Table existence is detected from partition directories,
-    * NOT a _SUCCESS marker: the dynamic-partition-overwrite commit
-    * protocol doesn't write one at the table root.
+    * partitioned table, rewriting ONLY the touched day partitions. Every
+    * rewritten partition's rows carry the `batch_id` of that merge, so
+    * checkpoint REPLAY is idempotent by asking the table what it holds:
+    * a day already stamped with this batch (or a later one) is skipped.
+    * That covers a crash between the table commit and the checkpoint
+    * commit, and one partway through the commit's per-partition moves.
+    * A merge is not an append, so `DailyApp`'s dt guard does not fit it.
+    * Table existence is detected from partition directories, NOT a
+    * _SUCCESS marker: the dynamic-partition-overwrite commit protocol
+    * doesn't write one at the table root.
     */
   private def upsertDailyPartials(batch: DataFrame, tableDir: String,
       batchId: Long): Unit = {
-    val root = new java.io.File(tableDir)
-    val appliedMarker = new java.io.File(root, s"_applied_$batchId")
-    if (appliedMarker.exists()) return // replayed batch: already merged
     val spark = batch.sparkSession
     val partials = batch
       .groupBy(date_format(to_date(col("ts")), "yyyy-MM-dd").as("day"),
@@ -299,7 +306,7 @@ object EventsStreaming {
         .as("p_cents"),
         count(lit(1)).as("p_n"))
       .localCheckpoint() // probed for its days AND merged: one batch scan
-    val hasPartitions = Option(root.listFiles())
+    val hasPartitions = Option(new java.io.File(tableDir).listFiles())
       .exists(_.exists(_.getName.startsWith("day=")))
     val merged =
       if (hasPartitions) {
@@ -308,20 +315,24 @@ object EventsStreaming {
           .collect().map(_.getString(0)).toSeq
         val existing = spark.read.parquet(tableDir)
           .select(col("day").cast("string").as("day"), col("event_type"),
-            col("p_cents"), col("p_n"))
+            col("p_cents"), col("p_n"), col("batch_id"))
           .filter(col("day").isin(days: _*))
-        existing.unionByName(partials)
+        val done = existing.filter(col("batch_id") >= batchId)
+          .select(col("day")).distinct().collect().map(_.getString(0)).toSet
+        val fresh = days.filterNot(done)
+        if (fresh.isEmpty) return // replayed batch: every day already merged
+        existing.drop("batch_id").unionByName(partials)
+          .filter(col("day").isin(fresh: _*))
           .groupBy(col("day"), col("event_type"))
           .agg(sum(col("p_cents")).as("p_cents"), sum(col("p_n")).as("p_n"))
       } else partials
     // localCheckpoint breaks the file lineage: we overwrite the very
     // partitions we just read (read-then-rewrite is the upsert contract)
-    merged.localCheckpoint()
+    merged.withColumn("batch_id", lit(batchId)).localCheckpoint()
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("day")
       .parquet(tableDir)
-    appliedMarker.createNewFile()
   }
 
   /** Streaming daily window aggregation — identical result contract to
@@ -391,7 +402,7 @@ object EventsStreaming {
     val streamed = runToParquet(spark, agg, "graft_stream_quantile", OutputMode.Complete)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_type"), cents.as("c"))
-    graft.operators.Analytics.quantileRankAudit(ev, streamed)
+    Analytics.quantileRankAudit(ev, streamed)
   }
 
   /** The production-shaped form of the daily window: APPEND mode with a
@@ -502,7 +513,7 @@ object EventsStreaming {
     val agg = landingStream(spark, stagedDir(spark, sfDir, withEos = true))
       .withWatermark("ts", "1 hour")
       .filter(col("event_type") =!= "eos" || col("ts").isNull)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
+      .groupBy(col("user_id"), session_window(col("ts"), Analytics.SessionGap).as("w"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(12,2)")).cast("double").as("session_value"))
       .select(col("user_id"),
@@ -664,8 +675,6 @@ object EventsStreaming {
   case class UserSessionState(sessionId: Int, lastTsUs: Long,
       nEvents: Long, startUs: Long, value: Double)
 
-  private val gapUs = 30L * 60 * 1000000
-
   /** Custom streaming state: per-user 30-minute-gap sessionization via
     * flatMapGroupsWithState. Events are sorted within each micro-batch;
     * a session is emitted ONLY when a later event closes it (gap
@@ -706,7 +715,7 @@ object EventsStreaming {
           }
         } else if (st.nEvents == 0) { // first event: open the next session
           st = UserSessionState(st.sessionId + 1, e.ts_us, 1, e.ts_us, e.value)
-        } else if (e.ts_us - st.lastTsUs > gapUs) { // close + reopen
+        } else if (e.ts_us - st.lastTsUs > Analytics.SessionGapUs) { // close + reopen
           out += SessionAgg(userId, st.sessionId, st.nEvents, st.startUs, st.value)
           st = UserSessionState(st.sessionId + 1, e.ts_us, 1, e.ts_us, e.value)
         } else { // continuation — possibly from a previous micro-batch

@@ -169,7 +169,7 @@ object TwsStreaming {
   private class TimerSessionizer
       extends StatefulProcessor[Long, SessEv, SessRow] {
     @transient private var st: ValueState[SessState] = _
-    private val gapUs = 30L * 60 * 1000000L
+    private val gapUs = graft.operators.Analytics.SessionGapUs
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState[SessState](

@@ -3,8 +3,8 @@ package graft
 import graft.GraftConf._
 
 /** Every `graft.*` key through its one reader: unset reads today's
-  * default, a malformed value fails naming the key, and booleans take
-  * `1`/`0` as well as `true`/`false`.
+  * default, a malformed value fails naming the key, and README's
+  * settings table lists exactly these keys.
   */
 class GraftConfSpec extends SparkTestBase {
 
@@ -13,14 +13,11 @@ class GraftConfSpec extends SparkTestBase {
     */
   private val table: Seq[(Key[_], Option[Any], Option[String])] = Seq(
     (CheckpointDir, None, None),
-    (CheckpointSkip, Some(false), Some("yes")),
     (CheckpointLevel, None, Some("MEMORY_AND_DISKS")),
     (DedupBroadcastIdLimit, Some(2000000L), Some("2M")),
     (DedupExactGenLimit, Some(1000000L), Some("1e6")),
     (DedupStopBroadcastLimit, Some(1000000L), Some("lots")),
     (LayoutMinBytes, Some(64L << 20), Some("64m")),
-    (PathsMaxEventsPerUser, Some(10000), Some("0")),
-    (RfmWindowMaxEventRows, Some(2000000L), Some("2,000,000")),
     (StatePartitions, None, Some("-3")),
     (StateProvider, Some("rocksdb"), Some("session")),
     (TfCheckpointMaxBytes, Some(256L << 20), Some("256MB")))
@@ -53,11 +50,11 @@ class GraftConfSpec extends SparkTestBase {
     }
   }
 
-  test("booleans read 1 and 0 as true and false") {
-    for ((v, want) <- Seq("1" -> true, "0" -> false, "true" -> true, "false" -> false))
-      withConf(CheckpointSkip.key, v)(assert(CheckpointSkip(spark) === want, s"${CheckpointSkip.key}=$v"))
-    // and the caller honors it: checkpoint.skip=1 makes truncation the identity
-    val df = spark.range(3).toDF("n")
-    withConf(CheckpointSkip.key, "1")(assert(Checkpoints.truncate(df) eq df))
+  test("README's settings table lists exactly the GraftConf keys") {
+    val rows = scala.io.Source.fromFile("README.md", "UTF-8")
+    val keys = try rows.getLines().collect {
+      case l if l.startsWith("| `graft.") => l.drop(3).takeWhile(_ != '`')
+    }.toList finally rows.close()
+    assert(keys.sorted === GraftConf.all.map(_.key).sorted)
   }
 }

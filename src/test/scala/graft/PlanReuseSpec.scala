@@ -30,23 +30,19 @@ class PlanReuseSpec extends SparkTestBase {
   }
 
   test("q_user_paths: heavy-hitter cap bounds per-user state and flags truncation") {
-    val key = "graft.paths.maxEventsPerUser"
-    spark.conf.set(key, "3")
-    try {
-      val capped = Analytics.userPaths(spark, sf()).collect()
-      // no path may exceed cap steps: the window-rank prune ran before the collect
-      val maxSteps = capped.map(_.getAs[String]("path").split(">").length).max
-      assert(maxSteps <= 3, s"found a $maxSteps-step path despite cap=3")
-      // the fixture has users with >3 events, so truncation must be flagged
-      val truncatedUsers = capped.filter(_.getAs[Boolean]("truncated"))
-        .map(_.getAs[Long]("n_users")).sum
-      assert(truncatedUsers > 0, "expected truncated journeys at cap=3")
-      // no user vanishes: capped journeys are truncated, never dropped
-      val totalUsers = capped.map(_.getAs[Long]("n_users")).sum
-      val distinctUsers = graft.sources.Tables.events(spark, sf())
-        .select(col("user_id")).distinct().count()
-      assert(totalUsers == distinctUsers)
-    } finally spark.conf.unset(key)
+    val capped = Analytics.userPaths(spark, sf(), maxEvents = 3).collect()
+    // no path may exceed cap steps: the window-rank prune ran before the collect
+    val maxSteps = capped.map(_.getAs[String]("path").split(">").length).max
+    assert(maxSteps <= 3, s"found a $maxSteps-step path despite cap=3")
+    // the fixture has users with >3 events, so truncation must be flagged
+    val truncatedUsers = capped.filter(_.getAs[Boolean]("truncated"))
+      .map(_.getAs[Long]("n_users")).sum
+    assert(truncatedUsers > 0, "expected truncated journeys at cap=3")
+    // no user vanishes: capped journeys are truncated, never dropped
+    val totalUsers = capped.map(_.getAs[Long]("n_users")).sum
+    val distinctUsers = graft.sources.Tables.events(spark, sf())
+      .select(col("user_id")).distinct().count()
+    assert(totalUsers == distinctUsers)
     // at the default cap the fixture is untouched: nothing truncates
     val uncapped = Analytics.userPaths(spark, sf()).collect()
     assert(!uncapped.exists(_.getAs[Boolean]("truncated")))

@@ -30,4 +30,19 @@ class RetryRunnerSpec extends SparkTestBase {
     }
     assert(e.getMessage === "permanent #2")
   }
+
+  test("fatal errors propagate on the first attempt without a retry") {
+    for (fatal <- Seq(new InterruptedException("stop"), new OutOfMemoryError("heap"))) {
+      val attempts = scala.collection.mutable.ArrayBuffer.empty[Int]
+      var slept = 0
+      val e = intercept[Throwable] {
+        RetryRunner.withRetries(retries = 2, delayMs = 1L, sleep = _ => slept += 1) {
+          attempt => attempts += attempt; throw fatal
+        }
+      }
+      assert(e eq fatal)
+      assert(attempts.toSeq === Seq(0), fatal.toString)
+      assert(slept === 0, fatal.toString)
+    }
+  }
 }

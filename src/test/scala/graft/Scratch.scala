@@ -7,13 +7,9 @@ package graft
 object Scratch {
   def main(args: Array[String]): Unit = {
     // sized like Bench and Verify (SPARK_GRAFT_CPUS, default 4 here, and
-    // SPARK_GRAFT_SHUFFLE). Plan-dump aid: -Dgraft.checkpoint.skip=true
-    // disables mid-plan lineage truncation so `explain` shows the WHOLE
-    // operator plan (see GraftConf.CheckpointSkip)
-    val skip = GraftConf.CheckpointSkip.key
+    // SPARK_GRAFT_SHUFFLE)
     val spark = GraftSession.start(
-      GraftSession.fromEnv("graft-scratch", Map("SPARK_GRAFT_CPUS" -> "4") ++ sys.env) ++
-        sys.props.get(skip).map(skip -> _),
+      GraftSession.fromEnv("graft-scratch", Map("SPARK_GRAFT_CPUS" -> "4") ++ sys.env),
       logLevel = "ERROR")
     val d = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
 

@@ -37,7 +37,7 @@ class WindowPlanSweepSpec extends SparkTestBase {
         "(one row per corpus source, ~10 values fixed by the data model)"),
     "q_rfm" ->
       ("size-gated fallback: the ntile windows are only PLANNED when the " +
-        "counted events cardinality is under graft.rfm.windowMaxEventRows " +
+        "counted events cardinality is under rfmSegments' windowMaxEventRows " +
         "(default 2M) — bounded by the gate value by construction; the " +
         "at-scale path is pinned window-free by the dedicated test below")
   )
@@ -73,9 +73,7 @@ class WindowPlanSweepSpec extends SparkTestBase {
       "gated window form") {
     import org.apache.spark.sql.functions._
     // force the at-scale path by zeroing the gate …
-    spark.conf.set("graft.rfm.windowMaxEventRows", "0")
-    val big = try operators.Analytics.rfmSegments(spark, sf())
-    finally spark.conf.unset("graft.rfm.windowMaxEventRows")
+    val big = operators.Analytics.rfmSegments(spark, sf(), windowMaxEventRows = 0L)
     assert(emptyKeyWindows(big.queryExecution.optimizedPlan).isEmpty,
       "distributed rfm path must not plan any empty-key window")
     // … and prove it deals bit-identical segments to the window form
