@@ -68,11 +68,8 @@ object GraftConf {
   val StateProvider = new Setting("graft.streaming.stateProvider",
     Kind[String]("rocksdb|heap", Some(_).filter(Set("rocksdb", "heap"))), "rocksdb")
 
-  /** Corpus bytes above which tf is not materialized for reuse. */
-  val TfCheckpointMaxBytes = new Setting("graft.text.tfCheckpointMaxBytes", bytes, 256L << 20)
-
   /** Every key; `GraftConfSpec` checks each one. */
   val all: Seq[Key[_]] = Seq(CheckpointDir, CheckpointLevel,
     DedupBroadcastIdLimit, DedupExactGenLimit, DedupStopBroadcastLimit,
-    LayoutMinBytes, StatePartitions, StateProvider, TfCheckpointMaxBytes)
+    LayoutMinBytes, StatePartitions, StateProvider)
 }

@@ -68,6 +68,22 @@ object GraftSession {
       env.get("SPARK_GRAFT_CKPT_LEVEL").map(GraftConf.CheckpointLevel.key -> _)
   }
 
+  /** Runs `body` with `confs` set on `spark`'s session, then puts back
+    * each key's explicitly set value, or unsets a key that had none:
+    * `conf.get` falls back to a key's default, and restoring that would
+    * leave the default set explicitly. The one place outside session
+    * construction that writes a session conf.
+    */
+  def withConfs[A](spark: SparkSession, confs: Seq[(String, String)])(body: => A): A = {
+    val set = spark.conf.getAll
+    val old = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   def start(conf: Map[String, String], logLevel: String = "WARN",
       hive: Boolean = false): SparkSession = {
     val b = SparkSession.builder().config(conf)

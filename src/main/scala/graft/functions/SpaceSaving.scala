@@ -32,58 +32,48 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Eviction scans for the min counter — O(k) per eviction, fine at
   * k ≤ a few thousand (a production k≫10⁴ variant would keep a
-  * min-heap beside the map; same state, same merge).
+  * min-heap beside the map; same state, same merge). The buffer holds
+  * counts only: the per-entry error bound of the classic form is never
+  * read, since the consumer recounts the candidates exactly.
   */
 case class SpaceSavingAgg(
     child: Expression,
     capacity: Int = 512,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[String, (Long, Long)]]
+  extends TypedImperativeAggregate[mutable.HashMap[String, Long]]
   with UnaryLike[Expression] {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "space_saving"
 
-  override def createAggregationBuffer(): mutable.HashMap[String, (Long, Long)] =
+  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
     mutable.HashMap.empty
 
-  override def update(buf: mutable.HashMap[String, (Long, Long)],
-      input: InternalRow): mutable.HashMap[String, (Long, Long)] = {
+  override def update(buf: mutable.HashMap[String, Long],
+      input: InternalRow): mutable.HashMap[String, Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val item = v.asInstanceOf[UTF8String].toString
-      buf.get(item) match {
-        case Some((c, e)) => buf.update(item, (c + 1, e))
-        case None if buf.size < capacity => buf.update(item, (1L, 0L))
-        case None =>
-          // evict the min-count entry; the newcomer inherits its count
-          // as overestimate (count+1) with that count recorded as error
-          val (mk, (mc, _)) = buf.minBy { case (_, (c, _)) => c }
-          buf.remove(mk)
-          buf.update(item, (mc + 1, mc))
-      }
+      SpaceSaving.offer(buf, v.asInstanceOf[UTF8String].toString, capacity)
     }
     buf
   }
 
-  override def merge(a: mutable.HashMap[String, (Long, Long)],
-      b: mutable.HashMap[String, (Long, Long)]): mutable.HashMap[String, (Long, Long)] = {
-    def minOf(m: mutable.HashMap[String, (Long, Long)]): Long =
+  override def merge(a: mutable.HashMap[String, Long],
+      b: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
+    def minOf(m: mutable.HashMap[String, Long]): Long =
       if (m.size < capacity) 0L
-      else m.valuesIterator.map(_._1).min
+      else m.valuesIterator.min
     val minA = minOf(a)
     val minB = minOf(b)
-    val out = mutable.HashMap.empty[String, (Long, Long)]
+    val out = mutable.HashMap.empty[String, Long]
     (a.keySet ++ b.keySet).foreach { k =>
-      val (ca, ea) = a.getOrElse(k, (minA, minA))
-      val (cb, eb) = b.getOrElse(k, (minB, minB))
-      out.update(k, (ca + cb, ea + eb))
+      out.update(k, a.getOrElse(k, minA) + b.getOrElse(k, minB))
     }
     if (out.size <= capacity) out
     else {
-      val keep = out.toSeq.sortBy { case (k, (c, _)) => (-c, k) }.take(capacity)
+      val keep = out.toSeq.sortBy { case (k, c) => (-c, k) }.take(capacity)
       mutable.HashMap(keep: _*)
     }
   }
@@ -91,31 +81,30 @@ case class SpaceSavingAgg(
   /** Candidate items only — counts are overestimates by design; the
     * consumer recounts exactly. Sorted for deterministic output.
     */
-  override def eval(buf: mutable.HashMap[String, (Long, Long)]): Any =
+  override def eval(buf: mutable.HashMap[String, Long]): Any =
     new GenericArrayData(
       buf.keysIterator.toArray.sorted.map(UTF8String.fromString(_): AnyRef))
 
-  override def serialize(buf: mutable.HashMap[String, (Long, Long)]): Array[Byte] = {
+  override def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     out.writeInt(buf.size)
-    buf.foreach { case (k, (c, e)) =>
+    buf.foreach { case (k, c) =>
       val kb = k.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out.writeInt(kb.length); out.write(kb); out.writeLong(c); out.writeLong(e)
+      out.writeInt(kb.length); out.write(kb); out.writeLong(c)
     }
     out.flush()
     bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, (Long, Long)] = {
+  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val n = in.readInt()
-    val m = mutable.HashMap.empty[String, (Long, Long)]
+    val m = mutable.HashMap.empty[String, Long]
     var i = 0
     while (i < n) {
       val kb = new Array[Byte](in.readInt()); in.readFully(kb)
-      m.update(new String(kb, java.nio.charset.StandardCharsets.UTF_8),
-        (in.readLong(), in.readLong()))
+      m.update(new String(kb, java.nio.charset.StandardCharsets.UTF_8), in.readLong())
       i += 1
     }
     m
@@ -130,6 +119,21 @@ case class SpaceSavingAgg(
 }
 
 object SpaceSaving {
+  /** Counts one occurrence of `item` in a summary of at most `capacity`
+    * entries: a present item counts up, a new one enters while there is
+    * room, and otherwise replaces the minimum-count entry and takes its
+    * count + 1 (an overestimate, never an undercount).
+    */
+  def offer(m: mutable.HashMap[String, Long], item: String, capacity: Int): Unit =
+    m.get(item) match {
+      case Some(c) => m.update(item, c + 1)
+      case None if m.size < capacity => m.update(item, 1L)
+      case None =>
+        val (mk, mc) = m.minBy(_._2)
+        m.remove(mk)
+        m.update(item, mc + 1)
+    }
+
   def space_saving(c: Column, capacity: Int): Column =
     org.apache.spark.sql.GraftExpressionBridge.column(
       SpaceSavingAgg(

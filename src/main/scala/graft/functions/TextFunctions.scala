@@ -39,6 +39,19 @@ object TextFunctions {
     when(n >= 3, tri).otherwise(array(normText(c)))
   }
 
+  /** Adjacent whitespace-token pairs as `struct(prev, cur)`, in order; a
+    * document shorter than 2 tokens has none. Built from shifted slices
+    * like [[shingles3]].
+    */
+  def bigrams(c: Column): Column = {
+    val t = wsTokens(c)
+    val n = size(t)
+    when(n >= 2,
+      zip_with(slice(t, lit(1), n - 1), slice(t, lit(2), n - 1),
+        (x, y) => struct(x.as("prev"), y.as("cur"))))
+      .otherwise(array().cast("array<struct<prev:string,cur:string>>"))
+  }
+
   /** 60-bit shingle fingerprint: the first 15 hex chars of md5, as a
     * non-negative BIGINT (the [[graft.operators.Dedup.winnow]] gram-hash
     * construction, promoted to the postings dedup family). The heavy

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.GraftConf
+import graft.{GraftConf, GraftSession}
 import graft.functions.TextFunctions._
 import graft.Checkpoints.TruncateOps
 import graft.sources.Tables
@@ -340,12 +340,9 @@ object Dedup {
     // pairs — so a handful of shuffle partitions minimizes per-round
     // fixed job cost; at warehouse scale this is sized to the edge
     // count (or left to AQE), not to the corpus.
-    val pKey = "spark.sql.shuffle.partitions"
-    val oldP = spark.conf.get(pKey)
-    spark.conf.set(pKey, "8")
-    try {
+    GraftSession.withConfs(spark, Seq("spark.sql.shuffle.partitions" -> "8")) {
       componentsLoop(spark, pairs, nodes, maxRounds)
-    } finally spark.conf.set(pKey, oldP)
+    }
   }
 
   private def componentsLoop(spark: SparkSession, pairs: DataFrame,

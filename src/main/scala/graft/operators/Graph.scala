@@ -31,15 +31,24 @@ object Graph {
 
   private val Scale = 1000000000000L // 10^12 micro-units of rank mass
 
+  /** The minhash candidate pairs `(doc_a, doc_b)`, lineage-truncated:
+    * the undirected edge list every graph key starts from.
+    */
+  private def candidatePairs(spark: SparkSession, sfDir: String): DataFrame =
+    Dedup.minhashPairs(spark, sfDir)
+      .select(col("doc_a"), col("doc_b")).truncateLineage()
+
+  /** Both directions of every pair, as directed `(src, dst)` edges. */
+  private def bothDirections(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+
   /** 3-iteration PageRank (damping 0.85) over the minhash candidate
     * graph. Returns (doc_id, degree, pagerank_f BIGINT micro-units,
     * pagerank DOUBLE rounded from the integer — display only).
     */
   def pagerank(spark: SparkSession, sfDir: String, iters: Int = 3): DataFrame = {
-    val pairs = Dedup.minhashPairs(spark, sfDir)
-      .select(col("doc_a"), col("doc_b")).truncateLineage()
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val edges = bothDirections(candidatePairs(spark, sfDir))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val nodes = Tables.documents(spark, sfDir).select(col("doc_id"))
     // corpus size rides the plan as a broadcast 1-row aggregate (BNLJ)
@@ -89,28 +98,19 @@ object Graph {
     * in memory.
     */
   def triangles(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = Dedup.minhashPairs(spark, sfDir)
-      .select(col("doc_a"), col("doc_b")).truncateLineage()
+    val pairs = candidatePairs(spark, sfDir)
     val deg = pairs.select(col("doc_a").as("v"))
       .union(pairs.select(col("doc_b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
     // orient each pair from (deg, id)-smaller to larger endpoint
+    val aFirst = col("dega") < col("degb") ||
+      (col("dega") === col("degb") && col("doc_a") < col("doc_b"))
+    def pick(ifA: String, ifB: String) = when(aFirst, col(ifA)).otherwise(col(ifB))
     val oriented = pairs
       .join(deg.select(col("v").as("doc_a"), col("deg").as("dega")), "doc_a")
       .join(deg.select(col("v").as("doc_b"), col("deg").as("degb")), "doc_b")
-      .select(
-        when(col("dega") < col("degb")
-            || (col("dega") === col("degb") && col("doc_a") < col("doc_b")),
-          col("doc_a")).otherwise(col("doc_b")).as("src"),
-        when(col("dega") < col("degb")
-            || (col("dega") === col("degb") && col("doc_a") < col("doc_b")),
-          col("doc_b")).otherwise(col("doc_a")).as("dst"),
-        when(col("dega") < col("degb")
-            || (col("dega") === col("degb") && col("doc_a") < col("doc_b")),
-          col("dega")).otherwise(col("degb")).as("deg_src"),
-        when(col("dega") < col("degb")
-            || (col("dega") === col("degb") && col("doc_a") < col("doc_b")),
-          col("degb")).otherwise(col("dega")).as("deg_dst"))
+      .select(pick("doc_a", "doc_b").as("src"), pick("doc_b", "doc_a").as("dst"),
+        pick("dega", "degb").as("deg_src"), pick("degb", "dega").as("deg_dst"))
       .truncateLineage()
     // wedges at the lowest-ordered vertex: (u→v, u→w) with v ≺ w in the
     // same (deg, id) order, closed by the oriented edge v→w
@@ -158,10 +158,7 @@ object Graph {
     */
   def kcore(spark: SparkSession, sfDir: String, k: Int = 2,
       rounds: Int = 3): DataFrame = {
-    val pairs = Dedup.minhashPairs(spark, sfDir)
-      .select(col("doc_a"), col("doc_b")).truncateLineage()
-    val edges0 = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val edges0 = bothDirections(candidatePairs(spark, sfDir))
     // Truncate lineage once per round (the CC-loop policy, durable via
     // graft.cc.checkpointDir): each round references the previous edge
     // set THREE times (degree agg + two semi probes), so without the cut
@@ -223,10 +220,7 @@ object Graph {
     */
   def labelProp(spark: SparkSession, sfDir: String, iters: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pairs = Dedup.minhashPairs(spark, sfDir)
-      .select(col("doc_a"), col("doc_b")).truncateLineage()
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val edges = bothDirections(candidatePairs(spark, sfDir))
     val init = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("doc_id").as("lbl"))
     val last = (1 to iters).foldLeft(init) { (lab, _) =>

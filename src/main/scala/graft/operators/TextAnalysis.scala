@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.GraftConf
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 
@@ -52,6 +51,17 @@ object TextAnalysis {
     "de" -> "\\b(der|die|das|und|ist)\\b",
     "fr" -> "\\b(le|les|des|et|est)\\b")
 
+  /** The predicted language from each marker's count `n(lang, pattern)`:
+    * the largest count, ties to the earlier marker (zh > en > es > de >
+    * fr), zero evidence → 'und'.
+    */
+  private def langVote(n: ((String, String)) => Column): Column = {
+    val m = greatest(langMarkers.map(n): _*)
+    langMarkers.foldLeft(when(m === 0, lit("und"))) {
+      case (acc, marker) => acc.when(n(marker) === m, lit(marker._1))
+    }
+  }
+
   /** Language ID by marker n-gram/stopword counts with a fixed precedence
     * (zh > en > es > de > fr) on ties; zero evidence → 'und'. A heuristic,
     * not a model — but a deterministic, engine-portable one.
@@ -60,32 +70,34 @@ object TextAnalysis {
     val scored = Tables.documents(spark, sfDir).select(
       col("doc_id") +: col("lang").as("claimed_lang") +:
         langMarkers.map { case (l, p) => patternCount(col("text"), p).as(s"${l}_n") }: _*)
-    val m = greatest(langMarkers.map { case (l, _) => col(s"${l}_n") }: _*)
-    val pred = langMarkers.foldLeft(when(m === 0, lit("und"))) {
-      case (acc, (l, _)) => acc.when(col(s"${l}_n") === m, lit(l))
-    }
-    scored.withColumn("pred_lang", pred)
+    scored.withColumn("pred_lang", langVote { case (l, _) => col(s"${l}_n") })
       .withColumn("lang_match", col("pred_lang") === col("claimed_lang"))
   }
 
-  /** Quality scoring with integer-exact arithmetic (ratio thresholds are
-    * expressed as cross-multiplications so no engine ever divides):
-    * +1 each for: ≥10 tokens, ≥50 chars, punctuation ≤5% of chars,
-    * contains a common-English stopword.
+  /** The four quality features of `text`: whitespace tokens, characters,
+    * sentence punctuation marks and common-English stopwords.
     */
-  def qualityScore(spark: SparkSession, sfDir: String): DataFrame = {
-    val nTokens = size(wsTokens(col("text")))
-    val nChars = length(col("text"))
-    val punct = nChars - length(regexp_replace(col("text"), "[.,!?;:]", ""))
-    val stop = patternCount(col("text"), "\\b(the|a|of|and|to)\\b")
+  private val nTokens = size(wsTokens(col("text")))
+  private val nChars = length(col("text"))
+  private val nPunct = nChars - length(regexp_replace(col("text"), "[.,!?;:]", ""))
+  private val nStop = patternCount(col("text"), "\\b(the|a|of|and|to)\\b")
+
+  /** The 0-4 quality points: +1 each for ≥10 tokens, ≥50 chars,
+    * punctuation ≤5% of chars (as a cross-multiplication, so no engine
+    * divides) and a stopword.
+    */
+  private val qualityPoints = (nTokens >= 10).cast("int") + (nChars >= 50).cast("int") +
+    (nPunct * 20 <= nChars).cast("int") + (nStop > 0).cast("int")
+
+  /** Quality scoring with integer-exact arithmetic: the four features and
+    * their [[qualityPoints]].
+    */
+  def qualityScore(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir).select(
       col("doc_id"),
       nTokens.as("n_tokens"), nChars.as("n_chars"),
-      punct.as("n_punct"), stop.as("n_stopwords"),
-      ((nTokens >= 10).cast("int") + (nChars >= 50).cast("int")
-        + (punct * 20 <= nChars).cast("int") + (stop > 0).cast("int"))
-        .as("quality_score"))
-  }
+      nPunct.as("n_punct"), nStop.as("n_stopwords"),
+      qualityPoints.as("quality_score"))
 
   /** Quality-classifier INFERENCE — the shape of every learned filter in
     * a curation pipeline (fastText-style quality/toxicity models): a
@@ -101,12 +113,7 @@ object TextAnalysis {
     * linear score, never a float `exp`.
     */
   def linearScore(spark: SparkSession, sfDir: String): DataFrame = {
-    val nTokens = size(wsTokens(col("text"))).cast("long")
-    val nChars = length(col("text")).cast("long")
-    val punct = (length(col("text"))
-      - length(regexp_replace(col("text"), "[.,!?;:]", ""))).cast("long")
-    val stop = patternCount(col("text"), "\\b(the|a|of|and|to)\\b").cast("long")
-    val feats = array(lit(1L), nTokens, nChars, punct, stop)
+    val feats = array(lit(1L) +: Seq(nTokens, nChars, nPunct, nStop).map(_.cast("long")): _*)
     val weights = array(Seq(-800000L, 20000L, 500L, -60000L, 30000L).map(lit): _*)
     val score = aggregate(zip_with(feats, weights, (x, w) => x * w),
       lit(0L), (acc, x) => acc + x)
@@ -208,11 +215,6 @@ object TextAnalysis {
       s"stack(${cols.length}, $stacked) AS (column_name, n_nulls, n_distinct, min_str, max_str)"))
   }
 
-  /** TF-IDF: the most characteristic token per document. Long-format
-    * shape — explode tokens, tf per (doc, token), df per token, score =
-    * tf · ln(N/df) — two hash aggregations and a broadcast-size df side.
-    * Ties break on the token string so ranking is deterministic.
-    */
   /** Materialization WINDOW for the token-stream checkpoint rewrites
     * below (tfidfTop / bm25Top's tf, lmScore's exploded fp60 stream):
     * lineage-truncating the shared relation saves a full corpus
@@ -223,8 +225,8 @@ object TextAnalysis {
     *    sizes the checkpoint write costs more than the saved pass
     *    (measured r15, isolated 3-pass sf0.1: tfidf 0.640→0.753 s
     *    truncated) — the documentsLight/spread-floor discipline.
-    *  - CEILING (`graft.text.tfCheckpointMaxBytes`, default 256 MB of
-    *    corpus): past the storage budget the checkpoint THRASHES — at
+    *  - CEILING (`tfMaxBytes`, default [[TfMaxBytes]] of corpus): past
+    *    the storage budget the checkpoint THRASHES — at
     *    sf100 (573 MB corpus) lmScore's ~18 GB exploded-stream
     *    checkpoint logged "Not enough space to cache" ×22 and measured
     *    300.2 s vs the 178.4 s non-truncated ledger entry (269.6 s
@@ -234,14 +236,51 @@ object TextAnalysis {
     *    ceiling is sized for this one-box 48 g probe envelope; a
     *    production cluster raises it in proportion to aggregate
     *    executor storage, where the materialize-once plan wins at any
-    *    corpus size (the SPARK_GRAFT_CKPT_LEVEL sibling knob).
+    *    corpus size (the SPARK_GRAFT_CKPT_LEVEL sibling knob). Only
+    *    `lmScore` and `bm25Top` take it as an argument: their floor is 0,
+    *    so a small corpus reaches both sides of the window.
     */
   private def tfReuseWorthIt(spark: SparkSession, sfDir: String,
-      minBytes: Long = 4L << 20): Boolean = {
+      minBytes: Long, maxBytes: Long): Boolean = {
     val bytes = Tables.fsFingerprint(spark, s"$sfDir/documents.parquet")._2
-    bytes >= minBytes && bytes <= GraftConf.TfCheckpointMaxBytes(spark)
+    bytes >= minBytes && bytes <= maxBytes
   }
 
+  /** Default corpus-byte CEILING of the token-stream checkpoints. */
+  val TfMaxBytes: Long = 256L << 20
+
+  /** tf per (doc_id, token) over `docs`' whitespace tokens, and df per
+    * token derived FROM tf — df(token) = |{doc : tf(doc,token) > 0}| =
+    * tf's row count per token — instead of a second distinct() pass over
+    * the re-exploded corpus. The AST-level derivation alone is NOT
+    * enough: Catalyst prunes tf's count column under the df consumer,
+    * which makes the two aggregate subtrees canonically different, so
+    * ReuseExchange never unifies them and the corpus was tokenized twice
+    * (the executed r15-before plan shows two Generate(explode) subtrees,
+    * each over its own scan). So tf is lineage-truncated while
+    * [[tfReuseWorthIt]] holds for the caller's window: materializing the
+    * reduced tf relation (doc_id, token, count — the corpus collapsed
+    * ~tf-fold) makes the second pass an in-memory re-aggregation (guide
+    * §2.3/§2.4 + §5 localCheckpoint; the q_lm_score round-15 recipe).
+    * Returns (tf, df, whether tf is materialized).
+    */
+  private def tfDf(spark: SparkSession, sfDir: String, docs: DataFrame,
+      minBytes: Long, maxBytes: Long): (DataFrame, DataFrame, Boolean) = {
+    import graft.Checkpoints.TruncateOps
+    val tfRaw = docs.select(col("doc_id"), explode(wsTokens(col("text"))).as("token"))
+      .groupBy(col("doc_id"), col("token"))
+      .agg(count(lit(1)).as("tf"))
+    val worthIt = tfReuseWorthIt(spark, sfDir, minBytes, maxBytes)
+    val tf = if (worthIt) tfRaw.truncateLineage() else tfRaw
+    (tf, tf.groupBy(col("token")).agg(count(lit(1)).as("df")), worthIt)
+  }
+
+  /** TF-IDF: the most characteristic token per document. Long-format
+    * shape — explode tokens, tf per (doc, token), df per token, score =
+    * tf · ln(N/df) — two hash aggregations and a broadcast-size df side.
+    * Ties break on the token string so ranking is deterministic. Its tf
+    * checkpoint floor is 4 MiB (see [[tfReuseWorthIt]]).
+    */
   def tfidfTop(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sfDir)
@@ -249,25 +288,7 @@ object TextAnalysis {
     // joined in (BNLJ over 1 row), so the whole query is one job — no
     // separate driver-side count() scan.
     val n = broadcast(docs.agg(count(lit(1)).cast("double").as("n_docs")))
-    import graft.Checkpoints.TruncateOps
-    val toks = docs.select(col("doc_id"), explode(wsTokens(col("text"))).as("token"))
-    // tf computed ONCE and lineage-truncated. df is then derived FROM tf
-    // — df(token) = |{doc : tf(doc,token) > 0}| = tf's row count per
-    // token — instead of a second distinct() pass over the re-exploded
-    // corpus. The AST-level derivation alone is NOT enough: Catalyst
-    // prunes tf's count column under the df consumer, which makes the
-    // two aggregate subtrees canonically different, so ReuseExchange
-    // never unifies them and the corpus was tokenized twice (the
-    // executed r15-before plan shows two Generate(explode) subtrees,
-    // each over its own scan). Materializing the reduced tf relation
-    // (doc_id, token, count — the corpus collapsed ~tf-fold) makes the
-    // second pass an in-memory re-aggregation (guide §2.3/§2.4 +
-    // §5 localCheckpoint; the q_lm_score round-15 recipe).
-    val tfRaw = toks.groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    val tf = if (tfReuseWorthIt(spark, sfDir)) tfRaw.truncateLineage()
-      else tfRaw
-    val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    val (tf, df, _) = tfDf(spark, sfDir, docs, minBytes = 4L << 20, maxBytes = TfMaxBytes)
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("token"))
     tf.join(df, "token")
@@ -555,15 +576,10 @@ object TextAnalysis {
     * out-of-vocabulary floor and broadcast it, turning the scoring join
     * into a map-side probe.
     */
-  def lmScore(spark: SparkSession, sfDir: String): DataFrame = {
+  def lmScore(spark: SparkSession, sfDir: String,
+      tfMaxBytes: Long = TfMaxBytes): DataFrame = {
     import graft.Checkpoints.TruncateOps
     val docs = Tables.documents(spark, sfDir)
-    val t = wsTokens(col("text"))
-    val n = size(t)
-    val bigrams = when(n >= 2,
-      zip_with(slice(t, lit(1), n - 1), slice(t, lit(2), n - 1),
-        (x, y) => struct(x.as("prev"), y.as("cur"))))
-      .otherwise(array().cast("array<struct<prev:string,cur:string>>"))
     // fingerprints are computed POST-explode as plain column expressions
     // (whole-stage-codegen'd md5), not inside the zip_with lambda
     // (interpreted HOF evaluation); the strings die in-pipeline before
@@ -573,16 +589,16 @@ object TextAnalysis {
     // 30.2 → 7.8 s warm; at sf100 the ~18 GB stream thrashes the 48 g
     // box (300.2 s vs 178.4 s without — "Not enough space to cache"
     // ×22, and MEMORY_AND_DISK_SER still 269.6 s), so past the
-    // tfCheckpointMaxBytes ceiling the stream recomputes per consumer
+    // tfMaxBytes ceiling the stream recomputes per consumer
     // instead. The bi-count truncation below stays unconditional — the
     // aggregated model relation is small at every scale.
     val docBiRaw = docs
-      .select(col("doc_id"), explode(bigrams).as("bg"))
+      .select(col("doc_id"), explode(bigrams(col("text"))).as("bg"))
       .select(col("doc_id"),
         fp60(concat(col("bg.prev"), lit(" "), col("bg.cur"))).as("fp_bi"),
         fp60(col("bg.prev")).as("fp_prev"))
       .repartition(col("fp_bi"))
-    val docBi = if (tfReuseWorthIt(spark, sfDir, minBytes = 0L))
+    val docBi = if (tfReuseWorthIt(spark, sfDir, minBytes = 0L, tfMaxBytes))
       docBiRaw.truncateLineage() else docBiRaw
     val bi = docBi.groupBy(col("fp_bi"), col("fp_prev"))
       .agg(count(lit(1)).as("c_bi"))
@@ -618,17 +634,11 @@ object TextAnalysis {
     */
   def pmiTop(spark: SparkSession, sfDir: String,
       minCount: Int = 5, k: Int = 100): DataFrame = {
-    val t = wsTokens(col("text"))
-    val n = size(t)
     val docs = Tables.documents(spark, sfDir)
-    val uni = docs.select(explode(t).as("token"))
+    val uni = docs.select(explode(wsTokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("c_tok"))
     val nUni = broadcast(uni.agg(sum(col("c_tok")).as("n_uni")))
-    val bigrams = when(n >= 2,
-      zip_with(slice(t, lit(1), n - 1), slice(t, lit(2), n - 1),
-        (x, y) => struct(x.as("prev"), y.as("cur"))))
-      .otherwise(array().cast("array<struct<prev:string,cur:string>>"))
-    val bi = docs.select(explode(bigrams).as("bg"))
+    val bi = docs.select(explode(bigrams(col("text"))).as("bg"))
       .select(col("bg.prev").as("prev"), col("bg.cur").as("cur"))
       .groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("c_bi"))
     val nBi = broadcast(bi.agg(sum(col("c_bi")).as("n_bi")))
@@ -721,17 +731,24 @@ object TextAnalysis {
     * the K surviving rows — bounded by the vocab size, not the corpus,
     * so the shape holds at 100 TB.
     */
-  def vocab(spark: SparkSession, sfDir: String, minCount: Int = 5, k: Int = 500): DataFrame = {
+  def vocab(spark: SparkSession, sfDir: String, minCount: Int = 5, k: Int = 500): DataFrame =
+    topTokens(spark, sfDir, minCount, k)
+      .select((col("rnk") - 1).as("token_id"), col("token"), col("n"))
+
+  /** The `k` most frequent whitespace tokens with at least `minCount`
+    * occurrences, `n` each, ranked from 1 as `rnk` by (n desc, token).
+    */
+  private def topTokens(spark: SparkSession, sfDir: String, minCount: Int,
+      k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val counts = Tables.documentsLight(spark, sfDir)
+    val order = Seq(col("n").desc, col("token"))
+    Tables.documentsLight(spark, sfDir)
       .select(explode(wsTokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("n"))
       .filter(col("n") >= minCount)
-      .orderBy(col("n").desc, col("token"))
+      .orderBy(order: _*)
       .limit(k)
-    counts.withColumn("token_id",
-        row_number().over(Window.orderBy(col("n").desc, col("token"))) - 1)
-      .select(col("token_id"), col("token"), col("n"))
+      .withColumn("rnk", row_number().over(Window.orderBy(order: _*)))
   }
 
   /** Out-of-vocabulary rate per document against the [[vocab]] build —
@@ -770,14 +787,7 @@ object TextAnalysis {
     * slope in ppm.
     */
   def zipfFit(spark: SparkSession, sfDir: String, topK: Int = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val counts = Tables.documentsLight(spark, sfDir)
-      .select(explode(wsTokens(col("text"))).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("token")).limit(topK)
-    val pts = counts
-      .withColumn("rnk",
-        row_number().over(Window.orderBy(col("n").desc, col("token"))))
+    val pts = topTokens(spark, sfDir, minCount = 1, topK)
       .select(
         round(log(col("rnk").cast("double")) * 1e6).cast("long").as("x"),
         round(log(col("n").cast("double")) * 1e6).cast("long").as("y"))
@@ -808,22 +818,13 @@ object TextAnalysis {
     */
   def curate(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val nTokens = size(wsTokens(col("text")))
-    val nChars = length(col("text"))
-    val punct = nChars - length(regexp_replace(col("text"), "[.,!?;:]", ""))
-    val stop = patternCount(col("text"), "\\b(the|a|of|and|to)\\b")
-    val quality = (nTokens >= 10).cast("int") + (nChars >= 50).cast("int") +
-      (punct * 20 <= nChars).cast("int") + (stop > 0).cast("int")
-    val m = greatest(langMarkers.map { case (l, p) => patternCount(col("text"), p) }: _*)
-    val pred = langMarkers.foldLeft(when(m === 0, lit("und"))) {
-      case (acc, (l, p)) => acc.when(patternCount(col("text"), p) === m, lit(l))
-    }
+    val pred = langVote { case (_, p) => patternCount(col("text"), p) }
     val canon = col("doc_id") === min(col("doc_id"))
       .over(Window.partitionBy(md5(col("text"))))
     val kept = col("canon") && col("q") >= 3 && col("pred_lang") === col("lang")
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("lang"),
-        nTokens.as("n_tok"), quality.as("q"), pred.as("pred_lang"),
+        nTokens.as("n_tok"), qualityPoints.as("q"), pred.as("pred_lang"),
         canon.as("canon"))
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -843,16 +844,13 @@ object TextAnalysis {
     * per-document argmax.
     */
   def bm25Top(spark: SparkSession, sfDir: String,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      k1: Double = 1.2, b: Double = 0.75, tfMaxBytes: Long = TfMaxBytes): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documentsLight(spark, sfDir)
-    import graft.Checkpoints.TruncateOps
-    val toks = docs.select(col("doc_id"), explode(wsTokens(col("text"))).as("token"))
     // tf computed ONCE (lineage-truncated while tfReuseWorthIt) and df
-    // derived FROM it (guide §2.3/§2.4 + §5; the q_lm_score/tfidfTop
-    // recipe): the original formulation tokenized the corpus THREE
-    // times — once for tf, once for df's distinct, once for dl's
-    // size(wsTokens) — and per-consumer column pruning keeps the
+    // derived FROM it (tfDf): the original formulation tokenized the
+    // corpus THREE times — once for tf, once for df's distinct, once for
+    // dl's size(wsTokens) — and per-consumer column pruning keeps the
     // subtrees canonically different, so ReuseExchange never unified
     // them. df(token) = tf's row count per token. dl is derived from tf
     // (dl(doc) = Σ tf) only while tf is materialized; past the ceiling it
@@ -862,14 +860,11 @@ object TextAnalysis {
     // `stats` ever saw them, so n_docs keeps its own corpus count (a
     // column-pruned scan, no tokenize) while sum_dl — to which empty
     // docs contribute 0 — re-aggregates dl.
-    val tfRaw = toks.groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
     // floor 0: dropping TWO extra passes pays even at sf0.1 (0.866 →
     // 0.825 s isolated); the ceiling still applies (see tfReuseWorthIt)
-    val tfWorthIt = tfReuseWorthIt(spark, sfDir, minBytes = 0L)
-    val tf = if (tfWorthIt) tfRaw.truncateLineage() else tfRaw
+    val (tf, df, tfWorthIt) = tfDf(spark, sfDir, docs, minBytes = 0L, tfMaxBytes)
     // dl = Σ tf is only a win while tf is MATERIALIZED (one in-memory
-    // re-aggregation). Past the tfCheckpointMaxBytes ceiling tf is raw
+    // re-aggregation). Past the tfMaxBytes ceiling tf is raw
     // lineage, and deriving dl from it re-runs the full tokenize +
     // (doc_id, token) aggregate plus a second shuffle — strictly worse
     // than the original map-only dl = per-document token count straight
@@ -882,7 +877,6 @@ object TextAnalysis {
     else docs.select(col("doc_id"), size(wsTokens(col("text"))).as("dl"))
     val stats = broadcast(docs.agg(count(lit(1)).cast("double").as("n_docs"))
       .crossJoin(dl.agg(sum(col("dl")).cast("double").as("sum_dl"))))
-    val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     // operation order mirrored verbatim in the DuckDB oracle: idf first,
     // then the saturation quotient, one multiply at the end
     val idf = log((col("n_docs") - col("df") + lit(0.5))
@@ -917,11 +911,21 @@ object TextAnalysis {
   def heavyHitters(spark: SparkSession, sfDir: String, capacity: Int = 512): DataFrame = {
     val toks = Tables.documents(spark, sfDir)
       .select(explode(wsTokens(col("text"))).as("token"))
+    val cand = toks
+      .agg(graft.functions.SpaceSaving.space_saving(col("token"), capacity).as("hh"))
+      .select(explode(col("hh")).as("token"))
+    recountHeavyHitters(toks, cand, capacity)
+  }
+
+  /** The exact phase of both heavy-hitter keys: the occurrences of each
+    * candidate token in the `toks` stream, kept where they exceed
+    * 1/`capacity` of all tokens. The candidates and the 1-row token
+    * total broadcast.
+    */
+  private[graft] def recountHeavyHitters(toks: DataFrame, cand: DataFrame,
+      capacity: Int): DataFrame = {
     val nTok = broadcast(toks.agg(count(lit(1)).as("n_tok")))
-    val cand = broadcast(
-      toks.agg(graft.functions.SpaceSaving.space_saving(col("token"), capacity).as("hh"))
-        .select(explode(col("hh")).as("token")))
-    toks.join(cand, Seq("token"), "left_semi")
+    toks.join(broadcast(cand), Seq("token"), "left_semi")
       .groupBy(col("token")).agg(count(lit(1)).as("n_occurrences"))
       .crossJoin(nTok)
       .filter(col("n_occurrences") * capacity > col("n_tok"))
@@ -996,6 +1000,14 @@ object TextAnalysis {
     merges.toDF("merge_rank", "left_sym", "right_sym", "pair_count")
   }
 
+  /** The words BPE learns and applies to: one row `w` per lower-cased
+    * letter run of 1 to 30 letters in `docs`' text, after the `carry`
+    * columns.
+    */
+  private def bpeWords(docs: DataFrame, carry: Column*): DataFrame =
+    docs.select(carry :+ explode(split(lower(col("text")), "[^a-z]+")).as("w"): _*)
+      .filter(length(col("w")).between(1, 30))
+
   /** The shared BPE trainer: returns the merge table (driver metadata)
     * and the final segmentation of every distinct word (still
     * persisted — callers unpersist when done).
@@ -1005,9 +1017,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val win = Window.partitionBy("w").orderBy("pos")
     val cumWin = win.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val words = docs
-      .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
-      .filter(length(col("w")).between(1, 30))
+    val words = bpeWords(docs)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
     var toks = words
       .select(col("w"), col("freq"), posexplode(split(col("w"), "")))
@@ -1063,11 +1073,7 @@ object TextAnalysis {
     val (_, toks) = bpeLearn(docs, k)
     val wordCost = toks.groupBy(col("w"))
       .agg(count(lit(1)).as("n_bpe"))
-    val corpusWords = docs
-      .select(col("source"),
-        explode(split(lower(col("text")), "[^a-z]+")).as("w"))
-      .filter(length(col("w")).between(1, 30))
-    val out = corpusWords
+    val out = bpeWords(docs, col("source"))
       .join(broadcast(wordCost), Seq("w"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_words"),

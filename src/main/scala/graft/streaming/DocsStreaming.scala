@@ -252,14 +252,7 @@ object DocsStreaming {
       state.getOption.foreach(s => m ++= s.entries)
       it.foreach { case (tok, _) =>
         n += 1
-        m.get(tok) match {
-          case Some(c) => m.update(tok, c + 1)
-          case None if m.size < capacity => m.update(tok, 1L)
-          case None =>
-            val (mk, mc) = m.minBy(_._2)
-            m.remove(mk)
-            m.update(tok, mc + 1)
-        }
+        graft.functions.SpaceSaving.offer(m, tok, capacity)
       }
       state.update(BucketSketch(n, m.toMap))
       m.keysIterator.map(t => SketchRow(bucket, n, t))
@@ -274,16 +267,11 @@ object DocsStreaming {
     // candidate generator, exactness comes from the recount)
     val lastPerBucket = dumped
       .groupBy(col("bucket")).agg(max(col("n_seen")).as("n_seen"))
-    val cand = broadcast(dumped
+    val cand = dumped
       .join(lastPerBucket, Seq("bucket", "n_seen"))
-      .select(col("token")).distinct())
+      .select(col("token")).distinct()
     val corpus = spark.read.schema(docSchema).parquet(srcDir)
       .select(explode(wsTokens(col("text"))).as("token"))
-    val nTok = broadcast(corpus.agg(count(lit(1)).as("n_tok")))
-    corpus.join(cand, Seq("token"), "left_semi")
-      .groupBy(col("token")).agg(count(lit(1)).as("n_occurrences"))
-      .crossJoin(nTok)
-      .filter(col("n_occurrences") * capacity > col("n_tok"))
-      .select(col("token"), col("n_occurrences"))
+    graft.operators.TextAnalysis.recountHeavyHitters(corpus, cand, capacity)
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.{GraftConf, Staging}
+import graft.{GraftConf, GraftSession, Staging}
 import graft.operators.Analytics
 import graft.sources.Tables
 
@@ -104,12 +104,7 @@ object EventsStreaming {
       SQLConf.SHUFFLE_PARTITIONS.key -> partitions.toString,
       SQLConf.STATE_STORE_PROVIDER_CLASS.key -> provider,
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    // the explicitly set values only: `getOption` falls back to a key's
-    // default, and restoring that would leave the default set explicitly
-    val set = spark.conf.getAll
-    val old = scoped.map { case (k, _) => k -> set.get(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConfs(spark, scoped) {
       val q = result.writeStream
         .option("checkpointLocation", run.resolve("checkpoint").toString)
         .outputMode(mode)
@@ -118,9 +113,6 @@ object EventsStreaming {
         .start()
       q.awaitTermination()
       trailLog.add(Trail(run, q.recentProgress))
-    } finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -136,15 +136,28 @@ class AnalyticsSpec extends SparkTestBase {
   // No operator leaves a conf behind: those that scope one (the CC
   // loop's shuffle partitions, a stream's state scope) restore it, and
   // the rest write none. q_sink_partitioned's row is the test above.
-  for ((name, run) <- Seq[(String, () => Any)](
-      "Tables.events" -> (() => Tables.events(spark, d).count()),
-      "q_backfill_partition" -> (() => canon(SparkEntry.queries("q_backfill_partition")(spark, d))),
-      "q_dedup_components" -> (() => canon(SparkEntry.queries("q_dedup_components")(spark, d))),
-      "q_stream_sessionize" -> (() => canon(SparkEntry.queries("q_stream_sessionize")(spark, d)))))
+  // The "unset" rows start from a session without the scoped key: it
+  // must come back unset, not set to its default.
+  private val shufflePartitions = "spark.sql.shuffle.partitions"
+  private def query(name: String): () => Any =
+    () => canon(SparkEntry.queries(name)(spark, d))
+  for ((name, unset, run) <- Seq[(String, Option[String], () => Any)](
+      ("Tables.events", None, () => Tables.events(spark, d).count()),
+      ("q_backfill_partition", None, query("q_backfill_partition")),
+      ("q_dedup_components", None, query("q_dedup_components")),
+      ("q_stream_sessionize", None, query("q_stream_sessionize")),
+      ("q_dedup_components with shuffle partitions unset", Some(shufflePartitions),
+        query("q_dedup_components")),
+      ("q_stream_sessionize with shuffle partitions unset", Some(shufflePartitions),
+        query("q_stream_sessionize"))))
     test(s"$name leaves the session conf alone") {
-      val before = spark.conf.getAll
-      run()
-      assert(spark.conf.getAll === before)
+      val old = unset.map(k => k -> spark.conf.get(k))
+      unset.foreach(spark.conf.unset)
+      try {
+        val before = spark.conf.getAll
+        run()
+        assert(spark.conf.getAll === before)
+      } finally old.foreach { case (k, v) => spark.conf.set(k, v) }
     }
 
   test("events nanosecond timestamps convert exactly (integer microseconds)") {

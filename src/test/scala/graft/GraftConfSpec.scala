@@ -19,8 +19,7 @@ class GraftConfSpec extends SparkTestBase {
     (DedupStopBroadcastLimit, Some(1000000L), Some("lots")),
     (LayoutMinBytes, Some(64L << 20), Some("64m")),
     (StatePartitions, None, Some("-3")),
-    (StateProvider, Some("rocksdb"), Some("session")),
-    (TfCheckpointMaxBytes, Some(256L << 20), Some("256MB")))
+    (StateProvider, Some("rocksdb"), Some("session")))
 
   private def withConf[A](key: String, value: String)(body: => A): A = {
     spark.conf.set(key, value)

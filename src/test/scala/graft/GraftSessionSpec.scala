@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.TaskContext
 
 /** G3, the reference DAG's `retries: 2`: every session runs three
@@ -47,6 +49,17 @@ class GraftSessionSpec extends SparkTestBase {
     val e = intercept[IllegalArgumentException](
       GraftSession.fromEnv("t", Map("SPARK_GRAFT_CPUS" -> "many")))
     assert(e.getMessage.contains("SPARK_GRAFT_CPUS"))
+  }
+
+  test("no code under src/main/scala but GraftSession writes a session conf") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val writers = try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val text = java.nio.file.Files.readString(p)
+        text.contains("conf.set(") || text.contains("conf.unset(")
+      }.map(root.relativize(_).toString).toList finally files.close()
+    assert(writers === List("graft/GraftSession.scala"))
   }
 
   test("Bench writes bench_full.json only for the default run") {

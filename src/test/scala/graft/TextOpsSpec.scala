@@ -99,16 +99,20 @@ class TextOpsSpec extends SparkTestBase {
       yAllBrute.exceptAll(yAllDerived).isEmpty, "y_all-from-ys != corpus count")
   }
 
-  test("bm25Top past-ceiling fallback (map-only dl) is result-identical to the truncated plan") {
-    // ADVICE r16: past tfCheckpointMaxBytes, bm25Top computes dl with
-    // the original map-only size(wsTokens) instead of re-aggregating a
-    // non-materialized tf. Both branches must produce the same rows.
-    val key = "graft.text.tfCheckpointMaxBytes"
-    val truncated = TextAnalysis.bm25Top(spark, sf()).collect().toSet
-    spark.conf.set(key, "0") // every corpus is past a 0-byte ceiling
-    try {
-      val fallback = TextAnalysis.bm25Top(spark, sf()).collect().toSet
+  // Both sides of the tf-checkpoint ceiling give the same rows. The
+  // fixture is under the default ceiling, so the default call takes the
+  // truncated side, and a 0-byte ceiling puts every corpus past it.
+  // Past it, bm25Top computes dl with the map-only size(wsTokens)
+  // instead of re-aggregating a non-materialized tf, and lmScore
+  // recomputes the bigram stream per consumer.
+  for ((name, run) <- Seq[(String, Long => org.apache.spark.sql.DataFrame)](
+      "bm25Top past-ceiling fallback (map-only dl)" ->
+        (m => TextAnalysis.bm25Top(spark, sf(), tfMaxBytes = m)),
+      "lmScore past-ceiling fallback (per-consumer bigram stream)" ->
+        (m => TextAnalysis.lmScore(spark, sf(), tfMaxBytes = m))))
+    test(s"$name is result-identical to the truncated plan") {
+      val truncated = run(TextAnalysis.TfMaxBytes).collect().toSet
+      val fallback = run(0L).collect().toSet
       assert(fallback === truncated, "fallback branch diverged from truncated branch")
-    } finally spark.conf.unset(key)
-  }
+    }
 }
