@@ -69,9 +69,9 @@ object SimilarityQueries {
   private val adaptivePlanesSql =
     "(SELECT greatest(4, length(bin(count(*) // 32))) FROM embeddings)"
 
-  /** Mirrors Similarity.bucketsWithSubkey: signs under P + 8 planes,
-    * `bucket` = the first P bits (the block key), `subkey` = the full
-    * string (the similarity-locality rank order inside a block).
+  /** Mirrors the blocks of Similarity.cappedEmbeddingPairs: signs under
+    * P + 8 planes, `bucket` = the first P bits (the block key), `subkey` =
+    * the full string (the similarity-locality rank order inside a block).
     */
   private def cappedBucketsCte(planesExpr: String) =
     s"""${planesCte(s"($planesExpr + 8)")},

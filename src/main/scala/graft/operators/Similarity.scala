@@ -4,7 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorExpressions.cosine_similarity
+import graft.functions.VectorExpressions.{cosine_similarity, quantized_cosine}
 import graft.Checkpoints.TruncateOps
 import graft.sources.Tables
 
@@ -39,12 +39,29 @@ object Similarity {
     }
   }
 
+  /** The query row: every single-query search asks for vec_id 0's
+    * neighbours.
+    */
+  private val isQuery: Column = col("vec_id") === 0
+
   /** The query vector row (vec_id = 0), broadcast to every executor. */
   private def queryVecFrom(emb: DataFrame): DataFrame =
-    broadcast(emb.filter(col("vec_id") === 0)
+    broadcast(emb.filter(isQuery)
       .select(col("embedding").as("q_embedding")))
 
-  private def score(e: Column, q: Column): Column = cosine_similarity(e, q)
+  /** The exact ranking every search ends in, whatever generated its
+    * candidates: `cosine` of each candidate's `embedding` against the
+    * `q_embedding` it carries, the `k` best by (score desc, vec_id),
+    * projected to vec_id, the `carried` columns and the 6-place score.
+    */
+  private def exactTopK(cand: DataFrame, k: Int,
+      cosine: (Column, Column) => Column, carried: Seq[String]): DataFrame =
+    cand
+      .withColumn("raw_score", cosine(col("embedding"), col("q_embedding")))
+      .orderBy(col("raw_score").desc, col("vec_id"))
+      .limit(k)
+      .select((col("vec_id") +: carried.map(col)) :+
+        round(col("raw_score"), 6).as("score"): _*)
 
   /** Brute-force top-k cosine against the query vector. */
   def topK(spark: SparkSession, sfDir: String, k: Int = 20): DataFrame =
@@ -52,12 +69,7 @@ object Similarity {
 
   /** Brute force over an explicit (vec_id, label, embedding) relation. */
   private[graft] def topKFrom(emb: DataFrame, k: Int): DataFrame =
-    emb.crossJoin(queryVecFrom(emb))
-      .withColumn("raw_score", score(col("embedding"), col("q_embedding")))
-      .orderBy(col("raw_score").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"),
-        round(col("raw_score"), 6).as("score"))
+    exactTopK(emb.crossJoin(queryVecFrom(emb)), k, cosine_similarity, Nil)
 
   /** Batch kNN join — every vector in a query SET gets its top-k
     * neighbors in one pass (the retrieval/serving shape; `topK` is the
@@ -79,7 +91,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("raw").desc, col("vec_id"))
     emb.join(queries, col("vec_id") =!= col("query_id"))
-      .withColumn("raw", score(col("embedding"), col("q_embedding")))
+      .withColumn("raw", cosine_similarity(col("embedding"), col("q_embedding")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -116,15 +128,35 @@ object Similarity {
   private[graft] def topKLshFrom(emb: DataFrame, k: Int,
       numPlanes: Int): DataFrame = {
     val b = lshBucketsFrom(emb, numPlanes)
-    val qb = broadcast(b.filter(col("vec_id") === 0)
+    val qb = broadcast(b.filter(isQuery)
       .select(col("bucket").as("q_bucket"), col("embedding").as("q_embedding")))
-    b.join(qb, col("bucket") === col("q_bucket"))
-      .withColumn("raw_score", score(col("embedding"), col("q_embedding")))
-      .orderBy(col("raw_score").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("bucket"),
-        round(col("raw_score"), 6).as("score"))
+    exactTopK(b.join(qb, col("bucket") === col("q_bucket")), k,
+      cosine_similarity, Seq("bucket"))
   }
+
+  /** (label, vec_id, dim, v): the 1-based double explode the label
+    * centroids are built from.
+    */
+  private def labelEx(emb: DataFrame): DataFrame =
+    emb.select(col("label"), col("vec_id"),
+        posexplode(col("embedding")).as(Seq("pos", "vf")))
+      .select(col("label"), col("vec_id"), (col("pos") + 1).as("dim"),
+        col("vf").cast("double").as("v"))
+
+  /** Per-label element-wise mean (label, dim, c) of a [[labelEx]] frame. */
+  private def labelCentroids(ex: DataFrame): DataFrame =
+    ex.groupBy(col("label"), col("dim"))
+      .agg((sum(col("v")) / count(lit(1))).as("c"))
+
+  /** Cosine of `x` and `y` per `keys` group, from the three sums:
+    * `keys` plus `cos`.
+    */
+  private def groupCosine(df: DataFrame, keys: Seq[String], x: Column,
+      y: Column): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(sum(x * y).as("dot"), sum(x * x).as("na"), sum(y * y).as("nb"))
+      .select(keys.map(col) :+
+        (col("dot") / (sqrt(col("na")) * sqrt(col("nb")))).as("cos"): _*)
 
   /** Per-label centroid distances: element-wise mean per label (long
     * format: explode dims → groupBy(label, dim)), then each vector's
@@ -134,22 +166,10 @@ object Similarity {
     * re-aggregation; both move scalars, never whole vectors.
     */
   def centroidDistance(spark: SparkSession, sfDir: String): DataFrame = {
-    val ex = Tables.embeddings(spark, sfDir)
-      .select(col("label"), col("vec_id"),
-        posexplode(col("embedding")).as(Seq("pos", "vf")))
-      .select(col("label"), col("vec_id"), (col("pos") + 1).as("dim"),
-        col("vf").cast("double").as("v"))
-    val cent = ex.groupBy(col("label"), col("dim"))
-      .agg((sum(col("v")) / count(lit(1))).as("c"))
-    ex.join(cent, Seq("label", "dim"))
-      .groupBy(col("vec_id"), col("label"))
-      .agg(
-        sum(col("v") * col("c")).as("dot"),
-        sum(col("v") * col("v")).as("na"),
-        sum(col("c") * col("c")).as("nb"))
-      .select(col("vec_id"), col("label"),
-        round(col("dot") / (sqrt(col("na")) * sqrt(col("nb"))), 6)
-          .as("score"))
+    val ex = labelEx(Tables.embeddings(spark, sfDir))
+    groupCosine(ex.join(labelCentroids(ex), Seq("label", "dim")),
+        Seq("vec_id", "label"), col("v"), col("c"))
+      .select(col("vec_id"), col("label"), round(col("cos"), 6).as("score"))
   }
 
   /** IVF-style ANN (1-probe): coarse centroids are the per-label
@@ -172,32 +192,19 @@ object Similarity {
     topKIvfFrom(Tables.embeddings(spark, sfDir), k, nprobe)
 
   /** IVF over an explicit (vec_id, label, embedding) relation. */
-  private[graft] def topKIvfFrom(emb: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val ex = emb
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "vf")))
-      .select(col("label"), col("pos"), col("vf").cast("double").as("v"))
-    val cent = ex.groupBy(col("label"), col("pos"))
-      .agg((sum(col("v")) / count(lit(1))).as("c"))
-    val q = emb.filter(col("vec_id") === 0)
-      .select(posexplode(col("embedding")).as(Seq("pos", "qf")))
-      .select(col("pos"), col("qf").cast("double").as("qv"))
-    val probe = cent.join(broadcast(q), "pos")
-      .groupBy(col("label"))
-      .agg(sum(col("c") * col("qv")).as("dot"),
-        sum(col("c") * col("c")).as("na"),
-        sum(col("qv") * col("qv")).as("nb"))
-      .select(col("label"),
-        (col("dot") / (sqrt(col("na")) * sqrt(col("nb")))).as("csim"))
-      .orderBy(col("csim").desc, col("label")).limit(nprobe)
+  private[graft] def topKIvfFrom(emb: DataFrame, k: Int, nprobe: Int): DataFrame =
+    exactTopK(emb.join(broadcast(labelProbe(emb, nprobe)), "label")
+        .crossJoin(queryVecFrom(emb)), k, cosine_similarity, Seq("label"))
+
+  /** The `nprobe` labels whose centroids are nearest the query by
+    * cosine, ties to the lower label: [[topKIvfFrom]]'s probe set.
+    */
+  private[graft] def labelProbe(emb: DataFrame, nprobe: Int): DataFrame = {
+    val q = labelEx(emb.filter(isQuery)).select(col("dim"), col("v").as("qv"))
+    groupCosine(labelCentroids(labelEx(emb)).join(broadcast(q), "dim"),
+        Seq("label"), col("c"), col("qv"))
+      .orderBy(col("cos").desc, col("label")).limit(nprobe)
       .select(col("label"))
-    emb
-      .join(broadcast(probe), "label")
-      .crossJoin(queryVecFrom(emb))
-      .withColumn("raw_score", score(col("embedding"), col("q_embedding")))
-      .orderBy(col("raw_score").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"),
-        round(col("raw_score"), 6).as("score"))
   }
 
   /** Corpus-adaptive hyperplane count: [[Dedup.blockWidth]] with a floor
@@ -207,24 +214,35 @@ object Similarity {
     */
   private[graft] def adaptivePlanes(n: Long): Int = Dedup.blockWidth(4, n)
 
+  /** [[adaptivePlanes]] of the corpus: the row count is the input of the
+    * oracle's `count(*) // 32` rule.
+    */
+  private def corpusPlanes(spark: SparkSession, sfDir: String): Int =
+    adaptivePlanes(Tables.embeddings(spark, sfDir).count())
+
   /** Successor-capped pairs of LSH blocks under [[adaptivePlanes]]
-    * hyperplanes, each side with its embedding. `bucket` (the signs under
+    * hyperplanes, each with its `raw_score`. `bucket` (the signs under
     * the first `planes` hyperplanes) blocks; the locality order of
     * [[Dedup.cappedBlockPairs]] is `subkey` (the signs under 8 more, so
     * its last 8 bits are what vary inside a block), then vec_id.
     * Near-identical replicas agree on the extra bits with the same
     * probability they agree on the block bits, so families sort
-    * adjacently.
+    * adjacently. Pair SCORING (vs retrieval ranking) uses the
+    * quantized-integer cosine: exact long accumulation, so a threshold
+    * or a per-label argmax never hinges on a last-ulp double wobble
+    * between engines.
     */
   private def cappedEmbeddingPairs(spark: SparkSession, sfDir: String,
       blockCols: Seq[String], maxSucc: Int): DataFrame = {
-    val planes = adaptivePlanes(Tables.embeddings(spark, sfDir).count())
+    val planes = corpusPlanes(spark, sfDir)
     val blocks = lshBucketsFrom(Tables.embeddings(spark, sfDir), planes + 8)
       .withColumnRenamed("bucket", "subkey")
       .withColumn("bucket", substring(col("subkey"), 1, planes))
     Dedup.cappedBlockPairs(blocks, blockCols, "vec_id",
         Seq("subkey", "vec_id"), Seq("embedding"), maxSucc)
-      .withColumnRenamed("id_a", "vec_a").withColumnRenamed("id_b", "vec_b")
+      .select(blockCols.map(col) ++ Seq(
+        col("id_a").as("vec_a"), col("id_b").as("vec_b"),
+        quantized_cosine(col("embedding_a"), col("embedding_b")).as("raw_score")): _*)
   }
 
   /** Embedding near-dup via LSH blocking — the scale path: candidate
@@ -244,10 +262,7 @@ object Similarity {
       maxSucc: Int = Dedup.Occupancy): DataFrame =
     cappedEmbeddingPairs(spark, sfDir, Seq("bucket"), maxSucc)
       .select(col("bucket"), col("vec_a"), col("vec_b"),
-        // pair SCORING (vs retrieval ranking) uses the quantized-integer
-        // cosine: exact long accumulation, engine-portable bit-for-bit
-        round(graft.functions.VectorExpressions.quantized_cosine(
-          col("embedding_a"), col("embedding_b")), 6).as("score"))
+        round(col("raw_score"), 6).as("score"))
 
   /** Dropped-pair accounting for the successor cap: per-corpus totals of
     * bucket count, mega buckets (those the cap trims), full all-pairs
@@ -259,7 +274,7 @@ object Similarity {
     */
   def pairBudget(spark: SparkSession, sfDir: String,
       maxSucc: Int = Dedup.Occupancy): DataFrame = {
-    val planes = adaptivePlanes(Tables.embeddings(spark, sfDir).count())
+    val planes = corpusPlanes(spark, sfDir)
     val m = maxSucc.toLong
     val tri = m * (m + 1) / 2 // Σ 1..m, the capped tail's triangle
     lshBuckets(spark, sfDir, planes)
@@ -314,11 +329,6 @@ object Similarity {
     // where the per-label winner lives.
     val pairs = cappedEmbeddingPairs(spark, sfDir, Seq("label", "bucket"),
         Dedup.Occupancy)
-      .select(col("label"), col("vec_a"), col("vec_b"),
-        // quantized-integer cosine: the per-label ARGMAX must not hinge
-        // on a last-ulp double wobble between engines
-        graft.functions.VectorExpressions.quantized_cosine(
-          col("embedding_a"), col("embedding_b")).as("raw_score"))
     // Per-label ARGMAX as a MAX over an ordering struct, NOT a
     // row_number window: the window shape shuffles every candidate pair
     // into |labels| partitions and SORTS each one whole (a handful of
@@ -400,47 +410,67 @@ object Similarity {
       .agg(count(lit(1)).as("n_vecs"), sum(col("d2")).as("inertia"))
       .select(col("cid").as("cluster_id"), col("n_vecs"), col("inertia"))
 
-  /** The [[kmeans]] model surfaces: (final assignment `(vec_id, cid,
-    * d2)`, final centroids `(cid, dim, ci)`, fixed-point corpus
-    * `(vec_id, dim, vi)`) — shared by the cluster rollup above and the
-    * learned-coarse-key IVF below.
+  /** The ×10⁶ fixed-point snap every exact-integer embedding statistic
+    * starts from: round(x · 10⁶) as BIGINT.
     */
-  /** The shared positive fixed-point explode: ×10⁶ snap then +10⁶
-    * shift, so floor and truncating division agree (see [[kmeans]]).
+  private def snap(x: Column): Column = round(x.cast("double") * 1e6).cast("long")
+
+  /** The shared positive fixed-point explode: [[snap]] then +10⁶ shift,
+    * so floor and truncating division agree (see [[kmeans]]).
     */
   private def fixedPointEx(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .select(col("vec_id"), col("dim"),
-        (round(col("v").cast("double") * 1e6).cast("long") + 1000000L).as("vi"))
+      .select(col("vec_id"), col("dim"), (snap(col("v")) + 1000000L).as("vi"))
 
-  /** One exact-integer assignment pass against a centroid table —
-    * argmin d² with (d2, cid) tie order; shared by the Lloyd loop and
-    * the stored-model rebuild of the assignment relation.
+  /** Exact integer squared L2 distance, named `out`, from each `keys`
+    * group of an exploded side `(…, dim, vi)` to a centroid table
+    * `(…, dim, ci)` (k×dim rows, broadcast).
     */
-  private[graft] def kmAssign(ex: DataFrame, cent: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("cid"))
+  private def sqDist(ex: DataFrame, cent: DataFrame, keys: Seq[String],
+      out: String): DataFrame =
     ex.join(broadcast(cent), "dim")
-      .groupBy(col("vec_id"), col("cid"))
-      .agg(sum((col("vi") - col("ci")) * (col("vi") - col("ci"))).as("d2"))
+      .groupBy(keys.map(col): _*)
+      .agg(sum((col("vi") - col("ci")) * (col("vi") - col("ci"))).as(out))
+
+  /** One exact-integer assignment pass: per `part` group, the centroid
+    * `id` of least d², ties to the lower id; rows `(part…, id, d2)`. A PQ
+    * codebook's dim is global (0..63), so it already pins the subspace:
+    * joining on dim alone never matches a centroid of another subspace.
+    */
+  private def nearestCentroid(ex: DataFrame, cent: DataFrame,
+      part: Seq[String], id: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(part.map(col): _*).orderBy(col("d2"), col(id))
+    sqDist(ex, cent, part :+ id, "d2")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid"), col("d2"))
+      .select((part :+ id :+ "d2").map(col): _*)
   }
 
-  private[graft] def kmeansAssignments(spark: SparkSession, sfDir: String,
+  /** Exact-integer Lloyd over an exploded corpus: seeds are the rows of
+    * the first `k` vec_ids, then `iters` rounds of assign → integer
+    * floor-mean per (id, dim), then a final assign. Returns (assignment
+    * `(part…, id, d2)`, centroids `(id, dim, ci)`, the corpus).
+    */
+  private def lloyd(corpus: DataFrame, part: Seq[String], id: String,
       k: Int, iters: Int): (DataFrame, DataFrame, DataFrame) = {
-    val ex = fixedPointEx(Tables.embeddings(spark, sfDir))
-      .truncateLineage() // reused every round: snap the fixed-point once
-
+    val ex = corpus.truncateLineage() // reused every round: snap once
     var cent = ex.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cid"), col("dim"), col("vi").as("ci"))
+      .select(col("vec_id").as(id), col("dim"), col("vi").as("ci"))
     for (_ <- 1 to iters)
-      cent = kmAssign(ex, cent).join(ex, "vec_id")
-        .groupBy(col("cid"), col("dim"))
+      cent = nearestCentroid(ex, cent, part, id).join(ex, part)
+        .groupBy(col(id), col("dim"))
         .agg(expr("sum(vi) div count(*)").as("ci"))
-    (kmAssign(ex, cent), cent, ex)
+    (nearestCentroid(ex, cent, part, id), cent, ex)
   }
+
+  /** The [[kmeans]] model over `emb`: (final assignment `(vec_id, cid,
+    * d2)`, final centroids `(cid, dim, ci)`, fixed-point corpus
+    * `(vec_id, dim, vi)`).
+    */
+  private[graft] def kmeansAssignments(emb: DataFrame, k: Int,
+      iters: Int): (DataFrame, DataFrame, DataFrame) =
+    lloyd(fixedPointEx(emb), Seq("vec_id"), "cid", k, iters)
 
   /** TRAIN-ONCE k-means model per (sfDir, k, iters) — centroids and the
     * full assignment relation materialized through the idempotent
@@ -454,12 +484,13 @@ object Similarity {
   private[graft] def kmeansModel(spark: SparkSession, sfDir: String,
       k: Int = 8, iters: Int = 2): (DataFrame, DataFrame) = {
     val cent = materializedModel(spark, s"km_cent_k${k}i$iters", sfDir) {
-      kmeansAssignments(spark, sfDir, k, iters)._2
+      kmeansAssignments(Tables.embeddings(spark, sfDir), k, iters)._2
     }
     val af = materializedModel(spark, s"km_af_k${k}i$iters", sfDir) {
       // assignment against the FINAL stored centroids — by definition
       // the same relation the training loop's last assign produced
-      kmAssign(fixedPointEx(Tables.embeddings(spark, sfDir)), cent)
+      nearestCentroid(fixedPointEx(Tables.embeddings(spark, sfDir)), cent,
+        Seq("vec_id"), "cid")
     }
     (af, cent)
   }
@@ -494,51 +525,10 @@ object Similarity {
       nprobe: Int = 2, kClusters: Int = 8, iters: Int = 2): DataFrame = {
     val (af, cent) = kmeansModel(spark, sfDir, kClusters, iters)
     val emb = Tables.embeddings(spark, sfDir)
-    // query = vec 0's fixed-point coords against the STORED centroids
-    val probe = fixedPointEx(emb.filter(col("vec_id") === 0))
-      .join(broadcast(cent), "dim")
-      .groupBy(col("cid"))
-      .agg(sum((col("vi") - col("ci")) * (col("vi") - col("ci"))).as("qd2"))
-      .orderBy(col("qd2"), col("cid")).limit(nprobe)
-      .select(col("cid"))
-    emb
-      .join(af.join(broadcast(probe), "cid")
-        .select(col("vec_id"), col("cid")), "vec_id")
-      .crossJoin(queryVecFrom(emb))
-      .withColumn("raw_score", graft.functions.VectorExpressions
-        .quantized_cosine(col("embedding"), col("q_embedding")))
-      .orderBy(col("raw_score").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("cid"),
-        round(col("raw_score"), 6).as("score"))
+    exactTopK(emb.join(probedLists(emb, af, cent, nprobe), "vec_id")
+        .crossJoin(queryVecFrom(emb)), k, quantized_cosine, Seq("cid"))
   }
 
-  /** Per-dimension embedding statistics — the whitening/normalization
-    * prep every embedding pipeline runs before indexing or training a
-    * probe (a dimension with 10× the variance dominates every cosine
-    * unless centered/scaled). Each component is snapped to ×10⁶ BIGINT
-    * BEFORE the distributed sums (the charEntropy discipline), so Σx and
-    * Σx² are exact integers no matter the summation order — the mean and
-    * variance become per-group scalar divisions of exact integers, and
-    * float non-associativity across partitions can never split engines.
-    *
-    * Scale shape: the (dim, component) explode is narrow; partial
-    * aggregation means the shuffle carries dims × partitions partial
-    * buffers — never N×64 component rows.
-    */
-  /** Full embedding COVARIANCE matrix — the whitening/PCA prep that
-    * [[embedStats]]'s per-dimension variances are the diagonal of. The
-    * d(d+1)/2 upper-triangle pairs are generated PER ROW inside the
-    * plan (nested transform over the array — no self-join, so the
-    * corpus is scanned once and never shuffled on vec_id); partial
-    * aggregation bounds the one shuffle at d² × partitions partial
-    * buffers. Components snap to ×10⁶ BIGINT before every product and
-    * sum (the embedStats discipline), so ΣxᵢΣxⱼ/Σxᵢxⱼ are exact
-    * integers in any summation order; cross-terms combine in
-    * DECIMAL(38,0) (DuckDB: HUGEINT) so corpus growth can't overflow
-    * the n·Σxy fold, and the final scalar division mirrors the oracle
-    * text exactly.
-    */
   /** Full covariance matrix in ONE pass: the per-row work is a fused
     * multiply-add loop over a live primitive-array Gram accumulator
     * ([[graft.functions.GramCovAgg]]) instead of materializing
@@ -553,9 +543,7 @@ object Similarity {
     Tables.embeddings(spark, sfDir)
       // the snap stays IN the plan (codegen'd transform), so the
       // aggregate is pure integer arithmetic with no rounding to match
-      .select(expr(
-        "transform(embedding, x -> CAST(round(x * 1e6) AS BIGINT))")
-        .as("xs"))
+      .select(transform(col("embedding"), snap(_)).as("xs"))
       .agg(graft.functions.GramMatrix.gram_cov(col("xs")).as("g"))
       .select(explode(col("g")).as("p"))
       .select(col("p.dim_i").as("dim_i"), col("p.dim_j").as("dim_j"),
@@ -570,9 +558,7 @@ object Similarity {
       // snap the whole vector ONCE per row; the pair transform then
       // reads the int array (the first cut re-rounded each component
       // 2·d(d+1)/2 times per row — measured 2x slower interpreted)
-      .select(expr(
-        "transform(embedding, x -> CAST(round(x * 1e6) AS BIGINT))")
-        .as("xs"))
+      .select(transform(col("embedding"), snap(_)).as("xs"))
       .select(explode(expr(
         """flatten(transform(sequence(0, size(xs) - 1), i ->
           |  transform(sequence(i, size(xs) - 1), j ->
@@ -595,11 +581,23 @@ object Similarity {
             - col("sx").cast("decimal(38,0)") * col("sy")).cast("double")
           / col("n") / col("n") / 1e12, 6) + lit(0.0)).as("cov"))
 
+  /** Per-dimension embedding statistics — the whitening/normalization
+    * prep every embedding pipeline runs before indexing or training a
+    * probe (a dimension with 10× the variance dominates every cosine
+    * unless centered/scaled). Each component is snapped to ×10⁶ BIGINT
+    * BEFORE the distributed sums (the charEntropy discipline), so Σx and
+    * Σx² are exact integers no matter the summation order — the mean and
+    * variance become per-group scalar divisions of exact integers, and
+    * float non-associativity across partitions can never split engines.
+    *
+    * Scale shape: the (dim, component) explode is narrow; partial
+    * aggregation means the shuffle carries dims × partitions partial
+    * buffers — never N×64 component rows.
+    */
   def embedStats(spark: SparkSession, sfDir: String): DataFrame = {
     val t = Tables.embeddings(spark, sfDir)
       .select(posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("dim"),
-        round(col("x").cast("double") * 1e6).cast("bigint").as("xi"))
+      .select(col("dim"), snap(col("x")).as("xi"))
     // same decimal discipline as embedCov: xᵢ² ~10¹² would overflow a
     // BIGINT accumulator near 10⁷ rows, and s1² overflows far earlier —
     // every product runs in DECIMAL(38,0) like DuckDB's HUGEINT
@@ -616,11 +614,11 @@ object Similarity {
   /** PRODUCT QUANTIZATION model (Jégou et al., "Product Quantization
     * for Nearest Neighbor Search", TPAMI 2011 — public literature): the
     * 64-d space splits into `m` contiguous subspaces of 64/m dims, and
-    * each subspace trains its own k-code codebook with the SAME exact
-    * integer Lloyd recipe as [[kmeansAssignments]] (coords snapped ×10⁶
-    * then shifted +10⁶ so floor division and argmin ties agree across
-    * engines; seeds = the first k vec_ids' subvectors; fixed `iters`
-    * rounds). A vector's PQ code is its per-subspace argmin — m small
+    * each subspace trains its own k-code codebook with the same exact
+    * integer Lloyd loop ([[lloyd]]) as [[kmeansAssignments]] (coords
+    * snapped ×10⁶ then shifted +10⁶ so floor division and argmin ties
+    * agree across engines; seeds = the first k vec_ids' subvectors;
+    * fixed `iters` rounds). A vector's PQ code is its per-subspace argmin — m small
     * ints replacing 64 floats (~32× compression at m=8/k=16).
     *
     * Scale shape: the codebook is m×k×(64/m) = 1024 tiny rows,
@@ -637,47 +635,17 @@ object Similarity {
       : (DataFrame, DataFrame, DataFrame) =
     pqModelFrom(Tables.embeddings(spark, sfDir), m, k, iters)
 
-  /** [[fixedPointEx]] plus the contiguous-subspace column. */
-  private def pqEx(emb: DataFrame, m: Int): DataFrame = {
-    val subDims = 64 / m
-    emb
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .select(col("vec_id"), expr(s"dim div $subDims").cast("int").as("sub"),
-        col("dim"),
-        (round(col("v").cast("double") * 1e6).cast("long") + 1000000L).as("vi"))
-  }
-
-  /** One per-subspace assignment pass against a PQ codebook — the
-    * encode step. Codebook rows are (code, dim, ci): dim is global
-    * (0..63) so it already pins the subspace — joining on dim alone can
-    * never match a centroid from another subspace.
+  /** [[fixedPointEx]] plus the contiguous-subspace column:
+    * `(vec_id, sub, dim, vi)`.
     */
-  private[graft] def pqAssign(ex: DataFrame, cb: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("vec_id"), col("sub"))
-      .orderBy(col("d2"), col("code"))
-    ex.join(broadcast(cb), "dim")
-      .groupBy(col("vec_id"), col("sub"), col("code"))
-      .agg(sum((col("vi") - col("ci")) * (col("vi") - col("ci"))).as("d2"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("sub"), col("code"), col("d2"))
-  }
+  private def pqEx(emb: DataFrame, m: Int): DataFrame =
+    fixedPointEx(emb).select(col("vec_id"),
+      expr(s"dim div ${64 / m}").cast("int").as("sub"), col("dim"), col("vi"))
 
   private[graft] def pqModelFrom(emb: DataFrame,
       m: Int = 8, k: Int = 16, iters: Int = 2)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val ex = pqEx(emb, m)
-      .truncateLineage() // reused every Lloyd round: snap once
-
-    var cb = ex.filter(col("vec_id") < k)
-      .select(col("vec_id").as("code"), col("dim"), col("vi").as("ci"))
-    for (_ <- 1 to iters)
-      cb = pqAssign(ex, cb).join(ex, Seq("vec_id", "sub"))
-        .groupBy(col("code"), col("dim"))
-        .agg(expr("sum(vi) div count(*)").as("ci"))
-    (pqAssign(ex, cb), cb, ex)
-  }
+      : (DataFrame, DataFrame, DataFrame) =
+    lloyd(pqEx(emb, m), Seq("vec_id", "sub"), "code", k, iters)
 
   /** TRAIN-ONCE PQ model per (sfDir, m, k, iters): the codebook AND the
     * encoded corpus (m small ints per vector — the thing a 100 TB
@@ -692,7 +660,8 @@ object Similarity {
       pqModelFrom(Tables.embeddings(spark, sfDir), m, k, iters)._2
     }
     val codes = materializedModel(spark, s"pq_codes_m${m}k${k}i$iters", sfDir) {
-      pqAssign(pqEx(Tables.embeddings(spark, sfDir), m), cb)
+      nearestCentroid(pqEx(Tables.embeddings(spark, sfDir), m), cb,
+        Seq("vec_id", "sub"), "code")
     }
     (codes, cb)
   }
@@ -712,34 +681,32 @@ object Similarity {
       m: Int = 8, k: Int = 16, iters: Int = 2): DataFrame = {
     val (codes, cb) = pqStored(spark, sfDir, m, k, iters)
     // point lookup: the un-spread reader — one pushed-filter scan, no
-    // corpus exchange for a single row
-    val q = Tables.embeddingsRaw(spark, sfDir).filter(col("vec_id") === 0)
-    // the ADC lookup table: m×k exact partial d²s from ONE query row —
-    // the stored model means query time touches no training pass at all
-    val qd = pqEx(q, m)
-      .join(broadcast(cb), "dim")
-      .groupBy(col("sub"), col("code"))
-      .agg(sum((col("vi") - col("ci")) * (col("vi") - col("ci"))).as("pd2"))
-    codes.join(broadcast(qd), Seq("sub", "code"))
-      .groupBy(col("vec_id"))
-      .agg(sum(col("pd2")).as("adc_d2"))
-      .orderBy(col("adc_d2"), col("vec_id"))
-      .limit(topK)
+    // corpus exchange for a single row; the stored model means query
+    // time touches no training pass at all
+    adcTopK(pqEx(Tables.embeddingsRaw(spark, sfDir).filter(isQuery), m), cb,
+      codes, Seq("vec_id"), topK)
   }
 
+  /** [[topKPqAdc]] over a PQ model retrained on `emb`. */
   private[graft] def topKPqAdcFrom(emb: DataFrame, topK: Int = 10,
       m: Int = 8, k: Int = 16, iters: Int = 2): DataFrame = {
     val (codes, cb, ex) = pqModelFrom(emb, m, k, iters)
-    val qd = ex.filter(col("vec_id") === 0)
-      .join(broadcast(cb), "dim")
-      .groupBy(col("sub"), col("code"))
-      .agg(sum((col("vi") - col("ci")) * (col("vi") - col("ci"))).as("pd2"))
-    codes.join(broadcast(qd), Seq("sub", "code"))
-      .groupBy(col("vec_id"))
+    adcTopK(ex.filter(isQuery), cb, codes, Seq("vec_id"), topK)
+  }
+
+  /** The PQ-ADC scan: the m×k lookup table of exact partial d²s from the
+    * query's [[pqEx]] rows `q` to codebook `cb`, summed over each
+    * vector's (sub, code) rows in `codes` per `keys` group, and the
+    * `topK` smallest `adc_d2`, ties to the lower vec_id.
+    */
+  private def adcTopK(q: DataFrame, cb: DataFrame, codes: DataFrame,
+      keys: Seq[String], topK: Int): DataFrame =
+    codes.join(broadcast(sqDist(q, cb, Seq("sub", "code"), "pd2")),
+        Seq("sub", "code"))
+      .groupBy(keys.map(col): _*)
       .agg(sum(col("pd2")).as("adc_d2"))
       .orderBy(col("adc_d2"), col("vec_id"))
       .limit(topK)
-  }
 
   /** THE production retrieval plan — the composition the round-9
     * recall-cost curve (PLANS.md annsweep) measured its way to:
@@ -778,12 +745,17 @@ object Similarity {
   /** The query's `nprobe` nearest centroids by exact integer d². */
   private[graft] def ivfProbe(emb: DataFrame, cent: DataFrame,
       nprobe: Int): DataFrame =
-    fixedPointEx(emb.filter(col("vec_id") === 0))
-      .join(broadcast(cent), "dim")
-      .groupBy(col("cid"))
-      .agg(sum((col("vi") - col("ci")) * (col("vi") - col("ci"))).as("qd2"))
+    sqDist(fixedPointEx(emb.filter(isQuery)), cent, Seq("cid"), "qd2")
       .orderBy(col("qd2"), col("cid")).limit(nprobe)
       .select(col("cid"))
+
+  /** The `(vec_id, cid)` rows of assignment `af` in the lists of
+    * [[ivfProbe]]: the IVF candidates.
+    */
+  private def probedLists(emb: DataFrame, af: DataFrame, cent: DataFrame,
+      nprobe: Int): DataFrame =
+    af.join(broadcast(ivfProbe(emb, cent, nprobe)), "cid")
+      .select(col("vec_id"), col("cid"))
 
   /** The composition over EXPLICIT model frames — [[topKIvfPq]] binds it
     * to the stored models; the annsweep harness binds it to per-query
@@ -792,31 +764,14 @@ object Similarity {
   private[graft] def topKIvfPqCore(emb: DataFrame, af: DataFrame,
       cent: DataFrame, codes: DataFrame, cb: DataFrame, k: Int,
       nprobe: Int, m: Int, rerank: Int): DataFrame = {
-    val q = emb.filter(col("vec_id") === 0)
-    // coarse probe: exact integer d² of the query to the k centroids
-    val probe = ivfProbe(emb, cent, nprobe)
-    // ADC lookup table: m×kCodes partial d²s from the one query row
-    val qd = pqEx(q, m)
-      .join(broadcast(cb), "dim")
-      .groupBy(col("sub"), col("code"))
-      .agg(sum((col("vi") - col("ci")) * (col("vi") - col("ci"))).as("pd2"))
     // survivors of the coarse prune, ADC-scored from codes only
-    val cand = af.join(broadcast(probe), "cid")
-      .select(col("vec_id"), col("cid"))
-    val adcTop = codes.join(cand, "vec_id")
-      .join(broadcast(qd), Seq("sub", "code"))
-      .groupBy(col("vec_id"), col("cid"))
-      .agg(sum(col("pd2")).as("adc_d2"))
-      .orderBy(col("adc_d2"), col("vec_id")).limit(rerank)
+    val adcTop = adcTopK(pqEx(emb.filter(isQuery), m), cb,
+      codes.join(probedLists(emb, af, cent, nprobe), "vec_id"),
+      Seq("vec_id", "cid"), rerank)
     // exact re-rank on raw floats — only `rerank` vectors deep
-    emb.join(broadcast(adcTop), "vec_id")
-      .crossJoin(queryVecFrom(emb))
-      .withColumn("raw_score", graft.functions.VectorExpressions
-        .quantized_cosine(col("embedding"), col("q_embedding")))
-      .orderBy(col("raw_score").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("cid"), col("adc_d2"),
-        round(col("raw_score"), 6).as("score"))
+    exactTopK(emb.join(broadcast(adcTop), "vec_id")
+        .crossJoin(queryVecFrom(emb)), k, quantized_cosine,
+      Seq("cid", "adc_d2"))
   }
 
   /** Sweep-harness variant: retrains both models on the given corpus
@@ -827,14 +782,7 @@ object Similarity {
   private[graft] def topKIvfPqFrom(emb: DataFrame, k: Int = 10,
       nprobe: Int = 2, kClusters: Int = 8, m: Int = 8, kCodes: Int = 16,
       iters: Int = 2, rerank: Int = 50): (DataFrame, DataFrame, DataFrame) = {
-    val ex = fixedPointEx(emb).truncateLineage()
-    var cent = ex.filter(col("vec_id") < kClusters)
-      .select(col("vec_id").as("cid"), col("dim"), col("vi").as("ci"))
-    for (_ <- 1 to iters)
-      cent = kmAssign(ex, cent).join(ex, "vec_id")
-        .groupBy(col("cid"), col("dim"))
-        .agg(expr("sum(vi) div count(*)").as("ci"))
-    val af = kmAssign(ex, cent)
+    val (af, cent, _) = kmeansAssignments(emb, kClusters, iters)
     val (codes, cb, _) = pqModelFrom(emb, m, kCodes, iters)
     (topKIvfPqCore(emb, af, cent, codes, cb, k, nprobe, m, rerank),
       af, cent)
@@ -969,9 +917,7 @@ object Similarity {
       }.reduce(_ + _)
     }
     Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1e6) AS BIGINT))")
-        .as("xs"))
+      .select(col("vec_id"), transform(col("embedding"), snap(_)).as("xs"))
       .select(col("vec_id"),
         (0 until d).map(i => x(i) * x(i)).reduce(_ + _).as("orig_n2"),
         array(pjCols: _*).as("pj"))

@@ -44,11 +44,25 @@ class Round10OpsSpec extends SparkTestBase {
     import graft.operators.Similarity
     val (afStored, centStored) = Similarity.kmeansModel(spark, sf())
     val (afLive, centLive, _) =
-      Similarity.kmeansAssignments(spark, sf(), k = 8, iters = 2)
+      Similarity.kmeansAssignments(graft.sources.Tables.embeddings(spark, sf()),
+        k = 8, iters = 2)
     assert(canon(afStored) == canon(afLive),
       "stored IVF assignment diverges from a retrain")
     assert(canon(centStored) == canon(centLive),
       "stored centroids diverge from a retrain")
+  }
+
+  test("sweep variants over retrained models equal the stored-model keys") {
+    import graft.operators.Similarity
+    // stored models equal retrained ones, so the retraining sweep
+    // variants must return the stored-model keys' rows
+    val emb = graft.sources.Tables.embeddings(spark, sf())
+    for ((name, retrained, stored) <- Seq(
+        ("topKPqAdcFrom", Similarity.topKPqAdcFrom(emb),
+          Similarity.topKPqAdc(spark, sf())),
+        ("topKIvfPqFrom", Similarity.topKIvfPqFrom(emb)._1,
+          Similarity.topKIvfPq(spark, sf()))))
+      assert(canon(retrained) == canon(stored), s"$name diverges")
   }
 
   test("composed retrieval: candidates honor the probe, rerank bound " +

@@ -165,6 +165,28 @@ object Scratch {
           operators.Dedup.jaccardCalibration(spark, d).count()
         }
 
+      case "plans" =>
+        // Test/runMain graft.Scratch plans <sfDir> <outFile> <key>...
+        // Per key: schema, row count, the sparkPlan operator multiset and
+        // the optimized logical plan, with expression ids and
+        // lambda-variable suffixes stripped, so dumps of two builds of
+        // the same keys compare with diff.
+        def strip(p: String) =
+          p.replaceAll("#\\d+L?", "").replaceAll("(lambda \\w+?)_\\d+\\b", "$1")
+        val out = new java.io.PrintWriter(args(2), "UTF-8")
+        args.drop(3).foreach { key =>
+          val df = SparkEntry.queries(key)(spark, d)
+          val qe = df.queryExecution
+          val ops = qe.sparkPlan.collect { case p => p.nodeName }
+            .groupBy(identity).toSeq.sortBy(_._1)
+            .map { case (n, ps) => s"$n x${ps.size}" }
+          out.println(s"== $key")
+          out.print(df.schema.treeString)
+          out.println(s"rows ${df.count()}")
+          out.println(s"ops ${ops.mkString(", ")}")
+          out.println(strip(qe.optimizedPlan.toString))
+        }
+        out.close()
       case "sweep" =>
         // plan-shape audit: flag cartesians, count exchanges, check scans
         SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -212,28 +234,10 @@ object Scratch {
         println("| index | setting | mean recall@10 | mean frac scanned |")
         println("|---|---|---|---|")
         // the probe SET (not the labels that happen to appear in the
-        // top-k rows) is what the scan pays for — recompute it exactly
-        // as topKIvfFrom selects it
-        def probeSet(qid: Long, nprobe: Int): Seq[Int] = {
-          val e = swapTo0(qid)
-          val ex = e.select(col("label"),
-              posexplode(col("embedding")).as(Seq("pos", "vf")))
-            .select(col("label"), col("pos"), col("vf").cast("double").as("v"))
-          val cent = ex.groupBy(col("label"), col("pos"))
-            .agg((sum(col("v")) / count(lit(1))).as("c"))
-          val qv = e.filter(col("vec_id") === 0)
-            .select(posexplode(col("embedding")).as(Seq("pos", "qf")))
-            .select(col("pos"), col("qf").cast("double").as("qv"))
-          cent.join(broadcast(qv), "pos")
-            .groupBy(col("label"))
-            .agg(sum(col("c") * col("qv")).as("dot"),
-              sum(col("c") * col("c")).as("na"),
-              sum(col("qv") * col("qv")).as("nb"))
-            .select(col("label"),
-              (col("dot") / (sqrt(col("na")) * sqrt(col("nb")))).as("csim"))
-            .orderBy(col("csim").desc, col("label")).limit(nprobe)
+        // top-k rows) is what the scan pays for: topKIvfFrom's own probe
+        def probeSet(qid: Long, nprobe: Int): Seq[Int] =
+          operators.Similarity.labelProbe(swapTo0(qid), nprobe)
             .collect().map(_.getInt(0)).toSeq
-        }
         for (nprobe <- Seq(1, 2, 3, 5, 10)) {
           val (recalls, fracs) = queryIds.map { qid =>
             val rows = operators.Similarity
