@@ -110,7 +110,7 @@ object Formats {
     * before any row is read.
     */
   def fileProvenance(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/orders.parquet")
+    Tables.parquet(spark, s"$sfDir/orders.parquet")
       // the table-level source (first *.parquet path component): stable
       // whether the table is one file or a directory of parts —
       // per-PART accounting would just group by _metadata.file_name
@@ -223,7 +223,7 @@ object Formats {
       java.nio.file.Files.writeString(manifest, files.mkString("\n"))
     }
     val paths = java.nio.file.Files.readString(manifest).split("\n")
-    ordersSummary(spark.read.parquet(paths.toIndexedSeq: _*))
+    ordersSummary(Tables.parquet(spark, paths.toIndexedSeq: _*))
   }
 
   /** TIME TRAVEL over the generational layout: every maintenance pass
@@ -254,7 +254,7 @@ object Formats {
         .write.mode("overwrite").parquet(gen2)
     }
     def snap(v: Int, d: String): DataFrame =
-      spark.read.parquet(d)
+      Tables.parquet(spark, d)
         .groupBy(lit(v).as("version"), col("o_orderstatus"))
         .agg(count(lit(1)).as("n_live"),
           (sum(col("p")) * 100).cast("long").as("sum_total_c"))
@@ -337,7 +337,7 @@ object Formats {
     }
     // row accounting BEFORE deletion (exact, engine-checkable)
     def n(p: org.apache.hadoop.fs.Path): Long =
-      spark.read.parquet(p.toString).count()
+      Tables.parquet(spark, p.toString).count()
     val (n1, n2, nt) = (n(gen1), n(gen2), n(tmp))
     // vacuum: keep only the current (= highest _SUCCESS-gated) gen
     fs.delete(gen1, true)
@@ -472,9 +472,9 @@ object Formats {
       targetBytes: Long): DataFrame = {
     val n = math.max(1L,
       (tableBytes(spark, srcDir) + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(srcDir).repartition(n)
+    Tables.parquet(spark, srcDir).repartition(n)
       .write.mode("overwrite").parquet(outDir)
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
   }
 
   /** Compaction round-trip on a deliberately fragmented copy of `orders`
@@ -569,7 +569,7 @@ object Formats {
       if (!new File(dir, "_SUCCESS").exists())
         Tables.orders(spark, sfDir).write.mode("overwrite")
           .option("compression", c).parquet(dir)
-      ordersSummary(spark.read.parquet(dir)).withColumn("codec", lit(c))
+      ordersSummary(Tables.parquet(spark, dir)).withColumn("codec", lit(c))
     }.reduce(_ unionByName _)
   }
 
@@ -624,7 +624,7 @@ object Formats {
     val badDay = backfillBadDay(spark, sfDir)
     backfillInitialLoad(spark, sfDir, dir, badDay)
     backfillRepair(spark, sfDir, dir, badDay)
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
       .groupBy(col("day"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         (sum(col("value_d")) * 100).cast("long").as("sum_value_c"))

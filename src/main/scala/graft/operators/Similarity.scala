@@ -504,7 +504,7 @@ object Similarity {
     */
   private def materializedModel(spark: SparkSession, name: String,
       sfDir: String)(build: => DataFrame): DataFrame =
-    spark.read.parquet(graft.Staging.derived(spark, s"model_$name", sfDir,
+    Tables.parquet(spark, graft.Staging.derived(spark, s"model_$name", sfDir,
       Seq(s"$sfDir/embeddings.parquet"))(build.write.mode("overwrite").parquet(_)))
 
   /** IVF with a LEARNED coarse key — the conclusion the round-9 ANN

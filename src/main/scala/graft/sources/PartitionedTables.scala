@@ -64,7 +64,7 @@ object PartitionedTables {
     */
   private def staged(spark: SparkSession, sfDir: String, table: String,
       name: String, partCol: String, splitKey: Column, df: => DataFrame): DataFrame =
-    spark.read.parquet(Staging.derived(spark, s"pt_$name", sfDir,
+    Tables.parquet(spark, Staging.derived(spark, s"pt_$name", sfDir,
         Seq(s"$sfDir/$table.parquet")) { build =>
       df.repartitionByRange(spark.sessionState.conf.numShufflePartitions,
           col(partCol), splitKey)

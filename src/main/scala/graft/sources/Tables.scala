@@ -1,19 +1,70 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** Readers for the driver testdata tables (`/root/repo/TESTDATA.md`).
   *
-  * Plain parquet scans — schema comes from the footers, and filters /
-  * projections push down through the vectorized reader. At 100 TB these
-  * become partitioned-table scans (e.g. orders by month, events by day);
-  * nothing downstream assumes single-file inputs.
+  * Plain parquet scans through [[parquet]] — the schema comes from the
+  * footer of one data file, read on the driver (no Spark job), and
+  * filters / projections push down through the vectorized reader. At
+  * 100 TB these become partitioned-table scans (e.g. orders by month,
+  * events by day); nothing downstream assumes single-file inputs.
   */
 object Tables {
 
+  /** The one plain Parquet reader: `spark.read.schema(s).parquet(paths)`
+    * with `s` read from ONE footer on the driver. A schema-inferred
+    * `spark.read.parquet` reads that same footer through a one-task Spark
+    * job per read, the largest fixed cost of building a batch query.
+    *
+    * The footer is the first non-hidden `*.parquet` leaf by path — the
+    * file Spark's own inference picks with `mergeSchema` off — and turns
+    * into a schema through Spark's footer converter under the session's
+    * conf (`nanosAsLong`, NTZ inference), so the result equals the
+    * inferred one. `k=v` partition columns are still discovered from the
+    * paths. With no data file under `paths` this IS the inferred read,
+    * so a missing or empty table fails exactly as before. Nothing is
+    * memoized: every call re-reads its footer.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    firstDataFile(spark, paths) match {
+      case Some(f) =>
+        val footer = new Footer(f.getPath, ParquetFileReader.readFooter(
+          spark.sparkContext.hadoopConfiguration, f,
+          ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer,
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+          .parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** The first `*.parquet` leaf under `paths` by path string, skipping
+    * what Spark's file index hides: `_x` (unless a `k=v` dir) and `.x`.
+    */
+  private def firstDataFile(spark: SparkSession,
+      paths: Seq[String]): Option[FileStatus] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    def leaves(s: FileStatus, fs: FileSystem): Seq[FileStatus] =
+      if (s.isFile) Seq(s).filter(_.getPath.getName.endsWith(".parquet"))
+      else fs.listStatus(s.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves(_, fs))
+    val files = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      Option(fs.globStatus(path)).toSeq.flatten.flatMap(leaves(_, fs))
+    }
+    if (files.isEmpty) None else Some(files.minBy(_.getPath.toString))
+  }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
@@ -70,7 +121,7 @@ object Tables {
     * just the spread decision.
     */
   private[graft] def fsFingerprint(spark: SparkSession, path: String): (String, Long) = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parts = fs.listStatus(p).filter(_.isFile)
     val bytes = parts.map(_.getLen).sum

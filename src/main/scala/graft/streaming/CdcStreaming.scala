@@ -80,7 +80,7 @@ object CdcStreaming {
       .parquet(stagedLogDir(spark, sfDir))
     EventsStreaming.runAvailableNow(run, log) { (batch, batchId) =>
       val prev = latestGen(tableDir)
-        .map(p => batch.sparkSession.read.parquet(p.toString))
+        .map(p => Tables.parquet(batch.sparkSession, p.toString))
       val merged = prev.map(_.union(batch)).getOrElse(batch)
         .withColumn("rn", row_number().over(byKey))
         .filter(col("rn") === 1).drop("rn")
@@ -88,7 +88,7 @@ object CdcStreaming {
         .parquet(tableDir.resolve(s"gen=$batchId").toString)
     }
     val live = latestGen(tableDir) match {
-      case Some(p) => spark.read.parquet(p.toString)
+      case Some(p) => Tables.parquet(spark, p.toString)
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         logSchema)

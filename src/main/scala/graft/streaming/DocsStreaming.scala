@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import graft.Staging
+import graft.sources.Tables
 
 /** Streaming ingest-time deduplication over the documents corpus — the
   * online half of the dedup pipeline: as documents arrive in
@@ -162,7 +163,7 @@ object DocsStreaming {
           (from until batchId).map(batchSub(indexDir, _).toString))
           .filter(p => fs.exists(new Path(p)))
         if (inputs.nonEmpty) {
-          spark.read.parquet(inputs: _*)
+          Tables.parquet(spark, inputs: _*)
             .write.mode("overwrite").parquet(genPath(batchId).toString)
           // folded subdirs (and the superseded generation) go away
           // only now that gen<batchId> carries its _SUCCESS marker
@@ -188,7 +189,7 @@ object DocsStreaming {
           .filter(p => fs.exists(new Path(p)))
         val idxHit =
           if (priorIdx.nonEmpty)
-            bands.join(spark.read.parquet(priorIdx: _*),
+            bands.join(Tables.parquet(spark, priorIdx: _*),
                 Seq("band_id", "band_key"), "left_semi")
               .select(col("doc_id"))
           else bands.select(col("doc_id")).limit(0)

@@ -270,7 +270,7 @@ object EventsStreaming {
     runAvailableNow(run, src)((batch, batchId) =>
       upsertDailyPartials(batch, tableDir, batchId))
     // the final rollup is a plain read of the MAINTAINED table
-    spark.read.parquet(tableDir)
+    Tables.parquet(spark, tableDir)
       .select(col("day").cast("string").as("day"), col("event_type"),
         col("p_n").as("n"),
         (col("p_cents").cast("double") / 100.0).as("total_value"))
@@ -305,7 +305,7 @@ object EventsStreaming {
         // touched days only — a handful of partition values, never rows
         val days = partials.select(col("day")).distinct()
           .collect().map(_.getString(0)).toSeq
-        val existing = spark.read.parquet(tableDir)
+        val existing = Tables.parquet(spark, tableDir)
           .select(col("day").cast("string").as("day"), col("event_type"),
             col("p_cents"), col("p_n"), col("batch_id"))
           .filter(col("day").isin(days: _*))
@@ -483,9 +483,9 @@ object EventsStreaming {
           .write.mode("append").parquet(dlqDir)
       } finally { batch.unpersist(); () }
     }
-    val ok = spark.read.parquet(okDir)
+    val ok = Tables.parquet(spark, okDir)
       .select(lit("ok").as("disposition"), col("k"))
-    val dlq = spark.read.parquet(dlqDir)
+    val dlq = Tables.parquet(spark, dlqDir)
       .select(lit("quarantined").as("disposition"), col("k"))
     ok.unionByName(dlq)
       .groupBy(col("disposition"))

@@ -78,7 +78,7 @@ object ScaleUp {
     val spark = graft.GraftSession.start(graft.GraftSession.local("graft-scaleup", 16))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
 
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = graft.sources.Tables.parquet(spark, s"$src/$t.parquet")
     def maxOf(df: DataFrame, c: String): Long =
       df.agg(max(col(c).cast("long"))).head.getLong(0) + 1L
 

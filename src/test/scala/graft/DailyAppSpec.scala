@@ -134,19 +134,6 @@ class DailyAppSpec extends SparkTestBase {
   test("job-count pin: a closed tick runs 1 job, an open tick on a table 3") {
     // the batch body routes in one job; the guard and the append add one
     // each, and only when there is an open day to append
-    def jobsOf(body: => Unit): Int = {
-      val sc = spark.sparkContext
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet(): Unit
-      }
-      org.apache.spark.ListenerBusDrain.drain(sc)
-      sc.addSparkListener(listener)
-      try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
-      finally sc.removeSparkListener(listener)
-      jobs.get
-    }
     val cfg = landedOnly(freshCfg(None))
     land(cfg, "20220820", TwseFixtures.closed)
     assert(jobsOf(DailyApp.runTick(spark, cfg)) === 1)

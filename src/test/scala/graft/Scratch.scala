@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Ad-hoc dev driver: `sbt "Test/runMain graft.Scratch <op> [sfDir]"`.
   * Times individual operators and prints plans — forked JVM, so it
   * avoids the sbt-console REPL/classloader clash with Spark 4.
@@ -186,6 +188,50 @@ object Scratch {
           out.println(s"ops ${ops.mkString(", ")}")
           out.println(strip(qe.optimizedPlan.toString))
         }
+        out.close()
+      case "jobs" =>
+        // Test/runMain graft.Scratch jobs <sfDir> <outFile> [key...]
+        // Build vs write census: one warm pass over the keys (every key
+        // when none are named), then a recorded pass that writes, per key,
+        // the jobs started and the wall seconds while the DataFrame is
+        // built and while the noop write runs, and the call sites of the
+        // build-time jobs. The `#` lines at the end are the totals and the
+        // build-time call sites by count.
+        val sc = spark.sparkContext
+        val sites = java.util.Collections.synchronizedList(
+          new java.util.ArrayList[String]())
+        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            sites.add(e.stageInfos.maxBy(_.stageId).name): Unit
+        })
+        def span[A](f: => A): (A, Seq[String], Double) = {
+          org.apache.spark.ListenerBusDrain.drain(sc)
+          sites.clear()
+          val t0 = System.nanoTime
+          val a = f
+          val wall = (System.nanoTime - t0) / 1e9
+          org.apache.spark.ListenerBusDrain.drain(sc)
+          (a, sites.synchronized(sites.asScala.toList), wall)
+        }
+        val keys = if (args.length > 3) args.drop(3).toSeq
+          else SparkEntry.queries.keys.toSeq.sorted
+        def pass(k: String) = {
+          val (df, bj, bs) = span(SparkEntry.queries(k)(spark, d))
+          val (_, wj, ws) = span(df.write.format("noop").mode("overwrite").save())
+          (bj, bs, wj.size, ws)
+        }
+        keys.foreach(pass)
+        val rows = keys.map(k => k -> pass(k))
+        val out = new java.io.PrintWriter(args(2), "UTF-8")
+        out.println("key\tbuild_jobs\tbuild_s\twrite_jobs\twrite_s")
+        rows.foreach { case (k, (bj, bs, wj, ws)) =>
+          out.println(f"$k\t${bj.size}\t$bs%.3f\t$wj\t$ws%.3f")
+        }
+        out.println(f"# keys ${rows.size} with-build-jobs ${rows.count(_._2._1.nonEmpty)} " +
+          f"build-jobs ${rows.map(_._2._1.size).sum} build-s ${rows.map(_._2._2).sum}%.1f " +
+          f"write-jobs ${rows.map(_._2._3).sum} write-s ${rows.map(_._2._4).sum}%.1f")
+        rows.flatMap(_._2._1).groupBy(identity).toSeq.sortBy(-_._2.size)
+          .foreach { case (site, n) => out.println(s"# site ${n.size} $site") }
         out.close()
       case "sweep" =>
         // plan-shape audit: flag cartesians, count exchanges, check scans
