@@ -145,8 +145,6 @@ object DocsStreaming {
       else fs.listStatus(indexDir).toSeq.map(_.getPath.getName)
         .collect { case s if s.startsWith("gen") => s.drop(3).toLong }
         .filter(g => g <= cap && closed(genPath(g))).sorted.lastOption
-    def readAll(dir: Path): DataFrame =
-      spark.read.option("recursiveFileLookup", "true").parquet(dir.toString)
     val src = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stagedRangeShardedDocs(spark, sfDir, shards))
@@ -208,7 +206,8 @@ object DocsStreaming {
           .parquet(batchSub(indexDir, batchId).toString)
       } finally { bands.unpersist(); batch.unpersist(); () }
     }
-    readAll(outDir)
+    // a glob, so each `b<id>` batch dir is its own root (not a `k=v` name)
+    Tables.parquet(spark, new Path(outDir, "b*").toString)
   }
 
   /** Streaming heavy-hitter tokens — the online form of the batch
