@@ -8,21 +8,23 @@ import graft.Checkpoints.TruncateOps
 import graft.sources.Tables
 
 /** Deduplication operators over the `documents` corpus — the core of a
-  * training-data pipeline. Five escalating strategies:
+  * training-data pipeline. Hash groups ([[exact]], [[near]]) are one
+  * shuffle on a short key. The near-dup keys split into candidate
+  * GENERATORS feeding one exact VERIFIER per score:
   *
-  *   1. exact        — md5(text) hash groups
-  *   2. near         — md5 of aggressively-normalized text
-  *   3. minhash LSH  — shingle → 16-row minhash signature → 4-band
-  *                     bucket keys → bucket join for candidate pairs
-  *   4. simhash      — 64-bit sign-aggregated token hash, prefix buckets
-  *   5. n-gram Jaccard — exact set overlap on candidate pairs
+  *   - generators: the stop-capped postings self-join
+  *     ([[sharedKeyCount]]), minhash-LSH band buckets, simhash prefix
+  *     blocks, the prefix-filter index, their successor-capped twins
+  *     ([[cappedBlockPairs]]) and the min-wise inclusion ensemble;
+  *   - verifiers: Jaccard ≥ 0.8 ([[jaccard]]) and containment ≥ 0.9 from
+  *     the smaller side ([[containmentScore]], oriented by
+  *     [[smallerFirst]]), on candidate pairs joined to their documents'
+  *     columns by [[pairSides]] after the [[pruneToParticipants]] gate.
   *
-  * Scale shape: 1/2/4 are map + one hash-shuffle on a short key. 3 is the
-  * canonical 100 TB near-dup design: signatures and band keys are computed
-  * per-row (narrow), and only (band_id, band_key, doc_id) tuples — a few
-  * dozen bytes per document, not the text — flow into the bucket shuffle.
-  * 5 runs only on candidate pairs (here: same-source blocking; at scale:
-  * the minhash buckets), never all-pairs.
+  * Scale shape: signatures, band keys and fingerprints are computed
+  * per row (narrow), and only those short keys — a few dozen bytes per
+  * document, not the text — flow into the generators' shuffles.
+  * Verification runs only on candidate pairs, never all-pairs.
   */
 object Dedup {
 
@@ -120,33 +122,40 @@ object Dedup {
         pick(c, "l", "r").as(s"${c}_a"), pick(c, "r", "l").as(s"${c}_b"))): _*)
   }
 
+  /** Hash groups: the documents grouped by `key`, each group's minimum
+    * doc_id as its `canonical_id` and its size as `n_docs`.
+    */
+  private def hashGroups(spark: SparkSession, sfDir: String,
+      key: Column): DataFrame =
+    Tables.documents(spark, sfDir).groupBy(key)
+      .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_docs"))
+
   /** I1 — exact dedup groups: canonical (minimum) doc_id per md5(text). */
   def exact(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .groupBy(md5(col("text")).as("content_hash"))
-      .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_docs"))
+    hashGroups(spark, sfDir, md5(col("text")).as("content_hash"))
 
   /** I2a — near-dup groups by normalized key: lowercase, strip
     * non-alphanumerics, collapse whitespace. Catches punctuation/casing
     * variants that exact hashing misses.
     */
-  def near(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = md5(regexp_replace(
+  def near(spark: SparkSession, sfDir: String): DataFrame =
+    hashGroups(spark, sfDir, md5(regexp_replace(
       regexp_replace(normText(col("text")), "[^a-z0-9\\s]", ""), "\\s+", " "))
-    Tables.documents(spark, sfDir)
-      .groupBy(key.as("norm_hash"))
-      .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_docs"))
-  }
+      .as("norm_hash"))
 
-  /** Per-document minhash band keys (the narrow half of LSH): doc_id ×
-    * 4 rows, each `(band_id, band_key)`. This is the *entire* per-document
-    * state the shuffle ever sees.
+  /** The band rows of a docs frame: each doc_id × 4 `(band_id, band_key)`
+    * minhash band keys, the narrow half of LSH.
+    */
+  private[graft] def bandRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      posexplode(graft.functions.HashExpressions.minhash_band_keys(col("text")))
+        .as(Seq("band_id", "band_key")))
+
+  /** Per-document minhash band keys ([[bandRows]] of the corpus). This
+    * is the *entire* per-document state the shuffle ever sees.
     */
   def minhashBands(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        posexplode(graft.functions.HashExpressions.minhash_band_keys(col("text")))
-          .as(Seq("band_id", "band_key")))
+    bandRows(Tables.documents(spark, sfDir))
 
   /** I2b — minhash LSH candidate pairs: documents sharing ≥1 band bucket.
     * The join is on (band_id, band_key) — collision buckets only, never
@@ -243,6 +252,17 @@ object Dedup {
         hamming(col("simhash_a"), col("simhash_b")).as("hamming"))
       .withColumn("near_dup", col("hamming") <= maxHamming)
 
+  /** The pair-side join: each candidate `(doc_a, doc_b)` joined to
+    * `docs` once per side, each of `cols` arriving as `<c>_a`/`<c>_b`.
+    * A join hint on `docs` reaches both joins.
+    */
+  private def pairSides(pairs: DataFrame, docs: DataFrame,
+      cols: Seq[String]): DataFrame =
+    Seq("a", "b").foldLeft(pairs) { (p, s) =>
+      p.join(docs.select(col("doc_id").as(s"doc_$s") +:
+        cols.map(c => col(c).as(s"${c}_$s")): _*), s"doc_$s")
+    }
+
   /** The verification stage of LSH dedup: candidate pairs from the
     * minhash buckets get exact checks — Levenshtein edit distance and
     * distinct-token Jaccard (cross-multiplied, no division). Only
@@ -250,18 +270,15 @@ object Dedup {
     * corpus never does.
     */
   def verifyPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = minhashPairs(spark, sfDir)
-    def docs = Tables.documents(spark, sfDir)
+    val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"),
         array_distinct(wsTokens(col("text"))).as("toks"))
-    pairs
-      .join(docs.as("a"), col("doc_a") === col("a.doc_id"))
-      .join(docs.as("b"), col("doc_b") === col("b.doc_id"))
+    val inter = size(array_intersect(col("toks_a"), col("toks_b")))
+    pairSides(minhashPairs(spark, sfDir), docs, Seq("text", "toks"))
       .select(col("doc_a"), col("doc_b"),
-        levenshtein(col("a.text"), col("b.text")).as("edit_dist"),
-        size(array_intersect(col("a.toks"), col("b.toks"))).as("tok_inter"),
-        (size(col("a.toks")) + size(col("b.toks"))
-          - size(array_intersect(col("a.toks"), col("b.toks")))).as("tok_union"))
+        levenshtein(col("text_a"), col("text_b")).as("edit_dist"),
+        inter.as("tok_inter"),
+        (size(col("toks_a")) + size(col("toks_b")) - inter).as("tok_union"))
   }
 
   /** Sketch calibration — how good is the 16-row minhash as a Jaccard
@@ -274,30 +291,25 @@ object Dedup {
     * runs only on the candidate pairs, never all-pairs.
     */
   def jaccardCalibration(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = minhashPairs(spark, sfDir)
     // Materialize signatures + shingle arrays ONLY for documents that
-    // participate in a candidate pair (a broadcast semi-join BEFORE the
-    // per-row array projection): the calibration table is per-PAIR, so
-    // computing and shuffling 500 k full shingle arrays to serve ~25 k
-    // pairs is pure waste — measured 397 s → linear-in-pairs after this
-    // filter at sf10. The pair-id list is bounded by 2·|pairs|, safely
-    // broadcastable (pairs are the LSH candidate set, not n²).
-    val pairIds = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    def docs = Tables.documents(spark, sfDir)
-      .join(broadcast(pairIds), Seq("doc_id"), "left_semi")
+    // participate in a candidate pair ([[pruneToParticipants]], BEFORE
+    // the per-row array projection): the calibration table is per-PAIR,
+    // so computing and shuffling 500 k full shingle arrays to serve
+    // ~25 k pairs is pure waste — measured 397 s → linear-in-pairs after
+    // this filter at sf10. The pair list is checkpointed: the prune
+    // gate's count and both side joins re-read it.
+    val pairs = minhashPairs(spark, sfDir).truncateLineage()
+    val docs = pruneToParticipants(spark, Tables.documents(spark, sfDir), pairs)
       .select(col("doc_id"),
         graft.functions.HashExpressions.minhash_signature(col("text")).as("sig"),
         array_distinct(shingles3(col("text"))).as("sh"))
-    pairs
-      .join(docs.as("a"), col("doc_a") === col("a.doc_id"))
-      .join(docs.as("b"), col("doc_b") === col("b.doc_id"))
+    pairSides(pairs, docs, Seq("sig", "sh"))
       .withColumn("n_agree",
-        size(filter(zip_with(col("a.sig"), col("b.sig"), (x, y) => x === y),
+        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
           b => b)))
       .withColumn("est", col("n_agree").cast("double") / lit(16.0))
-      .withColumn("inter", size(array_intersect(col("a.sh"), col("b.sh"))))
-      .withColumn("uni", size(col("a.sh")) + size(col("b.sh")) - col("inter"))
+      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("uni", size(col("sh_a")) + size(col("sh_b")) - col("inter"))
       .withColumn("exact",
         round(col("inter").cast("double") / col("uni").cast("double"), 6))
       .select(col("doc_a"), col("doc_b"), col("n_agree"), col("est"),
@@ -436,13 +448,23 @@ object Dedup {
     val overlap = prefilter(bench).fold(corpus)(corpus.filter)
       .join(broadcast(bench), Seq("shingle"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
+    flagDocs(spark, sfDir, benchBound, overlap, "n_overlap", "contaminated")
+  }
+
+  /** Every document with doc_id ≥ `from`, flagged by its row of the
+    * per-doc `counts`: the count column `n` (0 for a doc without a row),
+    * the other `counts` columns, and `flag` = `n` > 0.
+    */
+  private def flagDocs(spark: SparkSession, sfDir: String, from: Long,
+      counts: DataFrame, n: String, flag: String): DataFrame = {
+    val cnt = coalesce(col(n), lit(0L))
     Tables.documents(spark, sfDir)
-      .filter(col("doc_id") >= benchBound)
+      .filter(col("doc_id") >= from)
       .select(col("doc_id"))
-      .join(overlap, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-        (coalesce(col("n_overlap"), lit(0L)) > 0).as("contaminated"))
+      .join(counts, Seq("doc_id"), "left")
+      .select(col("doc_id") +: cnt.as(n) +:
+        counts.columns.filterNot(Set("doc_id", n)).map(col) :+
+        (cnt > 0).as(flag): _*)
   }
 
   /** Catalog name of the standing band-index table for (sfDir, bound).
@@ -528,23 +550,17 @@ object Dedup {
     * corpus. Here docs with doc_id ≥ `newBound` play the incoming batch
     * and the rest are the standing corpus; the output flags each new
     * document with its duplicate-candidate count and first matching
-    * corpus doc. IncrementalDedupSpec drives two successive batches
-    * through the same table with an append in between.
+    * corpus doc. `SketchSpec` ("band index is a managed appendable
+    * table") drives two successive batches through the same table with
+    * an append in between.
     */
   def dedupIncremental(spark: SparkSession, sfDir: String,
       newBound: Long = 450L): DataFrame = {
     val table = ensureBandIndex(spark, sfDir, newBound)
     val newBands = minhashBands(spark, sfDir)
       .filter(col("doc_id") >= newBound)
-    val hits = probeBandIndex(spark, table, newBands)
-    Tables.documents(spark, sfDir)
-      .filter(col("doc_id") >= newBound)
-      .select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_dup_candidates"), lit(0L)).as("n_dup_candidates"),
-        col("first_match"),
-        (coalesce(col("n_dup_candidates"), lit(0L)) > 0).as("is_duplicate"))
+    flagDocs(spark, sfDir, newBound, probeBandIndex(spark, table, newBands),
+      "n_dup_candidates", "is_duplicate")
   }
 
   /** Bloom-prefiltered decontamination — identical output contract to
@@ -574,11 +590,6 @@ object Dedup {
     }
   }
 
-  /** Degenerate-text detection by n-gram repetition: the most-repeated
-    * 3-shingle's share of a document's shingle stream. Looping/generated
-    * text shows top-shingle ratios near 1; clean prose stays low. The
-    * flag threshold (≥20%) is cross-multiplied so no engine divides.
-    */
   /** Per-document duplicated-ngram fraction — the exact-substring-dup
     * signal of Lee et al. 2022 ("Deduplicating Training Data Makes
     * Language Models Better"): what share of a document's distinct
@@ -724,14 +735,16 @@ object Dedup {
     val keep = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf && col("df") >= 2)
       .select(col("fp"))
-    val posting = fps.join(keep, "fp")
-    posting.as("a").join(posting.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
+    sharedKeyCount(fps.join(keep, "fp"), Seq("fp"), Nil)(
+        (a, b) => a("doc_id") < b("doc_id"))
       .filter(col("n_shared") >= minShared)
   }
 
+  /** Degenerate-text detection by n-gram repetition: the most-repeated
+    * 3-shingle's share of a document's shingle stream. Looping/generated
+    * text shows top-shingle ratios near 1; clean prose stays low. The
+    * flag threshold (≥20%) is cross-multiplied so no engine divides.
+    */
   def repetition(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(shingles3(col("text"))).as("shingle"))
@@ -771,22 +784,92 @@ object Dedup {
         .as("n_agree"))
   }
 
+  /** Stop keys: the `keys` values held by more than `maxDf` rows of
+    * `postings`. Such a key is uninformative for the near-dup
+    * thresholds, and it adds df² rows to a postings self-join (the
+    * quadratic hot bucket on skewed text at scale).
+    */
+  private def stopKeys(postings: DataFrame, keys: Seq[String],
+      maxDf: Int): DataFrame =
+    postings.groupBy(keys.map(col): _*).agg(count(lit(1)).as("df"))
+      .filter(col("df") > maxDf)
+      .select(keys.map(col): _*)
+
+  /** The postings `sh` (doc_id + `keys`) without their [[stopKeys]], each
+    * with its doc's kept size `sz`, checkpointed for both sides of the
+    * self-join. The stop list is tiny by construction → broadcast
+    * anti-join, so the cap costs one small aggregate, no extra corpus
+    * shuffle.
+    */
+  private def keptPostings(sh: DataFrame, keys: Seq[String],
+      maxDf: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    sh.join(broadcast(stopKeys(sh, keys, maxDf)), keys, "left_anti")
+      .withColumn("sz",
+        count(lit(1)).over(Window.partitionBy(col("doc_id"))).cast("int"))
+      .truncateLineage()
+  }
+
+  /** The postings self-join: the doc pairs sharing `keys` values under
+    * `pair` (a condition over the two sides' columns), one row per pair
+    * with its shared-key count `n_shared` and each side's `carried`
+    * columns as `<c>_a`/`<c>_b`. Only pairs that actually share a key
+    * ever materialize, and the group count of matches IS the
+    * intersection size: O(postings + collisions), never all-pairs with
+    * an array_intersect per pair.
+    */
+  private def sharedKeyCount(postings: DataFrame, keys: Seq[String],
+      carried: Seq[String])(
+      pair: (String => Column, String => Column) => Column): DataFrame = {
+    def a(c: String) = col(s"a.$c")
+    def b(c: String) = col(s"b.$c")
+    postings.as("a").join(postings.as("b"),
+        keys.map(k => a(k) === b(k)).reduce(_ && _) && pair(a, b))
+      .groupBy(Seq(a("doc_id").as("doc_a"), b("doc_id").as("doc_b")) ++
+        carried.map(c => a(c).as(s"${c}_a")) ++
+        carried.map(c => b(c).as(s"${c}_b")): _*)
+      .agg(count(lit(1)).as("n_shared"))
+  }
+
+  /** The Jaccard ≥ 0.8 verifier: pairs carrying their intersection size
+    * `n_inter` and side sizes `sz_a`/`sz_b` get the union size and the
+    * near-dup flag, the threshold cross-multiplied (no division).
+    */
+  private def jaccard(pairs: DataFrame): DataFrame = {
+    val nUnion = col("sz_a") + col("sz_b") - col("n_inter")
+    pairs.select(col("doc_a"), col("doc_b"), col("n_inter"),
+      nUnion.as("n_union"), (col("n_inter") * 10 >= nUnion * 8).as("near_dup"))
+  }
+
+  /** The smaller-side orientation of containment scoring: side a (size
+    * `szA`) scores against side b when it is smaller, and on equal
+    * sizes when `tie` holds — the smaller id, or `true` where the pair
+    * list already emits the smaller id as side a. Each unordered pair is
+    * scored once.
+    */
+  private def smallerFirst(szA: Column, szB: Column, tie: Column): Column =
+    szA <= szB && (szA < szB || tie)
+
+  /** The containment ≥ 0.9 verifier over [[smallerFirst]]-oriented pairs
+    * (`doc_a` the smaller side, with `n_inter`, `sz_a`, `sz_b`): keeps
+    * C = n_inter / sz_a ≥ 0.9 by cross-multiplication and reports it in
+    * basis points.
+    */
+  private def containmentScore(pairs: DataFrame): DataFrame =
+    pairs.filter(col("n_inter") * 10 >= col("sz_a") * 9)
+      .select(col("doc_a").as("doc_small"), col("doc_b").as("doc_big"),
+        col("n_inter"), col("sz_a").as("sz_small"), col("sz_b").as("sz_big"),
+        expr("n_inter * 10000 div sz_a").as("containment_bp"))
+
   /** I2d — n-gram Jaccard on blocked candidate pairs (same `source`):
-    * exact distinct-shingle overlap, with the ≥0.8 threshold expressed as
-    * a cross-multiplication (no division anywhere).
+    * exact distinct-shingle overlap from the [[sharedKeyCount]] postings
+    * self-join (the inverted-index shape cut the sf0.1 bench time of
+    * this query ~5× against a blocked all-pairs array_intersect), scored
+    * by [[jaccard]]. The stop-shingle cap is per source.
     */
   def ngramJaccard(spark: SparkSession, sfDir: String, maxDf: Int = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     gateExactGenerator(spark, sfDir, "ngramJaccard (q_ngram_jaccard)",
       "ngramJaccardBanded (q_ngram_jaccard_banded)")
-    // Inverted-index shape: explode distinct shingles to (source, shingle,
-    // doc) postings and equi-join postings with themselves — only pairs
-    // that actually share a shingle ever materialize, and the group-count
-    // of matches IS the intersection size. An all-pairs blocked self-join
-    // with array_intersect per pair is O(block²·len); this is
-    // O(postings + collisions), the shape that survives 100 TB (and it
-    // cut the sf0.1 bench time of this query ~5×).
-    //
     // The shingle computation (regex splits + 3-gram assembly over the
     // full corpus) is the expensive narrow stage — checkpoint it ONCE so
     // neither the df aggregate nor the two self-join sides re-run it.
@@ -794,29 +877,10 @@ object Dedup {
       .select(col("doc_id"), col("source"),
         explode(array_distinct(shingles3(col("text")))).as("shingle"))
       .truncateLineage()
-    // Stop-shingle cap: a shingle present in > maxDf docs of one source
-    // contributes df² join rows (the quadratic hot bucket on skewed text
-    // at scale) and is uninformative for the ≥0.8 near-dup threshold.
-    // The stop list is tiny by construction → broadcast anti-join, so
-    // the cap costs one small aggregate, no extra corpus shuffle.
-    val stop = sh.groupBy(col("source"), col("shingle"))
-      .agg(count(lit(1)).as("df")).filter(col("df") > maxDf)
-      .select(col("source"), col("shingle"))
-    val postings = sh.join(broadcast(stop), Seq("source", "shingle"), "left_anti")
-      .withColumn("sz",
-        count(lit(1)).over(Window.partitionBy(col("doc_id"))).cast("int"))
-      .truncateLineage()
-    val inter = postings.as("a").join(postings.as("b"),
-        col("a.source") === col("b.source")
-          && col("a.shingle") === col("b.shingle")
-          && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-      .agg(count(lit(1)).cast("int").as("n_inter"))
-    inter.select(col("doc_a"), col("doc_b"), col("n_inter"),
-      (col("sz_a") + col("sz_b") - col("n_inter")).as("n_union"),
-      (col("n_inter") * 10 >= (col("sz_a") + col("sz_b") - col("n_inter")) * 8)
-        .as("near_dup"))
+    val keys = Seq("source", "shingle")
+    jaccard(sharedKeyCount(keptPostings(sh, keys, maxDf), keys, Seq("sz"))(
+        (a, b) => a("doc_id") < b("doc_id"))
+      .withColumn("n_inter", col("n_shared").cast("int")))
   }
 
   /** Asymmetric containment dedup — excerpt/quote detection, the
@@ -829,10 +893,12 @@ object Dedup {
     * precisely the cross-source phenomenon — so the stop-shingle cap is
     * corpus-wide rather than per-source; the same inverted-index
     * postings shape as [[ngramJaccard]] (only sharing pairs ever
-    * materialize, O(postings + collisions) not O(pairs)).
+    * materialize, O(postings + collisions) not O(pairs)). The
+    * [[smallerFirst]] orientation is a self-join condition, exact there
+    * because `sz` is constant per doc: it drops a pair's wrong-way rows
+    * before the aggregate ever counts them.
     */
   def containment(spark: SparkSession, sfDir: String, maxDf: Int = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     gateExactGenerator(spark, sfDir, "containment (q_containment)",
       "containmentEnsemble (q_containment_ensemble)")
     // postings travel as 60-bit fingerprints (fp60): df counts, stop
@@ -843,27 +909,10 @@ object Dedup {
       .select(col("doc_id"),
         explode(shingleFps3(col("text"))).as("fp"))
       .truncateLineage()
-    val stop = sh.groupBy(col("fp"))
-      .agg(count(lit(1)).as("df")).filter(col("df") > maxDf)
-      .select(col("fp"))
-    val postings = sh.join(broadcast(stop), Seq("fp"), "left_anti")
-      .withColumn("sz",
-        count(lit(1)).over(Window.partitionBy(col("doc_id"))).cast("int"))
-      .truncateLineage()
-    postings.as("a").join(postings.as("b"),
-        col("a.fp") === col("b.fp")
-          && col("a.doc_id") =!= col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_small"), col("b.doc_id").as("doc_big"),
-        col("a.sz").as("sz_small"), col("b.sz").as("sz_big"))
-      .agg(count(lit(1)).cast("int").as("n_inter"))
-      // score each unordered pair once, from its smaller side
-      .filter(col("sz_small") < col("sz_big")
-        || (col("sz_small") === col("sz_big")
-          && col("doc_small") < col("doc_big")))
-      .filter(col("n_inter") * 10 >= col("sz_small") * 9)
-      .select(col("doc_small"), col("doc_big"), col("n_inter"),
-        col("sz_small"), col("sz_big"),
-        expr("n_inter * 10000 div sz_small").as("containment_bp"))
+    containmentScore(sharedKeyCount(keptPostings(sh, Seq("fp"), maxDf),
+        Seq("fp"), Seq("sz"))(
+        (a, b) => smallerFirst(a("sz"), b("sz"), a("doc_id") < b("doc_id")))
+      .withColumn("n_inter", col("n_shared").cast("int")))
   }
 
   /** Threshold set-similarity join via PREFIX FILTERING (the
@@ -938,7 +987,7 @@ object Dedup {
   /** Exact verification shared by the prefix family: candidates joined
     * to their shingle arrays (pruned to pair participants first — the
     * [[pruneToParticipants]] discipline, so only candidate docs' arrays
-    * ever shuffle), Jaccard ≥ 0.8 by cross-multiplication.
+    * ever shuffle), kept where [[jaccard]] flags them.
     */
   private def scorePrefixCandidates(candRaw: DataFrame,
       docsArr: DataFrame): DataFrame = {
@@ -946,14 +995,8 @@ object Dedup {
     // would otherwise each recompute the candidate self-join
     val cand = candRaw.truncateLineage()
     val docs = pruneToParticipants(cand.sparkSession, docsArr, cand)
-    cand
-      .join(docs.select(col("doc_id").as("doc_a"),
-        col("ds").as("ds_a"), col("sz").as("sz_a")), "doc_a")
-      .join(docs.select(col("doc_id").as("doc_b"),
-        col("ds").as("ds_b"), col("sz").as("sz_b")), "doc_b")
-      .withColumn("n_inter", size(array_intersect(col("ds_a"), col("ds_b"))))
-      .withColumn("n_union", col("sz_a") + col("sz_b") - col("n_inter"))
-      .filter(col("n_inter") * 10 >= col("n_union") * 8)
+    jaccard(arrayOverlap(cand, docs, "ds"))
+      .filter(col("near_dup"))
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"))
   }
 
@@ -1025,9 +1068,22 @@ object Dedup {
         "limit explicitly to accept the cost.")
   }
 
+  /** Exact set overlap of candidate pairs: [[pairSides]] over `docs`'
+    * distinct array `arr`, with the intersection size `n_inter` and each
+    * side's size `sz_a`/`sz_b`.
+    */
+  private def arrayOverlap(pairs: DataFrame, docs: DataFrame,
+      arr: String): DataFrame = {
+    val (a, b) = (col(s"${arr}_a"), col(s"${arr}_b"))
+    pairSides(pairs, docs, Seq(arr))
+      .withColumn("n_inter", size(array_intersect(a, b)))
+      .withColumn("sz_a", size(a))
+      .withColumn("sz_b", size(b))
+  }
+
   /** Shared candidate→shingle-array scaffold for the BANDED scoring
-    * family: minhash band-collision pairs, each side joined to its
-    * distinct-shingle array. The jaccardCalibration discipline — shingle
+    * family: minhash band-collision pairs with their [[arrayOverlap]]
+    * over distinct shingles. The jaccardCalibration discipline — shingle
     * arrays are computed ONLY for pair participants (size-gated semi-join
     * [[pruneToParticipants]] before the per-row array projection), so the
     * corpus is scanned once and the shuffle carries |participants|
@@ -1042,13 +1098,7 @@ object Dedup {
       .select(col("doc_id"),
         array_distinct(shingles3(col("text"))).as("ds"))
       .truncateLineage() // one shingling pass feeds both join sides
-    pairs
-      .join(docs.select(col("doc_id").as("doc_a"), col("ds").as("ds_a")),
-        "doc_a")
-      .join(docs.select(col("doc_id").as("doc_b"), col("ds").as("ds_b")),
-        "doc_b")
-      .withColumn("n_inter",
-        size(array_intersect(col("ds_a"), col("ds_b"))))
+    arrayOverlap(pairs, docs, "ds")
   }
 
   /** Band-first n-gram Jaccard — the 100 TB form of [[ngramJaccard]].
@@ -1068,11 +1118,7 @@ object Dedup {
     * what the per-source blocking in [[ngramJaccard]] was for.
     */
   def ngramJaccardBanded(spark: SparkSession, sfDir: String): DataFrame =
-    bandedPairsWithShingles(spark, sfDir)
-      .withColumn("n_union",
-        size(col("ds_a")) + size(col("ds_b")) - col("n_inter"))
-      .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"),
-        (col("n_inter") * 10 >= col("n_union") * 8).as("near_dup"))
+    jaccard(bandedPairsWithShingles(spark, sfDir))
 
   /** Band-first asymmetric containment — the scale form of
     * [[containment]], whose corpus-wide postings join ABORTED the sf100
@@ -1091,24 +1137,16 @@ object Dedup {
     * any asymmetry. [[containment]] remains the exact generator below
     * the scale where its postings join fits (size-gated).
     */
-  def containmentBanded(spark: SparkSession, sfDir: String): DataFrame =
-    bandedPairsWithShingles(spark, sfDir)
-      .withColumn("sz_a", size(col("ds_a")))
-      .withColumn("sz_b", size(col("ds_b")))
-      // orient each pair to score from its smaller side (doc_id ties
-      // break on the a-side, which minhashPairs already orders first)
-      .select(
-        when(col("sz_a") <= col("sz_b"), col("doc_a")).otherwise(col("doc_b"))
-          .as("doc_small"),
-        when(col("sz_a") <= col("sz_b"), col("doc_b")).otherwise(col("doc_a"))
-          .as("doc_big"),
-        col("n_inter"),
-        least(col("sz_a"), col("sz_b")).as("sz_small"),
-        greatest(col("sz_a"), col("sz_b")).as("sz_big"))
-      .filter(col("n_inter") * 10 >= col("sz_small") * 9)
-      .select(col("doc_small"), col("doc_big"), col("n_inter"),
-        col("sz_small"), col("sz_big"),
-        expr("n_inter * 10000 div sz_small").as("containment_bp"))
+  def containmentBanded(spark: SparkSession, sfDir: String): DataFrame = {
+    // minhashPairs emits doc_a < doc_b, so side a wins every size tie
+    val aSmall = smallerFirst(col("sz_a"), col("sz_b"), lit(true))
+    containmentScore(bandedPairsWithShingles(spark, sfDir).select(
+      when(aSmall, col("doc_a")).otherwise(col("doc_b")).as("doc_a"),
+      when(aSmall, col("doc_b")).otherwise(col("doc_a")).as("doc_b"),
+      col("n_inter"),
+      least(col("sz_a"), col("sz_b")).as("sz_a"),
+      greatest(col("sz_a"), col("sz_b")).as("sz_b")))
+  }
 
   /** Asymmetric containment at scale — the MIN-WISE INCLUSION ENSEMBLE,
     * closing the recall gap [[containmentBanded]] honestly declares
@@ -1192,11 +1230,8 @@ object Dedup {
     val docsArr = Tables.documents(spark, sfDir)
       .select(col("doc_id"), shingleFps3(col("text")).as("ds"))
       .truncateLineage() // one shingling pass feeds stop-df and kept
-    val stopDf = docsArr
-      .select(explode(col("ds")).as("fp"))
-      .groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf)
-      .select(col("fp"))
+    val stopDf = stopKeys(docsArr.select(explode(col("ds")).as("fp")),
+        Seq("fp"), maxDf)
       .truncateLineage() // the size gate's count re-reads materialized rows
     // SIZE-GATED stop strategy (the pruneToParticipants discipline): the
     // df>maxDf set grows with DISTINCT text, so on a diverse warehouse
@@ -1204,9 +1239,8 @@ object Dedup {
     // broadcast limits long before the postings math does. Below the
     // limit (default 1 M fps = 8 MB of longs) keep the one-row broadcast
     // + narrow per-row array_except; above it degrade to the exploded
-    // anti-join the exact containment (:containment) already uses — one
-    // extra linear shuffle plus a collect back to arrays, never a
-    // corpus-dependent broadcast.
+    // anti-join — one extra linear shuffle plus a collect back to
+    // arrays, never a corpus-dependent broadcast.
     val keptRaw =
       if (stopDf.count() <= GraftConf.DedupStopBroadcastLimit(spark)) {
         val stopArr = stopDf.agg(collect_list(col("fp")).as("stop_arr"))
@@ -1243,8 +1277,7 @@ object Dedup {
     // build side is the probe relation (numProbes rows per doc, 20 B
     // each), the postings stream never sorts
     val cand = qmins.hint("shuffle_hash").join(postings, "fp")
-      .filter(col("sz_q") < col("sz_p") ||
-        (col("sz_q") === col("sz_p") && col("qdoc") < col("pdoc")))
+      .filter(smallerFirst(col("sz_q"), col("sz_p"), col("qdoc") < col("pdoc")))
       .groupBy(col("qdoc"), col("pdoc"))
       .agg(count(lit(1)).as("hits"))
       .filter(col("hits") >= minHits)
@@ -1252,23 +1285,8 @@ object Dedup {
       // smaller side (ties: the smaller id) — the output's doc_small
       .select(col("qdoc").as("doc_a"), col("pdoc").as("doc_b"))
       .truncateLineage()
-    val docs = pruneToParticipants(spark, kept, cand)
-    cand
-      .join(docs.select(col("doc_id").as("doc_a"), col("ks").as("ks_a"))
-        .hint("shuffle_hash"), "doc_a")
-      .join(docs.select(col("doc_id").as("doc_b"), col("ks").as("ks_b"))
-        .hint("shuffle_hash"), "doc_b")
-      .withColumn("n_inter", size(array_intersect(col("ks_a"), col("ks_b"))))
-      .select(
-        col("doc_a").as("doc_small"),
-        col("doc_b").as("doc_big"),
-        col("n_inter"),
-        size(col("ks_a")).as("sz_small"),
-        size(col("ks_b")).as("sz_big"))
-      .filter(col("n_inter") * 10 >= col("sz_small") * 9)
-      .select(col("doc_small"), col("doc_big"), col("n_inter"),
-        col("sz_small"), col("sz_big"),
-        expr("n_inter * 10000 div sz_small").as("containment_bp"))
+    containmentScore(arrayOverlap(cand,
+      pruneToParticipants(spark, kept, cand).hint("shuffle_hash"), "ks"))
   }
 
   /** Fuzzy entity resolution by edit distance — the typo/near-miss name

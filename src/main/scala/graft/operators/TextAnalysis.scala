@@ -911,26 +911,25 @@ object TextAnalysis {
   def heavyHitters(spark: SparkSession, sfDir: String, capacity: Int = 512): DataFrame = {
     val toks = Tables.documents(spark, sfDir)
       .select(explode(wsTokens(col("text"))).as("token"))
+    // the token total rides the sketch's aggregate: one pass, one explode
     val cand = toks
-      .agg(graft.functions.SpaceSaving.space_saving(col("token"), capacity).as("hh"))
-      .select(explode(col("hh")).as("token"))
+      .agg(graft.functions.SpaceSaving.space_saving(col("token"), capacity).as("hh"),
+        count(lit(1)).as("n_tok"))
+      .select(explode(col("hh")).as("token"), col("n_tok"))
     recountHeavyHitters(toks, cand, capacity)
   }
 
   /** The exact phase of both heavy-hitter keys: the occurrences of each
-    * candidate token in the `toks` stream, kept where they exceed
-    * 1/`capacity` of all tokens. The candidates and the 1-row token
-    * total broadcast.
+    * distinct candidate token of `cand` in the `toks` stream, kept where
+    * they exceed 1/`capacity` of the token total `n_tok` that every
+    * `cand` row carries. The candidates broadcast.
     */
   private[graft] def recountHeavyHitters(toks: DataFrame, cand: DataFrame,
-      capacity: Int): DataFrame = {
-    val nTok = broadcast(toks.agg(count(lit(1)).as("n_tok")))
-    toks.join(broadcast(cand), Seq("token"), "left_semi")
-      .groupBy(col("token")).agg(count(lit(1)).as("n_occurrences"))
-      .crossJoin(nTok)
+      capacity: Int): DataFrame =
+    toks.join(broadcast(cand), Seq("token"))
+      .groupBy(col("token"), col("n_tok")).agg(count(lit(1)).as("n_occurrences"))
       .filter(col("n_occurrences") * capacity > col("n_tok"))
       .select(col("token"), col("n_occurrences"))
-  }
 
   /** Per-document character-entropy quality signal: Shannon entropy of
     * the a-z0-9 character distribution (lowercased, everything else

@@ -171,10 +171,7 @@ object DocsStreaming {
         }
       }
       batch.persist() // read for its bands AND its survivors: one source scan
-      val bands = batch.select(col("doc_id"),
-          posexplode(graft.functions.HashExpressions
-            .minhash_band_keys(col("text")))
-            .as(Seq("band_id", "band_key")))
+      val bands = graft.operators.Dedup.bandRows(batch)
         .cache() // probed, window-scanned, AND appended below
       try {
         // Probe only PRIOR batches' bands — one generation + the
@@ -264,12 +261,15 @@ object DocsStreaming {
 
     // final sketch state = each bucket's last emission; then the exact
     // candidate recount over the batch corpus (the sketch is the
-    // candidate generator, exactness comes from the recount)
+    // candidate generator, exactness comes from the recount). Every
+    // token lands in one bucket, so the buckets' last counts sum to the
+    // token total.
     val lastPerBucket = dumped
       .groupBy(col("bucket")).agg(max(col("n_seen")).as("n_seen"))
     val cand = dumped
       .join(lastPerBucket, Seq("bucket", "n_seen"))
       .select(col("token")).distinct()
+      .crossJoin(broadcast(lastPerBucket.agg(sum(col("n_seen")).as("n_tok"))))
     val corpus = spark.read.schema(docSchema).parquet(srcDir)
       .select(explode(wsTokens(col("text"))).as("token"))
     graft.operators.TextAnalysis.recountHeavyHitters(corpus, cand, capacity)

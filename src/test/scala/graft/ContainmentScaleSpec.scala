@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -143,18 +144,64 @@ class ContainmentScaleSpec extends SparkTestBase {
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val bc = canon(Dedup.containmentEnsemble(spark, dir, maxDf = 100))
-    spark.conf.set("graft.dedup.stopBroadcastLimit", "-1")
-    try {
-      val aj = canon(Dedup.containmentEnsemble(spark, dir, maxDf = 100))
-      assert(aj === bc)
-      assert(bc.nonEmpty, "planted excerpt-in-host pair survives the stop cap")
-    } finally spark.conf.unset("graft.dedup.stopBroadcastLimit")
+    assert(bc.nonEmpty, "planted excerpt-in-host pair survives the stop cap")
+    // each row must equal the default (single-row broadcast) ensemble:
+    // the shuffled anti-join strategy, and the exact postings join,
+    // which reads the same stop rule
+    val others = Seq[(String, () => Seq[String])](
+      "ensemble, anti-join stop strategy" -> (() => {
+        spark.conf.set("graft.dedup.stopBroadcastLimit", "-1")
+        try canon(Dedup.containmentEnsemble(spark, dir, maxDf = 100))
+        finally spark.conf.unset("graft.dedup.stopBroadcastLimit")
+      }),
+      "exact containment" -> (() =>
+        canon(Dedup.containment(spark, dir, maxDf = 100))))
+    for ((name, run) <- others) assert(run() === bc, name)
   }
 
   test("banded scorer results are identical under either prune strategy") {
-    val broadcastRows = canon(Dedup.ngramJaccardBanded(spark, sf()))
-    spark.conf.set("graft.dedup.broadcastIdLimit", "0")
-    try assert(canon(Dedup.ngramJaccardBanded(spark, sf())) === broadcastRows)
-    finally spark.conf.unset("graft.dedup.broadcastIdLimit")
+    // every pruneToParticipants caller: the broadcast id set (default
+    // limit) against the shuffled semi-join (limit 0), at sf0.01 so each
+    // side returns rows
+    val d = sf("sf0.01")
+    val callers = Seq[(String, () => DataFrame)](
+      "jaccardPrefix" -> (() => Dedup.jaccardPrefix(spark, d)),
+      "jaccardPrefixCapped" -> (() => Dedup.jaccardPrefixCapped(spark, d)),
+      "ngramJaccardBanded" -> (() => Dedup.ngramJaccardBanded(spark, d)),
+      "containmentBanded" -> (() => Dedup.containmentBanded(spark, d)),
+      "containmentEnsemble" -> (() => Dedup.containmentEnsemble(spark, d)),
+      "jaccardCalibration" -> (() => Dedup.jaccardCalibration(spark, d)))
+    for ((name, run) <- callers) {
+      val broadcastRows = canon(run())
+      assert(broadcastRows.nonEmpty, name)
+      spark.conf.set("graft.dedup.broadcastIdLimit", "0")
+      try assert(canon(run()) === broadcastRows, name)
+      finally spark.conf.unset("graft.dedup.broadcastIdLimit")
+    }
+  }
+
+  test("containment scorers emit an equal-size pair once, smaller id first") {
+    // two identical documents (equal kept size, full containment) plus
+    // filler of unique tokens; the twins' ids run against file order
+    val dir = Files.createTempDirectory("graft_tie_fixture").toString
+    val twin = (0 until 60).map(j => s"t_$j").mkString(" ")
+    import spark.implicits._
+    val rows = Seq((11L, twin, "en", "s", twin.length.toLong),
+      (4L, twin, "en", "s", twin.length.toLong)) ++
+      (0 until 20).map { k =>
+        val t = (0 until 40).map(j => s"u${k}_$j").mkString(" ")
+        (100L + k, t, "en", "s", t.length.toLong)
+      }
+    rows.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    for ((name, run) <- Seq[(String, () => DataFrame)](
+        "containment" -> (() => Dedup.containment(spark, dir)),
+        "containmentBanded" -> (() => Dedup.containmentBanded(spark, dir)),
+        "containmentEnsemble" -> (() => Dedup.containmentEnsemble(spark, dir)))) {
+      val out = run().select(col("doc_small"), col("doc_big"),
+        col("containment_bp")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(out === Seq((4L, 11L, 10000L)), name)
+    }
   }
 }

@@ -94,73 +94,6 @@ object Scratch {
             countDistinct(col("user_id")))
         println(combined.queryExecution.executedPlan.toString.take(4000))
 
-      case "ensdebug" =>
-        // phase-by-phase profile of Dedup.containmentEnsemble (mirrors
-        // its code path 1:1): where do the sf100 seconds go — the corpus
-        // checkpoints, the probe join, the pair-count aggregation, or
-        // the exact verification?
-        import org.apache.spark.sql.functions._
-        import graft.functions.TextFunctions._
-        import graft.Checkpoints.TruncateOps
-        val (maxDf, numProbes, minHits) = (100, 8, 2)
-        val docsArr0 = sources.Tables.documents(spark, d)
-          .select(col("doc_id"), shingleFps3(col("text")).as("ds"))
-        var docsArr: org.apache.spark.sql.DataFrame = null
-        time("p1_shingle_ckpt") { docsArr = docsArr0.truncateLineage(); docsArr.count() }
-        var stopDf: org.apache.spark.sql.DataFrame = null
-        time("p2_stop_df") {
-          stopDf = docsArr.select(explode(col("ds")).as("fp"))
-            .groupBy(col("fp")).agg(count(lit(1)).as("df"))
-            .filter(col("df") > maxDf).select(col("fp")).truncateLineage()
-          stopDf.count()
-        }
-        val stopArr = stopDf.agg(collect_list(col("fp")).as("stop_arr"))
-        var kept: org.apache.spark.sql.DataFrame = null
-        time("p3_kept_ckpt") {
-          kept = docsArr.crossJoin(broadcast(stopArr))
-            .select(col("doc_id"), array_except(col("ds"), col("stop_arr")).as("ks"))
-            .truncateLineage()
-          kept.count()
-        }
-        kept = kept.filter(size(col("ks")) > 0)
-        time("p3b_postings_vol") {
-          kept.agg(sum(size(col("ks")))).head.getLong(0)
-        }
-        val probes = (0 until numProbes).map { i =>
-          array_min(transform(col("ks"),
-            x => struct(md5(concat(lit(i + "|"), x.cast("string"))).as("h"),
-              x.as("s"))))("s")
-        }
-        val qmins = kept.select(col("doc_id").as("qdoc"),
-          size(col("ks")).as("sz_q"), explode(array(probes: _*)).as("fp"))
-        val postings = kept.select(col("doc_id").as("pdoc"),
-          size(col("ks")).as("sz_p"), explode(col("ks")).as("fp"))
-        val hits = qmins.hint("shuffle_hash").join(postings, "fp")
-          .filter(col("sz_q") < col("sz_p") ||
-            (col("sz_q") === col("sz_p") && col("qdoc") < col("pdoc")))
-        time("p4a_hit_rows") { hits.count() }
-        val paircnt = hits.groupBy(col("qdoc"), col("pdoc"))
-          .agg(count(lit(1)).as("hits"))
-        time("p4b_distinct_pairs") { paircnt.count() }
-        var cand: org.apache.spark.sql.DataFrame = null
-        time("p4c_cand_ckpt") {
-          cand = paircnt.filter(col("hits") >= minHits)
-            .select(col("qdoc").as("doc_a"), col("pdoc").as("doc_b"))
-            .truncateLineage()
-          cand.count()
-        }
-        time("p5_verify") {
-          val docsP = operators.Dedup.pruneToParticipants(spark, kept, cand)
-          cand
-            .join(docsP.select(col("doc_id").as("doc_a"), col("ks").as("ks_a"))
-              .hint("shuffle_hash"), "doc_a")
-            .join(docsP.select(col("doc_id").as("doc_b"), col("ks").as("ks_b"))
-              .hint("shuffle_hash"), "doc_b")
-            .withColumn("n_inter", size(array_intersect(col("ks_a"), col("ks_b"))))
-            .filter(col("n_inter") * 10 >= size(col("ks_a")) * 9)
-            .count()
-        }
-
       case "paircount" =>
         time("minhash_pairs") { operators.Dedup.minhashPairs(spark, d).count() }
         time("calibration") {
