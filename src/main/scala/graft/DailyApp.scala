@@ -2,6 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -39,29 +40,29 @@ import graft.streaming.{EventsStreaming, RetryRunner}
   * batch — so the append itself is made idempotent by a dt guard: only
   * when the batch holds `insert_data` days, the [[AppendTarget]] is
   * asked which of those days it `held` already, and only the others are
-  * appended. The default target is the parquet table at `table`, whose
-  * `held` reads the `dt` column with its declared schema and an `isin`
-  * filter pushed to the scan (no shuffle, no schema-inference job); the
-  * JDBC target ([[graft.sources.JdbcStore.InvestmentTarget]]) is the
-  * reference DDL's Postgres/Derby table. A batch with no fresh day
-  * writes nothing, so the parquet table holds one file per appended day
+  * appended. The default target is the parquet table at `table`
+  * ([[ParquetTarget]]), which stores each appended day as one file,
+  * `<dt>.parquet`, renamed into place atomically, so its `held` reads
+  * file names and runs no Spark job; the JDBC target
+  * ([[graft.sources.JdbcStore.InvestmentTarget]]) is the reference
+  * DDL's Postgres/Derby table. A batch with no fresh day writes nothing
   * (ticks are scheduler-serialized, so there is no concurrent writer to
-  * race). A closed-day tick runs one Spark job; an open day on an
-  * existing parquet table runs three (route, guard, append), plus one
-  * for the notify delivery. The ingest tick is wrapped in
-  * [[RetryRunner.withRetries]] (retries=2, 5-min delay) — the DAG's
-  * task-retry semantics at application level, on top of Spark's own
-  * three task attempts inside each job ([[GraftSession]]).
+  * race). A closed-day tick runs one Spark job; an open day runs two
+  * (route, append), and notify delivery adds none. The ingest tick is
+  * wrapped in [[RetryRunner.withRetries]] (retries=2, 5-min delay) — the
+  * DAG's task-retry semantics at application level, on top of Spark's
+  * own three task attempts inside each job ([[GraftSession]]).
   *
   * Notifications mirror the reference DAG's task graph, where
   * `insert_data` and `notice` are SEPARATE tasks (a notify retry never
   * re-runs the INSERT): the batch body only QUEUES each message as a
   * durable marker file under `notify_pending/`; the POSTs run as their
-  * own retried step after the streaming query has committed, deleting
-  * each marker on success. A notify failure therefore cannot replay the
-  * append, and a crash between commit and delivery leaves the markers
-  * in place for the next tick. Delivery is at-least-once, the same
-  * semantics as an Airflow task retry of `notice`.
+  * own retried step after the streaming query has committed, from the
+  * driver, deleting each marker after its POST succeeds. A notify
+  * failure therefore cannot replay the append, and a crash between
+  * commit and delivery leaves the markers in place for the next tick.
+  * Delivery is at-least-once, the same semantics as an Airflow task
+  * retry of `notice`.
   *
   * At scale this driver is unchanged: the landing dir becomes the
   * object-store prefix the fetcher fleet writes to and the file source
@@ -114,15 +115,53 @@ object DailyApp {
     def append(rows: DataFrame): Unit
   }
 
-  /** The parquet table at `dir`; a missing dir is an empty table. */
+  /** The parquet table at `dir`; a missing dir is an empty table.
+    *
+    * `append` writes the fresh days in one job into a hidden
+    * `_stage-<uuid>` dir (one task, partitioned by a copy of `dt`), moves
+    * each day's single part file to `<dt>.parquet` with an atomic rename,
+    * then deletes the stage. A day is therefore one file, present whole
+    * or absent. A stage a crash left behind is skipped by Spark readers
+    * (the `_` prefix) and deleted by the next `append`.
+    *
+    * `held` answers from those file names. A table written before this
+    * layout holds `part-*.parquet` files; while any `.parquet` file not
+    * named `<8 digits>.parquet` is present, the dates not found by name
+    * are looked up by one `dt` read over those files alone.
+    */
   final case class ParquetTarget(spark: SparkSession, dir: Path) extends AppendTarget {
     def held(dates: Seq[String]): Set[String] =
       if (!Files.exists(dir)) Set.empty
-      else spark.read.schema(Schemas.investmentData).parquet(dir.toString)
-        .select(col("dt")).filter(col("dt").isin(dates: _*))
-        .collect().map(_.getString(0)).toSet
-    def append(rows: DataFrame): Unit = rows.write.mode("append").parquet(dir.toString)
+      else {
+        val (named, other) = FsUtil.listDir(dir).map(_.getFileName.toString)
+          .filter(_.endsWith(".parquet"))
+          .partition(DayFile.matches)
+        val byName = dates.filter(d => named.contains(s"$d.parquet")).toSet
+        val rest = dates.filterNot(byName)
+        if (other.isEmpty || rest.isEmpty) byName
+        else byName ++ spark.read.schema(Schemas.investmentData)
+          .parquet(other.map(dir.resolve(_).toString).toSeq: _*)
+          .select(col("dt")).filter(col("dt").isin(rest: _*))
+          .collect().map(_.getString(0))
+      }
+
+    def append(rows: DataFrame): Unit = {
+      Files.createDirectories(dir)
+      FsUtil.listDir(dir).filter(_.getFileName.toString.startsWith(StagePrefix))
+        .foreach(FsUtil.deleteRecursively)
+      val stage = dir.resolve(StagePrefix + UUID.randomUUID())
+      rows.withColumn("day", col("dt")).coalesce(1)
+        .write.partitionBy("day").parquet(stage.toString)
+      FsUtil.listDir(stage).map(_.getFileName.toString).filter(_.startsWith("day="))
+        .foreach(p => Files.move(FsUtil.singleParquetPart(stage.resolve(p)),
+          dir.resolve(p.stripPrefix("day=") + ".parquet"), StandardCopyOption.ATOMIC_MOVE))
+      FsUtil.deleteRecursively(stage)
+    }
   }
+
+  /** The file name of one appended day in a [[ParquetTarget]] table. */
+  private val DayFile = """\d{8}\.parquet""".r
+  private val StagePrefix = "_stage-"
 
   def main(args: Array[String]): Unit = {
     JvmPrereqs.check()
@@ -221,13 +260,12 @@ object DailyApp {
         // batch re-appends nothing (the PostgresOperator INSERT with
         // an ON CONFLICT DO NOTHING key).
         // EXACTLY-ONCE ENVELOPE: the dt-granular guard assumes a
-        // day's append is ATOMIC — true for both targets (one row per
-        // dt ⇒ one parquet file, or one JDBC row, committed or absent).
-        // A target where one day spans several files/tasks (partitioned
-        // parquet) can crash with a day PARTIALLY committed, and replay
-        // would skip the whole dt instead of repairing it — such a
-        // target needs row-granular dedup or stage-then-rename, not
-        // this guard.
+        // day's append is ATOMIC — true for both targets (one atomically
+        // renamed `<dt>.parquet` file, or one JDBC row, committed or
+        // absent). A target where one day spans several files or tasks
+        // can crash with a day PARTIALLY committed, and replay would
+        // skip the whole dt instead of repairing it — such a target
+        // needs row-granular dedup or stage-then-rename, not this guard.
         val held = if (okDates.isEmpty) Set.empty[String] else target.held(okDates)
         val fresh = routed.collect { case (d, v, "insert_data") if !held(d) => (d, v) }
         if (fresh.nonEmpty)
@@ -249,7 +287,7 @@ object DailyApp {
     // separate DAG tasks with independent retries).
     cfg.notifyUrl.foreach { url =>
       RetryRunner.withRetries(cfg.retries, cfg.retryDelayMs, cfg.sleep) {
-        _ => deliverPending(spark, cfg, url)
+        _ => deliverPending(cfg, url)
       }
     }
     summary
@@ -268,24 +306,19 @@ object DailyApp {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Deliver every queued notification, deleting each marker only after
-    * the whole POST job succeeds. At-least-once: a failure mid-job
-    * leaves all markers for the retry (some messages may re-send — the
-    * same semantics as retrying the reference's `notice` task).
+  /** Deliver every queued notification from the driver, in marker-name
+    * order, deleting each marker after its POST succeeds. At-least-once:
+    * a failure leaves that marker and the later ones for the retry, which
+    * re-sends only what was not delivered (a crash between a POST and its
+    * delete re-sends one message — the same semantics as retrying the
+    * reference's `notice` task).
     */
-  private[graft] def deliverPending(spark: SparkSession, cfg: Config,
-      url: String): Unit = {
-    if (!Files.exists(cfg.notifyPending)) return
-    val pending = graft.FsUtil.listDir(cfg.notifyPending)
-      .filter(_.getFileName.toString.endsWith(".msg"))
-      .toList.sortBy(_.getFileName.toString)
-    if (pending.isEmpty) return
-    import spark.implicits._
-    val msgs = pending.map { p =>
-      (p.getFileName.toString.takeWhile(_ != '.'),
-        new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-    }
-    NotifySink.post(msgs.toDF("date", "message"), url, cfg.chatId)
-    pending.foreach(Files.deleteIfExists(_))
-  }
+  private[graft] def deliverPending(cfg: Config, url: String): Unit =
+    if (Files.exists(cfg.notifyPending))
+      FsUtil.listDir(cfg.notifyPending).filter(_.getFileName.toString.endsWith(".msg"))
+        .sortBy(_.getFileName.toString).foreach { p =>
+          NotifySink.send(url, cfg.chatId,
+            new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+          Files.delete(p)
+        }
 }

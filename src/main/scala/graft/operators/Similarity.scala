@@ -3,6 +3,7 @@ package graft.operators
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExpressions.{cosine_similarity, quantized_cosine}
 import graft.Checkpoints.TruncateOps
@@ -159,16 +160,19 @@ object Similarity {
         (col("dot") / (sqrt(col("na")) * sqrt(col("nb")))).as("cos"): _*)
 
   /** Per-label centroid distances: element-wise mean per label (long
-    * format: explode dims → groupBy(label, dim)), then each vector's
-    * cosine to its label centroid — the building block of IVF-style
-    * coarse quantization (assign-to-centroid) and of cluster-quality
-    * audits. Two shuffles: (label, dim) for the centroid, vec_id for the
-    * re-aggregation; both move scalars, never whole vectors.
+    * format: explode dims, then a window on (label, dim) puts the
+    * centroid coordinate `c` beside each `v`), then each vector's cosine
+    * to its label centroid — the building block of IVF-style coarse
+    * quantization (assign-to-centroid) and of cluster-quality audits.
+    * One scan, one explode and two shuffles: (label, dim) for the
+    * centroid, vec_id for the re-aggregation; both move scalars, never
+    * whole vectors. An unlabelled vector has no centroid and no row.
     */
   def centroidDistance(spark: SparkSession, sfDir: String): DataFrame = {
-    val ex = labelEx(Tables.embeddings(spark, sfDir))
-    groupCosine(ex.join(labelCentroids(ex), Seq("label", "dim")),
-        Seq("vec_id", "label"), col("v"), col("c"))
+    val byDim = Window.partitionBy(col("label"), col("dim"))
+    val ex = labelEx(Tables.embeddings(spark, sfDir).filter(col("label").isNotNull))
+      .withColumn("c", sum(col("v")).over(byDim) / count(lit(1)).over(byDim))
+    groupCosine(ex, Seq("vec_id", "label"), col("v"), col("c"))
       .select(col("vec_id"), col("label"), round(col("cos"), 6).as("score"))
   }
 

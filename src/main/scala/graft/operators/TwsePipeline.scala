@@ -218,8 +218,8 @@ object TwsePipeline {
 
   /** E2 — success-notification sink (`notice_bot`, `Final_app.py:137-142`):
     * one message row per successfully-inserted day. Modeled as a message
-    * DataFrame; the side-effecting POST is a `foreachPartition` /
-    * `foreachBatch` writer over exactly these rows.
+    * DataFrame; the side-effecting POST is [[NotifySink.send]] of each
+    * row's `message`.
     */
   def notifySuccess(spark: SparkSession): DataFrame =
     valid(spark).select(

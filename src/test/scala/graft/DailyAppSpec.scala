@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.Assertions._
 
 import graft.model.{Schemas, TwseFixtures}
@@ -22,21 +22,29 @@ import graft.model.{Schemas, TwseFixtures}
 class DailyAppSpec extends SparkTestBase {
   import DailyAppSpec._
 
-  private def withServer[A](
-      body: (String, java.util.List[(String, String)]) => A): A = {
+  /** A loopback sendMessage endpoint recording each accepted POST's
+    * chat_id/text pair; the requests numbered (from 1) by `fail` get an
+    * HTTP 500 and are not recorded.
+    */
+  private def withServer[A](body: (String, java.util.List[(String, String)]) => A,
+      fail: Int => Boolean = _ => false): A = {
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     val posts = java.util.Collections.synchronizedList(
       new java.util.ArrayList[(String, String)]())
+    val requests = new java.util.concurrent.atomic.AtomicInteger
     server.createContext("/bot/sendMessage", (ex: HttpExchange) => {
       val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       val kv = raw.split("&").map { p =>
         val Array(k, v) = p.split("=", 2)
         k -> URLDecoder.decode(v, "UTF-8")
       }.toMap
-      if (ex.getRequestMethod == "POST") posts.add((kv("chat_id"), kv("text")))
-      val ok = "{\"ok\":true}".getBytes(StandardCharsets.UTF_8)
-      ex.sendResponseHeaders(200, ok.length)
-      ex.getResponseBody.write(ok)
+      if (fail(requests.incrementAndGet())) ex.sendResponseHeaders(500, -1)
+      else {
+        if (ex.getRequestMethod == "POST") posts.add((kv("chat_id"), kv("text")))
+        val ok = "{\"ok\":true}".getBytes(StandardCharsets.UTF_8)
+        ex.sendResponseHeaders(200, ok.length)
+        ex.getResponseBody.write(ok)
+      }
       ex.close()
     })
     server.start()
@@ -86,21 +94,97 @@ class DailyAppSpec extends SparkTestBase {
     FsUtil.listDir(cfg.table).map(_.getFileName.toString)
       .filter(_.endsWith(".parquet")).toSeq
 
+  /** The `_stage-*` dirs left in the `investment_data` table. */
+  private def stages(cfg: DailyApp.Config): Seq[String] =
+    FsUtil.listDir(cfg.table).map(_.getFileName.toString)
+      .filter(_.startsWith("_stage-")).toSeq
+
   test("batch replay does not duplicate the append: the dt guard dedupes") {
-    // foreachBatch is at-least-once — simulate the replay a crash between
-    // append and checkpoint-commit causes by wiping the checkpoint so the
-    // next tick re-processes every landed file against a populated table.
+    // foreachBatch is at-least-once: a crash after the append and before
+    // the checkpoint commit replays the batch. The target's first append
+    // lands the day and then throws; the tick's retry replays the
+    // un-committed batch against the populated table.
     val cfg = freshCfg(None)
-    DailyApp.runTick(spark, cfg)
-    val filesBefore = tableFiles(cfg)
-    org.apache.commons.io.FileUtils.deleteDirectory(cfg.checkpoint.toFile)
-    val replay = DailyApp.runTick(spark, cfg)
+    val retries = new java.util.concurrent.atomic.AtomicInteger
+    val appends = new java.util.concurrent.atomic.AtomicInteger
+    val table = DailyApp.ParquetTarget(spark, cfg.table)
+    val crashing = new DailyApp.AppendTarget {
+      def held(dates: Seq[String]): Set[String] = table.held(dates)
+      def append(rows: DataFrame): Unit = {
+        table.append(rows)
+        if (appends.incrementAndGet() == 1)
+          throw new RuntimeException("crash before the checkpoint commit")
+      }
+    }
+    val replay = DailyApp.runTick(spark,
+      cfg.copy(sleep = _ => retries.incrementAndGet(): Unit), crashing)
+    assert(retries.get === 1)
     // the replayed batch still ROUTES the day (summary reports it) ...
     assert(replay.inserted === Seq("20220819"))
-    // ... but appends nothing: exactly one golden row survives the replay
+    // ... but appends nothing: the guard skipped the second append ...
+    assert(appends.get === 1)
+    // ... so exactly one golden row and one file survive the replay
+    val read = spark.read.parquet(cfg.table.toString)
+    assert(read.count() === 1)
+    assert(tableFiles(cfg) === Seq("20220819.parquet"))
+    assert(stages(cfg).isEmpty && read.inputFiles.forall(!_.contains("_stage-")))
+  }
+
+  test("a stale stage from a crash before the move is ignored, then cleared") {
+    // a crash between the staged write and the rename leaves a
+    // `_stage-*` dir holding the day: readers skip it, and the next
+    // append deletes it and lands the day once
+    val cfg = landedOnly(freshCfg(None))
+    land(cfg, "20220819", TwseFixtures.ok)
+    DailyApp.runTick(spark, cfg)
+    graft.operators.TwsePipeline.flagship(spark).withColumn("dt", lit("20220822"))
+      .withColumn("day", col("dt")).coalesce(1).write.partitionBy("day")
+      .parquet(cfg.table.resolve("_stage-crashed").toString)
     assert(spark.read.parquet(cfg.table.toString).count() === 1)
-    // ... and writes no file, not even an empty one
-    assert(tableFiles(cfg) === filesBefore)
+    land(cfg, "20220822", openDay("20220822"))
+    assert(DailyApp.runTick(spark, cfg).inserted === Seq("20220822"))
+    assert(stages(cfg).isEmpty)
+    val dts = spark.read.parquet(cfg.table.toString).select(col("dt"))
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(dts === Seq("20220819", "20220822"))
+    assert(tableFiles(cfg).sorted === Seq("20220819.parquet", "20220822.parquet"))
+  }
+
+  /** Write `df` into `dir` the way the table was appended to before the
+    * dt-named layout: a `part-*` file.
+    */
+  private def appendLegacy(df: DataFrame, dir: java.nio.file.Path): Unit =
+    df.select(Schemas.investmentCols.map(col): _*).write.mode("append").parquet(dir.toString)
+
+  test("a legacy part-file table: replays skip its day, a new day lands as <dt>.parquet") {
+    var table: java.nio.file.Path = null
+    val rows = replayCases(spark, { cfg =>
+      table = cfg.table
+      appendLegacy(graft.operators.TwsePipeline.flagship(spark), cfg.table)
+      DailyApp.ParquetTarget(spark, cfg.table)
+    }, cfg => canonRows(spark.read.parquet(cfg.table.toString)))
+    assert(rows.map(_.take(8)) === Seq("20220819", "20220822"))
+    val files = FsUtil.listDir(table).map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+    assert(files.count(_.startsWith("part-")) === 1)
+    assert(files.filterNot(_.startsWith("part-")).toSeq === Seq("20220822.parquet"))
+  }
+
+  test("held reads the table only while a non-dt-named file is present") {
+    val golden = graft.operators.TwsePipeline.flagship(spark)
+    val legacy = DailyApp.ParquetTarget(spark, freshCfg(None).table)
+    appendLegacy(golden, legacy.dir)
+    var held = Set.empty[String]
+    assert(jobsOf { held = legacy.held(Seq("20220819", "20220822")) } === 1)
+    assert(held === Set("20220819"))
+    legacy.append(golden.withColumn("dt", lit("20220822")))
+    assert(jobsOf { held = legacy.held(Seq("20220822")) } === 0)
+    assert(held === Set("20220822"))
+    assert(jobsOf { held = legacy.held(Seq("20220819", "20220822")) } === 1)
+    assert(held === Set("20220819", "20220822"))
+    val named = DailyApp.ParquetTarget(spark, freshCfg(None).table)
+    named.append(golden)
+    assert(jobsOf { held = named.held(Seq("20220819", "20220822")) } === 0)
+    assert(held === Set("20220819"))
   }
 
   test("a partial replay appends only the day the table does not hold") {
@@ -116,7 +200,7 @@ class DailyAppSpec extends SparkTestBase {
     val dts = spark.read.parquet(cfg.table.toString).select(col("dt"))
       .collect().map(_.getString(0)).sorted.toSeq
     assert(dts === Seq("20220819", "20220822"))
-    assert(tableFiles(cfg).size === 2)
+    assert(tableFiles(cfg).sorted === Seq("20220819.parquet", "20220822.parquet"))
   }
 
   test("closed and drift days write no file: one parquet file per appended day") {
@@ -131,16 +215,35 @@ class DailyAppSpec extends SparkTestBase {
     assert(!Files.exists(closedOnly.table))
   }
 
-  test("job-count pin: a closed tick runs 1 job, an open tick on a table 3") {
-    // the batch body routes in one job; the guard and the append add one
-    // each, and only when there is an open day to append
-    val cfg = landedOnly(freshCfg(None))
-    land(cfg, "20220820", TwseFixtures.closed)
-    assert(jobsOf(DailyApp.runTick(spark, cfg)) === 1)
-    land(cfg, "20220819", TwseFixtures.ok)
-    DailyApp.runTick(spark, cfg) // creates the table
-    land(cfg, "20220822", openDay("20220822"))
-    assert(jobsOf(DailyApp.runTick(spark, cfg)) === 3)
+  test("job-count pin: a closed tick runs 1 job, an open tick on a table 2, notify 0") {
+    // the batch body routes in one job; the append adds one, and only
+    // when there is an open day to append. The dt guard reads file names
+    // and the notify delivery POSTs from the driver, so neither adds one.
+    withServer { (url, posts) =>
+      val cfg = landedOnly(freshCfg(None))
+      land(cfg, "20220820", TwseFixtures.closed)
+      assert(jobsOf(DailyApp.runTick(spark, cfg)) === 1)
+      land(cfg, "20220819", TwseFixtures.ok)
+      DailyApp.runTick(spark, cfg) // creates the table
+      land(cfg, "20220822", openDay("20220822"))
+      assert(jobsOf(DailyApp.runTick(spark, cfg)) === 2)
+      land(cfg, "20220823", openDay("20220823"))
+      assert(jobsOf(DailyApp.runTick(spark, cfg.copy(notifyUrl = Some(url)))) === 2)
+      assert(posts.size === 1)
+    }
+  }
+
+  test("a failed notify POST is retried alone: each message arrives once") {
+    // the second POST 500s once; its retry re-sends only the messages
+    // not yet delivered
+    withServer({ (url, posts) =>
+      val cfg = freshCfg(Some(url))
+      assert(DailyApp.runTick(spark, cfg).inserted === Seq("20220819"))
+      import scala.jdk.CollectionConverters._
+      assert(posts.asScala.map(_._2).sorted === Seq(
+        "20220819" + TwseFixtures.successMsgSuffix, TwseFixtures.alertMsg).sorted)
+      assert(FsUtil.listDir(cfg.notifyPending).isEmpty)
+    }, fail = _ == 2)
   }
 
   test("notify failure cannot replay the append; its own retry delivers") {

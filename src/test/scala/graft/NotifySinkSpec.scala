@@ -8,8 +8,8 @@ import graft.model.TwseFixtures
 import graft.operators.{NotifySink, TwsePipeline}
 
 /** E2/E3 side-effecting delivery: the notification rows must actually
-  * arrive over HTTP, executor-side, with the reference's message bodies
-  * (`Final_app.py:130-142`, `dags/telegram.py:29-34`).
+  * arrive over HTTP, one driver-side POST each, with the reference's
+  * message bodies (`Final_app.py:130-142`, `dags/telegram.py:29-34`).
   */
 class NotifySinkSpec extends SparkTestBase {
 
@@ -37,9 +37,13 @@ class NotifySinkSpec extends SparkTestBase {
     finally server.stop(0)
   }
 
+  /** Send every `message` of `messages` to `endpoint` as "graft-chat". */
+  private def sendAll(messages: org.apache.spark.sql.DataFrame, endpoint: String): Unit =
+    messages.collect().foreach(r => NotifySink.send(endpoint, "graft-chat", r.getAs[String]("message")))
+
   test("E2: success notifications POST one message per valid day") {
     withServer { (endpoint, posts) =>
-      NotifySink.post(TwsePipeline.notifySuccess(spark), endpoint, "graft-chat")
+      sendAll(TwsePipeline.notifySuccess(spark), endpoint)
       val got = posts.toArray(Array.empty[(String, String)]).toSeq.sorted
       assert(got.map(_._1).distinct === Seq("graft-chat"))
       // exactly the open+valid golden day gets a dated success message
@@ -49,7 +53,7 @@ class NotifySinkSpec extends SparkTestBase {
 
   test("E3: alert notifications POST the drift message for invalid days") {
     withServer { (endpoint, posts) =>
-      NotifySink.post(TwsePipeline.notifyAlert(spark), endpoint, "graft-chat")
+      sendAll(TwsePipeline.notifyAlert(spark), endpoint)
       val got = posts.toArray(Array.empty[(String, String)]).toSeq
       // exactly the arity-drifted golden day fires the constant alert
       assert(got === Seq(("graft-chat", TwseFixtures.alertMsg)))
@@ -63,13 +67,10 @@ class NotifySinkSpec extends SparkTestBase {
     })
     server.start()
     try {
-      import spark.implicits._
-      val df = Seq(("20220817", "x")).toDF("date", "message")
-      val e = intercept[org.apache.spark.SparkException] {
-        NotifySink.post(df, s"http://127.0.0.1:${server.getAddress.getPort}/down", "c")
+      val e = intercept[java.io.IOException] {
+        NotifySink.send(s"http://127.0.0.1:${server.getAddress.getPort}/down", "c", "x")
       }
-      assert(e.getMessage.contains("notification POST failed")
-        || Option(e.getCause).exists(_.getMessage.contains("notification POST failed")))
+      assert(e.getMessage === "notification POST failed: HTTP 503")
     } finally server.stop(0)
   }
 }
