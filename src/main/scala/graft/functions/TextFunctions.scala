@@ -20,6 +20,15 @@ object TextFunctions {
   /** Whitespace tokens of the normalized text. */
   def wsTokens(c: Column): Column = split(normText(c), "\\s+")
 
+  /** The portable integer behind every md5-derived hash, bucket and
+    * uniform draw: the first `hexDigits` hex chars of md5(c) as a
+    * non-negative BIGINT (`hexDigits` ≤ 15, so the value fits in 60
+    * bits). DuckDB mirror:
+    * `CAST(CAST(('0x' || substr(md5(s), 1, n)) AS UBIGINT) AS BIGINT)`.
+    */
+  def md5Int(c: Column, hexDigits: Int): Column =
+    conv(substring(md5(c), 1, hexDigits), 16, 10).cast("bigint")
+
   /** 3-word shingles (row-major, order-preserving); a document shorter
     * than 3 tokens contributes its whole normalized text as one shingle.
     */
@@ -64,12 +73,9 @@ object TextFunctions {
     * colliding pairs ≈ n²/2⁶¹, under 10⁻⁴ at 10⁸ distinct shingles —
     * none at any tested scale; at true warehouse scale (10¹²) a
     * handful of merged shingle identities shift dup COUNTS by ~10⁻⁹
-    * relative, immaterial for dedup decisions. Engine-portable:
-    * DuckDB mirror is
-    * `CAST(CAST(('0x' || substr(md5(s),1,15)) AS UBIGINT) AS BIGINT)`.
+    * relative, immaterial for dedup decisions.
     */
-  def fp60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+  def fp60(c: Column): Column = md5Int(c, 15)
 
   /** Distinct 60-bit fingerprints of a document's 3-word shingles — the
     * postings-family representation of a document's shingle set.
@@ -131,8 +137,7 @@ object TextFunctions {
   /** Portable 60-bit content fingerprint: first 15 hex digits of
     * md5(normalized text) as a BIGINT.
     */
-  def fingerprint(c: Column): Column =
-    conv(substring(md5(normText(c)), 1, 15), 16, 10).cast("bigint")
+  def fingerprint(c: Column): Column = md5Int(normText(c), 15)
 
   /** Rolling (polynomial) hash over the token stream — order-sensitive,
     * so reordered documents fingerprint differently even with identical
@@ -140,8 +145,7 @@ object TextFunctions {
     */
   def rollingHash(c: Column): Column =
     aggregate(wsTokens(c), lit(0L), (acc, w) =>
-      (acc * 1000003L + conv(substring(md5(w), 1, 8), 16, 10).cast("bigint"))
-        % 1000000007L)
+      (acc * 1000003L + md5Int(w, 8)) % 1000000007L)
 
   /** Match count of `pattern` over the normalized text. The pattern is
     * passed as a column literal (no SQL-string escaping), and the syntax

@@ -640,8 +640,7 @@ object Analytics {
   def kmvDistinctAudit(spark: SparkSession, sfDir: String, k: Int = 256): DataFrame = {
     // 48-bit hash as a long: big enough that collisions are ~n²/2^48
     // (immaterial), small enough for exact integer arithmetic
-    val hv = conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10)
-      .cast("long")
+    val hv = graft.functions.TextFunctions.md5Int(col("user_id").cast("string"), 12)
     val distinctHashes = Tables.events(spark, sfDir)
       .select(col("event_type"), hv.as("hv"))
       .groupBy(col("event_type"), col("hv")).agg(count(lit(1)).as("_n"))
@@ -690,7 +689,7 @@ object Analytics {
     val n = broadcast(g.agg(count(lit(1)).as("n_keys"),
       sum(col("c")).as("total_rows"), max(col("c")).as("max_g")))
     val ranked = graft.operators.DataPrep
-      .withGlobalIndex(g, Seq(col("c"), col("l_suppkey")), parts = 32)
+      .withGlobalIndex(g, Seq(col("c"), col("l_suppkey")))._1
       .withColumn("rn", col("global_idx") + 1)
     ranked.crossJoin(n)
       .agg(
@@ -1867,22 +1866,25 @@ object Analytics {
     * and concatenated into a segment code ('444' = best). Each quartile
     * is NTILE semantics — but a bare `ntile(4) OVER (ORDER BY …)` is an
     * empty-key window: every user row lands on ONE task. Instead each
-    * quartile is derived ARITHMETICALLY from a distributed global rank
+    * quartile is derived ARITHMETICALLY
+    * ([[graft.operators.DataPrep.ntileFromRank]]) from a distributed
+    * global rank and the user count that comes with it
     * ([[graft.operators.DataPrep.withGlobalIndex]]: range-partition +
-    * local sort + broadcast prefix-sum — the `q_curriculum` pattern):
-    * rank i of N maps to bucket ⌊i/(q+1)⌋+1 for the first N mod 4
-    * oversized buckets, else r+⌊(i−r(q+1))/q⌋+1 — bit-identical to the
-    * window form the oracle states, with ties broken by user_id so
-    * every engine deals the same quartiles. The three rank passes chain
-    * (no joins); recency orders by NEGATED last_us so every sort is
-    * ascending (withGlobalIndex keys its offset lookup on per-partition
-    * MIN). All three sorts are user-cardinality, never event-scale.
+    * local sort + broadcast prefix-sum — the `q_curriculum` pattern) —
+    * bit-identical to the window form the oracle states, with ties
+    * broken by user_id so every engine deals the same quartiles. The
+    * three rank passes chain (no joins, no cache: the first pass's
+    * checkpoint is the one materialization of the per-user aggregate);
+    * recency orders by NEGATED last_us so every sort is ascending
+    * (withGlobalIndex keys its offset lookup on per-partition MIN). All
+    * three sorts are user-cardinality, never event-scale.
     *
     * SIZE-GATED (the PartitionedTables routing-gate discipline): the
-    * three rank passes cost ~9 jobs of fixed overhead, a 4× regression
-    * at sf0.1 where users number 1.5k. Up to `windowMaxEventRows`
-    * event rows (default 2 M — a single-task sort still clears in
-    * ~1 s) the plan IS the oracle's three ntile
+    * three rank passes cost 18 build-time jobs of fixed overhead
+    * (measured with `jobsOf` at sf0.01 and sf0.1; the window form
+    * costs 2), a 4× regression at sf0.1 where users number 1.5k. Up
+    * to `windowMaxEventRows` event rows (default 2 M — a single-task
+    * sort still clears in ~1 s) the plan IS the oracle's three ntile
     * windows; above it the distributed rank passes take over. The gate
     * probe is the events row count — a parquet metadata-only count that
     * upper-bounds user cardinality without a pre-aggregation job.
@@ -1907,30 +1909,17 @@ object Analytics {
           ntile(4).over(w(col("frequency"))).cast("string"),
           ntile(4).over(w(col("monetary_c"))).cast("string")).as("segment"))
     } else {
-      val cached = perUser
-        .withColumn("neg_last_us", -col("last_us"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = cached.count()
-      val q = n / 4L
-      val r = n % 4L
-      // exact NTILE(4) from a 0-based global rank; integer `div`, never
-      // float division — a bucket boundary must not hinge on rounding.
-      // q can still be 0 (huge event table, <4 users): max(1, q) keeps
-      // the never-taken otherwise-branch from planning a div-0 null.
-      val qSafe = math.max(1L, q)
-      def bucket(idx: org.apache.spark.sql.Column) =
-        when(idx < lit(r * (q + 1)), expr(s"global_idx div ${q + 1}"))
-          .otherwise(lit(r) + expr(s"(global_idx - ${r * (q + 1)}) div $qSafe"))
-          .cast("int") + 1
-      def rankPass(df: DataFrame, key: String, out: String) =
-        DataPrep.withGlobalIndex(df, Seq(col(key), col("user_id")), parts = 32)
-          .withColumn(out, bucket(col("global_idx"))).drop("global_idx")
+      // each rank pass materializes its input once (the prefix-sum
+      // core's truncateLineage) and returns the user count with the rank
+      def rankPass(df: DataFrame, key: String, out: String) = {
+        val (indexed, n) =
+          DataPrep.withGlobalIndex(df, Seq(col(key), col("user_id")))
+        indexed.withColumn(out, DataPrep.ntileFromRank("global_idx", n, 4))
+          .drop("global_idx")
+      }
       val staged = rankPass(rankPass(rankPass(
-        cached, "neg_last_us", "r_q"), "frequency", "f_q"),
-        "monetary_c", "m_q")
-      // every rank pass materialized eagerly (withGlobalIndex checkpoints
-      // + collects), so the per-user cache has no remaining consumer
-      cached.unpersist(blocking = false)
+        perUser.withColumn("neg_last_us", -col("last_us")), "neg_last_us", "r_q"),
+        "frequency", "f_q"), "monetary_c", "m_q")
       staged.select(col("user_id"), col("frequency"), col("monetary_c"),
         concat(col("r_q").cast("string"), col("f_q").cast("string"),
           col("m_q").cast("string")).as("segment"))

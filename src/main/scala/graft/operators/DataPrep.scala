@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Checkpoints.TruncateOps
+import graft.functions.TextFunctions.md5Int
 import graft.sources.Tables
 
 /** Training-data preparation operators — the selection/packing half of an
@@ -16,21 +17,25 @@ import graft.sources.Tables
   */
 object DataPrep {
 
-  private def hashBucket(c: org.apache.spark.sql.Column, mod: Int) =
-    conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("bigint") % mod
+  private def hashBucket(c: Column, mod: Int) = md5Int(c.cast("string"), 8) % mod
+
+  /** The 80/10/10 train/val/test ladder: `bucket` is `key`'s md5 bucket
+    * of 10, and `split` is train below 8, val at 8, test at 9.
+    */
+  private def hashSplit(df: DataFrame, key: Column): DataFrame =
+    df.withColumn("bucket", hashBucket(key, 10))
+      .withColumn("split",
+        when(col("bucket") < 8, "train")
+          .when(col("bucket") < 9, "val")
+          .otherwise("test"))
 
   /** Deterministic 80/10/10 train/val/test split keyed on md5(doc_id) —
     * stable under corpus growth (a document's split never changes when
     * others are added). Pure per-row map.
     */
   def trainSplit(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"),
-        hashBucket(col("doc_id"), 10).as("bucket"))
-      .withColumn("split",
-        when(col("bucket") < 8, "train")
-          .when(col("bucket") < 9, "val")
-          .otherwise("test"))
+    hashSplit(Tables.documents(spark, sfDir).select(col("doc_id"), col("lang")),
+      col("doc_id"))
 
   /** Leakage-safe split — the guard `trainSplit` lacks: near-duplicate
     * documents MUST land in the same split, or the test set contains
@@ -44,13 +49,8 @@ object DataPrep {
     * table, not recomputed per split).
     */
   def leakageSafeSplit(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.components(spark, sfDir)
-      .select(col("doc_id"), col("component_id"),
-        hashBucket(col("component_id"), 10).as("bucket"))
-      .withColumn("split",
-        when(col("bucket") < 8, "train")
-          .when(col("bucket") < 9, "val")
-          .otherwise("test"))
+    hashSplit(Dedup.components(spark, sfDir)
+      .select(col("doc_id"), col("component_id")), col("component_id"))
 
   /** Temporal holdout split — the third leakage axis after identity
     * (`trainSplit`) and near-duplication (`leakageSafeSplit`): models
@@ -110,10 +110,10 @@ object DataPrep {
     * (integer rank keys) would change the A-ES math itself — so the risk
     * is recorded rather than engineered away.
     */
-  private[graft] def weightedSampleFrom(df: DataFrame, weight: org.apache.spark.sql.Column,
+  private[graft] def weightedSampleFrom(df: DataFrame, weight: Column,
       k: Int): DataFrame = {
-    val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-      .cast("double") + lit(1.0)) / lit(4294967296.0) // (0,1], never 0
+    val u = (md5Int(col("doc_id").cast("string"), 8).cast("double") + lit(1.0)) /
+      lit(4294967296.0) // (0,1], never 0
     val key = log(u) / weight // ≤ 0; larger (closer to 0) wins
     df.select(col("doc_id"), col("lang"), key.as("es_key"))
       .orderBy(col("es_key").desc, col("doc_id"))
@@ -258,147 +258,118 @@ object DataPrep {
           .as("fill_bp"))
   }
 
-  /** Contiguous global row numbering 0..N-1 in `sortCols` order WITHOUT
-    * a single-partition global sort — the operator behind stable sample
-    * ids, shard assignment, and resumable training order. A bare
-    * `row_number() OVER (ORDER BY …)` is the classic scale trap: Spark
-    * plans an empty-key window, every row lands on ONE task, and the
-    * job is sequential no matter the cluster. The distributed shape is
-    * range-partition + local sort (a normal parallel sort — each of
-    * `parts` tasks holds a contiguous key range), then `zipWithIndex`,
-    * then one lightweight count job over the materialized sorted
-    * partitions feeds broadcast prefix-sum offsets and a
-    * `mapPartitions` stamps offset + local position in a single
-    * streamed pass — |parts| tiny rows to the driver, never data.
+  /** Range partitions of the prefix-sum core: each holds a contiguous
+    * key range, and pass 1 brings one tiny row per partition to the
+    * driver.
+    */
+  private val PrefixParts = 32
+
+  /** The prefix-sum core: stamps each row with the SUM of `weight` (a
+    * non-null LongType expression over `df`) over all rows strictly
+    * before it in `sortCols` order, as column `out` — i.e. `sum(w) OVER
+    * (ORDER BY … ROWS UNBOUNDED PRECEDING AND 1 PRECEDING)`, 0 on the
+    * first row — and returns the frame with the sum over ALL rows, read
+    * from pass 1's per-partition totals (no count job of its own).
+    *
+    * A bare window over an empty key is the classic scale trap: Spark
+    * plans an empty-key window, every row lands on ONE task, and the job
+    * is sequential no matter the cluster. The distributed shape is
+    * range-partition + local sort (a normal parallel sort — each of the
+    * [[PrefixParts]] tasks holds a contiguous key range), then one
+    * lightweight aggregate job over the materialized sorted partitions
+    * feeds broadcast prefix-sum offsets, and a `mapPartitions` stamps
+    * offset + the local running sum in a single streamed pass —
+    * |partitions| tiny rows to the driver, never data.
     *
     * Two executed-in-anger lessons are load-bearing here:
-    *  - The sorted relation is FROZEN once (columnar cache,
-    *    MEMORY_AND_DISK): RangePartitioner's sample seed mixes in the
-    *    RDD id, so two separate jobs over the same lineage draw
-    *    DIFFERENT boundaries — the count pass and the stamping pass
-    *    must iterate the same physical partitions. The cache also
-    *    replaces `rdd.zipWithIndex`'s second full shuffle+sort (its
-    *    count job) with a columnar re-scan, and spares downstream
-    *    consumers the severed plan of a generic Row-converted RDD scan
-    *    — measured 2.8×/2.9× warm at sf1 on the 1M-row consumers
-    *    (q_global_index, q_exact_percentiles). Fault tolerance is the
-    *    cache's normal story: lineage recompute reuses the partitioner
-    *    object, so boundaries cannot drift on a lost executor.
+    *  - The sorted relation is FROZEN once (`truncateLineage`):
+    *    RangePartitioner's sample seed mixes in the RDD id, so two
+    *    separate jobs over the same lineage draw DIFFERENT boundaries —
+    *    the aggregate pass and the stamping pass must iterate the same
+    *    physical partitions. Checkpoint blocks are ContextCleaner-owned:
+    *    they free when the query's refs drop, where CacheManager entries
+    *    accumulate for the whole session. The materialization also
+    *    spares downstream consumers the severed plan of a generic
+    *    Row-converted RDD scan — measured 2.8×/2.9× warm at sf1 on the
+    *    1M-row consumers (q_global_index, q_exact_percentiles).
     *  - Pass 2 identifies which partition it is iterating by the
     *    partition's FIRST sort key against a broadcast min-key→offset
     *    map — never by `TaskContext.getPartitionId()`, which reports
     *    the FUSED task's id (0) when a downstream `coalesce()` pulls
     *    many parent partitions into one task, silently collapsing
     *    every offset. The lambda still runs once per parent partition
-    *    under fusion, so the data-keyed lookup is fusion-proof.
+    *    under fusion, so the data-keyed lookup is fusion-proof. Range
+    *    partitioning co-locates equal keys, so per-partition mins are
+    *    distinct.
     */
-  private[graft] def withGlobalIndex(df: DataFrame,
-      sortCols: Seq[org.apache.spark.sql.Column], parts: Int): DataFrame = {
+  private[graft] def withRunningTotal(df: DataFrame, sortCols: Seq[Column],
+      weight: Column, out: String): (DataFrame, Long) = {
     import org.apache.spark.sql.Row
-    val spark = df.sparkSession
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val sorted = df
-      .repartitionByRange(parts, sortCols: _*)
+      .withColumn("_w", weight)
+      .repartitionByRange(PrefixParts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       // the sort key materialized as a struct: the broadcast lookup key
       .withColumn("_skey", struct(sortCols: _*))
-      // truncateLineage, NOT persist: both passes read the SAME
-      // materialization (range bounds are sampled, so a recompute could
-      // re-deal partitions out from under the broadcast offset map), and
-      // checkpoint blocks are ContextCleaner-owned — they free when the
-      // query's refs drop, where CacheManager entries accumulate for the
-      // whole session (ADVICE r9: un-unpersisted caches)
       .truncateLineage()
-    // pass 1: per-partition counts + min key (|parts| tiny rows); this
-    // standalone job runs each range partition as its own task, so
-    // spark_partition_id() is the real range-partition index here
+    // pass 1: per-partition totals + min key; this standalone job runs
+    // each range partition as its own task, so spark_partition_id() is
+    // the real range-partition index here
     val perPart = sorted
       .groupBy(spark_partition_id().as("_pid"))
-      .agg(count(lit(1)).as("_n"), min(col("_skey")).as("_min"))
+      .agg(sum(col("_w")).as("_t"), min(col("_skey")).as("_min"))
       .collect().sortBy(_.getInt(0))
     var acc = 0L
     val offsetByMin: Map[Row, Long] = perPart.map { r =>
       val entry = (r.getAs[Row]("_min"), acc)
-      acc += r.getAs[Long]("_n")
+      acc += r.getAs[Long]("_t")
       entry
     }.toMap
-    val bc = spark.sparkContext.broadcast(offsetByMin)
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+
-        org.apache.spark.sql.types.StructField(
-          "global_idx", org.apache.spark.sql.types.LongType, nullable = false))
-    // pass 2: stream each sorted partition once, stamping offset + local
-    // position. The ascending local sort means the first row carries the
-    // partition's min key — the broadcast lookup key. Range partitioning
-    // co-locates equal keys, so per-partition mins are distinct.
-    sorted.mapPartitions { it =>
-      val buf = it.buffered
-      if (!buf.hasNext) Iterator.empty
-      else {
-        val off = bc.value(buf.head.getAs[Row]("_skey"))
-        var i = 0L
-        buf.map { r =>
-          val out = Row.fromSeq(r.toSeq :+ (off + i))
-          i += 1
-          out
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
-      .drop("_skey")
-  }
-
-  /** Weighted twin of [[withGlobalIndex]]: stamps each row with the SUM
-    * of `weightCol` over all rows strictly before it in `sortCols`
-    * order (`running_offset`) — i.e. `sum(w) OVER (ORDER BY … ROWS
-    * UNBOUNDED PRECEDING AND 1 PRECEDING)` without the one-task
-    * empty-key window. Same two-pass shape: range partition + local
-    * sort, per-partition weight totals broadcast as offsets, one
-    * streaming stamp pass keyed by the partition's min sort key (the
-    * same fusion-proof data-keyed lookup — see the hazards documented
-    * on [[withGlobalIndex]]). `weightCol` must be a non-null LongType
-    * column of `df`.
-    */
-  private[graft] def withRunningTotal(df: DataFrame,
-      sortCols: Seq[org.apache.spark.sql.Column], weightCol: String,
-      parts: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    val spark = df.sparkSession
-    val sorted = df
-      .repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("_skey", struct(sortCols: _*))
-      // same discipline as withGlobalIndex: one cleaner-owned
-      // materialization shared by both passes
-      .truncateLineage()
-    val perPart = sorted
-      .groupBy(spark_partition_id().as("_pid"))
-      .agg(sum(col(weightCol)).as("_w"), min(col("_skey")).as("_min"))
-      .collect().sortBy(_.getInt(0))
-    var acc = 0L
-    val offsetByMin: Map[Row, Long] = perPart.map { r =>
-      val entry = (r.getAs[Row]("_min"), acc)
-      acc += r.getAs[Long]("_w")
-      entry
-    }.toMap
-    val bc = spark.sparkContext.broadcast(offsetByMin)
-    val wIdx = sorted.schema.fieldIndex(weightCol)
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+
-        org.apache.spark.sql.types.StructField(
-          "running_offset", org.apache.spark.sql.types.LongType,
-          nullable = false))
-    sorted.mapPartitions { it =>
+    val bc = df.sparkSession.sparkContext.broadcast(offsetByMin)
+    val wIdx = sorted.schema.fieldIndex("_w")
+    val schema = StructType(
+      sorted.schema.fields :+ StructField(out, LongType, nullable = false))
+    // pass 2: stream each sorted partition once; the ascending local sort
+    // puts the partition's min key on its first row
+    val stamped = sorted.mapPartitions { it =>
       val buf = it.buffered
       if (!buf.hasNext) Iterator.empty
       else {
         var off = bc.value(buf.head.getAs[Row]("_skey"))
         buf.map { r =>
-          val out = Row.fromSeq(r.toSeq :+ off)
+          val row = Row.fromSeq(r.toSeq :+ off)
           off += r.getLong(wIdx)
-          out
+          row
         }
       }
     }(org.apache.spark.sql.Encoders.row(schema))
-      .drop("_skey")
+    (stamped.drop("_w", "_skey"), acc)
+  }
+
+  /** Contiguous global row numbering 0..N-1 in `sortCols` order as
+    * `global_idx`, with N: [[withRunningTotal]] with weight 1 — the
+    * operator behind stable sample ids, shard assignment, resumable
+    * training order and every distributed rank here.
+    */
+  private[graft] def withGlobalIndex(df: DataFrame,
+      sortCols: Seq[Column]): (DataFrame, Long) =
+    withRunningTotal(df, sortCols, lit(1L), "global_idx")
+
+  /** Exact `ntile(buckets)` from the 0-based rank column `idx` over `n`
+    * rows: the first n mod buckets tiles hold ⌈n/buckets⌉ rows, the
+    * rest ⌊n/buckets⌋ — bit-identical to the window form. Integer `div`,
+    * never `/` (Spark's / is DOUBLE division, and a tile boundary must
+    * never hinge on float rounding). When n < buckets the tile size q is
+    * 0 and every rank takes the first branch; max(1, q) keeps the other
+    * branch from planning a division by zero.
+    */
+  private[graft] def ntileFromRank(idx: String, n: Long, buckets: Int): Column = {
+    val q = n / buckets
+    val r = n % buckets
+    (when(col(idx) < lit(r * (q + 1)), expr(s"$idx div ${q + 1}"))
+      .otherwise(lit(r) + expr(s"($idx - ${r * (q + 1)}) div ${math.max(1L, q)}"))
+      .cast("int") + 1)
   }
 
   /** Global event enumeration by (ts, event_id): the q-entry face of
@@ -408,7 +379,7 @@ object DataPrep {
   def globalIndex(spark: SparkSession, sfDir: String): DataFrame =
     withGlobalIndex(
       Tables.events(spark, sfDir).select(col("event_id"), col("ts")),
-      Seq(col("ts"), col("event_id")), parts = 32)
+      Seq(col("ts"), col("event_id")))._1
       .select(col("event_id"), col("global_idx"))
 
   /** Training-sequence packing layout — the GPT-style concat-and-chunk
@@ -435,7 +406,7 @@ object DataPrep {
       .select(col("doc_id"),
         size(graft.functions.TextFunctions.wsTokens(col("text")))
           .cast("long").as("n_toks"))
-    withRunningTotal(counts, Seq(col("doc_id")), "n_toks", parts = 32)
+    withRunningTotal(counts, Seq(col("doc_id")), col("n_toks"), "running_offset")._1
       .select(col("doc_id"), col("n_toks"),
         col("running_offset").as("tok_offset"),
         expr(s"running_offset div $blockSize").as("first_block"),
@@ -457,27 +428,17 @@ object DataPrep {
     * cut it into `stages` contiguous cohorts with exact NTILE
     * semantics: the first N mod s cohorts get ⌈N/s⌉ documents, the
     * rest ⌊N/s⌋. NTILE is another empty-key window at heart, so the
-    * stage is derived ARITHMETICALLY from [[withGlobalIndex]]'s
-    * distributed global rank instead: two scans + one scalar count,
-    * no single-task sort, bit-identical to the window form the oracle
-    * states.
+    * stage is derived ARITHMETICALLY ([[ntileFromRank]]) from
+    * [[withGlobalIndex]]'s distributed global rank and row count
+    * instead: no single-task sort, no separate count job,
+    * bit-identical to the window form the oracle states.
     */
   def curriculum(spark: SparkSession, sfDir: String, stages: Int = 4): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("n_chars"))
-    val n = docs.count()
-    val q = n / stages
-    val r = n % stages
-    // ntile bucket from 0-based global rank: first r buckets hold q+1
-    val indexed = withGlobalIndex(
-      docs, Seq(col("n_chars"), col("doc_id")), parts = 32)
-    // integer `div`, not `/`: Spark's / is DOUBLE division, and a stage
-    // boundary must never hinge on float rounding
+    val (indexed, n) = withGlobalIndex(
+      Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars")),
+      Seq(col("n_chars"), col("doc_id")))
     indexed.select(col("doc_id"), col("n_chars"),
-      (when(col("global_idx") < lit(r * (q + 1)),
-        expr(s"global_idx div ${q + 1}"))
-        .otherwise(lit(r) + expr(s"(global_idx - ${r * (q + 1)}) div $q"))
-        .cast("int") + 1).as("stage"))
+      ntileFromRank("global_idx", n, stages).as("stage"))
   }
 
   /** Per-domain document cap — the crawl-hygiene selection pass (C4,
@@ -566,20 +527,9 @@ object DataPrep {
     * estimate but its error bar. Integer arithmetic end-to-end; one
     * aggregate at (rep, source) then a |sources|-bounded rollup.
     */
-  def bootstrapBySource(spark: SparkSession, sfDir: String, reps: Int = 3): DataFrame = {
-    val cdf = Seq(367879L, 735759L, 919699L, 981012L)
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("source"), col("n_chars"),
-        explode(sequence(lit(1), lit(reps))).as("rep"))
-      .withColumn("u_ppm",
-        conv(substring(md5(concat(col("doc_id"), lit("|"), col("rep"))), 1, 8),
-          16, 10).cast("bigint") % 1000000L)
-      .withColumn("k",
-        when(col("u_ppm") < cdf(0), 0L)
-          .when(col("u_ppm") < cdf(1), 1L)
-          .when(col("u_ppm") < cdf(2), 2L)
-          .when(col("u_ppm") < cdf(3), 3L)
-          .otherwise(4L))
+  def bootstrapBySource(spark: SparkSession, sfDir: String, reps: Int = 3): DataFrame =
+    poissonReps(Tables.documents(spark, sfDir)
+        .select(col("doc_id"), col("source"), col("n_chars")), reps)
       .groupBy(col("rep"), col("source"))
       .agg(sum(col("k") * col("n_chars")).as("chars_rep"))
       .groupBy(col("source"))
@@ -587,7 +537,6 @@ object DataPrep {
         min(col("chars_rep")).as("chars_lo"),
         max(col("chars_rep")).as("chars_hi"))
       .withColumn("band", col("chars_hi") - col("chars_lo"))
-  }
 
   /** Largest-remainder (Hare) apportionment of a fixed budget across
     * sources — the exact-total allocator behind "split exactly B
@@ -633,7 +582,7 @@ object DataPrep {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("n_chars"),
         md5(concat(lit("shuf|"), col("doc_id"))).as("h"))
-    withGlobalIndex(docs, Seq(col("h"), col("doc_id")), parts = 32)
+    withGlobalIndex(docs, Seq(col("h"), col("doc_id")))._1
       .select((col("global_idx") % shards).cast("int").as("shard"),
         col("n_chars"))
       .groupBy(col("shard"))
@@ -645,8 +594,9 @@ object DataPrep {
     * q_quantile_sketch, both audited), per-group exact ranks use
     * bounded-key windows (q_winsorize), and THIS answers "the exact
     * global p50/p90/p99" on an unbounded table via [[withGlobalIndex]]'s
-    * range-partition + prefix-sum rank: two scans and |parts| longs to
-    * the driver, no empty-key window, no global sort on one executor.
+    * range-partition + prefix-sum rank and row count: one scan and
+    * |partitions| tiny rows to the driver, no empty-key window, no
+    * global sort on one executor.
     * Nearest-rank-lower definition (rank = (n−1)·p div 100 over a
     * deterministic total order) so both engines pick the identical
     * data element — exact integer cents, no interpolation floats.
@@ -655,9 +605,7 @@ object DataPrep {
     val o = Tables.orders(spark, sfDir)
       .select((col("o_totalprice").cast("decimal(12,2)") * 100)
         .cast("long").as("cents"), col("o_orderkey"))
-    val n = o.count()
-    val indexed = withGlobalIndex(
-      o, Seq(col("cents"), col("o_orderkey")), parts = 32)
+    val (indexed, n) = withGlobalIndex(o, Seq(col("cents"), col("o_orderkey")))
     val picks = Seq(50, 90, 99).map(p => (s"p$p", (n - 1) * p / 100))
     val pickDf = broadcast(spark.createDataFrame(picks)
       .toDF("pct", "global_idx"))
@@ -676,23 +624,29 @@ object DataPrep {
     * per-row draws + one aggregate; replicates scale the scan by R,
     * never shuffle the corpus.
     */
-  def bootstrapPoisson(spark: SparkSession, sfDir: String, reps: Int = 3): DataFrame = {
+  def bootstrapPoisson(spark: SparkSession, sfDir: String, reps: Int = 3): DataFrame =
+    poissonReps(Tables.documents(spark, sfDir).select(col("doc_id")), reps)
+      .groupBy(col("rep").cast("int").as("rep"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("k")).as("n_drawn"),
+        sum(when(col("k") === 0, 1L).otherwise(0L)).as("n_zero"),
+        sum(when(col("k") >= 2, 1L).otherwise(0L)).as("n_multi"))
+
+  /** Each document row `reps` times, as `rep` 1..reps, with `k`, its
+    * Poisson(1) draw: the inverse CDF applied to the md5 uniform
+    * `u_ppm` of `doc_id|rep`, with the CDF steps P(X≤k), k = 0..3, as
+    * integer ppm.
+    */
+  private def poissonReps(docs: DataFrame, reps: Int): DataFrame = {
     val cdf = Seq(367879L, 735759L, 919699L, 981012L)
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), explode(sequence(lit(1), lit(reps))).as("rep"))
+    docs.withColumn("rep", explode(sequence(lit(1), lit(reps))))
       .withColumn("u_ppm",
-        conv(substring(md5(concat(col("doc_id"), lit("|"), col("rep"))), 1, 8),
-          16, 10).cast("bigint") % 1000000L)
+        md5Int(concat(col("doc_id"), lit("|"), col("rep")), 8) % 1000000L)
       .withColumn("k",
         when(col("u_ppm") < cdf(0), 0L)
           .when(col("u_ppm") < cdf(1), 1L)
           .when(col("u_ppm") < cdf(2), 2L)
           .when(col("u_ppm") < cdf(3), 3L)
           .otherwise(4L))
-      .groupBy(col("rep").cast("int").as("rep"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("k")).as("n_drawn"),
-        sum(when(col("k") === 0, 1L).otherwise(0L)).as("n_zero"),
-        sum(when(col("k") >= 2, 1L).otherwise(0L)).as("n_multi"))
   }
 }

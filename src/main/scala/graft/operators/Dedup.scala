@@ -263,18 +263,35 @@ object Dedup {
         cols.map(c => col(c).as(s"${c}_$s")): _*), s"doc_$s")
     }
 
+  /** Checkpointed [[minhashPairs]] with the doc_id and `cols` of their
+    * participants: [[pruneToParticipants]] runs BEFORE the per-row
+    * projection, so the heavy arrays are computed only for documents a
+    * candidate pair references, and the participant frame is
+    * materialized once, so each array is computed once, not once per
+    * pair side. The calibration table is per-PAIR: computing and
+    * shuffling 500 k full shingle arrays to serve ~25 k pairs measured
+    * 397 s at sf10, linear in pairs after the prune.
+    */
+  private def pairsWithParticipants(spark: SparkSession, sfDir: String,
+      cols: Column*): (DataFrame, DataFrame) = {
+    val pairs = minhashPairs(spark, sfDir).truncateLineage()
+    val docs = pruneToParticipants(spark, Tables.documents(spark, sfDir), pairs)
+      .select(col("doc_id") +: cols: _*)
+      .truncateLineage()
+    (pairs, docs)
+  }
+
   /** The verification stage of LSH dedup: candidate pairs from the
     * minhash buckets get exact checks — Levenshtein edit distance and
     * distinct-token Jaccard (cross-multiplied, no division). Only
-    * collision candidates pay the quadratic-cost exact comparison; the
-    * corpus never does.
+    * collision candidates pay the quadratic-cost exact comparison, and
+    * only their participants are tokenized; the corpus never is.
     */
   def verifyPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"),
-        array_distinct(wsTokens(col("text"))).as("toks"))
+    val (pairs, docs) = pairsWithParticipants(spark, sfDir,
+      col("text"), array_distinct(wsTokens(col("text"))).as("toks"))
     val inter = size(array_intersect(col("toks_a"), col("toks_b")))
-    pairSides(minhashPairs(spark, sfDir), docs, Seq("text", "toks"))
+    pairSides(pairs, docs, Seq("text", "toks"))
       .select(col("doc_a"), col("doc_b"),
         levenshtein(col("text_a"), col("text_b")).as("edit_dist"),
         inter.as("tok_inter"),
@@ -287,22 +304,14 @@ object Dedup {
     * unbiased minhash estimator) next to the EXACT shingle Jaccard and
     * the absolute error. The numbers a pipeline owner uses to size the
     * signature (16 rows ⇒ ±1/16 estimator granularity) and set the
-    * verify threshold. Signatures are per-row (narrow); exact Jaccard
+    * verify threshold. Signatures and shingle arrays are computed for
+    * pair participants only ([[pairsWithParticipants]]); exact Jaccard
     * runs only on the candidate pairs, never all-pairs.
     */
   def jaccardCalibration(spark: SparkSession, sfDir: String): DataFrame = {
-    // Materialize signatures + shingle arrays ONLY for documents that
-    // participate in a candidate pair ([[pruneToParticipants]], BEFORE
-    // the per-row array projection): the calibration table is per-PAIR,
-    // so computing and shuffling 500 k full shingle arrays to serve
-    // ~25 k pairs is pure waste — measured 397 s → linear-in-pairs after
-    // this filter at sf10. The pair list is checkpointed: the prune
-    // gate's count and both side joins re-read it.
-    val pairs = minhashPairs(spark, sfDir).truncateLineage()
-    val docs = pruneToParticipants(spark, Tables.documents(spark, sfDir), pairs)
-      .select(col("doc_id"),
-        graft.functions.HashExpressions.minhash_signature(col("text")).as("sig"),
-        array_distinct(shingles3(col("text"))).as("sh"))
+    val (pairs, docs) = pairsWithParticipants(spark, sfDir,
+      graft.functions.HashExpressions.minhash_signature(col("text")).as("sig"),
+      array_distinct(shingles3(col("text"))).as("sh"))
     pairSides(pairs, docs, Seq("sig", "sh"))
       .withColumn("n_agree",
         size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
@@ -1083,21 +1092,14 @@ object Dedup {
 
   /** Shared candidate→shingle-array scaffold for the BANDED scoring
     * family: minhash band-collision pairs with their [[arrayOverlap]]
-    * over distinct shingles. The jaccardCalibration discipline — shingle
-    * arrays are computed ONLY for pair participants (size-gated semi-join
-    * [[pruneToParticipants]] before the per-row array projection), so the
-    * corpus is scanned once and the shuffle carries |participants|
-    * arrays, not |corpus|; the heavy per-row shingling never runs for
-    * documents no candidate pair references.
+    * over distinct shingles, computed for pair participants only
+    * ([[pairsWithParticipants]]), so the shuffle carries |participants|
+    * arrays, not |corpus|.
     */
   private def bandedPairsWithShingles(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val pairs = minhashPairs(spark, sfDir).truncateLineage()
-    val docs = pruneToParticipants(spark,
-        Tables.documents(spark, sfDir), pairs)
-      .select(col("doc_id"),
-        array_distinct(shingles3(col("text"))).as("ds"))
-      .truncateLineage() // one shingling pass feeds both join sides
+    val (pairs, docs) = pairsWithParticipants(spark, sfDir,
+      array_distinct(shingles3(col("text"))).as("ds"))
     arrayOverlap(pairs, docs, "ds")
   }
 

@@ -85,8 +85,9 @@ object Multimodal {
     media(spark, sfDir)
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(0), lit(7)), i =>
-          conv(substring(md5(concat(i.cast("string"), hex(col("payload")))), 1, 4), 16, 10)
-            .cast("int"))).as(Seq("dim", "value")))
+          graft.functions.TextFunctions.md5Int(
+            concat(i.cast("string"), hex(col("payload"))), 4).cast("int")))
+          .as(Seq("dim", "value")))
 
   /** Frame sampling: up to 3 fixed-stride 16-byte "frames" after the
     * 4-byte header, fingerprinted. Models video frame extraction: a

@@ -135,8 +135,7 @@ object TextAnalysis {
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(wsTokens(col("text"))).as("token"))
       .select(col("doc_id"),
-        (conv(substring(md5(col("token")), 1, 8), 16, 10).cast("bigint")
-          % dim).cast("int").as("bucket"))
+        (md5Int(col("token"), 8) % dim).cast("int").as("bucket"))
       .groupBy(col("doc_id"), col("bucket"))
       .agg(count(lit(1)).as("n"))
 
@@ -446,7 +445,7 @@ object TextAnalysis {
     val total = c.agg(sum(col("c")).as("n_tot"))
     val vals = c.groupBy(col("v")).agg(sum(col("c")).as("t_v"))
     val cumTot = DataPrep
-      .withRunningTotal(vals, Seq(col("v")), "t_v", parts = 32)
+      .withRunningTotal(vals, Seq(col("v")), col("t_v"), "running_offset")._1
       .select(col("v"), (col("running_offset") + col("t_v")).as("cum_tot"))
     val w = Window.partitionBy(col("source")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -494,7 +493,7 @@ object TextAnalysis {
     val total = c.agg(sum(col("c")).as("n_tot"))
     val vals = c.groupBy(col("v")).agg(sum(col("c")).as("t_v"))
     val bins = DataPrep
-      .withRunningTotal(vals, Seq(col("v")), "t_v", parts = 32)
+      .withRunningTotal(vals, Seq(col("v")), col("t_v"), "running_offset")._1
       .crossJoin(broadcast(total))
       .select(col("v"),
         expr("least(9, running_offset * 10 div n_tot)").as("bin"))
@@ -628,24 +627,27 @@ object TextAnalysis {
     * adjacent token pairs. The probability ratio collapses to the exact
     * integer rational c_xy·N_u² / (N_bi·c_x·c_y) before the single ln —
     * deterministic on any engine — and is snapped to ×10⁶ fixed point
-    * for the ranking. Same bigram/unigram shuffles as [[lmScore]];
-    * corpus totals ride the plan as broadcast 1-row aggregates. Top-k
-    * plans as TakeOrderedAndProject.
+    * for the ranking. Same bigram/unigram shuffles as [[lmScore]]; the
+    * corpus totals ride the plan as one broadcast 1-row aggregate of
+    * per-document token counts n, with no explode of their own: n_uni =
+    * Σ n and n_bi = Σ max(n − 1, 0), since [[bigrams]] pairs adjacent
+    * tokens. Top-k plans as TakeOrderedAndProject.
     */
   def pmiTop(spark: SparkSession, sfDir: String,
       minCount: Int = 5, k: Int = 100): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val uni = docs.select(explode(wsTokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("c_tok"))
-    val nUni = broadcast(uni.agg(sum(col("c_tok")).as("n_uni")))
     val bi = docs.select(explode(bigrams(col("text"))).as("bg"))
       .select(col("bg.prev").as("prev"), col("bg.cur").as("cur"))
       .groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("c_bi"))
-    val nBi = broadcast(bi.agg(sum(col("c_bi")).as("n_bi")))
+    val totals = broadcast(docs.select(size(wsTokens(col("text"))).as("n"))
+      .agg(sum(col("n")).as("n_uni"),
+        sum(greatest(col("n") - 1, lit(0))).as("n_bi")))
     bi.filter(col("c_bi") >= minCount)
       .join(uni.select(col("token").as("prev"), col("c_tok").as("c_prev")), "prev")
       .join(uni.select(col("token").as("cur"), col("c_tok").as("c_cur")), "cur")
-      .crossJoin(nUni).crossJoin(nBi)
+      .crossJoin(totals)
       // each factor cast to double BEFORE multiplying: the bigint
       // product c_bi·n_uni² overflows (ANSI throw) past ~10^9 tokens;
       // double products in a fixed operation order are identical on

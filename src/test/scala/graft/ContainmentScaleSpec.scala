@@ -170,7 +170,8 @@ class ContainmentScaleSpec extends SparkTestBase {
       "ngramJaccardBanded" -> (() => Dedup.ngramJaccardBanded(spark, d)),
       "containmentBanded" -> (() => Dedup.containmentBanded(spark, d)),
       "containmentEnsemble" -> (() => Dedup.containmentEnsemble(spark, d)),
-      "jaccardCalibration" -> (() => Dedup.jaccardCalibration(spark, d)))
+      "jaccardCalibration" -> (() => Dedup.jaccardCalibration(spark, d)),
+      "verifyPairs" -> (() => Dedup.verifyPairs(spark, d)))
     for ((name, run) <- callers) {
       val broadcastRows = canon(run())
       assert(broadcastRows.nonEmpty, name)

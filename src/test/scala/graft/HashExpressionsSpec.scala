@@ -112,4 +112,26 @@ class HashExpressionsSpec extends SparkTestBase {
       .componentsFromPairs(spark, pairs, nodes, maxRounds = 20).collect()
     assert(ok.map(_.getAs[Long]("component_id")).toSet === Set(0L))
   }
+
+  test("no Column code under src/main/scala but TextFunctions builds an md5 integer") {
+    import scala.jdk.CollectionConverters._
+    val rule = "conv(substring(md5("
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val texts = try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p))
+      .filter(_._2.contains(rule)).toMap finally files.close()
+    assert(texts.keySet === Set("graft/functions/TextFunctions.scala",
+      "graft/operators/Dedup.scala"))
+    assert(texts("graft/functions/TextFunctions.scala").split(java.util.regex.Pattern.quote(rule),
+      -1).length === 2, "TextFunctions holds the rule once")
+    // the one exemption: Dedup.winnow's SQL-string let-binding, whose
+    // gram hash must stay a lambda variable inside its `expr`
+    val dedup = texts("graft/operators/Dedup.scala")
+    val at = dedup.indexOf(rule)
+    val open = dedup.lastIndexOf(".withColumn(\"fps\", expr(", at)
+    assert(dedup.indexOf(rule, at + 1) === -1 && open >= 0 &&
+      dedup.indexOf(".stripMargin", open) > at,
+      "Dedup may hold the rule only inside winnow's let-binding expr")
+  }
 }
